@@ -1,6 +1,6 @@
 """Benchmark launcher: one run of one workload, printed as one JSON line.
 
-    python3 perfbench/run.py --workload serve_topk --seed 1 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload serve_topk --seed 1 --seconds 15 --trace 0
 
 The run itself happens in a child process (``worker.py``) started from
 this directory, with the repository root on ``PYTHONPATH``. Spark's
