@@ -2,6 +2,9 @@
 
     python3 perfbench/run.py --workload serve_topk --seed 1 --seconds 15 --trace 0
 
+``--seconds`` is accepted and ignored: each workload runs a fixed number
+of ops, so a run's work does not depend on it.
+
 The run itself happens in a child process (``worker.py``) started from
 this directory, with the repository root on ``PYTHONPATH``. Spark's
 Python workers inherit that environment, so UDFs import the package no
@@ -30,9 +33,8 @@ CHILD_TIMEOUT_S = 165
 #: Pinned so every run sees the same parallelism and heap. Two task
 #: threads leave the other cores to the JVM's JIT compiler threads
 #: (tens of seconds of compilation per run), GC and the Python driver;
-#: with four, run-to-run spread measured wider. A 1g heap
-#: fills early in every run, so peak RSS repeats; the package default
-#: (32g) exceeds a 15 GB host.
+#: with four, run-to-run spread measured wider. The package's default
+#: heap (32g) exceeds a 15 GB host.
 CPUS = min(2, os.cpu_count() or 1)
 DRIVER_MEMORY = "1g"
 
@@ -41,7 +43,7 @@ def _parse(argv: list[str]) -> argparse.Namespace:
     p = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     p.add_argument("--workload", required=True, choices=WORKLOADS)
     p.add_argument("--seed", required=True, type=int)
-    p.add_argument("--seconds", required=True, type=int)
+    p.add_argument("--seconds", required=True, type=int, help="ignored; op counts are fixed")
     p.add_argument("--trace", required=True, type=int, choices=(0, 1))
     return p.parse_args(argv)
 
@@ -72,8 +74,9 @@ def _stop_group(pgid: int) -> None:
             time.sleep(0.1)
 
 
-def main(argv: list[str]) -> int:
-    args = _parse(argv)
+def launch(args: list[str], timeout_s: float = CHILD_TIMEOUT_S, stdout=None) -> int:
+    """Run ``python3 <args>`` from this directory with the benchmark's
+    environment, then stop every process it left behind."""
     if not os.path.isdir(os.path.join(ROOT, PACKAGE)):
         print(f"run.py: package {PACKAGE!r} not found under {ROOT}", file=sys.stderr)
         return 2
@@ -83,20 +86,25 @@ def main(argv: list[str]) -> int:
     env["SPARK_GRAFT_CPUS"] = str(CPUS)
     env["SPARK_DRIVER_MEMORY"] = DRIVER_MEMORY
     env["SPARK_LOCAL_DIRS"] = os.path.join(HERE, ".work", "spark-local")
-    cmd = [
-        sys.executable, os.path.join(HERE, "worker.py"),
-        "--workload", args.workload, "--seed", str(args.seed),
-        "--seconds", str(args.seconds), "--trace", str(args.trace),
-    ]
-    child = subprocess.Popen(cmd, cwd=HERE, env=env, start_new_session=True)
+    child = subprocess.Popen(
+        [sys.executable, *args], cwd=HERE, env=env, stdout=stdout, start_new_session=True
+    )
     try:
-        return child.wait(timeout=CHILD_TIMEOUT_S)
+        return child.wait(timeout=timeout_s)
     except subprocess.TimeoutExpired:
-        print(f"run.py: run exceeded {CHILD_TIMEOUT_S} s, stopped", file=sys.stderr)
+        print(f"run.py: run exceeded {timeout_s} s, stopped", file=sys.stderr)
         return 3
     finally:
         _stop_group(child.pid)
         child.wait()
+
+
+def main(argv: list[str]) -> int:
+    args = _parse(argv)
+    return launch([
+        os.path.join(HERE, "worker.py"),
+        "--workload", args.workload, "--seed", str(args.seed), "--trace", str(args.trace),
+    ])
 
 
 if __name__ == "__main__":

@@ -89,6 +89,10 @@ def main(argv: list[str]) -> int:
             )
             shift = f" shift {row['shift_share']:+.3f}" if "shift_share" in row else ""
             print(f"{w:13s} {name:14s} bound {row['bound']:.2f} {sets}{shift}")
+        walls = [r["wall_s"] for r in runs]
+        steal = [r["meta"]["steal_share"] for r in runs]
+        print(f"{w:13s} runs {len(runs)}: wall {min(walls):.1f}-{max(walls):.1f} s "
+              f"(median {statistics.median(walls):.1f}), steal {min(steal):.3f}-{max(steal):.3f}")
     os.makedirs(os.path.dirname(os.path.abspath(args.out)), exist_ok=True)
     with open(args.out, "w") as f:
         json.dump(report, f, indent=1)

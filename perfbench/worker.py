@@ -1,11 +1,11 @@
 """One benchmark run, in the process ``run.py`` starts.
 
-Order of a run: Spark session → workload set-up (repeated, median
-reported) → fixed untimed warm-up ops → the timed op sequence → output
-checks against independent oracles → (traced run only) per-layer
-probes. The last line on stdout is the result JSON; the line before it
-is the run's metadata (host load, CPU steal, Spark knobs, JVM GC/JIT).
-Both are also written to ``.work/runs/``.
+Order of a run: Spark session → workload set-up → fixed untimed
+warm-up ops → the timed op sequence → (some workloads) ops after the
+timed window → output checks against independent oracles → (traced run
+only) per-layer probes. The last line on stdout is the result JSON; the
+line before it is the run's metadata (host load, CPU steal, Spark knobs,
+JVM GC/JIT). Both are also written to ``.work/runs/``.
 """
 
 from __future__ import annotations
@@ -68,15 +68,32 @@ def tree_cpu_s(root: int) -> float:
     return ticks / CLK_TCK
 
 
-def tree_rss_mb(root: int) -> float:
-    total = 0.0
+def tree_rss_mb(root: int) -> dict[str, float]:
+    """RSS in MB of each process of the tree, keyed by "pid name".
+
+    A child the JVM has forked but not yet exec'd still maps the JVM's
+    memory (its name is the forking thread's, e.g. "Executor"); it is
+    counted once, by skipping a process whose address-space layout
+    (vsize, start of code, start of stack) matches one already counted.
+    """
+    out, seen = {}, set()
     for pid in tree_pids(root):
+        f = _stat_fields(pid)
+        if f is None:
+            continue
         try:
-            with open(f"/proc/{pid}/statm") as f:
-                total += int(f.read().split()[1]) * PAGE_MB
+            with open(f"/proc/{pid}/comm") as fh:
+                name = fh.read().strip()
+            with open(f"/proc/{pid}/statm") as fh:
+                rss_mb = int(fh.read().split()[1]) * PAGE_MB
         except OSError:
-            pass
-    return total
+            continue
+        layout = (f[20], f[23], f[25])  # vsize startcode startstack
+        if layout in seen:
+            continue
+        seen.add(layout)
+        out[f"{pid} {name}"] = rss_mb
+    return out
 
 
 def cpu_times() -> list[int]:
@@ -92,22 +109,28 @@ def steal_share(before: list[int], after: list[int]) -> float:
 
 
 class RssSampler(threading.Thread):
-    """Peak summed RSS of the process tree, sampled every 0.25 s."""
+    """Peak summed RSS of the process tree, sampled every 0.25 s, and
+    each process's share of it at the peak."""
 
     def __init__(self, root: int):
         super().__init__(daemon=True)
-        self.root, self.peak_mb = root, 0.0
+        self.root, self.peak_mb, self.peak_procs = root, 0.0, {}
         self._stop_evt = threading.Event()
+
+    def sample(self) -> None:
+        procs = tree_rss_mb(self.root)
+        if sum(procs.values()) > self.peak_mb:
+            self.peak_mb, self.peak_procs = sum(procs.values()), procs
 
     def run(self) -> None:
         while not self._stop_evt.is_set():
-            self.peak_mb = max(self.peak_mb, tree_rss_mb(self.root))
+            self.sample()
             self._stop_evt.wait(0.25)
 
     def stop(self) -> float:
         self._stop_evt.set()
         self.join(timeout=5)
-        self.peak_mb = max(self.peak_mb, tree_rss_mb(self.root))
+        self.sample()
         return self.peak_mb
 
 
@@ -187,9 +210,22 @@ def _parse(argv: list[str]) -> argparse.Namespace:
     p = argparse.ArgumentParser()
     p.add_argument("--workload", required=True)
     p.add_argument("--seed", required=True, type=int)
-    p.add_argument("--seconds", required=True, type=int)
     p.add_argument("--trace", required=True, type=int)
     return p.parse_args(argv)
+
+
+def span_overhead_us() -> float:
+    """What recording one span adds to a call: an enabled span's cost
+    minus a disabled one's, each the median of five timed batches."""
+    def batch_us(enabled: bool, n: int = 5000) -> float:
+        tr = Tracer(enabled)
+        t = time.perf_counter()
+        for i in range(n):
+            with tr.span("probe", i):
+                pass
+        return (time.perf_counter() - t) * 1e6 / n
+
+    return median(batch_us(True) for _ in range(5)) - median(batch_us(False) for _ in range(5))
 
 
 def main(argv: list[str]) -> int:
@@ -211,39 +247,43 @@ def main(argv: list[str]) -> int:
     session_s = time.perf_counter() - T_PROCESS_START
 
     work = os.path.join(HERE, ".work", f"{args.workload}-{args.seed}-{me}")
-    wl = workloads.WORKLOADS[args.workload](spark, work, args.seed, args.seconds, tracer)
-    setup_reps = wl.setup()
-    setup_s = session_s + median(setup_reps)
+    wl = workloads.WORKLOADS[args.workload](spark, work, args.seed, tracer)
+    wl.setup()
+    warmup, timed, post = wl.plan()
+    setup_s = time.perf_counter() - T_PROCESS_START
 
-    warmup, timed = wl.plan()
+    # warm-up is never traced; in a traced run every later op is
     tracer.enabled = False
     outputs, warmup_ms = [], []
     for op in warmup:
         t = time.perf_counter()
         outputs.append((op, wl.execute(op)))
         warmup_ms.append([op.kind, (time.perf_counter() - t) * 1e3])
+    tracer.enabled = bool(args.trace)
+
+    def run_ops(ops: list, first_id: int) -> list:
+        done = []
+        for i, op in enumerate(ops, first_id):
+            t = time.perf_counter()
+            with tracer.span(f"op.{op.kind}", i):
+                out = wl.execute(op, op_id=i)
+            done.append((op, (time.perf_counter() - t) * 1e3))
+            outputs.append((op, out))
+        return done
 
     gc0, jit0 = jvm_counters(spark)
     cpu0 = tree_cpu_s(me)
     t_start = time.perf_counter()
-    records, seen = [], {"read": 0, "update": 0}
-    for i, op in enumerate(timed):
-        # traced runs alternate traced and untraced ops of each kind, so
-        # one process gives both sides of the tracing-overhead difference
-        seen[op.kind] += 1
-        tracer.enabled = bool(args.trace) and seen[op.kind] % 2 == 0
-        t = time.perf_counter()
-        with tracer.span(f"op.{op.kind}", i):
-            out = wl.execute(op, op_id=i)
-        records.append((op, (time.perf_counter() - t) * 1e3, tracer.enabled))
-        outputs.append((op, out))
-    tracer.enabled = False
+    records = run_ops(timed, 0)
     wall_s = time.perf_counter() - t_start
     cpu_s = tree_cpu_s(me) - cpu0
     gc1, jit1 = jvm_counters(spark)
+    after = run_ops(post, len(records))
+    tracer.enabled = False
 
     # every op, warm-up included, is checked in sequence order (the
-    # ingest oracle replays the writes as it goes)
+    # vector oracles replay the upserts as they go)
+    t = time.perf_counter()
     failed = 0
     for op, out in outputs:
         try:
@@ -254,9 +294,11 @@ def main(argv: list[str]) -> int:
         if not ok:
             failed += 1
             print(f"wrong output for {op}", file=sys.stderr)
+    check_s = time.perf_counter() - t
 
-    reads = [ms for op, ms, _ in records if op.kind == "read"]
-    updates = [ms for op, ms, _ in records if op.kind == "update"] or wl.update_fallback_ms()
+    reads = [ms for op, ms in records if op.kind == "read"]
+    # serve_topk has no write in its timed window: its updates run after it
+    updates = [ms for op, ms in records + after if op.kind == "update"]
     e2e = {
         "setup_s": (setup_s, "s"),
         "query_p50_ms": (median(reads), "ms"),
@@ -268,15 +310,16 @@ def main(argv: list[str]) -> int:
 
     layer = {}
     if args.trace:
+        read_ids = {i for i, (op, _) in enumerate(records) if op.kind == "read"}
+        spans_per_read = sum(s["op"] in read_ids for s in tracer.spans) / len(read_ids)
         tracer.enabled = True
-        traced = [ms for op, ms, tr in records if op.kind == "read" and tr]
-        plain = [ms for op, ms, tr in records if op.kind == "read" and not tr]
         layer = workloads.empty_layer_metrics()
         layer.update(wl.layer_metrics())
         layer["session.start_s"] = (session_start_s, "s")
         layer["session.gc_ms"] = (gc1 - gc0, "ms")
         layer["session.jit_ms"] = (jit1 - jit0, "ms")
-        layer["trace.overhead_ms"] = (median(traced) - median(plain), "ms")
+        layer["trace.query_p50_ms"] = (median(reads), "ms")
+        layer["trace.overhead_ms"] = (spans_per_read * span_overhead_us() / 1e3, "ms")
         layer["trace.spans"] = (len(tracer.spans), "count")
         for name, ms in tracer.self_ms_by_layer().items():
             if f"{name}.self_ms" in layer:
@@ -289,7 +332,6 @@ def main(argv: list[str]) -> int:
     meta = {
         "workload": args.workload,
         "seed": args.seed,
-        "seconds": args.seconds,
         "trace": args.trace,
         "SPARK_GRAFT_CPUS": os.environ.get("SPARK_GRAFT_CPUS"),
         "SPARK_DRIVER_MEMORY": os.environ.get("SPARK_DRIVER_MEMORY"),
@@ -300,11 +342,13 @@ def main(argv: list[str]) -> int:
         "gc_ms": gc1 - gc0,
         "jit_ms": jit1 - jit0,
         "session_s": session_s,
-        "setup_reps_s": setup_reps,
         "warmup_ms": warmup_ms,
         "timed_ops": len(records),
         "timed_wall_s": wall_s,
-        "op_ms": [[op.kind, ms] for op, ms, _ in records],
+        "check_s": check_s,
+        "peak_rss_by_process_mb": rss.peak_procs,
+        "op_ms": [[op.kind, ms] for op, ms in records],
+        "post_ms": [[op.kind, ms] for op, ms in after],
         "all_e2e": {k: v for k, (v, _) in e2e.items()},
     }
     chosen = layer if args.trace else e2e

@@ -2,7 +2,7 @@
 
 Each workload generates its inputs from the run's seed, builds its
 state through the package's public insert/load path in ``setup``,
-yields a fixed op sequence from ``plan``, runs one op per ``execute``
+yields fixed op sequences from ``plan``, runs one op per ``execute``
 call, and checks each op's output in ``check`` against an oracle that
 does not use the code under test (numpy for vector search, DuckDB
 mirrors for curation and RAG). ``layer_metrics`` runs the traced run's
@@ -40,12 +40,6 @@ from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators imp
 )
 from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.plans.explain import plan_summary
 from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.sources.catalog import load_tables
-
-#: run length the op counts below are calibrated for (BENCHMARK.json
-#: run_seconds); other --seconds values scale the counts
-REF_SECONDS = 15
-#: set-up repetitions per run; setup_s reports their median
-SETUP_REPS = 3
 
 #: per-layer metrics reported by every traced run; a layer a workload
 #: does not reach stays 0
@@ -86,6 +80,7 @@ LAYER_UNITS = {
     "dedup.self_ms": "ms",
     "curation.self_ms": "ms",
     "plans.self_ms": "ms",
+    "trace.query_p50_ms": "ms",
     "trace.overhead_ms": "ms",
     "trace.spans": "count",
 }
@@ -101,10 +96,6 @@ class Op:
     index: int  # position of its input in the generated inputs
 
 
-def _scaled(count: int, seconds: int, floor: int) -> int:
-    return max(floor, round(count * seconds / REF_SECONDS))
-
-
 def _interleave(n_updates: int, reads_per_update: int, first_update: int = 0, first_read: int = 0) -> list[Op]:
     """update, then ``reads_per_update`` reads, repeated."""
     ops = []
@@ -116,8 +107,8 @@ def _interleave(n_updates: int, reads_per_update: int, first_update: int = 0, fi
 
 
 class Workload:
-    def __init__(self, spark, work: str, seed: int, seconds: int, tracer):
-        self.spark, self.work, self.seed, self.seconds = spark, work, seed, seconds
+    def __init__(self, spark, work: str, seed: int, tracer):
+        self.spark, self.work, self.seed = spark, work, seed
         self.tracer = tracer
         shutil.rmtree(work, ignore_errors=True)
         os.makedirs(work)
@@ -152,10 +143,6 @@ class Workload:
         d = self.tracer.durations_ms(name)
         return statistics.median(d) if d else 0.0
 
-    def update_fallback_ms(self) -> list[float]:
-        """Write latencies to report when the timed window has none."""
-        raise NotImplementedError
-
     def close(self) -> None:
         shutil.rmtree(self.work, ignore_errors=True)
 
@@ -179,12 +166,14 @@ def unit_rows(X: np.ndarray) -> np.ndarray:
 
 class VectorWorkload(Workload):
     """A durable sharded collection built in set-up through
-    ``ingest.prepare_vectors`` + ``ingest.write_collection``."""
+    ``ingest.prepare_vectors`` + ``ingest.write_collection``, read with
+    ``search.collection_topk`` and written with ``ingest.upsert_collection``."""
 
     N = 2000
     DIM = 64
     SHARDS = 8
     K = 10
+    BATCH = 256
 
     def _write_raw(self, path: str, ids: np.ndarray, X: np.ndarray) -> None:
         emb = pa.FixedSizeListArray.from_arrays(pa.array(X.ravel()), X.shape[1])
@@ -192,26 +181,30 @@ class VectorWorkload(Workload):
             pa.table({"vec_id": ids, "embedding": emb.cast(pa.list_(pa.float64()))}), path
         )
 
-    def setup(self) -> list[float]:
-        reps = []
-        for r in range(SETUP_REPS):
-            t = time.perf_counter()
-            X = self.rng(0).standard_normal((self.N, self.DIM))
-            raw = os.path.join(self.work, f"raw-{r}.parquet")
-            self._write_raw(raw, np.arange(self.N, dtype=np.int64), X)
-            path = os.path.join(self.work, f"collection-{r}")
-            with self.tracer.span("ingest.build"):
-                prepared = ingest.prepare_vectors(self.spark.read.parquet(raw), self.DIM, self.SHARDS)
-                ingest.write_collection(prepared, path, self.SHARDS)
-            reps.append(time.perf_counter() - t)
-            if r:
-                shutil.rmtree(os.path.join(self.work, f"collection-{r - 1}"))
-        self.raw, self.path = raw, path
-        self.build_ms = [s * 1e3 for s in reps]
+    def setup(self) -> None:
+        X = self.rng(0).standard_normal((self.N, self.DIM))
+        self.raw = os.path.join(self.work, "raw.parquet")
+        self._write_raw(self.raw, np.arange(self.N, dtype=np.int64), X)
+        self.path = os.path.join(self.work, "collection")
+        with self.tracer.span("ingest.build"):
+            prepared = ingest.prepare_vectors(self.spark.read.parquet(self.raw), self.DIM, self.SHARDS)
+            ingest.write_collection(prepared, self.path, self.SHARDS)
         # the oracle's copy of the collection: id-indexed unit rows
         self.store = unit_rows(X)
         self.ids = np.arange(self.N, dtype=np.int64)
-        return reps
+
+    def make_batches(self, n: int) -> None:
+        """``n`` upsert batches: half ids already stored, half new."""
+        rng = self.rng(2)
+        self.batches, next_id = [], self.N
+        for _ in range(n):
+            old = rng.choice(next_id, self.BATCH // 2, replace=False)
+            new = np.arange(next_id, next_id + self.BATCH // 2)
+            next_id += self.BATCH // 2
+            ids = rng.permutation(np.concatenate([old, new])).astype(np.int64)
+            self.batches.append((ids, rng.standard_normal((self.BATCH, self.DIM))))
+        self.rows_written: list[float] = []
+        self.touched: list[float] = []
 
     def read(self, q: np.ndarray, op_id):
         with self.tracer.span("search.topk_build", op_id):
@@ -220,14 +213,47 @@ class VectorWorkload(Workload):
             rows = df.collect()
         return [int(r["vec_id"]) for r in rows], [round(float(r["score"]), 6) for r in rows]
 
+    def upsert(self, index: int, op_id):
+        ids, X = self.batches[index]
+        path = os.path.join(self.work, f"batch-{index}.parquet")
+        self._write_raw(path, ids, X)
+        with self.tracer.span("ingest.upsert", op_id):
+            res = ingest.upsert_collection(
+                self.spark, self.path, self.spark.read.parquet(path), self.SHARDS, self.DIM
+            )
+        self.touched.append(len(res["touched_shards"]))
+        self.rows_written.append(res["rows_written"] / self.BATCH)
+        return res
+
+    def execute(self, op: Op, op_id=None):
+        if op.kind == "update":
+            return self.upsert(op.index, op_id)
+        return self.read(self.queries[op.index], op_id)
+
     def check_read(self, q: np.ndarray, out) -> bool:
         return out == exact_topk(self.store, self.ids, q, self.K)
 
-    def vector_layers(self) -> dict:
+    def check_upsert(self, index: int, out) -> bool:
+        """Applies the batch to the oracle's copy; checks run in op
+        order, so later reads are checked against the updated copy."""
+        ids, X = self.batches[index]
+        grow = int(ids.max()) + 1 - len(self.ids)
+        if grow > 0:
+            self.store = np.vstack([self.store, np.zeros((grow, self.DIM))])
+            self.ids = np.arange(len(self.store), dtype=np.int64)
+        self.store[ids] = unit_rows(X)
+        if len(out["touched_shards"]) == self.SHARDS:  # every row was rewritten
+            return out["rows_written"] == len(self.ids)
+        return bool(out["touched_shards"]) and out["rows_written"] >= self.BATCH
+
+    def layer_metrics(self) -> dict:
         raw = self.spark.read.parquet(self.raw)
         q = V.vec_lit(self.queries[0].tolist())
-        return {
+        m = {
             "ingest.build_s": (self.median_span("ingest.build") / 1e3, "s"),
+            "ingest.upsert_ms": (self.median_span("ingest.upsert"), "ms"),
+            "ingest.touched_shards": (statistics.mean(self.touched), "count"),
+            "ingest.rows_rewritten_per_row": (statistics.mean(self.rows_written), "ratio"),
             "search.topk_build_ms": (self.median_span("search.topk_build"), "ms"),
             "search.topk_exec_ms": (self.median_span("search.topk_exec"), "ms"),
             "sources.collection_files": (
@@ -246,108 +272,65 @@ class VectorWorkload(Workload):
                 "us",
             ),
         }
-
-    def update_fallback_ms(self) -> list[float]:
-        # serve_topk has no write op in its timed window: its only write
-        # is the set-up bulk load, reported as its update latency
-        return self.build_ms
+        read = search.collection_topk(self.spark, self.path, self.queries[0].tolist(), k=self.K)
+        write = ingest.prepare_vectors(
+            self.spark.read.parquet(os.path.join(self.work, "batch-0.parquet")), self.DIM, self.SHARDS
+        )
+        m.update(self.plan_counts([read, write]))
+        return m
 
 
 class ServeTopK(VectorWorkload):
-    """Read-only serving loop: distinct exact cosine top-10 queries."""
+    """Read-only serving loop: distinct exact cosine top-10 queries.
+    Its write latency comes from upserts run after the timed window, so
+    no write shares the window with the reads; the warm-up upsert runs
+    first."""
 
-    READS = 30
-    WARMUP_READS = 5
+    WARMUP_READS = 4
+    READS = 40
+    POST_UPDATES = 3
 
     def plan(self):
-        n = _scaled(self.READS, self.seconds, 11)
-        self.queries = self.rng(1).standard_normal((self.WARMUP_READS + n, self.DIM))
-        warm = [Op("read", i) for i in range(self.WARMUP_READS)]
-        return warm, [Op("read", self.WARMUP_READS + i) for i in range(n)]
-
-    def execute(self, op: Op, op_id=None):
-        return self.read(self.queries[op.index], op_id)
+        self.queries = self.rng(1).standard_normal((self.WARMUP_READS + self.READS, self.DIM))
+        self.make_batches(1 + self.POST_UPDATES)
+        warm = [Op("update", 0)] + [Op("read", i) for i in range(self.WARMUP_READS)]
+        timed = [Op("read", self.WARMUP_READS + i) for i in range(self.READS)]
+        return warm, timed, [Op("update", 1 + i) for i in range(self.POST_UPDATES)]
 
     def check(self, op: Op, out) -> bool:
+        if op.kind == "update":
+            return self.check_upsert(op.index, out)
         return self.check_read(self.queries[op.index], out)
-
-    def layer_metrics(self) -> dict:
-        m = self.vector_layers()
-        df = search.collection_topk(self.spark, self.path, self.queries[0].tolist(), k=self.K)
-        m.update(self.plan_counts([df]))
-        return m
 
 
 class IngestMixed(VectorWorkload):
     """Upsert batches of 256 (half existing ids, half new) alternating
     with read-your-writes top-k reads on the same collection."""
 
-    BATCH = 256
     UPDATES = 4
-    READS_PER_UPDATE = 6
+    READS_PER_UPDATE = 8
     WARMUP_UPDATES = 1
+    WARMUP_READS = 3  # per warm-up update
 
     def plan(self):
-        n_upd = _scaled(self.UPDATES, self.seconds, 3)
-        total = self.WARMUP_UPDATES + n_upd
-        rng = self.rng(2)
-        self.batches, next_id = [], self.N
-        for _ in range(total):
-            old = rng.choice(next_id, self.BATCH // 2, replace=False)
-            new = np.arange(next_id, next_id + self.BATCH // 2)
-            next_id += self.BATCH // 2
-            ids = rng.permutation(np.concatenate([old, new])).astype(np.int64)
-            self.batches.append((ids, rng.standard_normal((self.BATCH, self.DIM))))
+        total = self.WARMUP_UPDATES + self.UPDATES
+        self.make_batches(total)
         # the reads after batch b search for its first READS_PER_UPDATE
         # rows (a mix of new and replaced ids) and expect each at rank 1
         probes = [(b, j) for b in range(total) for j in range(self.READS_PER_UPDATE)]
         self.queries = np.array([self.batches[b][1][j] for b, j in probes])
         self.expect_first = [int(self.batches[b][0][j]) for b, j in probes]
-        self.rows_written: list[float] = []
-        self.touched: list[float] = []
-        ops = _interleave(total, self.READS_PER_UPDATE)
-        split = self.WARMUP_UPDATES * (1 + self.READS_PER_UPDATE)
-        return ops[:split], ops[split:]
-
-    def execute(self, op: Op, op_id=None):
-        if op.kind == "read":
-            return self.read(self.queries[op.index], op_id)
-        ids, X = self.batches[op.index]
-        path = os.path.join(self.work, f"batch-{op.index}.parquet")
-        self._write_raw(path, ids, X)
-        with self.tracer.span("ingest.upsert", op_id):
-            res = ingest.upsert_collection(
-                self.spark, self.path, self.spark.read.parquet(path), self.SHARDS, self.DIM
-            )
-        self.touched.append(len(res["touched_shards"]))
-        self.rows_written.append(res["rows_written"] / self.BATCH)
-        return res
+        warm = _interleave(self.WARMUP_UPDATES, self.WARMUP_READS)
+        timed = _interleave(
+            self.UPDATES, self.READS_PER_UPDATE, self.WARMUP_UPDATES, self.WARMUP_UPDATES * self.READS_PER_UPDATE
+        )
+        return warm, timed, []
 
     def check(self, op: Op, out) -> bool:
-        """Replays the op sequence on the oracle's copy, in order."""
         if op.kind == "update":
-            ids, X = self.batches[op.index]
-            grow = int(ids.max()) + 1 - len(self.ids)
-            if grow > 0:
-                self.store = np.vstack([self.store, np.zeros((grow, self.DIM))])
-                self.ids = np.arange(len(self.store), dtype=np.int64)
-            self.store[ids] = unit_rows(X)
-            if len(out["touched_shards"]) == self.SHARDS:  # every row was rewritten
-                return out["rows_written"] == len(self.ids)
-            return bool(out["touched_shards"]) and out["rows_written"] >= self.BATCH
+            return self.check_upsert(op.index, out)
         first_ok = bool(out[0]) and out[0][0] == self.expect_first[op.index]
         return first_ok and self.check_read(self.queries[op.index], out)
-
-    def layer_metrics(self) -> dict:
-        m = self.vector_layers()
-        m["ingest.upsert_ms"] = (self.median_span("ingest.upsert"), "ms")
-        m["ingest.touched_shards"] = (statistics.mean(self.touched), "count")
-        m["ingest.rows_rewritten_per_row"] = (statistics.mean(self.rows_written), "ratio")
-        path = os.path.join(self.work, "batch-0.parquet")
-        read = search.collection_topk(self.spark, self.path, self.queries[0].tolist(), k=self.K)
-        write = ingest.prepare_vectors(self.spark.read.parquet(path), self.DIM, self.SHARDS)
-        m.update(self.plan_counts([read, write]))
-        return m
 
 
 # ------------------------------------------------------------ curation + RAG
@@ -410,42 +393,38 @@ class CurateRag(Workload):
     """Curation passes over a generated corpus, each followed by RAG
     context queries over the surviving documents."""
 
-    DOCS = 1000
+    DOCS = 500
     UPDATES = 2
-    READS_PER_UPDATE = 12
+    READS_PER_UPDATE = 14
     WARMUP_UPDATES = 2
     WARMUP_READS = 1  # per warm-up update
 
-    def setup(self) -> list[float]:
-        reps = []
-        for r in range(SETUP_REPS):
-            t = time.perf_counter()
-            pdf = generate_documents(self.seed, self.DOCS)
-            d = os.path.join(self.work, f"docs-{r}")
-            os.makedirs(d)
-            pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), os.path.join(d, "documents.parquet"))
-            with self.tracer.span("sources.load"):
-                docs = load_tables(self.spark, d)["documents"]
-                docs.count()
-            reps.append(time.perf_counter() - t)
-        self.docs, self.docs_dir = docs, d
-        return reps
+    def setup(self) -> None:
+        pdf = generate_documents(self.seed, self.DOCS)
+        self.docs_dir = os.path.join(self.work, "docs")
+        os.makedirs(self.docs_dir)
+        pq.write_table(
+            pa.Table.from_pandas(pdf, preserve_index=False),
+            os.path.join(self.docs_dir, "documents.parquet"),
+        )
+        with self.tracer.span("sources.load"):
+            self.docs = load_tables(self.spark, self.docs_dir)["documents"]
+            self.docs.count()
 
     def plan(self):
-        n_upd = _scaled(self.UPDATES, self.seconds, 1)
         rng = self.rng(4)
         n_warm = self.WARMUP_UPDATES * self.WARMUP_READS
-        n_q = n_warm + n_upd * self.READS_PER_UPDATE
+        n_q = n_warm + self.UPDATES * self.READS_PER_UPDATE
         self.questions = []
         while len(self.questions) < n_q:
             q = " ".join(rng.choice(VOCAB, rng.integers(3, 7)))
             if q not in self.questions:
                 self.questions.append(q)
         warm = _interleave(self.WARMUP_UPDATES, self.WARMUP_READS)
-        timed = _interleave(n_upd, self.READS_PER_UPDATE, self.WARMUP_UPDATES, n_warm)
+        timed = _interleave(self.UPDATES, self.READS_PER_UPDATE, self.WARMUP_UPDATES, n_warm)
         self._oracle = None
         self.curated: dict[int, object] = {}
-        return warm, timed
+        return warm, timed, []
 
     def execute(self, op: Op, op_id=None):
         if op.kind == "update":
