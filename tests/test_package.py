@@ -1,0 +1,56 @@
+"""Package hygiene: every module compiles cleanly, and the engine runs
+from any working directory."""
+
+from __future__ import annotations
+
+import os
+import pathlib
+import subprocess
+import sys
+import warnings
+
+import pytest
+
+from conftest import SF_DIR
+
+REPO = pathlib.Path(__file__).resolve().parent.parent
+PKG = REPO / "vector_database_with_gpu_acceleration_for_llm_retrieval_spark"
+
+pytestmark = pytest.mark.driver_gate
+
+
+def test_modules_compile_with_warnings_as_errors():
+    # an invalid escape such as "\s" in a string literal only warns
+    # today and is a SyntaxError under -W error
+    failed = []
+    for path in sorted(PKG.rglob("*.py")):
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            try:
+                compile(path.read_text(), str(path), "exec")
+            except SyntaxError as e:
+                failed.append(f"{path.relative_to(REPO)}:{e.lineno}: {e.msg}")
+    assert not failed, failed
+
+
+def test_python_workers_import_package_from_any_cwd(tmp_path):
+    """rag_context runs Python UDFs; their workers must find the
+    package although neither cwd nor PYTHONPATH points at the repo."""
+    script = f"""
+import sys
+sys.path.insert(0, {str(REPO)!r})
+from vector_database_with_gpu_acceleration_for_llm_retrieval_spark import contract
+from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.session import get_spark
+rows = contract.queries()["rag_context"](get_spark("vdb_cwd_check"), {SF_DIR!r}).collect()
+assert rows, "rag_context returned no rows"
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]

@@ -385,32 +385,6 @@ def test_snm_uses_range_exchange_no_global_window(tables):
             assert "__ptot" in seg, seg
 
 
-def test_ks_test_window_is_on_distinct_value_frame(tables):
-    """The KS CDF window must sit ABOVE the distinct-value aggregate —
-    the ordered window's input is the domain-bounded frame, not the
-    raw table."""
-    from pyspark.sql import functions as F
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import stats as ST
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.plans.explain import (
-        physical_plan,
-    )
-
-    df = ST.ks_test(
-        tables["orders"].select(
-            F.col("o_totalprice").alias("v"),
-            F.when(F.col("o_orderkey") % 2 == 0, "a").otherwise("b").alias("g"),
-        ),
-        "v",
-        "g",
-        "a",
-        "b",
-    )
-    plan = physical_plan(df)
-    # aggregate runs before (deeper than) the window: HashAggregate must
-    # appear in the plan and the Window input must be the agg output
-    assert "HashAggregate" in plan and "Window" in plan, plan
-
-
 def test_mutual_knn_single_corpus_scan(tables):
     from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import search as S2
     from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.plans.explain import (
@@ -421,46 +395,6 @@ def test_mutual_knn_single_corpus_scan(tables):
     plan = physical_plan(df)
     # knn_join's one-scan property must survive the composition
     assert plan.count("Scan parquet") <= 1, plan
-
-
-def test_stats_high_cardinality_no_global_window(tables):
-    """r9 verdict #1: with high_cardinality=True the rank/CDF cumsum
-    runs through the distributed prefix — every Window node left in
-    the final plan must operate on the P-row partition-offset ladder
-    (input carries __ptot), never the distinct-value frame (the
-    sorted-neighborhood assertion, applied to the stats wave)."""
-    from pyspark.sql import functions as F
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import stats as ST
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.plans.explain import (
-        physical_plan,
-    )
-
-    src = tables["orders"].select(
-        F.col("o_totalprice").alias("v"),
-        F.when(F.col("o_orderkey") % 2 == 0, "a").otherwise("b").alias("g"),
-    )
-    surv = tables["orders"].select(
-        (F.col("o_orderkey") % 1000 + 1).cast("double").alias("t"),
-        (F.col("o_orderkey") % 2).cast("int").alias("event"),
-        F.when(F.col("o_custkey") % 2 == 0, "a").otherwise("b").alias("g"),
-    )
-    frames = [
-        ST.ks_test(src, "v", "g", "a", "b", high_cardinality=True),
-        ST.mann_whitney_u(src, "v", "g", "a", "b", high_cardinality=True),
-        ST.spearman_corr(
-            src.select(F.col("v").alias("x"), (F.col("v") * 2).alias("y")),
-            "x",
-            "y",
-            high_cardinality=True,
-        ),
-        ST.kaplan_meier(surv, high_cardinality=True),
-        ST.logrank_test(surv, high_cardinality=True),
-    ]
-    for df in frames:
-        plan = physical_plan(df)
-        for seg in plan.split("\n\n"):
-            if seg.startswith("(") and "Window" in seg.splitlines()[0]:
-                assert "__ptot" in seg, seg
 
 
 def test_iterative_graph_ops_final_plans_are_pinned(tables):
@@ -495,90 +429,6 @@ def test_iterative_graph_ops_final_plans_are_pinned(tables):
         assert "Scan parquet" not in plan, (name, plan)  # no source re-scan
         assert not summ["has_cartesian"], (name, plan)
         assert "Window" not in plan, (name, plan)
-
-
-def test_concordance_and_bootstrap_plan_shapes(tables):
-    """The r10 statistics additions keep the module's scale shapes:
-    concordance's windows all operate on the bucket grid (partitioned
-    by tb/sb — never an unpartitioned window over data), and the
-    bootstrap is ONE scan of the fact table with map-side partial
-    aggregation, no joins, no windows."""
-    from pyspark.sql import functions as F
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import stats as ST
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.plans.explain import (
-        physical_plan,
-        plan_summary,
-    )
-
-    surv = tables["orders"].select(
-        (F.col("o_orderkey") % 997 + 1).alias("t"),
-        (F.col("o_orderkey") % 2).cast("int").alias("event"),
-        (F.col("o_custkey") % 313 + 1).alias("score"),
-    )
-    ci = ST.concordance_index(surv, "t", "event", "score", m=5)
-    plan = physical_plan(ci)
-    for seg in plan.split("\n\n"):
-        if seg.startswith("(") and "Window" in seg.splitlines()[0]:
-            spec = seg
-            assert ("windowspecdefinition(sb" in spec) or (
-                "windowspecdefinition(tb" in spec
-            ), seg
-
-    boot = ST.poisson_bootstrap_ci(
-        tables["orders"].select("o_orderkey", "o_totalprice"),
-        [],
-        "o_totalprice",
-        "o_orderkey",
-        b=8,
-    )
-    summ = plan_summary(boot)
-    assert summ["n_scans"] == 1, summ
-    assert summ["joins"] == {}, summ
-    assert not summ["has_cartesian"]
-    assert "Window" not in physical_plan(boot)
-
-
-def test_stats_auto_high_cardinality_routes_continuous_columns(tables):
-    """r10 verdict #3: high_cardinality defaults to "auto" — a
-    continuous double column routes to the distributed prefix WITHOUT
-    the caller passing the flag (sampled distinct-count heuristic),
-    while a bounded discrete domain keeps the plain window."""
-    from pyspark.sql import functions as F
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import stats as ST
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.plans.explain import (
-        physical_plan,
-    )
-
-    spark = tables["orders"].sparkSession
-    # a genuinely continuous column on an above-sample-size frame
-    # (the heuristic deliberately keeps sub-sample inputs windowed —
-    # a frame smaller than one sample split is trivially windowable)
-    cont = spark.range(20000).select(
-        (F.col("id").cast("double") * 1.0000001 + 0.5).alias("v"),
-        F.when(F.col("id") % 2 == 0, "a").otherwise("b").alias("g"),
-    )
-    df = ST.ks_test(cont, "v", "g", "a", "b")  # no flag
-    plan = physical_plan(df)
-    assert "__ptot" in plan, plan[:2000]
-    for seg in plan.split("\n\n"):
-        if seg.startswith("(") and "Window" in seg.splitlines()[0]:
-            assert "__ptot" in seg, seg
-    # a 9-value discrete domain stays on the plain window (no __ptot)
-    disc = spark.range(20000).select(
-        (F.col("id") % 9).cast("double").alias("v"),
-        F.when(F.col("id") % 2 == 0, "a").otherwise("b").alias("g"),
-    )
-    plan_d = physical_plan(ST.ks_test(disc, "v", "g", "a", "b"))
-    assert "__ptot" not in plan_d
-    # sub-sample-size input stays windowed even when fully unique
-    tiny = tables["orders"].select(
-        F.col("o_totalprice").alias("v"),
-        F.when(F.col("o_orderkey") % 2 == 0, "a").otherwise("b").alias("g"),
-    )
-    if tiny.count() < 8192:
-        assert "__ptot" not in physical_plan(
-            ST.ks_test(tiny, "v", "g", "a", "b")
-        )
 
 
 def test_nn_descent_final_plan_is_pinned(tables):

@@ -417,66 +417,3 @@ def test_canonical_text_idempotent(spark, s):
         canonical_text(canonical_text(F.col("t"))).alias("c2"),
     ).head()
     assert once == twice
-
-
-def test_p_adjust_property_matches_pure_python(spark):
-    """Hypothesis: BH/Holm/Bonferroni against a pure-Python reference
-    on arbitrary p-vectors (incl. ties, 0s, 1s)."""
-    from hypothesis import given, settings, strategies as st
-
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        stats as ST,
-    )
-
-    def ref_bh(ps):
-        m = len(ps)
-        order = sorted(range(m), key=lambda i: ps[i])
-        adj = [None] * m
-        run = float("inf")
-        for rank in range(m - 1, -1, -1):
-            i = order[rank]
-            run = min(run, ps[i] * m / (rank + 1))
-            adj[i] = min(1.0, run)
-        # ties share the min across the tie group
-        for i in range(m):
-            adj[i] = min(a for a, p in zip(adj, ps) if p == ps[i])
-        return adj
-
-    def ref_holm(ps):
-        m = len(ps)
-        order = sorted(range(m), key=lambda i: ps[i])
-        adj = [None] * m
-        run = 0.0
-        for rank, i in enumerate(order):
-            run = max(run, ps[i] * (m - rank))
-            adj[i] = min(1.0, run)
-        for i in range(m):
-            adj[i] = max(a for a, p in zip(adj, ps) if p == ps[i])
-        return adj
-
-    @settings(max_examples=12, deadline=None)
-    @given(
-        st.lists(
-            st.one_of(
-                st.floats(min_value=0.0, max_value=1.0, width=32),
-                st.sampled_from([0.0, 1.0, 0.05, 0.05]),
-            ),
-            min_size=1,
-            max_size=12,
-        )
-    )
-    def check(ps):
-        ps = [float(p) for p in ps]
-        df = spark.createDataFrame(
-            [(i, p) for i, p in enumerate(ps)], "i int, p double"
-        )
-        got_bh = {r.i: r.p_adj for r in ST.p_adjust(df, "p", "bh").collect()}
-        want = ref_bh(ps)
-        for i in range(len(ps)):
-            assert abs(got_bh[i] - want[i]) < 1e-9, ("bh", ps, i)
-        got_h = {r.i: r.p_adj for r in ST.p_adjust(df, "p", "holm").collect()}
-        want_h = ref_holm(ps)
-        for i in range(len(ps)):
-            assert abs(got_h[i] - want_h[i]) < 1e-9, ("holm", ps, i)
-
-    check()

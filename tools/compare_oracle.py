@@ -39,10 +39,9 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
     spark = get_spark()
-    # sf0.01 is small enough that the auto-HC heuristic correctly picks
-    # the windowed cumsum path, which log-spams "No Partition Defined"
-    # WindowExec WARNs — expected at spot-check scale; keep the output
-    # to PASS/FAIL lines (r11 verdict #8)
+    # unpartitioned windows over small frames log-spam "No Partition
+    # Defined" WindowExec WARNs — expected at spot-check scale; keep the
+    # output to PASS/FAIL lines
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:

@@ -347,11 +347,6 @@ AUDITED = {
         "crossJoin, TakeOrderedAndProject for the top-N; the cumulative window "
         "runs on the N-row frame only — nothing global sorts."
     ),
-    "ks_price_test": (
-        "Two-sample KS: one groupBy onto the distinct-price frame (map-side "
-        "combined), the ordered CDF cumsum windows over that DOMAIN-bounded "
-        "frame — never the order log; final stats are 1-row aggregates."
-    ),
     "containment_pairs": (
         "Directed containment join: A-prefix explode joined against the full-B "
         "posting equi-key (SortMergeJoin on shingle), length filter, then two "
@@ -384,17 +379,6 @@ AUDITED = {
         "only — the plan frame is inventory-sized; no global ordering, no "
         "driver greedy loop."
     ),
-    "rank_sum_distributed": (
-        "High-cardinality Mann-Whitney (r10): the rank cumsum runs through the "
-        "distributed prefix — range exchange + within-partition windows live "
-        "inside the localCheckpoint; the final plan's only Window nodes are on "
-        "the P-row __ptot offset ladder; closing sums DECIMAL(38,0)-exact."
-    ),
-    "km_distributed": (
-        "High-cardinality Kaplan-Meier (r10): risk sets / ln-survival over "
-        "subject-sized microsecond time frames with NO single-task window — "
-        "two distributed-prefix passes, windows only on the offset ladder."
-    ),
     "value_p95_sliding": (
         "Sliding sketch quantiles (r10): trailing sums over a (hour × "
         "sketch-bucket) grid — per-bucket RANGE-frame windows on grid-sized "
@@ -406,78 +390,6 @@ AUDITED = {
         "p·days pairs; Durbin-Levinson and the recursive forecasts are scalar "
         "projections over 1-row broadcast frames; band quantiles over the "
         "fitted-residual calendar frame."
-    ),
-    "survival_cindex": (
-        "Concordance index (r10): every window operates on the (time-bucket × "
-        "score-bucket) grid — suffix counts partitioned by sb, score splits "
-        "partitioned by tb; integer-exact counts, no unpartitioned window "
-        "over data."
-    ),
-    "bootstrap_value_ci": (
-        "Poisson bootstrap (r10): ONE scan with 2b+2 map-side-combined sums "
-        "(hash-derived replicate weights are pure projection); replicate means "
-        "explode to a groups×b frame for the percentile — no joins, no "
-        "windows, no Python."
-    ),
-    "model_auc": (
-        "ROC-AUC (r11): the Mann-Whitney skeleton on the distinct-score frame; "
-        "the continuous score AUTO-routes the rank cumsum through the "
-        "distributed prefix (sampled heuristic — no caller flag), so the only "
-        "Window nodes ride the P-row __ptot ladder; DECIMAL-exact rank sum."
-    ),
-    "model_pr_auc": (
-        "Average precision (r11): same distinct-score groupBy; descending "
-        "TP/PP cumulatives are SUFFIX sums over the ascending prefix machinery "
-        "— auto-routed, integer counts, one closing sum."
-    ),
-    "feature_mi": (
-        "Mutual information (r11): one map-side-combined groupBy to the r×c "
-        "contingency frame; marginals re-aggregate THAT frame and broadcast "
-        "back — everything after the first Exchange is domain-bounded."
-    ),
-    "ks_drift_adjusted": (
-        "ks_matrix → BH (r11): the all-pairs drift grid from ONE scan, then "
-        "the FDR windows run on the G²/2-row TEST frame — the unpartitioned "
-        "rank window is bounded by the test count, not the data."
-    ),
-    "km_ci": (
-        "Greenwood bands (r11): one more domain-bounded prefix over the KM "
-        "frame for the variance cumsum; band math is pure projection."
-    ),
-    "rmst_conversion": (
-        "RMST (r11): clipped-time lead integral over the KM output frame "
-        "(distinct-times-sized); the subject-scale scan work all happened in "
-        "the KM cumulatives."
-    ),
-    "ols_fit_price": (
-        "General OLS (r11): the collected model is re-emitted as a 1-row "
-        "literal frame — the data-path plan is the one-scan Gram aggregate "
-        "(d(d+1)/2+d+3 map-side-combined sums, no Python, no window)."
-    ),
-    "rater_kappa": (
-        "Cohen's kappa (r11): the lang_id projection feeds one r×c "
-        "confusion groupBy; diagonal + marginal re-aggregations broadcast "
-        "back — domain-bounded after the first Exchange."
-    ),
-    "cmh_strata": (
-        "CMH (r11): one (stratum×arm×outcome) map-side-combined count, one "
-        "stratum regroup, one closing 1-row aggregate — no windows, no "
-        "joins beyond the broadcast closes."
-    ),
-    "value_wasserstein": (
-        "W1 drift (r11): the ks skeleton plus gap widths via RANK "
-        "EQUI-JOIN (shuffle-by-rank) — deliberately no global lead window, "
-        "so the auto/high-cardinality path stays single-task-free."
-    ),
-    "score_psi": (
-        "PSI (r11): two domain-bounded bucket counts, null-safe full-outer "
-        "join, eps-floored closing sum — and the counts are plain sums, so "
-        "the live monitor streams through the generic rollup."
-    ),
-    "source_token_js": (
-        "JS divergence (r11): one explode + one (token, source) "
-        "map-side-combined count; mixture-midpoint terms close in a 1-row "
-        "aggregate over the vocab-sized frame."
     ),
     "sparse_topk": (
         "Sparse (SPLADE-shape) retrieval (r13-s2): inverted postings via one "

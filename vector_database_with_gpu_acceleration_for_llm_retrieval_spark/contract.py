@@ -2131,13 +2131,14 @@ def q_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = load_tables(spark, sf_dir)
     docs = t["documents"]
+    # quality is picked by name; the optimizer prunes the other signals
     narrow = docs.select(
         "doc_id", "text", TX.tokens(F.col("text")).alias("__toks")
     ).select(
         "doc_id",
-        T.quality_columns("text", toks_col="__toks")[-1],
+        *T.quality_columns("text", toks_col="__toks"),
         TX.n_tokens(F.col("text")).alias("__wc"),
-    ).localCheckpoint(eager=True)
+    ).select("doc_id", "quality", "__wc").localCheckpoint(eager=True)
     res = sampling.budget_select(
         narrow, BUDGET_TOKENS, order_col="quality", token_count="__wc"
     )
@@ -3356,8 +3357,7 @@ def q_value_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     t = load_tables(spark, sf_dir)
-    # event_type IS NOT NULL pinned on BOTH engines (the model_auc r12
-    # precedent): a NULL type would make a NULL label here (avg skips
+    # event_type IS NOT NULL pinned on BOTH engines: a NULL type would make a NULL label here (avg skips
     # it) but 0.0 in a CASE-ELSE mirror — fixture-dependent divergence
     scored = t["events"].filter(F.col("event_type").isNotNull()).select(
         "event_id",
@@ -5165,23 +5165,6 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sql_range_search": q_sql_range_search,
         "sql_knn_join": q_sql_knn_join,
         "assoc_rules": q_assoc_rules,
-        "ols_fit_price": q_ols_fit_price,
-        "model_auc": q_model_auc,
-        "model_auc_by_arm": q_model_auc_by_arm,
-        "feature_mi": q_feature_mi,
-        "km_ci": q_km_ci,
-        "rmst_conversion": q_rmst_conversion,
-        "ks_drift_adjusted": q_ks_drift_adjusted,
-        "model_pr_auc": q_model_pr_auc,
-        "rater_kappa": q_rater_kappa,
-        "cmh_strata": q_cmh_strata,
-        "value_wasserstein": q_value_wasserstein,
-        "conformal_qhat": q_conformal_qhat,
-        "conformal_coverage": q_conformal_coverage,
-        "conformal_group_qhat": q_conformal_group_qhat,
-        "conformal_group_coverage": q_conformal_group_coverage,
-        "score_psi": q_score_psi,
-        "source_token_js": q_source_token_js,
         "incremental_rollup": q_incremental_rollup,
         "pii_cards": q_pii_cards,
         "grep_corpus_indexed": q_grep_corpus_indexed,
@@ -5387,10 +5370,6 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "recall_ivfpq_res": q_recall_ivfpq_res,
         "hourly_value_p95": q_hourly_value_p95,
         "value_p95_sliding": q_value_p95_sliding,
-        "ks_price_test": q_ks_price_test,
-        "chi2_flag_status": q_chi2_flag_status,
-        "benford_prices": q_benford_prices,
-        "ab_conversion": q_ab_conversion,
         "gap_filled_users": q_gap_filled_users,
         "ewma_daily": q_ewma_daily,
         "holt_forecast7": q_holt_forecast7,
@@ -5404,39 +5383,18 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "snm_pairs": q_snm_pairs,
         "sampled_groupby": q_sampled_groupby,
         "sliding_distinct_users": q_sliding_distinct_users,
-        "trend_test": q_trend_test,
-        "trend_slope": q_trend_slope,
         "fd_profile": q_fd_profile,
         "er_clusters": q_er_clusters,
         "burn_rate": q_burn_rate,
-        "ks_sketch_drift": q_ks_sketch_drift,
         "hot_items_by_type": q_hot_items_by_type,
-        "welch_value_test": q_welch_value_test,
-        "anova_value_type": q_anova_value_type,
-        "ks_source_matrix": q_ks_source_matrix,
         "seasonality_strength": q_seasonality_strength,
         "acf_daily": q_acf_daily,
-        "trend_slope_by_type": q_trend_slope_by_type,
         "pacf_daily": q_pacf_daily,
         "dedup_recall": q_dedup_recall,
         "forecast_bands": q_forecast_bands,
-        "power_sample_size": q_power_sample_size,
-        "cuped_engagement": q_cuped_engagement,
         "woe_iv": q_woe_iv,
-        "ols_price_model": q_ols_price_model,
-        "calibration_error": q_calibration_error,
-        "rank_sum_test": q_rank_sum_test,
-        "spearman_qty_price": q_spearman_qty_price,
-        "km_conversion": q_km_conversion,
-        "logrank_arms": q_logrank_arms,
         "events_session_native": q_events_session_native,
-        "km_by_arm": q_km_by_arm,
-        "rank_sum_distributed": q_rank_sum_distributed,
-        "km_distributed": q_km_distributed,
         "ar_forecast7": q_ar_forecast7,
-        "survival_cindex": q_survival_cindex,
-        "bootstrap_value_ci": q_bootstrap_value_ci,
-        "bootstrap_lift_ci": q_bootstrap_lift_ci,
     }
 
 
@@ -6291,107 +6249,6 @@ def q_robust_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("l_orderkey", "l_linenumber")
 
 
-def q_ks_price_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-sample Kolmogorov-Smirnov distribution-shift test: did
-    urgent-priority orders price differently? Both empirical CDFs in
-    one ordered cumsum over the distinct-price frame — domain-bounded,
-    never the order log (operators/stats.ks_test)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        stats as ST,
-    )
-
-    t = load_tables(spark, sf_dir)
-    arm = F.when(
-        F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), "hi"
-    ).otherwise("lo")
-    df = t["orders"].select(
-        F.col("o_totalprice").alias("price"), arm.alias("arm")
-    )
-    res = ST.ks_test(df, "price", "arm", "hi", "lo")
-    return res.select(
-        "n_a",
-        "n_b",
-        _round6(F.col("d_stat"), "d_stat"),
-        _round6(F.col("ks_z"), "ks_z"),
-        _round6(F.col("p_approx"), "p_approx"),
-    )
-
-
-def q_chi2_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chi-square independence test + Cramér's V between return flag
-    and line status — one scan to the r×c contingency cells, marginals
-    as windows over that tiny frame (operators/stats.chi2_independence)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        stats as ST,
-    )
-
-    t = load_tables(spark, sf_dir)
-    res = ST.chi2_independence(t["lineitem"], "l_returnflag", "l_linestatus")
-    return res.select(
-        "n",
-        "dof",
-        _round6(F.col("chi2"), "chi2"),
-        _round6(F.col("cramers_v"), "cramers_v"),
-    )
-
-
-def q_benford_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benford first-digit screen over order totals: observed vs
-    log10(1+1/d) shares and per-digit chi-square contributions —
-    arithmetic digit extraction, one 9-key groupBy
-    (operators/stats.benford_digits)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        stats as ST,
-    )
-
-    t = load_tables(spark, sf_dir)
-    res = ST.benford_digits(t["orders"], "o_totalprice")
-    return res.select(
-        "digit",
-        "n",
-        _round6(F.col("obs_share"), "obs_share"),
-        _round6(F.col("exp_share"), "exp_share"),
-        _round6(F.col("chi2_term"), "chi2_term"),
-    ).orderBy("digit")
-
-
-def q_ab_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-proportion z-test on user-day conversion: pseudo-arms by
-    (user+day) parity, a unit converts if any of its events is a
-    purchase — the per-unit collapse before the rate math
-    (operators/stats.two_proportion_ztest)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        stats as ST,
-    )
-
-    t = load_tables(spark, sf_dir)
-    day = F.to_date("ts")
-    # event_type IS NOT NULL pinned on BOTH engines (model_auc r12
-    # precedent) so a fixture change can't diverge NULL-conv semantics
-    ev = t["events"].filter(F.col("event_type").isNotNull()).select(
-        F.concat_ws("#", F.col("user_id"), day).alias("unit"),
-        F.when(
-            (F.col("user_id") + F.datediff(day, F.lit("2024-01-01"))) % 2
-            == 0,
-            "a",
-        )
-        .otherwise("b")
-        .alias("arm"),
-        (F.col("event_type") == "purchase").alias("conv"),
-    )
-    res = ST.two_proportion_ztest(ev, "unit", "arm", "conv")
-    return res.select(
-        "n_a",
-        "x_a",
-        _round6(F.col("rate_a"), "rate_a"),
-        "n_b",
-        "x_b",
-        _round6(F.col("rate_b"), "rate_b"),
-        _round6(F.col("lift"), "lift"),
-        _round6(F.col("z"), "z"),
-    )
-
-
 def q_gap_filled_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Calendar gap-fill + forward-fill of sparse per-user daily value
     series — the spine regularization every window/recurrence needs
@@ -6751,49 +6608,6 @@ def q_sliding_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_trend_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mann-Kendall monotonic-trend test on the daily event-value
-    series (integer-exact S over all day pairs, tie-corrected variance,
-    continuity-corrected z) — the robust "is there a trend" answer a
-    least-squares fit can't give under outliers
-    (operators/stats.mann_kendall; the daily frame is calendar-sized,
-    value summed to cents so pair signs are integer-exact)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        stats as ST,
-    )
-
-    t = load_tables(spark, sf_dir)
-    daily = t["events"].groupBy(F.to_date("ts").alias("day")).agg(
-        F.floor(F.sum("value") * 100 + 0.5).cast("long").alias("y")
-    )
-    res = ST.mann_kendall(daily)
-    return res.select(
-        "n", "s", _round6(F.col("var_s"), "var_s"), _round6(F.col("z"), "z")
-    )
-
-
-def q_trend_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Theil-Sen robust slope of the daily event-value trend (median of
-    all pairwise slopes + median-residual intercept, exact interpolated
-    percentile parity) — "how steep", tolerant to ~29% outlier days
-    (operators/stats.theil_sen)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        stats as ST,
-    )
-
-    t = load_tables(spark, sf_dir)
-    daily = t["events"].groupBy(F.to_date("ts").alias("day")).agg(
-        F.floor(F.sum("value") * 100 + 0.5).cast("long").alias("y")
-    )
-    res = ST.theil_sen(daily)
-    return res.select(
-        "n",
-        "n_pairs",
-        _round6(F.col("slope"), "slope"),
-        _round6(F.col("intercept"), "intercept"),
-    )
-
-
 def q_fd_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Functional-dependency profiling over orders: key FDs hold
     (o_orderkey→o_custkey), attribute FDs fail with their g3 error
@@ -6898,37 +6712,6 @@ def q_burn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("hour")
 
 
-def q_ks_sketch_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The documented 100 TB KS path exercised: two-sample KS over
-    QUANTILE-SKETCH bucket ids (first vs second half of the event log
-    by day) — bucketing bounds the CDF domain at sketch size while the
-    monotone bucket mapping preserves the ordering KS needs; exact
-    over the bucketed domain on both engines
-    (operators/stats.ks_test ∘ operators/sketches.qsketch_bucket)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        sketches as SK,
-        stats as ST,
-    )
-
-    t = load_tables(spark, sf_dir)
-    ev = t["events"].select(
-        SK.qsketch_bucket(
-            F.floor(F.col("value") * 100 + 0.5).cast("long"), m=7
-        ).alias("b"),
-        F.when(F.to_date("ts") < F.lit("2024-01-16"), "h1")
-        .otherwise("h2")
-        .alias("arm"),
-    )
-    res = ST.ks_test(ev, "b", "arm", "h1", "h2")
-    return res.select(
-        "n_a",
-        "n_b",
-        _round6(F.col("d_stat"), "d_stat"),
-        _round6(F.col("ks_z"), "ks_z"),
-        _round6(F.col("p_approx"), "p_approx"),
-    )
-
-
 def q_hot_items_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group exact heavy hitters: within each event type, items
     with frequency ≥ N_group/8 (a planted hot item at ~1/3 share per
@@ -6953,75 +6736,6 @@ def q_hot_items_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_rows",
         _round6(F.col("share"), "share"),
     ).orderBy("event_type", "item")
-
-
-def q_welch_value_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Welch's unequal-variance t-test on mean event value between the
-    user-parity pseudo-arms — the mean-difference companion to the KS
-    (shape) and z (proportion) tests; one conditional-sum scan,
-    Welch-Satterthwaite dof (operators/stats.welch_ttest)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        stats as ST,
-    )
-
-    t = load_tables(spark, sf_dir)
-    ev = t["events"].select(
-        "value",
-        F.when(F.col("user_id") % 2 == 0, "a").otherwise("b").alias("arm"),
-    )
-    res = ST.welch_ttest(ev, "value", "arm", "a", "b")
-    return res.select(
-        "n_a",
-        _round6(F.col("mean_a"), "mean_a"),
-        _round6(F.col("var_a"), "var_a"),
-        "n_b",
-        _round6(F.col("mean_b"), "mean_b"),
-        _round6(F.col("var_b"), "var_b"),
-        _round6(F.col("t"), "t"),
-        _round6(F.col("dof"), "dof"),
-    )
-
-
-def q_anova_value_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-way ANOVA: does event type explain event-value variance —
-    F from per-group (n, Σv, Σv²) sums in one scan, eta² effect size
-    (operators/stats.anova_oneway)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        stats as ST,
-    )
-
-    t = load_tables(spark, sf_dir)
-    res = ST.anova_oneway(t["events"], "value", "event_type")
-    return res.select(
-        "n",
-        "k",
-        _round6(F.col("ss_between"), "ss_between"),
-        _round6(F.col("ss_within"), "ss_within"),
-        _round6(F.col("f_stat"), "f_stat"),
-        _round6(F.col("eta_sq"), "eta_sq"),
-    )
-
-
-def q_ks_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All-pairs KS drift matrix over doc-length distributions by
-    source — every source pair's D/z/p from ONE scan via the dense
-    value×group CDF grid, not 190 separate tests
-    (operators/stats.ks_matrix)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        stats as ST,
-    )
-
-    t = load_tables(spark, sf_dir)
-    res = ST.ks_matrix(t["documents"], "n_chars", "source")
-    return res.select(
-        "group_a",
-        "group_b",
-        "n_a",
-        "n_b",
-        _round6(F.col("d_stat"), "d_stat"),
-        _round6(F.col("ks_z"), "ks_z"),
-        _round6(F.col("p_approx"), "p_approx"),
-    ).orderBy("group_a", "group_b")
 
 
 def q_seasonality_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7118,29 +6832,6 @@ def q_ar_forecast7(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("h")
 
 
-def q_trend_slope_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-type Theil-Sen robust daily-value slopes from one plan —
-    which event streams actually trend, outlier days unable to flip
-    any answer (operators/stats.theil_sen_grouped; group-keyed pair
-    joins, calendar-bounded per group)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        stats as ST,
-    )
-
-    t = load_tables(spark, sf_dir)
-    daily = t["events"].groupBy(
-        "event_type", F.to_date("ts").alias("day")
-    ).agg(F.floor(F.sum("value") * 100 + 0.5).cast("long").alias("y"))
-    res = ST.theil_sen_grouped(daily, "event_type")
-    return res.select(
-        F.col("group").alias("event_type"),
-        "n",
-        "n_pairs",
-        _round6(F.col("slope"), "slope"),
-        _round6(F.col("intercept"), "intercept"),
-    ).orderBy("event_type")
-
-
 def q_pacf_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partial autocorrelations of the daily value series at lags 1..4
     — the AR-order diagnostic, Durbin-Levinson unrolled into one
@@ -7234,60 +6925,6 @@ def q_forecast_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type", "h")
 
 
-def q_power_sample_size(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Experiment power analysis from the observed user-day conversion
-    base rate: units per arm to detect +5/10/20% relative lifts at
-    80% power / two-sided 95% — the pre-launch runtime answer, pure
-    scalar algebra over the per-unit collapse
-    (operators/stats.proportion_sample_size)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        stats as ST,
-    )
-
-    t = load_tables(spark, sf_dir)
-    day = F.to_date("ts")
-    # event_type IS NOT NULL pinned on BOTH engines (model_auc r12
-    # precedent — see q_ab_conversion)
-    ev = t["events"].filter(F.col("event_type").isNotNull()).select(
-        F.concat_ws("#", F.col("user_id"), day).alias("unit"),
-        (F.col("event_type") == "purchase").alias("conv"),
-    )
-    res = ST.proportion_sample_size(ev, "unit", "conv", [0.05, 0.10, 0.20])
-    return res.select(
-        _round6(F.col("rel_lift"), "rel_lift"),
-        _round6(F.col("base_rate"), "base_rate"),
-        "n_units",
-        "n_per_arm",
-    ).orderBy("rel_lift")
-
-
-def q_cuped_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUPED variance reduction on per-user engagement: second-half
-    value adjusted by the first-half pre-period covariate
-    (y' = y − θ(x − x̄), θ from one moment aggregate) — the
-    experiment-platform primitive that cuts metric variance by ρ² with
-    the mean exactly preserved (operators/stats.cuped_adjust)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        stats as ST,
-    )
-
-    t = load_tables(spark, sf_dir)
-    split = F.to_date("ts") < F.lit("2024-01-16")
-    per_user = t["events"].groupBy(F.col("user_id").alias("u")).agg(
-        F.coalesce(F.sum(F.when(~split, F.col("value"))), F.lit(0.0)).alias("y"),
-        F.coalesce(F.sum(F.when(split, F.col("value"))), F.lit(0.0)).alias("x"),
-    )
-    res = ST.cuped_adjust(per_user, "u", "y", "x")
-    return res.select(
-        F.col("u").cast("long").alias("u"),
-        _round6(F.col("y"), "y"),
-        _round6(F.col("x"), "x"),
-        _round6(F.col("y_adj"), "y_adj"),
-        _round6(F.col("theta"), "theta"),
-        _round6(F.col("var_reduction"), "var_reduction"),
-    ).orderBy("u")
-
-
 def q_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weight-of-evidence + information value of the event type as a
     purchase predictor — per-bin WOE (signed class separation) and IV
@@ -7298,8 +6935,7 @@ def q_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     t = load_tables(spark, sf_dir)
-    # event_type IS NOT NULL pinned on BOTH engines (model_auc r12
-    # precedent): the mirror's CASE-ELSE would count a NULL type as
+    # event_type IS NOT NULL pinned on BOTH engines: the mirror's CASE-ELSE would count a NULL type as
     # bad=1 while a NULL Spark label drops from both counts
     ev = t["events"].filter(F.col("event_type").isNotNull()).select(
         F.when(F.col("value") < 5, "lo")
@@ -7317,353 +6953,6 @@ def q_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
         _round6(F.col("woe"), "woe"),
         _round6(F.col("iv_term"), "iv_term"),
     ).orderBy("band")
-
-
-def q_ols_price_model(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Closed-form OLS: extended price ~ quantity + discount over
-    lineitem — the 3×3 normal equations by Cramer's rule over one pass
-    of raw sums, R² from the same sums, no driver solve
-    (operators/glm.ols_two_features)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import glm as GL
-
-    t = load_tables(spark, sf_dir)
-    res = GL.ols_two_features(
-        t["lineitem"], "l_quantity", "l_discount", "l_extendedprice"
-    )
-    return res.select(
-        "n",
-        _round6(F.col("beta_u"), "beta_qty"),
-        _round6(F.col("beta_v"), "beta_disc"),
-        _round6(F.col("beta0"), "beta0"),
-        _round6(F.col("r2"), "r2"),
-    )
-
-
-def q_ols_fit_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The general-d Gram-solve OLS (operators/glm.ols_fit) at d=2 on
-    the SAME model as ols_price_model, value-checked against the SAME
-    Cramer closed-form mirror — proving the (XᵀX, Xᵀy) one-scan +
-    driver-solve path agrees with the oracle-checked closed form on
-    real data to round-6 (the two solve identical normal equations)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import glm as GL
-
-    t = load_tables(spark, sf_dir)
-    m = GL.ols_fit(
-        t["lineitem"], ["l_quantity", "l_discount"], "l_extendedprice"
-    )
-    res = spark.createDataFrame(
-        [(
-            int(m["n"]),
-            float(m["beta"][0]),
-            float(m["beta"][1]),
-            float(m["beta"][2]),
-            float(m["r2"]),
-        )],
-        "n long, beta_qty double, beta_disc double, beta0 double, r2 double",
-    )
-    return res.select(
-        "n",
-        _round6(F.col("beta_qty"), "beta_qty"),
-        _round6(F.col("beta_disc"), "beta_disc"),
-        _round6(F.col("beta0"), "beta0"),
-        _round6(F.col("r2"), "r2"),
-    )
-
-
-def q_calibration_error(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ECE + Brier score of a pseudo-probability (clipped value/100)
-    against purchase labels — the reliability readout, one scan to
-    ≤10 bins (operators/glm.calibration_error; the bins breakdown is
-    emitted long-form for the hash)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import glm as GL
-
-    t = load_tables(spark, sf_dir)
-    # event_type IS NOT NULL pinned on BOTH engines (model_auc r12
-    # precedent — see q_woe_iv for the CASE-ELSE divergence shape)
-    ev = t["events"].filter(F.col("event_type").isNotNull()).select(
-        F.least(F.lit(0.999), F.greatest(F.lit(0.0), F.col("value") / 100.0)).alias("p"),
-        (F.col("event_type") == "purchase").cast("int").alias("y"),
-    )
-    res = GL.calibration_error(ev, "p", "y", n_bins=10)
-    flat = res.select(
-        "n",
-        _round6(F.col("ece"), "ece"),
-        _round6(F.col("brier"), "brier"),
-        F.explode("bins").alias("b"),
-    )
-    return flat.select(
-        "n",
-        "ece",
-        "brier",
-        F.col("b.bin").cast("int").alias("bin"),
-        F.col("b.n").cast("long").alias("n_bin"),
-        _round6(F.col("b.conf"), "conf"),
-        _round6(F.col("b.rate"), "rate"),
-    ).orderBy("bin")
-
-
-def q_rank_sum_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mann-Whitney rank-sum test on order totals between the priority
-    arms — the rank-based complement to the KS/Welch pair on the same
-    cohorts; mid-ranks assigned on the distinct-value frame, exact tie
-    handling (operators/stats.mann_whitney_u)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        stats as ST,
-    )
-
-    t = load_tables(spark, sf_dir)
-    arm = F.when(
-        F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), "hi"
-    ).otherwise("lo")
-    df = t["orders"].select(
-        F.col("o_totalprice").alias("price"), arm.alias("arm")
-    )
-    res = ST.mann_whitney_u(df, "price", "arm", "hi", "lo")
-    return res.select(
-        "n_a", "n_b", _round6(F.col("u_a"), "u_a"), _round6(F.col("z"), "z")
-    )
-
-
-def q_rank_sum_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The rank_sum_test statistics computed through the
-    high-cardinality distributed-prefix path (stats._cdf_prefix:
-    range-exchange + P-row broadcast offsets, no single-task window
-    over the distinct-price frame) — same oracle as rank_sum_test
-    because the integer rank sums are BIT-IDENTICAL between paths;
-    this entry proves the 100×-scale path oracle-correct end to end,
-    not merely self-consistent (operators/stats.mann_whitney_u)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        stats as ST,
-    )
-
-    t = load_tables(spark, sf_dir)
-    arm = F.when(
-        F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), "hi"
-    ).otherwise("lo")
-    df = t["orders"].select(
-        F.col("o_totalprice").alias("price"), arm.alias("arm")
-    )
-    res = ST.mann_whitney_u(df, "price", "arm", "hi", "lo", high_cardinality=True)
-    return res.select(
-        "n_a", "n_b", _round6(F.col("u_a"), "u_a"), _round6(F.col("z"), "z")
-    )
-
-
-def q_spearman_qty_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spearman rank correlation between quantity and extended price
-    over lineitem — monotone association, mid-ranks from the
-    distinct-value frames, never a global row sort
-    (operators/stats.spearman_corr)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        stats as ST,
-    )
-
-    t = load_tables(spark, sf_dir)
-    res = ST.spearman_corr(t["lineitem"], "l_quantity", "l_extendedprice")
-    return res.select("n", _round6(F.col("rho"), "rho"))
-
-
-def q_km_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kaplan-Meier time-to-conversion: per-user microseconds from first
-    event to first high-value purchase (value>90), users without one
-    right-censored at their last event — survival/hazard over the
-    users-sized duration frame (operators/stats.kaplan_meier; the
-    running product as exp∘cumsum∘ln with the d=n absorbing state
-    handled portably)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        stats as ST,
-    )
-
-    t = load_tables(spark, sf_dir)
-    ev = t["events"]
-    hit = (F.col("event_type") == "purchase") & (F.col("value") > 90)
-    per = ev.groupBy("user_id").agg(
-        F.min("ts").alias("t0"),
-        F.max("ts").alias("t_last"),
-        F.min(F.when(hit, F.col("ts"))).alias("t_evt"),
-    )
-    dur = per.select(
-        (
-            F.unix_micros(F.coalesce(F.col("t_evt"), F.col("t_last")))
-            - F.unix_micros(F.col("t0"))
-        ).alias("t"),
-        F.col("t_evt").isNotNull().cast("int").alias("event"),
-    )
-    res = ST.kaplan_meier(dur)
-    return res.select(
-        F.col("t").cast("long").alias("t"),
-        "n_risk",
-        "d",
-        "censored",
-        _round6(F.col("hazard"), "hazard"),
-        _round6(F.col("survival"), "survival"),
-    ).orderBy("t")
-
-
-def q_km_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """km_conversion through the high-cardinality path — EXACTLY the
-    case the unpartitioned window cannot survive at 100×: the
-    distinct-time frame of exact-microsecond durations is user-sized,
-    so the risk-set / ln-survival cumulatives run through the
-    distributed prefix instead (risk sets integer-identical, survival
-    within last-ulps of the window path — same round-6 oracle as
-    km_conversion) (operators/stats.kaplan_meier)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        stats as ST,
-    )
-
-    t = load_tables(spark, sf_dir)
-    ev = t["events"]
-    hit = (F.col("event_type") == "purchase") & (F.col("value") > 90)
-    per = ev.groupBy("user_id").agg(
-        F.min("ts").alias("t0"),
-        F.max("ts").alias("t_last"),
-        F.min(F.when(hit, F.col("ts"))).alias("t_evt"),
-    )
-    dur = per.select(
-        (
-            F.unix_micros(F.coalesce(F.col("t_evt"), F.col("t_last")))
-            - F.unix_micros(F.col("t0"))
-        ).alias("t"),
-        F.col("t_evt").isNotNull().cast("int").alias("event"),
-    )
-    res = ST.kaplan_meier(dur, high_cardinality=True)
-    return res.select(
-        F.col("t").cast("long").alias("t"),
-        "n_risk",
-        "d",
-        "censored",
-        _round6(F.col("hazard"), "hazard"),
-        _round6(F.col("survival"), "survival"),
-    ).orderBy("t")
-
-
-def q_bootstrap_value_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-event-type mean value with Poisson-bootstrap 95% CIs in ONE
-    scan — the web-scale bootstrap (hash-derived Poisson(1) replicate
-    weights instead of B resampled copies; Chamandy et al. 2012), fully
-    deterministic so the replicate means hash-match the SQL mirror
-    running the same md5 → inverse-CDF chain
-    (operators/stats.poisson_bootstrap_ci, b=32)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        stats as ST,
-    )
-
-    t = load_tables(spark, sf_dir)
-    res = ST.poisson_bootstrap_ci(
-        t["events"], ["event_type"], "value", "event_id", b=32
-    )
-    return res.select(
-        "event_type",
-        "n",
-        _round6(F.col("mean"), "mean"),
-        _round6(F.col("lo"), "lo"),
-        _round6(F.col("hi"), "hi"),
-        F.col("b").cast("int").alias("b"),
-    ).orderBy("event_type")
-
-
-def q_bootstrap_lift_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bootstrap 95% CI on the user-parity arms' mean-value lift — the
-    distribution-free significance readout (interval excluding 0) the
-    analytic z/t entries approximate; same hash-derived Poisson(1)
-    weights resampling BOTH arms per replicate
-    (operators/stats.poisson_bootstrap_lift, b=32)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        stats as ST,
-    )
-
-    t = load_tables(spark, sf_dir)
-    ev = t["events"].select(
-        "event_id",
-        "value",
-        F.when(F.col("user_id") % 2 == 0, "a").otherwise("b").alias("arm"),
-    )
-    res = ST.poisson_bootstrap_lift(ev, "arm", "value", "event_id", "a", "b", b=32)
-    return res.select(
-        "n_a",
-        "n_b",
-        _round6(F.col("mean_a"), "mean_a"),
-        _round6(F.col("mean_b"), "mean_b"),
-        _round6(F.col("lift"), "lift"),
-        _round6(F.col("lo"), "lo"),
-        _round6(F.col("hi"), "hi"),
-        F.col("b").cast("int").alias("b"),
-    )
-
-
-def q_survival_cindex(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Harrell's concordance index on the conversion cohort: does a
-    user's event volume rank their time-to-high-value-purchase
-    correctly under censoring (the survival AUC — how a cox_fit model
-    is judged)? Both axes quantized onto the monotone sketch-bucket
-    grid (m=5), per-cell counts + grid windows, integer-exact
-    concordant/tied/discordant splits
-    (operators/stats.concordance_index)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        stats as ST,
-    )
-
-    t = load_tables(spark, sf_dir)
-    ev = t["events"]
-    hit = (F.col("event_type") == "purchase") & (F.col("value") > 90)
-    per = ev.groupBy("user_id").agg(
-        F.min("ts").alias("t0"),
-        F.max("ts").alias("t_last"),
-        F.min(F.when(hit, F.col("ts"))).alias("t_evt"),
-        F.count(F.lit(1)).alias("n_events"),
-    )
-    dur = per.select(
-        (
-            F.unix_micros(F.coalesce(F.col("t_evt"), F.col("t_last")))
-            - F.unix_micros(F.col("t0"))
-        ).alias("t"),
-        F.col("t_evt").isNotNull().cast("int").alias("event"),
-        F.col("n_events").alias("score"),
-    ).filter(F.col("t") > 0)
-    res = ST.concordance_index(dur, "t", "event", "score", m=5)
-    return res.select(
-        "concordant",
-        "tied",
-        "discordant",
-        "n_pairs",
-        _round6(F.col("cindex"), "cindex"),
-    )
-
-
-def q_logrank_arms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Log-rank comparison of time-to-high-value-purchase curves
-    between the user-parity arms — the censoring-correct "did arm B
-    convert faster", O−E over merged risk sets at every event time
-    (operators/stats.logrank_test)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        stats as ST,
-    )
-
-    t = load_tables(spark, sf_dir)
-    ev = t["events"]
-    hit = (F.col("event_type") == "purchase") & (F.col("value") > 90)
-    per = ev.groupBy("user_id").agg(
-        F.min("ts").alias("t0"),
-        F.max("ts").alias("t_last"),
-        F.min(F.when(hit, F.col("ts"))).alias("t_evt"),
-    )
-    dur = per.select(
-        (
-            F.unix_micros(F.coalesce(F.col("t_evt"), F.col("t_last")))
-            - F.unix_micros(F.col("t0"))
-        ).alias("t"),
-        F.col("t_evt").isNotNull().cast("int").alias("event"),
-        F.when(F.col("user_id") % 2 == 0, "a").otherwise("b").alias("g"),
-    )
-    res = ST.logrank_test(dur)
-    return res.select(
-        "n_a",
-        "n_b",
-        _round6(F.col("observed_a"), "observed_a"),
-        _round6(F.col("expected_a"), "expected_a"),
-        _round6(F.col("chi2"), "chi2"),
-    )
 
 
 def q_events_session_native(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7692,439 +6981,3 @@ def q_events_session_native(spark: SparkSession, sf_dir: str) -> DataFrame:
         _round6(F.col("session_value"), "session_value"),
     ).orderBy("user_id", "session_start_us")
 
-
-def q_km_by_arm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-arm Kaplan-Meier time-to-conversion curves — the retention
-    view of the logrank_arms comparison, every window partitioned by
-    the arm (operators/stats.kaplan_meier_grouped)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        stats as ST,
-    )
-
-    t = load_tables(spark, sf_dir)
-    ev = t["events"]
-    hit = (F.col("event_type") == "purchase") & (F.col("value") > 90)
-    per = ev.groupBy("user_id").agg(
-        F.min("ts").alias("t0"),
-        F.max("ts").alias("t_last"),
-        F.min(F.when(hit, F.col("ts"))).alias("t_evt"),
-    )
-    dur = per.select(
-        (
-            F.unix_micros(F.coalesce(F.col("t_evt"), F.col("t_last")))
-            - F.unix_micros(F.col("t0"))
-        ).alias("t"),
-        F.col("t_evt").isNotNull().cast("int").alias("event"),
-        F.when(F.col("user_id") % 2 == 0, "a").otherwise("b").alias("g"),
-    )
-    res = ST.kaplan_meier_grouped(dur, "g")
-    return res.select(
-        F.col("group").alias("arm"),
-        F.col("t").cast("long").alias("t"),
-        "n_risk",
-        "d",
-        "censored",
-        _round6(F.col("hazard"), "hazard"),
-        _round6(F.col("survival"), "survival"),
-    ).orderBy("arm", "t")
-
-
-def q_model_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROC-AUC of the event value as a purchase score — the
-    ranking-quality readout (normalized Mann-Whitney U with exact
-    midrank tie handling, DECIMAL-exact rank sum; the continuous score
-    auto-routes through the distributed prefix)
-    (operators/stats.roc_auc)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        stats as ST,
-    )
-
-    t = load_tables(spark, sf_dir)
-    # event_type IS NOT NULL in BOTH engine and oracle: the SQL CASE
-    # would count a NULL type as a negative while Spark's == yields a
-    # NULL label that roc_auc drops — make the semantics explicit
-    # rather than fixture-dependent (round-11 ADVICE)
-    ev = t["events"].filter(F.col("event_type").isNotNull()).select(
-        F.col("value").alias("score"),
-        (F.col("event_type") == "purchase").cast("int").alias("y"),
-    )
-    res = ST.roc_auc(ev, "score", "y")
-    return res.select(
-        "n_pos",
-        "n_neg",
-        _round6(F.col("auc"), "auc"),
-        _round6(F.col("gini"), "gini"),
-    )
-
-
-def q_model_auc_by_arm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-arm ROC-AUC (the fairness/debugging view: is the score only
-    good on one segment?) — the roc_auc midrank identity with every
-    window partitioned by the user-parity arm
-    (operators/stats.roc_auc_grouped)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        stats as ST,
-    )
-
-    t = load_tables(spark, sf_dir)
-    ev = t["events"].filter(F.col("event_type").isNotNull()).select(
-        F.when(F.col("user_id") % 2 == 0, "a").otherwise("b").alias("arm"),
-        F.col("value").alias("score"),
-        (F.col("event_type") == "purchase").cast("int").alias("y"),
-    )
-    res = ST.roc_auc_grouped(ev, "arm", "score", "y")
-    return res.select(
-        F.col("group").alias("arm"),
-        "n_pos",
-        "n_neg",
-        _round6(F.col("auc"), "auc"),
-        _round6(F.col("gini"), "gini"),
-    ).orderBy("arm")
-
-
-def q_feature_mi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mutual information (+ entropies + sqrt-normalized NMI) between
-    order priority and order status — the feature-redundancy /
-    label-leakage detector next to the chi² independence entry
-    (operators/stats.mutual_information)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        stats as ST,
-    )
-
-    t = load_tables(spark, sf_dir)
-    res = ST.mutual_information(t["orders"], "o_orderpriority", "o_orderstatus")
-    return res.select(
-        "n",
-        _round6(F.col("mi"), "mi"),
-        _round6(F.col("h_x"), "h_x"),
-        _round6(F.col("h_y"), "h_y"),
-        _round6(F.col("nmi"), "nmi"),
-    )
-
-
-def _conversion_durations(t) -> DataFrame:
-    """The km_conversion duration frame (per-user µs to first
-    high-value purchase, right-censored at last event) — shared by the
-    KM curve, the Greenwood-CI, and the RMST entries."""
-    ev = t["events"]
-    hit = (F.col("event_type") == "purchase") & (F.col("value") > 90)
-    per = ev.groupBy("user_id").agg(
-        F.min("ts").alias("t0"),
-        F.max("ts").alias("t_last"),
-        F.min(F.when(hit, F.col("ts"))).alias("t_evt"),
-    )
-    return per.select(
-        (
-            F.unix_micros(F.coalesce(F.col("t_evt"), F.col("t_last")))
-            - F.unix_micros(F.col("t0"))
-        ).alias("t"),
-        F.col("t_evt").isNotNull().cast("int").alias("event"),
-    )
-
-
-RMST_TAU = 1_500_000_000_000  # µs — between the median and p75 duration
-
-
-def q_km_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The km_conversion curve with Greenwood standard errors and
-    log-log 95% confidence bands — the per-time uncertainty the bare
-    curve lacks (operators/stats.kaplan_meier_ci; one more
-    domain-bounded prefix over the KM frame)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        stats as ST,
-    )
-
-    t = load_tables(spark, sf_dir)
-    res = ST.kaplan_meier_ci(_conversion_durations(t))
-    return res.select(
-        F.col("t").cast("long").alias("t"),
-        "n_risk",
-        "d",
-        "censored",
-        _round6(F.col("survival"), "survival"),
-        _round6(F.col("se"), "se"),
-        _round6(F.col("lo"), "lo"),
-        _round6(F.col("hi"), "hi"),
-    ).orderBy("t")
-
-
-def q_rmst_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Restricted mean survival time at τ=1.5e12 µs over the
-    km_conversion cohort — the censoring-safe "average time to
-    convert within τ" effect size (operators/stats.rmst; step
-    integral of the KM curve)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        stats as ST,
-    )
-
-    t = load_tables(spark, sf_dir)
-    res = ST.rmst(_conversion_durations(t), tau=float(RMST_TAU))
-    return res.select(
-        F.col("tau").cast("long").alias("tau"),
-        _round6(F.col("rmst") / 1e12, "rmst_e12"),
-        "n",
-        "n_events",
-    )
-
-
-def q_ks_drift_adjusted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ks_source_matrix drift report with Benjamini-Hochberg FDR
-    adjustment over all G²/2 pair tests — the step that turns a
-    p-value matrix into a shippable alarm list
-    (operators/stats.ks_matrix → operators/stats.p_adjust)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        stats as ST,
-    )
-
-    t = load_tables(spark, sf_dir)
-    mat = ST.ks_matrix(t["documents"], "n_chars", "source")
-    res = ST.p_adjust(mat, "p_approx", method="bh")
-    return res.select(
-        "group_a",
-        "group_b",
-        "n_a",
-        "n_b",
-        _round6(F.col("d_stat"), "d_stat"),
-        _round6(F.col("p_approx"), "p_approx"),
-        _round6(F.col("p_adj"), "p_adj"),
-    ).orderBy("group_a", "group_b")
-
-
-def q_model_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Average precision of the event value as a purchase score — the
-    class-imbalance-honest companion to model_auc (step-interpolated
-    PR area, exact tie handling via whole-threshold groups)
-    (operators/stats.pr_auc)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        stats as ST,
-    )
-
-    t = load_tables(spark, sf_dir)
-    # event_type IS NOT NULL in BOTH engine and oracle: the SQL CASE
-    # would count a NULL type as a negative while Spark's == yields a
-    # NULL label that roc_auc drops — make the semantics explicit
-    # rather than fixture-dependent (round-11 ADVICE)
-    ev = t["events"].filter(F.col("event_type").isNotNull()).select(
-        F.col("value").alias("score"),
-        (F.col("event_type") == "purchase").cast("int").alias("y"),
-    )
-    res = ST.pr_auc(ev, "score", "y")
-    return res.select(
-        "n_pos",
-        "n_neg",
-        _round6(F.col("ap"), "ap"),
-        _round6(F.col("baseline"), "baseline"),
-    )
-
-
-def q_rater_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohen's kappa between the stored gold language label and the
-    stopword-profile lang_id prediction — the label-quality /
-    inter-annotator-agreement audit, composed from two already-green
-    entries (operators/stats.cohens_kappa over operators/textstats
-    .lang_id)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        stats as ST,
-    )
-
-    t = load_tables(spark, sf_dir)
-    pred = T.lang_id(t["documents"]).select("doc_id", "pred_lang")
-    joined = t["documents"].select("doc_id", "lang").join(pred, "doc_id")
-    res = ST.cohens_kappa(joined, "lang", "pred_lang")
-    return res.select(
-        "n",
-        _round6(F.col("p_observed"), "p_observed"),
-        _round6(F.col("p_expected"), "p_expected"),
-        _round6(F.col("kappa"), "kappa"),
-    )
-
-
-def q_cmh_strata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cochran-Mantel-Haenszel arm→high-value effect stratified by
-    event type — the Simpson's-paradox-proof experiment readout next
-    to the pooled two-proportion z-test (operators/stats.cmh_test)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        stats as ST,
-    )
-
-    t = load_tables(spark, sf_dir)
-    ev = t["events"].select(
-        F.col("event_type").alias("k"),
-        F.when(F.col("user_id") % 2 == 0, "a").otherwise("b").alias("arm"),
-        (F.col("value") > 50).cast("int").alias("hit"),
-    )
-    res = ST.cmh_test(ev, "k", "arm", "hit", "a", "b")
-    return res.select(
-        "n",
-        "n_strata",
-        _round6(F.col("chi2"), "chi2"),
-        _round6(F.col("or_mh"), "or_mh"),
-    )
-
-
-def q_conformal_qhat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Split-conformal calibration quantile (r12): the EXACT k-th
-    smallest calibration score with k = ceil((n+1)(1-alpha)) — the
-    distribution-free coverage guarantee's order statistic, through
-    the shared rank/CDF skeleton (continuous score auto-routes to the
-    distributed prefix; an approximate quantile would void the
-    guarantee) (operators/stats.conformal_quantile)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        stats as ST,
-    )
-
-    t = load_tables(spark, sf_dir)
-    cal = t["events"].filter(F.col("user_id") % 2 == 0).select(
-        F.col("value").alias("score")
-    )
-    res = ST.conformal_quantile(cal, "score", alpha=0.1)
-    return res.select(
-        "n", "k", _round6(F.col("alpha"), "alpha"), _round6(F.col("qhat"), "qhat")
-    )
-
-
-def q_conformal_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Split-conformal coverage audit: qhat calibrated on even-user
-    events, empirical coverage measured on odd-user events — the
-    deployed-conformal drift alarm (coverage must concentrate at
-    >= 1-alpha under exchangeability)
-    (operators/stats.conformal_coverage)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        stats as ST,
-    )
-
-    t = load_tables(spark, sf_dir)
-    ev = t["events"].select("user_id", F.col("value").alias("score"))
-    cal = ev.filter(F.col("user_id") % 2 == 0)
-    test = ev.filter(F.col("user_id") % 2 == 1)
-    res = ST.conformal_coverage(cal, test, "score", alpha=0.1)
-    return res.select(
-        "n_cal",
-        "n_test",
-        _round6(F.col("alpha"), "alpha"),
-        _round6(F.col("qhat"), "qhat"),
-        _round6(F.col("coverage"), "coverage"),
-        _round6(F.col("target"), "target"),
-    )
-
-
-def q_conformal_group_qhat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mondrian (group-conditional) conformal calibration: exact
-    per-event-type qhat so coverage holds WITHIN each segment — the
-    fairness form of the guarantee; tiny groups honestly report NULL
-    (no finite score covers) instead of borrowing the marginal
-    quantile (operators/stats.conformal_quantile_grouped)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        stats as ST,
-    )
-
-    t = load_tables(spark, sf_dir)
-    ev = t["events"].select("event_type", F.col("value").alias("score"))
-    res = ST.conformal_quantile_grouped(ev, "event_type", "score", alpha=0.2)
-    return res.select(
-        "group",
-        "n",
-        "k",
-        _round6(F.col("alpha"), "alpha"),
-        _round6(F.col("qhat"), "qhat"),
-    ).orderBy("group")
-
-
-def q_conformal_group_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-segment Mondrian coverage audit: per-event-type qhat from
-    even-user events, per-event-type empirical coverage on odd-user
-    events — surfaces exactly the under-covering segment a marginal
-    audit averages away
-    (operators/stats.conformal_coverage_grouped)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        stats as ST,
-    )
-
-    t = load_tables(spark, sf_dir)
-    ev = t["events"].select(
-        "event_type", "user_id", F.col("value").alias("score")
-    )
-    cal = ev.filter(F.col("user_id") % 2 == 0)
-    test = ev.filter(F.col("user_id") % 2 == 1)
-    res = ST.conformal_coverage_grouped(cal, test, "event_type", "score", alpha=0.2)
-    return res.select(
-        "group",
-        "n_cal",
-        "n_test",
-        _round6(F.col("alpha"), "alpha"),
-        _round6(F.col("qhat"), "qhat"),
-        _round6(F.col("coverage"), "coverage"),
-        _round6(F.col("target"), "target"),
-    ).orderBy("group")
-
-
-def q_value_wasserstein(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """1-Wasserstein distance between the hi/lo-priority order-price
-    distributions — how far mass moved, where the KS entry reports
-    only the worst single CDF gap; gap widths by rank equi-join, no
-    global lead window (operators/stats.wasserstein_1d)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        stats as ST,
-    )
-
-    t = load_tables(spark, sf_dir)
-    src = t["orders"].select(
-        F.col("o_totalprice").alias("v"),
-        F.when(
-            F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), "hi"
-        ).otherwise("lo").alias("arm"),
-    )
-    res = ST.wasserstein_1d(src, "v", "arm", "hi", "lo")
-    return res.select("n_a", "n_b", _round6(F.col("w1"), "w1"))
-
-
-def q_score_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Population stability index of the event-value distribution,
-    even-user reference vs odd-user live halves over fixed value
-    buckets — the industry score-drift monitor
-    (operators/stats.psi)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        stats as ST,
-    )
-
-    t = load_tables(spark, sf_dir)
-    ev = t["events"].select(
-        "user_id",
-        F.least(F.lit(9), F.floor(F.col("value") / 50).cast("int")).alias(
-            "bucket"
-        ),
-    )
-    ref = ev.filter(F.col("user_id") % 2 == 0)
-    live = ev.filter(F.col("user_id") % 2 == 1)
-    res = ST.psi(ref, live, "bucket")
-    return res.select(
-        "n_ref", "n_live", _round6(F.col("psi_value"), "psi_value")
-    )
-
-
-def q_source_token_js(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Jensen-Shannon divergence between the token distributions of
-    two document sources — the symmetric always-finite corpus-drift
-    readout, one explode + one (token, source) count
-    (operators/stats.js_divergence)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        stats as ST,
-    )
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.functions import (
-        text as TXF,
-    )
-
-    t = load_tables(spark, sf_dir)
-    toks = (
-        t["documents"]
-        .filter(F.col("source").isin("src2", "src3"))
-        .select("source", F.explode(TXF.tokens("text")).alias("tok"))
-    )
-    res = ST.js_divergence(toks, "tok", "source", "src2", "src3")
-    return res.select(
-        "n_a",
-        "n_b",
-        "n_items",
-        _round6(F.col("js"), "js"),
-        _round6(F.col("js_norm"), "js_norm"),
-    )

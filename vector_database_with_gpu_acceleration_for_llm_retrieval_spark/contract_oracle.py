@@ -20,7 +20,6 @@ from __future__ import annotations
 from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.functions import text as TX
 from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
     dedup as D,
-    pq as PQ,
     textstats as T,
 )
 
@@ -5455,157 +5454,6 @@ ORDER BY hour, q
 """
 
 
-def _oracle_bootstrap_value_ci(b: int = 32) -> str:
-    """The identical Poisson-bootstrap chain in SQL, generated by the
-    same loop as operators/stats.poisson_bootstrap_ci: same md5
-    uniforms, same Poisson(1) inverse-CDF cut points (shared literals
-    via stats.POISSON1_CDF), same weighted means and percentiles."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators.stats import (
-        POISSON1_CDF,
-    )
-
-    def w_expr(r: int) -> str:
-        salted = "sid || '" + f":{r}:0" + "'"
-        u = (
-            f"(({_sq_tok_hash(salted)}) % 1000000 + 1)"
-            " / CAST(1000001 AS DOUBLE)"
-        )
-        whens = " ".join(
-            f"WHEN {u} < CAST({c!r} AS DOUBLE) THEN {k}.0"
-            for k, c in enumerate(POISSON1_CDF)
-        )
-        return f"(CASE {whens} ELSE {len(POISSON1_CDF)}.0 END)"
-
-    wcols = ",\n             ".join(f"{w_expr(r)} AS w{r}" for r in range(b))
-    sums = ",\n               ".join(
-        f"sum(w{r} * value) AS wv{r}, sum(w{r}) AS ws{r}" for r in range(b)
-    )
-    means = ", ".join(
-        f"wv{r} / (CASE WHEN ws{r} > 0 THEN ws{r} END)" for r in range(b)
-    )
-    return f"""
-WITH base AS (SELECT event_type, value, CAST(event_id AS VARCHAR) AS sid
-              FROM events WHERE value IS NOT NULL),
-wts AS (SELECT event_type, value,
-             {wcols}
-        FROM base),
-agg AS (SELECT event_type, count(*) AS n, sum(value) AS sv,
-               {sums}
-        FROM wts GROUP BY 1),
-reps AS (SELECT event_type, n, sv / n AS mean,
-                unnest([{means}]) AS m
-         FROM agg)
-SELECT event_type, CAST(n AS BIGINT) AS n, {_r6('mean', 'mean')},
-       {_r6('quantile_cont(m, 0.025)', 'lo')},
-       {_r6('quantile_cont(m, 0.975)', 'hi')},
-       CAST({b} AS INT) AS b
-FROM reps GROUP BY event_type, n, mean ORDER BY event_type
-"""
-
-
-def _oracle_bootstrap_lift_ci(b: int = 32) -> str:
-    """Lift twin of _oracle_bootstrap_value_ci: same weights, both
-    arms resampled per replicate, percentile of mean_a − mean_b."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators.stats import (
-        POISSON1_CDF,
-    )
-
-    def w_expr(r: int) -> str:
-        salted = "sid || '" + f":{r}:0" + "'"
-        u = (
-            f"(({_sq_tok_hash(salted)}) % 1000000 + 1)"
-            " / CAST(1000001 AS DOUBLE)"
-        )
-        whens = " ".join(
-            f"WHEN {u} < CAST({c!r} AS DOUBLE) THEN {k}.0"
-            for k, c in enumerate(POISSON1_CDF)
-        )
-        return f"(CASE {whens} ELSE {len(POISSON1_CDF)}.0 END)"
-
-    wcols = ",\n             ".join(f"{w_expr(r)} AS w{r}" for r in range(b))
-    sums = ",\n               ".join(
-        f"sum(CASE WHEN is_a THEN w{r} * value ELSE 0.0 END) AS wva{r},"
-        f" sum(CASE WHEN is_a THEN w{r} ELSE 0.0 END) AS wa{r},"
-        f" sum(CASE WHEN NOT is_a THEN w{r} * value ELSE 0.0 END) AS wvb{r},"
-        f" sum(CASE WHEN NOT is_a THEN w{r} ELSE 0.0 END) AS wb{r}"
-        for r in range(b)
-    )
-    lifts = ", ".join(
-        f"wva{r} / (CASE WHEN wa{r} > 0 THEN wa{r} END)"
-        f" - wvb{r} / (CASE WHEN wb{r} > 0 THEN wb{r} END)"
-        for r in range(b)
-    )
-    return f"""
-WITH base AS (SELECT value, CAST(event_id AS VARCHAR) AS sid,
-                     (user_id % 2 = 0) AS is_a
-              FROM events WHERE value IS NOT NULL),
-wts AS (SELECT value, is_a,
-             {wcols}
-        FROM base),
-agg AS (SELECT sum(CASE WHEN is_a THEN 1 ELSE 0 END) AS na,
-               sum(CASE WHEN is_a THEN 0 ELSE 1 END) AS nb,
-               sum(CASE WHEN is_a THEN value ELSE 0.0 END) AS sva,
-               sum(CASE WHEN is_a THEN 0.0 ELSE value END) AS svb,
-               {sums}
-        FROM wts),
-reps AS (SELECT na, nb,
-                sva / (CASE WHEN na > 0 THEN na END) AS mean_a,
-                svb / (CASE WHEN nb > 0 THEN nb END) AS mean_b,
-                unnest([{lifts}]) AS l
-         FROM agg)
-SELECT CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
-       {_r6('mean_a', 'mean_a')}, {_r6('mean_b', 'mean_b')},
-       {_r6('mean_a - mean_b', 'lift')},
-       {_r6('quantile_cont(l, 0.025)', 'lo')},
-       {_r6('quantile_cont(l, 0.975)', 'hi')},
-       CAST({b} AS INT) AS b
-FROM reps GROUP BY na, nb, mean_a, mean_b
-"""
-
-
-def _oracle_survival_cindex(m: int = 5) -> str:
-    """Grid-algebra mirror of operators/stats.concordance_index on the
-    conversion cohort: same sketch buckets, same dense spine, same
-    strictly-later suffix + lower/equal/higher splits — all integer."""
-    return f"""
-WITH per AS (SELECT user_id, min(ts) AS t0, max(ts) AS t_last,
-                    min(CASE WHEN event_type = 'purchase' AND value > 90 THEN ts END) AS t_evt,
-                    count(*) AS n_events
-             FROM events GROUP BY 1),
-dur AS (SELECT epoch_us(coalesce(t_evt, t_last)) - epoch_us(t0) AS t,
-               CASE WHEN t_evt IS NOT NULL THEN 1 ELSE 0 END AS ev,
-               n_events AS score
-        FROM per),
-src AS (SELECT {_sq_qbucket('t', m)} AS tb, {_sq_qbucket('score', m)} AS sb, ev
-        FROM dur WHERE t > 0),
-cell AS (SELECT tb, sb, count(*) AS n, sum(ev) AS de FROM src GROUP BY 1, 2),
-spine AS (SELECT a.tb, b.sb FROM (SELECT DISTINCT tb FROM cell) a
-          CROSS JOIN (SELECT DISTINCT sb FROM cell) b),
-dense AS (SELECT spine.tb, spine.sb, coalesce(cell.n, 0) AS n, coalesce(cell.de, 0) AS de
-          FROM spine LEFT JOIN cell ON cell.tb = spine.tb AND cell.sb = spine.sb),
-lt AS (SELECT tb, sb, de,
-              coalesce(sum(n) OVER (PARTITION BY sb ORDER BY tb
-                ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING), 0) AS later
-       FROM dense),
-sp AS (SELECT de, later,
-              coalesce(sum(later) OVER (PARTITION BY tb ORDER BY sb
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS lo,
-              coalesce(sum(later) OVER (PARTITION BY tb ORDER BY sb
-                ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING), 0) AS hi
-       FROM lt),
-agg AS (SELECT CAST(sum(de * lo) AS BIGINT) AS concordant,
-               CAST(sum(de * later) AS BIGINT) AS tied,
-               CAST(sum(de * hi) AS BIGINT) AS discordant
-        FROM sp)
-SELECT concordant, tied, discordant,
-       CAST(concordant + tied + discordant AS BIGINT) AS n_pairs,
-       {_r6('''(CAST(concordant AS DOUBLE) + 0.5 * CAST(tied AS DOUBLE))
-          / (CASE WHEN concordant + tied + discordant > 0
-                  THEN CAST(concordant + tied + discordant AS DOUBLE) END)''', 'cindex')}
-FROM agg
-"""
-
-
 def _oracle_ar_forecast7(p: int = 2, horizon: int = 7) -> str:
     """The identical AR(p) unroll in SQL, generated by the same loops
     as operators/temporal.ar_forecast / ar_fitted (the pacf_daily
@@ -6018,13 +5866,6 @@ def oracle_sql() -> dict[str, str]:
         "hourly_value_p95": _oracle_hourly_value_p95(),
         "value_p95_sliding": _oracle_value_p95_sliding(),
         "ar_forecast7": _oracle_ar_forecast7(),
-        "survival_cindex": _oracle_survival_cindex(),
-        "bootstrap_value_ci": _oracle_bootstrap_value_ci(),
-        "bootstrap_lift_ci": _oracle_bootstrap_lift_ci(),
-        "ks_price_test": _ORACLE_KS_PRICE_TEST,
-        "chi2_flag_status": _ORACLE_CHI2_FLAG_STATUS,
-        "benford_prices": _ORACLE_BENFORD_PRICES,
-        "ab_conversion": _ORACLE_AB_CONVERSION,
         "gap_filled_users": _ORACLE_GAP_FILLED_USERS,
         "ewma_daily": _ORACLE_EWMA_DAILY,
         "holt_forecast7": _ORACLE_HOLT_FORECAST7,
@@ -6038,131 +5879,18 @@ def oracle_sql() -> dict[str, str]:
         "snm_pairs": _ORACLE_SNM_PAIRS,
         "sampled_groupby": _oracle_sampled_groupby(),
         "sliding_distinct_users": _oracle_sliding_distinct_users(),
-        "trend_test": _ORACLE_TREND_TEST,
-        "trend_slope": _ORACLE_TREND_SLOPE,
         "fd_profile": _oracle_fd_profile(),
         "er_clusters": _ORACLE_ER_CLUSTERS,
         "burn_rate": _ORACLE_BURN_RATE,
-        "ks_sketch_drift": _oracle_ks_sketch_drift(),
         "hot_items_by_type": _ORACLE_HOT_ITEMS_BY_TYPE,
-        "welch_value_test": _ORACLE_WELCH_VALUE_TEST,
-        "anova_value_type": _ORACLE_ANOVA_VALUE_TYPE,
-        "ks_source_matrix": _ORACLE_KS_SOURCE_MATRIX,
         "seasonality_strength": _ORACLE_SEASONALITY_STRENGTH,
         "acf_daily": _ORACLE_ACF_DAILY,
-        "trend_slope_by_type": _ORACLE_TREND_SLOPE_BY_TYPE,
         "pacf_daily": _oracle_pacf_daily(),
         "dedup_recall": _oracle_dedup_recall(),
         "forecast_bands": _ORACLE_FORECAST_BANDS,
-        "power_sample_size": _oracle_power_sample_size(),
-        "cuped_engagement": _ORACLE_CUPED_ENGAGEMENT,
         "woe_iv": _ORACLE_WOE_IV,
-        "ols_price_model": _ORACLE_OLS_PRICE_MODEL,
-        "ols_fit_price": _ORACLE_OLS_PRICE_MODEL,
-        "model_auc": _ORACLE_MODEL_AUC,
-        "model_auc_by_arm": _ORACLE_MODEL_AUC_BY_ARM,
-        "feature_mi": _ORACLE_FEATURE_MI,
-        "km_ci": _ORACLE_KM_CI,
-        "rmst_conversion": _oracle_rmst(1_500_000_000_000),
-        "ks_drift_adjusted": _ORACLE_KS_DRIFT_ADJUSTED,
-        "model_pr_auc": _ORACLE_MODEL_PR_AUC,
-        "rater_kappa": _oracle_rater_kappa(),
-        "cmh_strata": _ORACLE_CMH_STRATA,
-        "value_wasserstein": _ORACLE_VALUE_WASSERSTEIN,
-        "conformal_qhat": _ORACLE_CONFORMAL_QHAT,
-        "conformal_coverage": _ORACLE_CONFORMAL_COVERAGE,
-        "conformal_group_qhat": _ORACLE_CONFORMAL_GROUP_QHAT,
-        "conformal_group_coverage": _ORACLE_CONFORMAL_GROUP_COVERAGE,
-        "score_psi": _ORACLE_SCORE_PSI,
-        "source_token_js": _ORACLE_SOURCE_TOKEN_JS,
-        "calibration_error": _ORACLE_CALIBRATION_ERROR,
-        "rank_sum_test": _ORACLE_RANK_SUM_TEST,
-        "spearman_qty_price": _ORACLE_SPEARMAN_QTY_PRICE,
-        "km_conversion": _ORACLE_KM_CONVERSION,
-        "logrank_arms": _ORACLE_LOGRANK_ARMS,
-        # the high-cardinality (distributed-prefix) path computes the
-        # SAME statistics — integer rank sums bit-identical, KM
-        # survival within last-ulps — so the mirrors are shared
-        "rank_sum_distributed": _ORACLE_RANK_SUM_TEST,
-        "km_distributed": _ORACLE_KM_CONVERSION,
         "events_session_native": _ORACLE_EVENTS_SESSION_NATIVE,
-        "km_by_arm": _ORACLE_KM_BY_ARM,
     }
-
-
-_ORACLE_KS_PRICE_TEST = f"""
-WITH src AS (SELECT o_totalprice AS v,
-                    CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 'hi' ELSE 'lo' END AS arm
-             FROM orders WHERE o_totalprice IS NOT NULL),
-cnt AS (SELECT v, sum(CASE WHEN arm = 'hi' THEN 1 ELSE 0 END) AS da,
-               sum(CASE WHEN arm = 'lo' THEN 1 ELSE 0 END) AS db
-        FROM src GROUP BY 1),
-cdf AS (SELECT v,
-  sum(da) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ca,
-  sum(db) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cb
- FROM cnt),
-st AS (SELECT ca, cb, max(ca) OVER () AS na, max(cb) OVER () AS nb FROM cdf),
-r AS (SELECT CAST(max(na) AS BIGINT) AS n_a, CAST(max(nb) AS BIGINT) AS n_b,
-             max(abs(ca / (CASE WHEN na > 0 THEN na END) - cb / (CASE WHEN nb > 0 THEN nb END))) AS d_stat FROM st),
-z AS (SELECT n_a, n_b, d_stat,
-             d_stat * sqrt(CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE) / (n_a + n_b)) AS ks_z FROM r)
-SELECT n_a, n_b, {_r6('d_stat', 'd_stat')}, {_r6('ks_z', 'ks_z')},
-       {_r6('least(CAST(1.0 AS DOUBLE), 2.0 * exp(-2.0 * ks_z * ks_z))', 'p_approx')}
-FROM z
-"""
-
-
-_ORACLE_CHI2_FLAG_STATUS = f"""
-WITH cells AS (SELECT l_returnflag AS a, l_linestatus AS b, count(*) AS o
-               FROM lineitem GROUP BY 1, 2),
-e AS (SELECT a, b, o,
-             sum(o) OVER (PARTITION BY a) * sum(o) OVER (PARTITION BY b) / sum(o) OVER () AS ex
-      FROM cells),
-agg AS (SELECT CAST(sum(o) AS BIGINT) AS n, count(DISTINCT a) AS r, count(DISTINCT b) AS c,
-               sum((o - ex) * (o - ex) / ex) AS chi2
-        FROM e)
-SELECT n, CAST((r - 1) * (c - 1) AS BIGINT) AS dof, {_r6('chi2', 'chi2')},
-       {_r6('sqrt(chi2 / (CASE WHEN n * least(r - 1, c - 1) > 0 THEN n * least(r - 1, c - 1) END))', 'cramers_v')}
-FROM agg
-"""
-
-
-_ORACLE_BENFORD_PRICES = f"""
-WITH x AS (SELECT greatest(1, least(9,
-             CAST(floor(o_totalprice / power(10.0, floor(log10(o_totalprice)))) AS INT))) AS digit
-           FROM orders WHERE o_totalprice > 0),
-c AS (SELECT digit, count(*) AS n FROM x GROUP BY 1),
-t AS (SELECT digit, n, sum(n) OVER () AS total FROM c)
-SELECT digit, CAST(n AS BIGINT) AS n, {_r6('n / total', 'obs_share')},
-       {_r6('log10(1.0 + 1.0 / digit)', 'exp_share')},
-       {_r6('total * (n / total - log10(1.0 + 1.0 / digit)) * (n / total - log10(1.0 + 1.0 / digit)) / log10(1.0 + 1.0 / digit)', 'chi2_term')}
-FROM t ORDER BY digit
-"""
-
-
-_ORACLE_AB_CONVERSION = f"""
-WITH src AS (SELECT CAST(user_id AS VARCHAR) || '#' || CAST(CAST(ts AS DATE) AS VARCHAR) AS unit,
-                    CASE WHEN (user_id + date_diff('day', DATE '2024-01-01', CAST(ts AS DATE))) % 2 = 0
-                         THEN 'a' ELSE 'b' END AS arm,
-                    event_type = 'purchase' AS conv
-             FROM events WHERE event_type IS NOT NULL),
-units AS (SELECT unit, max(arm) AS g, max(CAST(conv AS INT)) AS s FROM src GROUP BY 1),
-arms AS (SELECT g, count(*) AS n, sum(s) AS x FROM units GROUP BY 1),
-lo AS (SELECT min(g) AS g_lo FROM arms),
-wide AS (SELECT CAST(sum(CASE WHEN g = g_lo THEN n END) AS BIGINT) AS n_a,
-                CAST(sum(CASE WHEN g = g_lo THEN x END) AS BIGINT) AS x_a,
-                CAST(sum(CASE WHEN g <> g_lo THEN n END) AS BIGINT) AS n_b,
-                CAST(sum(CASE WHEN g <> g_lo THEN x END) AS BIGINT) AS x_b
-         FROM arms, lo),
-d AS (SELECT n_a, x_a, n_b, x_b,
-             sqrt((x_a + x_b) / (n_a + n_b) * (1.0 - (x_a + x_b) / (n_a + n_b))
-                  * (1.0 / n_a + 1.0 / n_b)) AS denom
-      FROM wide)
-SELECT n_a, x_a, {_r6('x_a / n_a', 'rate_a')}, n_b, x_b, {_r6('x_b / n_b', 'rate_b')},
-       {_r6('x_a / n_a - x_b / n_b', 'lift')},
-       {_r6('CASE WHEN denom <> 0 THEN (x_a / n_a - x_b / n_b) / denom END', 'z')}
-FROM d
-"""
 
 
 _ORACLE_GAP_FILLED_USERS = f"""
@@ -6457,38 +6185,6 @@ d AS (SELECT CAST(ts AS DATE) AS day,
       FROM events GROUP BY 1)
 """
 
-_ORACLE_TREND_TEST = f"""
-WITH {_SQ_DAILY_CENTS},
-s AS (SELECT CAST(sum(CASE WHEN b.y > a.y THEN 1 WHEN b.y < a.y THEN -1 ELSE 0 END) AS BIGINT) AS s
-      FROM d a JOIN d b ON a.day < b.day),
-base AS (SELECT count(*) AS n FROM d),
-ties AS (SELECT coalesce(sum(t * (t - 1) * (2 * t + 5)), 0) AS tie_term
-         FROM (SELECT count(*) AS t FROM d GROUP BY y HAVING count(*) > 1)),
-j AS (SELECT s, n, tie_term,
-             CAST(n * (n - 1) * (2 * n + 5) - tie_term AS DOUBLE) / 18.0 AS var_s
-      FROM s, base, ties)
-SELECT CAST(n AS BIGINT) AS n, s, {_r6('var_s', 'var_s')},
-       {_r6('''CASE WHEN var_s > 0 THEN
-                 CASE WHEN s > 0 THEN CAST(s - 1 AS DOUBLE) / sqrt(var_s)
-                      WHEN s < 0 THEN CAST(s + 1 AS DOUBLE) / sqrt(var_s)
-                      ELSE 0.0 END END''', 'z')}
-FROM j
-"""
-
-_ORACLE_TREND_SLOPE = f"""
-WITH {_SQ_DAILY_CENTS},
-d0 AS (SELECT min(day) AS dmin FROM d),
-dx AS (SELECT CAST(date_diff('day', dmin, day) AS DOUBLE) AS x, CAST(y AS DOUBLE) AS y
-       FROM d, d0),
-sl AS (SELECT (b.y - a.y) / (b.x - a.x) AS m
-       FROM dx a JOIN dx b ON a.x < b.x),
-med AS (SELECT CAST(count(*) AS BIGINT) AS n_pairs, quantile_cont(m, 0.5) AS slope FROM sl),
-resid AS (SELECT n_pairs, slope, y - slope * x AS r FROM dx, med)
-SELECT CAST(count(*) AS BIGINT) AS n, n_pairs, {_r6('slope', 'slope')},
-       {_r6('quantile_cont(r, 0.5)', 'intercept')}
-FROM resid GROUP BY n_pairs, slope
-"""
-
 
 def _oracle_fd_profile() -> str:
     """Per-candidate g3 FD check: cells → per-A keep-max → rollup,
@@ -6560,35 +6256,6 @@ FROM b ORDER BY hour
 """
 
 
-def _oracle_ks_sketch_drift() -> str:
-    """KS over sketch buckets: the ks_price_test mirror with the
-    integer qsketch bucket id as the ordered domain."""
-    return f"""
-WITH src AS (SELECT {_sq_qbucket("CAST(floor(value * 100 + 0.5) AS BIGINT)")} AS v,
-                    CASE WHEN CAST(ts AS DATE) < DATE '2024-01-16' THEN 'h1' ELSE 'h2' END AS arm
-             FROM events),
-cnt AS (SELECT v, sum(CASE WHEN arm = 'h1' THEN 1 ELSE 0 END) AS da,
-               sum(CASE WHEN arm = 'h2' THEN 1 ELSE 0 END) AS db
-        FROM src GROUP BY 1),
-cdf AS (SELECT v,
-  sum(da) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ca,
-  sum(db) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cb
- FROM cnt),
-st AS (SELECT ca, cb, max(ca) OVER () AS na, max(cb) OVER () AS nb FROM cdf),
-r AS (SELECT CAST(max(na) AS BIGINT) AS n_a, CAST(max(nb) AS BIGINT) AS n_b,
-             max(abs(ca / (CASE WHEN na > 0 THEN na END) - cb / (CASE WHEN nb > 0 THEN nb END))) AS d_stat FROM st),
-z AS (SELECT n_a, n_b, d_stat,
-             d_stat * sqrt(CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE) / (n_a + n_b)) AS ks_z FROM r)
-SELECT n_a, n_b, {{r6_d}}, {{r6_z}}, {{r6_p}}
-FROM z
-""".replace("{r6_d}", _r6('d_stat', 'd_stat')).replace(
-        "{r6_z}", _r6('ks_z', 'ks_z')
-    ).replace(
-        "{r6_p}",
-        _r6('least(CAST(1.0 AS DOUBLE), 2.0 * exp(-2.0 * ks_z * ks_z))', 'p_approx'),
-    )
-
-
 _ORACLE_HOT_ITEMS_BY_TYPE = f"""
 WITH src AS (SELECT event_type,
                     CASE WHEN event_id % 3 = 0 THEN 'hot'
@@ -6601,74 +6268,6 @@ c AS (SELECT s.event_type, s.item, count(*) AS n_rows, max(t.n) AS n
 SELECT event_type, item, CAST(n_rows AS BIGINT) AS n_rows,
        {_r6('round(n_rows / CAST(n AS DOUBLE), 6)', 'share')}
 FROM c ORDER BY event_type, item
-"""
-
-
-_ORACLE_WELCH_VALUE_TEST = f"""
-WITH src AS (SELECT value AS v,
-                    CASE WHEN user_id % 2 = 0 THEN 'a' ELSE 'b' END AS arm
-             FROM events),
-agg AS (SELECT CAST(sum(CASE WHEN arm = 'a' THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-               sum(CASE WHEN arm = 'a' THEN v END) AS sa,
-               sum(CASE WHEN arm = 'a' THEN v * v END) AS qa,
-               CAST(sum(CASE WHEN arm = 'b' THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-               sum(CASE WHEN arm = 'b' THEN v END) AS sb,
-               sum(CASE WHEN arm = 'b' THEN v * v END) AS qb
-        FROM src),
-m AS (SELECT n_a, sa / (CASE WHEN n_a > 0 THEN n_a END) AS mean_a,
-             (qa - sa * sa / n_a) / (CASE WHEN n_a > 1 THEN n_a - 1 END) AS var_a,
-             n_b, sb / (CASE WHEN n_b > 0 THEN n_b END) AS mean_b,
-             (qb - sb * sb / n_b) / (CASE WHEN n_b > 1 THEN n_b - 1 END) AS var_b
-      FROM agg),
-s AS (SELECT m.*, var_a / n_a + var_b / n_b AS se2 FROM m)
-SELECT n_a, {_r6('mean_a', 'mean_a')}, {_r6('var_a', 'var_a')},
-       n_b, {_r6('mean_b', 'mean_b')}, {_r6('var_b', 'var_b')},
-       {_r6('(mean_a - mean_b) / sqrt(CASE WHEN se2 > 0 THEN se2 END)', 't')},
-       {_r6('''se2 * se2 / (CASE WHEN (var_a / n_a) * (var_a / n_a) / (CASE WHEN n_a > 1 THEN n_a - 1 END)
-                     + (var_b / n_b) * (var_b / n_b) / (CASE WHEN n_b > 1 THEN n_b - 1 END) > 0
-                THEN (var_a / n_a) * (var_a / n_a) / (CASE WHEN n_a > 1 THEN n_a - 1 END)
-                     + (var_b / n_b) * (var_b / n_b) / (CASE WHEN n_b > 1 THEN n_b - 1 END) END)''', 'dof')}
-FROM s
-"""
-
-
-_ORACLE_ANOVA_VALUE_TYPE = f"""
-WITH per AS (SELECT event_type AS g, count(*) AS ng, sum(value) AS sg,
-                    sum(value * value) AS qg
-             FROM events GROUP BY 1),
-agg AS (SELECT CAST(sum(ng) AS BIGINT) AS n, CAST(count(*) AS BIGINT) AS k,
-               sum(sg) AS s, sum(qg) AS q, sum(sg * sg / ng) AS sb
-        FROM per),
-d AS (SELECT n, k, sb - s * s / n AS ss_b, q - sb AS ss_w, q - s * s / n AS ss_t FROM agg)
-SELECT n, k, {_r6('ss_b', 'ss_between')}, {_r6('ss_w', 'ss_within')},
-       {_r6('(ss_b / (CASE WHEN k > 1 THEN k - 1 END)) / (CASE WHEN n > k AND ss_w > 0 THEN ss_w / (n - k) END)', 'f_stat')},
-       {_r6('ss_b / (CASE WHEN ss_t > 0 THEN ss_t END)', 'eta_sq')}
-FROM d
-"""
-
-
-_ORACLE_KS_SOURCE_MATRIX = f"""
-WITH cnt AS (SELECT n_chars AS v, source AS g, count(*) AS c FROM documents
-             WHERE n_chars IS NOT NULL GROUP BY 1, 2),
-vals AS (SELECT DISTINCT v FROM cnt),
-grps AS (SELECT DISTINCT g FROM cnt),
-spine AS (SELECT v, g FROM vals, grps),
-cdf0 AS (SELECT s.v, s.g,
-                sum(coalesce(c.c, 0)) OVER (PARTITION BY s.g ORDER BY s.v
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-         FROM spine s LEFT JOIN cnt c ON c.v = s.v AND c.g = s.g),
-cdf AS (SELECT v, g, cum, max(cum) OVER (PARTITION BY g) AS n FROM cdf0),
-agg AS (SELECT a.g AS group_a, b.g AS group_b,
-               CAST(max(a.n) AS BIGINT) AS n_a, CAST(max(b.n) AS BIGINT) AS n_b,
-               max(abs(a.cum / (CASE WHEN a.n > 0 THEN a.n END)
-                       - b.cum / (CASE WHEN b.n > 0 THEN b.n END))) AS d_stat
-        FROM cdf a JOIN cdf b ON a.v = b.v AND a.g < b.g
-        GROUP BY 1, 2),
-z AS (SELECT agg.*, d_stat * sqrt(CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE) / (n_a + n_b)) AS ks_z
-      FROM agg)
-SELECT group_a, group_b, n_a, n_b, {_r6('d_stat', 'd_stat')}, {_r6('ks_z', 'ks_z')},
-       {_r6('least(CAST(1.0 AS DOUBLE), 2.0 * exp(-2.0 * ks_z * ks_z))', 'p_approx')}
-FROM z ORDER BY group_a, group_b
 """
 
 
@@ -6704,26 +6303,6 @@ agg AS (SELECT lag, count(*) AS n, sum(x) AS sx, sum(y) AS sy,
 sc AS (SELECT lag, n, {_SQ_PEARSON} AS corr FROM agg)
 SELECT CAST(lag AS INT) AS lag, CAST(n AS BIGINT) AS n_days, {_r6('corr', 'acf')}
 FROM sc WHERE lag >= 0 ORDER BY lag
-"""
-
-
-_ORACLE_TREND_SLOPE_BY_TYPE = f"""
-WITH d0 AS (SELECT event_type AS g, CAST(ts AS DATE) AS day,
-                   CAST(floor(sum(value) * 100 + 0.5) AS BIGINT) AS y
-            FROM events GROUP BY 1, 2),
-mn AS (SELECT g, min(day) AS dmin FROM d0 GROUP BY 1),
-dx AS (SELECT d0.g, CAST(date_diff('day', mn.dmin, d0.day) AS DOUBLE) AS x,
-              CAST(y AS DOUBLE) AS y
-       FROM d0 JOIN mn ON mn.g = d0.g),
-sl AS (SELECT a.g, (b.y - a.y) / (b.x - a.x) AS m
-       FROM dx a JOIN dx b ON a.g = b.g AND a.x < b.x),
-med AS (SELECT g, CAST(count(*) AS BIGINT) AS n_pairs, quantile_cont(m, 0.5) AS slope
-        FROM sl GROUP BY 1),
-resid AS (SELECT dx.g, n_pairs, slope, y - slope * x AS r
-          FROM dx JOIN med ON med.g = dx.g)
-SELECT g AS event_type, CAST(count(*) AS BIGINT) AS n, n_pairs,
-       {_r6('slope', 'slope')}, {_r6('quantile_cont(r, 0.5)', 'intercept')}
-FROM resid GROUP BY g, n_pairs, slope ORDER BY event_type
 """
 
 
@@ -6827,54 +6406,6 @@ ORDER BY event_type, h
 """
 
 
-def _oracle_power_sample_size(
-    z_alpha: float = 1.959964, z_beta: float = 0.841621
-) -> str:
-    return f"""
-WITH src AS (SELECT CAST(user_id AS VARCHAR) || '#' || CAST(CAST(ts AS DATE) AS VARCHAR) AS unit,
-                    event_type = 'purchase' AS conv FROM events
-             WHERE event_type IS NOT NULL),
-units AS (SELECT unit, max(CAST(conv AS INT)) AS s FROM src GROUP BY 1),
-base AS (SELECT CAST(count(*) AS BIGINT) AS n_units, sum(s) / count(*) AS p1 FROM units),
-lifts AS (SELECT unnest([0.05, 0.10, 0.20]) AS rel_lift),
-j AS (SELECT rel_lift, p1, n_units, p1 * (1.0 + rel_lift) AS p2 FROM base, lifts),
-c AS (SELECT rel_lift, p1, n_units, p2, (p1 + p2) / 2 AS pbar FROM j),
-d AS (SELECT rel_lift, p1, n_units, p2,
-             {z_alpha!r} * sqrt(2.0 * pbar * (1.0 - pbar))
-               + {z_beta!r} * sqrt(p1 * (1.0 - p1) + p2 * (1.0 - p2)) AS num
-      FROM c)
-SELECT {_r6('rel_lift', 'rel_lift')}, {_r6('p1', 'base_rate')}, n_units,
-       CAST(CASE WHEN p2 > 0 AND p2 < 1 AND p2 <> p1
-                 THEN ceil(num * num / ((p2 - p1) * (p2 - p1))) END AS BIGINT) AS n_per_arm
-FROM d ORDER BY rel_lift
-"""
-
-
-_ORACLE_CUPED_ENGAGEMENT = f"""
-WITH pu AS (SELECT user_id AS u,
-                   coalesce(sum(CASE WHEN NOT (CAST(ts AS DATE) < DATE '2024-01-16') THEN value END), 0.0) AS y,
-                   coalesce(sum(CASE WHEN CAST(ts AS DATE) < DATE '2024-01-16' THEN value END), 0.0) AS x
-            FROM events GROUP BY 1),
-m AS (SELECT count(*) AS n, sum(x) AS sx, sum(y) AS sy,
-             sum(x * x) AS sxx, sum(x * y) AS sxy, sum(y * y) AS syy
-      FROM pu),
-s AS (SELECT (CAST(n AS DOUBLE) * sxy - sx * sy)
-               / (CASE WHEN CAST(n AS DOUBLE) * sxx - sx * sx <> 0
-                       THEN CAST(n AS DOUBLE) * sxx - sx * sx END) AS theta,
-             sx / CAST(n AS DOUBLE) AS xbar,
-             ((CAST(n AS DOUBLE) * sxy - sx * sy) * (CAST(n AS DOUBLE) * sxy - sx * sy))
-               / (CASE WHEN (CAST(n AS DOUBLE) * sxx - sx * sx) <> 0
-                            AND (CAST(n AS DOUBLE) * syy - sy * sy) <> 0
-                       THEN (CAST(n AS DOUBLE) * sxx - sx * sx)
-                            * (CAST(n AS DOUBLE) * syy - sy * sy) END) AS var_reduction
-      FROM m)
-SELECT CAST(u AS BIGINT) AS u, {_r6('y', 'y')}, {_r6('x', 'x')},
-       {_r6('CASE WHEN theta IS NOT NULL THEN y - theta * (x - xbar) ELSE y END', 'y_adj')},
-       {_r6('theta', 'theta')}, {_r6('var_reduction', 'var_reduction')}
-FROM pu, s ORDER BY u
-"""
-
-
 _ORACLE_WOE_IV = f"""
 WITH src AS (SELECT CASE WHEN value < 5 THEN 'lo' WHEN value < 20 THEN 'mid' ELSE 'hi' END AS bin,
                     CASE WHEN event_type = 'purchase' THEN 1.0 ELSE 0.0 END AS lbl
@@ -6888,171 +6419,6 @@ SELECT bin AS band, CAST(n AS BIGINT) AS n, CAST(g0 AS BIGINT) AS n_good,
        {_r6('ln(g / tg / (b / tb))', 'woe')},
        {_r6('(g / tg - b / tb) * ln(g / tg / (b / tb))', 'iv_term')}
 FROM t ORDER BY band
-"""
-
-
-_ORACLE_OLS_PRICE_MODEL = f"""
-WITH m AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-                  sum(CAST(l_quantity AS DOUBLE)) AS su,
-                  sum(CAST(l_discount AS DOUBLE)) AS sv,
-                  sum(CAST(l_extendedprice AS DOUBLE)) AS st,
-                  sum(CAST(l_quantity AS DOUBLE) * CAST(l_quantity AS DOUBLE)) AS suu,
-                  sum(CAST(l_discount AS DOUBLE) * CAST(l_discount AS DOUBLE)) AS svv,
-                  sum(CAST(l_quantity AS DOUBLE) * CAST(l_discount AS DOUBLE)) AS suv,
-                  sum(CAST(l_quantity AS DOUBLE) * CAST(l_extendedprice AS DOUBLE)) AS sut,
-                  sum(CAST(l_discount AS DOUBLE) * CAST(l_extendedprice AS DOUBLE)) AS svt,
-                  sum(CAST(l_extendedprice AS DOUBLE) * CAST(l_extendedprice AS DOUBLE)) AS stt
-           FROM lineitem),
-d AS (SELECT m.*,
-  suu * (svv * n - sv * sv) - suv * (suv * n - sv * su) + su * (suv * sv - svv * su) AS det,
-  sut * (svv * n - sv * sv) - suv * (svt * n - sv * st) + su * (svt * sv - svv * st) AS det_u,
-  suu * (svt * n - sv * st) - sut * (suv * n - sv * su) + su * (suv * st - svt * su) AS det_v,
-  suu * (svv * st - svt * sv) - suv * (suv * st - svt * su) + sut * (suv * sv - svv * su) AS det_0
-  FROM m),
-b AS (SELECT d.*,
-             det_u / (CASE WHEN det <> 0 THEN det END) AS bu,
-             det_v / (CASE WHEN det <> 0 THEN det END) AS bv,
-             det_0 / (CASE WHEN det <> 0 THEN det END) AS b0
-      FROM d)
-SELECT CAST(n AS BIGINT) AS n, {_r6('bu', 'beta_qty')}, {_r6('bv', 'beta_disc')},
-       {_r6('b0', 'beta0')},
-       {_r6('1.0 - (stt - (bu * sut + bv * svt + b0 * st)) / (CASE WHEN stt - st * st / n <> 0 THEN stt - st * st / n END)', 'r2')}
-FROM b
-"""
-
-
-_ORACLE_CALIBRATION_ERROR = f"""
-WITH src AS (SELECT least(0.999, greatest(0.0, value / 100.0)) AS p,
-                    CASE WHEN event_type = 'purchase' THEN 1.0 ELSE 0.0 END AS y
-             FROM events WHERE event_type IS NOT NULL),
-per AS (SELECT least(9, CAST(floor(p * 10) AS INT)) AS bin,
-               count(*) AS nb, avg(p) AS conf, avg(y) AS rate,
-               sum((p - y) * (p - y)) AS sq
-        FROM src GROUP BY 1),
-tot AS (SELECT CAST(sum(nb) AS BIGINT) AS n,
-               sum(nb * abs(rate - conf)) / sum(nb) AS ece,
-               sum(sq) / sum(nb) AS brier
-        FROM per)
-SELECT n, {_r6('ece', 'ece')}, {_r6('brier', 'brier')},
-       CAST(bin AS INT) AS bin, CAST(nb AS BIGINT) AS n_bin,
-       {_r6('conf', 'conf')}, {_r6('rate', 'rate')}
-FROM tot, per ORDER BY bin
-"""
-
-
-_ORACLE_RANK_SUM_TEST = f"""
-WITH src AS (SELECT o_totalprice AS v,
-                    CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 'hi' ELSE 'lo' END AS arm
-             FROM orders WHERE o_totalprice IS NOT NULL),
-cnt AS (SELECT v, sum(CASE WHEN arm = 'hi' THEN 1 ELSE 0 END) AS da,
-               sum(CASE WHEN arm = 'lo' THEN 1 ELSE 0 END) AS db
-        FROM src GROUP BY 1),
-rk AS (SELECT v, da, db, da + db AS c,
-              sum(da + db) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-       FROM cnt),
-agg AS (SELECT CAST(sum(da) AS BIGINT) AS n_a, CAST(sum(db) AS BIGINT) AS n_b,
-               CAST(sum(CAST(da AS DECIMAL(19,0)) * CAST(cum AS DECIMAL(19,0))) AS DOUBLE)
-                 - CAST(sum(CAST(da AS DECIMAL(19,0)) * CAST(c - 1 AS DECIMAL(19,0))) AS DOUBLE) / 2.0 AS r_a,
-               CAST(sum(CAST(c AS DECIMAL(13,0)) * CAST(c - 1 AS DECIMAL(13,0)) * CAST(c + 1 AS DECIMAL(13,0))) AS DOUBLE) AS tie_term
-        FROM rk),
-s AS (SELECT n_a, n_b, r_a, tie_term,
-             CAST(n_a AS DOUBLE) AS na, CAST(n_b AS DOUBLE) AS nb FROM agg),
-u AS (SELECT n_a, n_b, na, nb, tie_term,
-             r_a - na * (na + 1.0) / 2.0 AS u_a,
-             na * nb / 2.0 AS mu,
-             na * nb / 12.0 * ((na + nb + 1.0) - tie_term / ((na + nb) * (na + nb - 1.0))) AS var_u
-      FROM s)
-SELECT n_a, n_b, {_r6('u_a', 'u_a')},
-       {_r6('''CASE WHEN na > 0 AND nb > 0 AND na + nb > 1
-                 THEN (u_a - mu) / sqrt(CASE WHEN var_u > 0 THEN var_u END) END''', 'z')}
-FROM u
-"""
-
-
-_ORACLE_SPEARMAN_QTY_PRICE = f"""
-WITH src AS (SELECT l_quantity AS x, l_extendedprice AS y FROM lineitem
-             WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL),
-rx AS (SELECT v, CAST(cum AS DOUBLE) - CAST(c - 1 AS DOUBLE) / 2.0 AS r FROM
-              (SELECT v, c, sum(c) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-               FROM (SELECT x AS v, count(*) AS c FROM src GROUP BY 1))),
-ry AS (SELECT v, CAST(cum AS DOUBLE) - CAST(c - 1 AS DOUBLE) / 2.0 AS r FROM
-              (SELECT v, c, sum(c) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-               FROM (SELECT y AS v, count(*) AS c FROM src GROUP BY 1))),
-j AS (SELECT rx.r AS rxr, ry.r AS ryr
-      FROM src l JOIN rx ON rx.v = l.x JOIN ry ON ry.v = l.y),
-agg AS (SELECT count(*) AS n, sum(rxr) AS sx, sum(ryr) AS sy,
-               sum(rxr * rxr) AS sxx, sum(ryr * ryr) AS syy, sum(rxr * ryr) AS sxy
-        FROM j)
-SELECT CAST(n AS BIGINT) AS n,
-       {_r6('''(CAST(n AS DOUBLE) * sxy - sx * sy)
-          / (CASE WHEN sqrt(CAST(n AS DOUBLE) * sxx - sx * sx) * sqrt(CAST(n AS DOUBLE) * syy - sy * sy) = 0
-                  THEN NULL
-                  ELSE sqrt(CAST(n AS DOUBLE) * sxx - sx * sx) * sqrt(CAST(n AS DOUBLE) * syy - sy * sy) END)''', 'rho')}
-FROM agg
-"""
-
-
-_ORACLE_KM_CONVERSION = f"""
-WITH per AS (SELECT user_id, min(ts) AS t0, max(ts) AS t_last,
-                    min(CASE WHEN event_type = 'purchase' AND value > 90 THEN ts END) AS t_evt
-             FROM events GROUP BY 1),
-dur AS (SELECT epoch_us(coalesce(t_evt, t_last)) - epoch_us(t0) AS t,
-               CASE WHEN t_evt IS NOT NULL THEN 1 ELSE 0 END AS ev
-        FROM per),
-pt AS (SELECT t, sum(ev) AS d, sum(1 - ev) AS c FROM dur WHERE t IS NOT NULL GROUP BY 1),
-rk AS (SELECT t, d, c,
-              sum(d + c) OVER () - coalesce(sum(d + c) OVER (ORDER BY t
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS n_risk
-       FROM pt),
-st AS (SELECT t, d, c, n_risk,
-              CAST(d AS DOUBLE) / CAST(n_risk AS DOUBLE) AS hazard,
-              sum(CASE WHEN d > 0 AND d < n_risk
-                       THEN ln(1.0 - CAST(d AS DOUBLE) / CAST(n_risk AS DOUBLE))
-                       ELSE 0.0 END) OVER w AS lnS,
-              max(CASE WHEN d = n_risk AND d > 0 THEN 1 ELSE 0 END) OVER w AS zero_seen
-       FROM rk
-       WINDOW w AS (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-SELECT t, CAST(n_risk AS BIGINT) AS n_risk, CAST(d AS BIGINT) AS d,
-       CAST(c AS BIGINT) AS censored, {_r6('hazard', 'hazard')},
-       {_r6('CASE WHEN zero_seen = 1 THEN 0.0 ELSE exp(lnS) END', 'survival')}
-FROM st ORDER BY t
-"""
-
-
-_ORACLE_LOGRANK_ARMS = f"""
-WITH per AS (SELECT user_id, min(ts) AS t0, max(ts) AS t_last,
-                    min(CASE WHEN event_type = 'purchase' AND value > 90 THEN ts END) AS t_evt
-             FROM events GROUP BY 1),
-dur AS (SELECT epoch_us(coalesce(t_evt, t_last)) - epoch_us(t0) AS t,
-               CASE WHEN t_evt IS NOT NULL THEN 1 ELSE 0 END AS ev,
-               CASE WHEN user_id % 2 = 0 THEN 'a' ELSE 'b' END AS g
-        FROM per),
-pt AS (SELECT t, sum(CASE WHEN g = 'a' THEN ev ELSE 0 END) AS d1, sum(ev) AS d,
-              sum(CASE WHEN g = 'a' THEN 1 ELSE 0 END) AS m1, count(*) AS m
-       FROM dur WHERE t IS NOT NULL GROUP BY 1),
-rk AS (SELECT t, d1, d,
-              sum(m1) OVER () - coalesce(sum(m1) OVER wp, 0) AS n1,
-              sum(m) OVER () - coalesce(sum(m) OVER wp, 0) AS n,
-              sum(m1) OVER () AS tot1, sum(m) OVER () AS tot
-       FROM pt
-       WINDOW wp AS (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
-terms AS (SELECT d1, d, n1, n, tot1, tot,
-                 CAST(d AS DOUBLE) * (CAST(n1 AS DOUBLE) / CAST(n AS DOUBLE)) AS e1,
-                 CASE WHEN n > 1
-                      THEN CAST(d AS DOUBLE) * (CAST(n1 AS DOUBLE) / CAST(n AS DOUBLE))
-                           * (1.0 - CAST(n1 AS DOUBLE) / CAST(n AS DOUBLE))
-                           * CAST(n - d AS DOUBLE) / (CAST(n AS DOUBLE) - 1.0)
-                      ELSE 0.0 END AS v
-          FROM rk),
-agg AS (SELECT CAST(max(tot1) AS BIGINT) AS n_a,
-               CAST(max(tot) - max(tot1) AS BIGINT) AS n_b,
-               CAST(sum(d1) AS DOUBLE) AS observed_a,
-               sum(e1) AS expected_a,
-               sum(CAST(d1 AS DOUBLE) - e1) AS ome, sum(v) AS vv
-        FROM terms)
-SELECT n_a, n_b, {_r6('observed_a', 'observed_a')}, {_r6('expected_a', 'expected_a')},
-       {_r6('ome * ome / (CASE WHEN vv > 0 THEN vv END)', 'chi2')}
-FROM agg
 """
 
 
@@ -7072,424 +6438,3 @@ FROM s GROUP BY user_id, session_id
 ORDER BY user_id, session_start_us
 """
 
-
-_ORACLE_KM_BY_ARM = f"""
-WITH per AS (SELECT user_id, min(ts) AS t0, max(ts) AS t_last,
-                    min(CASE WHEN event_type = 'purchase' AND value > 90 THEN ts END) AS t_evt
-             FROM events GROUP BY 1),
-dur AS (SELECT epoch_us(coalesce(t_evt, t_last)) - epoch_us(t0) AS t,
-               CASE WHEN t_evt IS NOT NULL THEN 1 ELSE 0 END AS ev,
-               CASE WHEN user_id % 2 = 0 THEN 'a' ELSE 'b' END AS g
-        FROM per),
-pt AS (SELECT g, t, sum(ev) AS d, sum(1 - ev) AS c FROM dur WHERE t IS NOT NULL GROUP BY 1, 2),
-rk AS (SELECT g, t, d, c,
-              sum(d + c) OVER (PARTITION BY g)
-                - coalesce(sum(d + c) OVER (PARTITION BY g ORDER BY t
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS n_risk
-       FROM pt),
-st AS (SELECT g, t, d, c, n_risk,
-              CAST(d AS DOUBLE) / CAST(n_risk AS DOUBLE) AS hazard,
-              sum(CASE WHEN d > 0 AND d < n_risk
-                       THEN ln(1.0 - CAST(d AS DOUBLE) / CAST(n_risk AS DOUBLE))
-                       ELSE 0.0 END) OVER w AS lnS,
-              max(CASE WHEN d = n_risk AND d > 0 THEN 1 ELSE 0 END) OVER w AS zero_seen
-       FROM rk
-       WINDOW w AS (PARTITION BY g ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-SELECT g AS arm, t, CAST(n_risk AS BIGINT) AS n_risk, CAST(d AS BIGINT) AS d,
-       CAST(c AS BIGINT) AS censored, {_r6('hazard', 'hazard')},
-       {_r6('CASE WHEN zero_seen = 1 THEN 0.0 ELSE exp(lnS) END', 'survival')}
-FROM st ORDER BY arm, t
-"""
-
-
-_ORACLE_MODEL_AUC = f"""
-WITH src AS (SELECT value AS v,
-                    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
-             FROM events WHERE value IS NOT NULL
-               AND event_type IS NOT NULL),
-cnt AS (SELECT v, sum(y) AS dp, count(*) AS c FROM src GROUP BY 1),
-rk AS (SELECT v, dp, c,
-              sum(c) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-       FROM cnt),
-agg AS (SELECT CAST(sum(dp) AS BIGINT) AS np,
-               CAST(sum(c) - sum(dp) AS BIGINT) AS nn,
-               CAST(sum(CAST(dp AS DECIMAL(19,0))
-                        * (2 * CAST(cum AS DECIMAL(19,0))
-                           - CAST(c - 1 AS DECIMAL(19,0)))) AS DOUBLE) AS r2
-        FROM rk),
-res AS (SELECT np, nn,
-               (r2 / 2.0 - np * (np + 1.0) / 2.0)
-                 / (CASE WHEN np > 0 AND nn > 0
-                         THEN CAST(np AS DOUBLE) * nn END) AS auc
-        FROM agg)
-SELECT np AS n_pos, nn AS n_neg, {_r6('auc', 'auc')},
-       {_r6('2.0 * auc - 1.0', 'gini')}
-FROM res
-"""
-
-
-_ORACLE_MODEL_AUC_BY_ARM = f"""
-WITH src AS (SELECT CASE WHEN user_id % 2 = 0 THEN 'a' ELSE 'b' END AS arm,
-                    value AS v,
-                    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
-             FROM events WHERE value IS NOT NULL
-               AND event_type IS NOT NULL),
-cnt AS (SELECT arm, v, sum(y) AS dp, count(*) AS c FROM src GROUP BY 1, 2),
-rk AS (SELECT arm, v, dp, c,
-              sum(c) OVER (PARTITION BY arm ORDER BY v
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-       FROM cnt),
-agg AS (SELECT arm, CAST(sum(dp) AS BIGINT) AS np,
-               CAST(sum(c) - sum(dp) AS BIGINT) AS nn,
-               CAST(sum(CAST(dp AS DECIMAL(19,0))
-                        * (2 * CAST(cum AS DECIMAL(19,0))
-                           - CAST(c - 1 AS DECIMAL(19,0)))) AS DOUBLE) AS r2
-        FROM rk GROUP BY arm),
-res AS (SELECT arm, np, nn,
-               (r2 / 2.0 - np * (np + 1.0) / 2.0)
-                 / (CASE WHEN np > 0 AND nn > 0
-                         THEN CAST(np AS DOUBLE) * nn END) AS auc
-        FROM agg)
-SELECT arm, np AS n_pos, nn AS n_neg, {_r6('auc', 'auc')},
-       {_r6('2.0 * auc - 1.0', 'gini')}
-FROM res ORDER BY arm
-"""
-
-
-_ORACLE_FEATURE_MI = f"""
-WITH src AS (SELECT o_orderpriority AS x, o_orderstatus AS y
-             FROM orders
-             WHERE o_orderpriority IS NOT NULL AND o_orderstatus IS NOT NULL),
-cells AS (SELECT x, y, count(*) AS c FROM src GROUP BY 1, 2),
-mx AS (SELECT x, sum(c) AS cx FROM cells GROUP BY 1),
-my AS (SELECT y, sum(c) AS cy FROM cells GROUP BY 1),
-tot AS (SELECT CAST(sum(c) AS DOUBLE) AS n FROM cells),
-mi AS (SELECT CAST(max(tot.n) AS BIGINT) AS n,
-              sum((c / tot.n) * ln(c * tot.n / (CAST(cx AS DOUBLE) * cy))) AS mi
-       FROM cells JOIN mx USING (x) JOIN my USING (y) CROSS JOIN tot),
-hx AS (SELECT -sum((cx / tot.n) * ln(cx / tot.n)) AS h_x FROM mx CROSS JOIN tot),
-hy AS (SELECT -sum((cy / tot.n) * ln(cy / tot.n)) AS h_y FROM my CROSS JOIN tot)
-SELECT n, {_r6('mi', 'mi')}, {_r6('h_x', 'h_x')}, {_r6('h_y', 'h_y')},
-       {_r6('mi / (CASE WHEN sqrt(h_x * h_y) > 0 THEN sqrt(h_x * h_y) END)', 'nmi')}
-FROM mi CROSS JOIN hx CROSS JOIN hy
-"""
-
-
-_ORACLE_KM_CI = f"""
-WITH per AS (SELECT user_id, min(ts) AS t0, max(ts) AS t_last,
-                    min(CASE WHEN event_type = 'purchase' AND value > 90 THEN ts END) AS t_evt
-             FROM events GROUP BY 1),
-dur AS (SELECT epoch_us(coalesce(t_evt, t_last)) - epoch_us(t0) AS t,
-               CASE WHEN t_evt IS NOT NULL THEN 1 ELSE 0 END AS ev
-        FROM per),
-pt AS (SELECT t, sum(ev) AS d, sum(1 - ev) AS c FROM dur WHERE t IS NOT NULL GROUP BY 1),
-rk AS (SELECT t, d, c,
-              sum(d + c) OVER () - coalesce(sum(d + c) OVER (ORDER BY t
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS n_risk
-       FROM pt),
-st AS (SELECT t, d, c, n_risk,
-              sum(CASE WHEN d > 0 AND d < n_risk
-                       THEN ln(1.0 - CAST(d AS DOUBLE) / CAST(n_risk AS DOUBLE))
-                       ELSE 0.0 END) OVER w AS lnS,
-              max(CASE WHEN d = n_risk AND d > 0 THEN 1 ELSE 0 END) OVER w AS zero_seen,
-              sum(CASE WHEN d < n_risk
-                       THEN CAST(d AS DOUBLE)
-                            / (CAST(n_risk AS DOUBLE) * CAST(n_risk - d AS DOUBLE))
-                       ELSE 0.0 END) OVER w AS g
-       FROM rk
-       WINDOW w AS (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-sv AS (SELECT t, d, c, n_risk, g,
-              CASE WHEN zero_seen = 1 THEN 0.0 ELSE exp(lnS) END AS s
-       FROM st),
-ci AS (SELECT sv.*,
-              CASE WHEN s = 0 THEN 0.0 ELSE s * sqrt(g) END AS se,
-              CASE WHEN s > 0 AND s < 1 THEN sqrt(g) / abs(ln(s)) END AS sell
-       FROM sv)
-SELECT t, CAST(n_risk AS BIGINT) AS n_risk, CAST(d AS BIGINT) AS d,
-       CAST(c AS BIGINT) AS censored, {_r6('s', 'survival')}, {_r6('se', 'se')},
-       {_r6("CASE WHEN s = 0 THEN 0.0 ELSE pow(s, exp(1.959964 * sell)) END", 'lo')},
-       {_r6("CASE WHEN s = 0 THEN 0.0 ELSE pow(s, exp(-1.959964 * sell)) END", 'hi')}
-FROM ci ORDER BY t
-"""
-
-
-def _oracle_rmst(tau: int) -> str:
-    return f"""
-WITH per AS (SELECT user_id, min(ts) AS t0, max(ts) AS t_last,
-                    min(CASE WHEN event_type = 'purchase' AND value > 90 THEN ts END) AS t_evt
-             FROM events GROUP BY 1),
-dur AS (SELECT epoch_us(coalesce(t_evt, t_last)) - epoch_us(t0) AS t,
-               CASE WHEN t_evt IS NOT NULL THEN 1 ELSE 0 END AS ev
-        FROM per),
-pt AS (SELECT t, sum(ev) AS d, sum(1 - ev) AS c FROM dur WHERE t IS NOT NULL GROUP BY 1),
-rk AS (SELECT t, d, c,
-              sum(d + c) OVER () - coalesce(sum(d + c) OVER (ORDER BY t
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS n_risk
-       FROM pt),
-st AS (SELECT t, d, n_risk,
-              sum(CASE WHEN d > 0 AND d < n_risk
-                       THEN ln(1.0 - CAST(d AS DOUBLE) / CAST(n_risk AS DOUBLE))
-                       ELSE 0.0 END) OVER w AS lnS,
-              max(CASE WHEN d = n_risk AND d > 0 THEN 1 ELSE 0 END) OVER w AS zero_seen,
-              row_number() OVER (ORDER BY t) AS rn
-       FROM rk
-       WINDOW w AS (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-step AS (SELECT rn, d, n_risk,
-                CASE WHEN zero_seen = 1 THEN 0.0 ELSE exp(lnS) END AS s,
-                least(t, {tau}) AS ct,
-                coalesce(least(lead(t) OVER (ORDER BY t), {tau}), {tau}) AS nxt
-         FROM st),
-agg AS (SELECT sum(CASE WHEN rn = 1 THEN CAST(ct AS DOUBLE) ELSE 0.0 END
-                  + s * greatest(CAST(0.0 AS DOUBLE), CAST(nxt AS DOUBLE) - ct)) AS rmst,
-               CAST(sum(CASE WHEN rn = 1 THEN n_risk ELSE 0 END) AS BIGINT) AS n,
-               CAST(sum(d) AS BIGINT) AS n_events
-        FROM step)
-SELECT CAST({tau} AS BIGINT) AS tau, {_r6('rmst / 1e12', 'rmst_e12')}, n, n_events
-FROM agg
-"""
-
-
-_ORACLE_KS_DRIFT_ADJUSTED = f"""
-WITH cnt AS (SELECT n_chars AS v, source AS g, count(*) AS c FROM documents
-             WHERE n_chars IS NOT NULL GROUP BY 1, 2),
-vals AS (SELECT DISTINCT v FROM cnt),
-grps AS (SELECT DISTINCT g FROM cnt),
-spine AS (SELECT v, g FROM vals, grps),
-cdf0 AS (SELECT s.v, s.g,
-                sum(coalesce(c.c, 0)) OVER (PARTITION BY s.g ORDER BY s.v
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-         FROM spine s LEFT JOIN cnt c ON c.v = s.v AND c.g = s.g),
-cdf AS (SELECT v, g, cum, max(cum) OVER (PARTITION BY g) AS n FROM cdf0),
-agg AS (SELECT a.g AS group_a, b.g AS group_b,
-               CAST(max(a.n) AS BIGINT) AS n_a, CAST(max(b.n) AS BIGINT) AS n_b,
-               max(abs(a.cum / (CASE WHEN a.n > 0 THEN a.n END)
-                       - b.cum / (CASE WHEN b.n > 0 THEN b.n END))) AS d_stat
-        FROM cdf a JOIN cdf b ON a.v = b.v AND a.g < b.g
-        GROUP BY 1, 2),
-z AS (SELECT agg.*, d_stat * sqrt(CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE) / (n_a + n_b)) AS ks_z
-      FROM agg),
-pv AS (SELECT group_a, group_b, n_a, n_b, d_stat,
-              least(CAST(1.0 AS DOUBLE), 2.0 * exp(-2.0 * ks_z * ks_z)) AS p
-       FROM z),
-bh AS (SELECT pv.*, count(*) OVER () AS m,
-              row_number() OVER (ORDER BY p) AS i
-       FROM pv),
-adj AS (SELECT bh.*,
-               least(CAST(1.0 AS DOUBLE),
-                     min(p * m / i) OVER (ORDER BY p DESC
-                       RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) AS p_adj
-        FROM bh)
-SELECT group_a, group_b, n_a, n_b, {_r6('d_stat', 'd_stat')},
-       {_r6('p', 'p_approx')}, {_r6('p_adj', 'p_adj')}
-FROM adj ORDER BY group_a, group_b
-"""
-
-
-_ORACLE_MODEL_PR_AUC = f"""
-WITH src AS (SELECT value AS v,
-                    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
-             FROM events WHERE value IS NOT NULL
-               AND event_type IS NOT NULL),
-cnt AS (SELECT v, sum(y) AS dp, count(*) AS c FROM src GROUP BY 1),
-rk AS (SELECT v, dp, c,
-              sum(dp) OVER () - (sum(dp) OVER w - dp) AS tp,
-              sum(c) OVER () - (sum(c) OVER w - c) AS pp,
-              sum(dp) OVER () AS np, sum(c) OVER () AS nt
-       FROM cnt
-       WINDOW w AS (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-agg AS (SELECT CAST(max(np) AS BIGINT) AS n_pos,
-               CAST(max(nt) - max(np) AS BIGINT) AS n_neg,
-               sum(CAST(dp AS DOUBLE) * CAST(tp AS DOUBLE) / CAST(pp AS DOUBLE)) AS s
-        FROM rk)
-SELECT n_pos, n_neg,
-       {_r6('s / (CASE WHEN n_pos > 0 THEN CAST(n_pos AS DOUBLE) END)', 'ap')},
-       {_r6('CAST(n_pos AS DOUBLE) / (CASE WHEN n_pos + n_neg > 0 THEN CAST(n_pos + n_neg AS DOUBLE) END)', 'baseline')}
-FROM agg
-"""
-
-
-def _oracle_rater_kappa() -> str:
-    """Kappa over the SAME lang_id prediction SQL (nested CTE), joined
-    to the stored gold label — the mutual_information cell/marginal
-    skeleton with the diagonal/chance-agreement arithmetic."""
-    return f"""
-WITH pred AS ({_oracle_lang_id()}),
-src AS (SELECT d.lang AS a, p.pred_lang AS b
-        FROM documents d JOIN pred p USING (doc_id)
-        WHERE d.lang IS NOT NULL AND p.pred_lang IS NOT NULL),
-cells AS (SELECT a, b, count(*) AS c FROM src GROUP BY 1, 2),
-tot AS (SELECT CAST(sum(c) AS DOUBLE) AS n FROM cells),
-po AS (SELECT CAST(max(tot.n) AS BIGINT) AS n,
-              sum(CASE WHEN a = b THEN c ELSE 0 END) / max(tot.n) AS p_observed
-       FROM cells CROSS JOIN tot),
-ma AS (SELECT a, sum(c) AS ca FROM cells GROUP BY 1),
-mb AS (SELECT b, sum(c) AS cb FROM cells GROUP BY 1),
-pe AS (SELECT coalesce(sum((ca / tot.n) * (cb / tot.n)), 0.0) AS p_expected
-       FROM ma JOIN mb ON ma.a = mb.b CROSS JOIN tot)
-SELECT n, {_r6('p_observed', 'p_observed')}, {_r6('p_expected', 'p_expected')},
-       {_r6('(p_observed - p_expected) / (CASE WHEN p_expected <> 1.0 THEN 1.0 - p_expected END)', 'kappa')}
-FROM po CROSS JOIN pe
-"""
-
-
-_ORACLE_CMH_STRATA = f"""
-WITH src AS (SELECT event_type AS k,
-                    CASE WHEN user_id % 2 = 0 THEN 'a' ELSE 'b' END AS arm,
-                    CASE WHEN value > 50 THEN 1 ELSE 0 END AS hit
-             FROM events
-             WHERE event_type IS NOT NULL AND value IS NOT NULL),
-per AS (SELECT k,
-               CAST(sum(CASE WHEN arm = 'a' THEN hit ELSE 0 END) AS DOUBLE) AS a,
-               CAST(sum(CASE WHEN arm = 'a' THEN 1 - hit ELSE 0 END) AS DOUBLE) AS b,
-               CAST(sum(CASE WHEN arm = 'b' THEN hit ELSE 0 END) AS DOUBLE) AS c,
-               CAST(sum(CASE WHEN arm = 'b' THEN 1 - hit ELSE 0 END) AS DOUBLE) AS d
-        FROM src GROUP BY 1),
-terms AS (SELECT a, b, c, d, a + b + c + d AS n,
-                 (a + b) * (a + c) / (a + b + c + d) AS e,
-                 CASE WHEN a + b + c + d > 1
-                      THEN (a + b) * (c + d) * (a + c) * (b + d)
-                           / ((a + b + c + d) * (a + b + c + d) * (a + b + c + d - 1))
-                      ELSE 0.0 END AS v
-          FROM per),
-agg AS (SELECT CAST(sum(n) AS BIGINT) AS n,
-               CAST(count(*) AS BIGINT) AS n_strata,
-               sum(a) AS sa, sum(e) AS se, sum(v) AS sv,
-               sum(a * d / n) AS ad, sum(b * c / n) AS bc
-        FROM terms)
-SELECT n, n_strata,
-       {_r6('(sa - se) * (sa - se) / (CASE WHEN sv > 0 THEN sv END)', 'chi2')},
-       {_r6('ad / (CASE WHEN bc > 0 THEN bc END)', 'or_mh')}
-FROM agg
-"""
-
-
-_ORACLE_VALUE_WASSERSTEIN = f"""
-WITH src AS (SELECT o_totalprice AS v,
-                    CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 'hi' ELSE 'lo' END AS arm
-             FROM orders WHERE o_totalprice IS NOT NULL),
-cnt AS (SELECT CAST(v AS DOUBLE) AS v,
-               sum(CASE WHEN arm = 'hi' THEN 1 ELSE 0 END) AS da,
-               sum(CASE WHEN arm = 'lo' THEN 1 ELSE 0 END) AS db
-        FROM src GROUP BY 1),
-c AS (SELECT v, sum(da) OVER w AS cda, sum(db) OVER w AS cdb,
-             sum(da) OVER () AS ta, sum(db) OVER () AS tb,
-             lead(v) OVER (ORDER BY v) AS nv
-      FROM cnt
-      WINDOW w AS (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-SELECT CAST(max(ta) AS BIGINT) AS n_a, CAST(max(tb) AS BIGINT) AS n_b,
-       {_r6("sum(abs(cda * 1.0 / (CASE WHEN ta > 0 THEN ta END) - cdb * 1.0 / (CASE WHEN tb > 0 THEN tb END)) * (nv - v))", 'w1')}
-FROM c
-"""
-
-
-_ORACLE_CONFORMAL_QHAT = f"""
-WITH s AS (SELECT CAST(value AS DOUBLE) AS v FROM events
-           WHERE value IS NOT NULL AND user_id %% 2 = 0),
-nn AS (SELECT count(*) AS n FROM s),
-kk AS (SELECT n, CAST(ceil((n + 1) * (1 - CAST(0.1 AS DOUBLE))) AS BIGINT) AS k
-       FROM nn),
-r AS (SELECT v, row_number() OVER (ORDER BY v) AS rn FROM s)
-SELECT kk.n, kk.k, {_r6('CAST(0.1 AS DOUBLE)', 'alpha')},
-       {_r6('min(CASE WHEN r.rn >= kk.k THEN r.v END)', 'qhat')}
-FROM kk LEFT JOIN r ON TRUE GROUP BY kk.n, kk.k
-""".replace("%%", "%")
-
-_ORACLE_CONFORMAL_COVERAGE = f"""
-WITH cal AS (SELECT CAST(value AS DOUBLE) AS v FROM events
-             WHERE value IS NOT NULL AND user_id %% 2 = 0),
-nn AS (SELECT count(*) AS n FROM cal),
-kk AS (SELECT n, CAST(ceil((n + 1) * (1 - CAST(0.1 AS DOUBLE))) AS BIGINT) AS k
-       FROM nn),
-r AS (SELECT v, row_number() OVER (ORDER BY v) AS rn FROM cal),
-q AS (SELECT kk.n AS n_cal, min(CASE WHEN r.rn >= kk.k THEN r.v END) AS qhat
-      FROM kk LEFT JOIN r ON TRUE GROUP BY kk.n),
-t AS (SELECT CAST(value AS DOUBLE) AS tv FROM events
-      WHERE value IS NOT NULL AND user_id %% 2 = 1),
-a AS (SELECT count(*) AS n_test,
-             avg(CASE WHEN q.qhat IS NULL THEN 1
-                      WHEN t.tv <= q.qhat THEN 1 ELSE 0 END) AS cov
-      FROM t CROSS JOIN q)
-SELECT q.n_cal, a.n_test, {_r6('CAST(0.1 AS DOUBLE)', 'alpha')},
-       {_r6('q.qhat', 'qhat')},
-       {_r6('CASE WHEN q.n_cal = 0 THEN NULL ELSE a.cov END', 'coverage')},
-       {_r6('1 - CAST(0.1 AS DOUBLE)', 'target')}
-FROM a CROSS JOIN q
-""".replace("%%", "%")
-
-_ORACLE_CONFORMAL_GROUP_QHAT = f"""
-WITH s AS (SELECT event_type AS g, CAST(value AS DOUBLE) AS v FROM events
-           WHERE value IS NOT NULL),
-r AS (SELECT g, v,
-             row_number() OVER (PARTITION BY g ORDER BY v) AS rn,
-             count(*) OVER (PARTITION BY g) AS n
-      FROM s)
-SELECT g AS "group", CAST(max(n) AS BIGINT) AS n,
-       CAST(max(ceil((n + 1) * (1 - CAST(0.2 AS DOUBLE)))) AS BIGINT) AS k,
-       {_r6('CAST(0.2 AS DOUBLE)', 'alpha')},
-       {_r6('min(CASE WHEN rn >= CAST(ceil((n + 1) * (1 - CAST(0.2 AS DOUBLE))) AS BIGINT) THEN v END)', 'qhat')}
-FROM r GROUP BY g
-"""
-
-_ORACLE_CONFORMAL_GROUP_COVERAGE = f"""
-WITH cal AS (SELECT event_type AS g, CAST(value AS DOUBLE) AS v FROM events
-             WHERE value IS NOT NULL AND user_id %% 2 = 0),
-r AS (SELECT g, v,
-             row_number() OVER (PARTITION BY g ORDER BY v) AS rn,
-             count(*) OVER (PARTITION BY g) AS n
-      FROM cal),
-q AS (SELECT g, CAST(max(n) AS BIGINT) AS n_cal,
-             min(CASE WHEN rn >= CAST(ceil((n + 1) * (1 - CAST(0.2 AS DOUBLE))) AS BIGINT)
-                      THEN v END) AS qhat
-      FROM r GROUP BY g),
-t AS (SELECT event_type AS g, CAST(value AS DOUBLE) AS tv FROM events
-      WHERE value IS NOT NULL AND user_id %% 2 = 1)
-SELECT t.g AS "group", max(q.n_cal) AS n_cal, count(*) AS n_test,
-       {_r6('CAST(0.2 AS DOUBLE)', 'alpha')},
-       {_r6('max(q.qhat)', 'qhat')},
-       {_r6("avg(CASE WHEN q.n_cal IS NULL THEN NULL WHEN q.qhat IS NULL THEN 1 WHEN t.tv <= q.qhat THEN 1 ELSE 0 END)", 'coverage')},
-       {_r6('1 - CAST(0.2 AS DOUBLE)', 'target')}
-FROM t LEFT JOIN q ON t.g IS NOT DISTINCT FROM q.g
-GROUP BY t.g
-""".replace("%%", "%")
-
-_ORACLE_SCORE_PSI = f"""
-WITH ev AS (SELECT user_id,
-                   least(9, CAST(floor(value / 50) AS INT)) AS bucket
-            FROM events),
-rc AS (SELECT bucket AS b, count(*) AS cr FROM ev WHERE user_id % 2 = 0 GROUP BY 1),
-lc AS (SELECT bucket AS b, count(*) AS cl FROM ev WHERE user_id % 2 = 1 GROUP BY 1),
-j AS (SELECT coalesce(cr, 0) AS cr, coalesce(cl, 0) AS cl
-      FROM rc FULL OUTER JOIN lc ON rc.b IS NOT DISTINCT FROM lc.b),
-tot AS (SELECT sum(cr) AS nr, sum(cl) AS nl FROM j),
-terms AS (SELECT CASE WHEN tot.nr > 0
-                      THEN greatest(cr * 1.0 / tot.nr, 1e-6) END AS p,
-                 CASE WHEN tot.nl > 0
-                      THEN greatest(cl * 1.0 / tot.nl, 1e-6) END AS q,
-                 tot.nr, tot.nl
-          FROM j CROSS JOIN tot)
-SELECT CAST(max(nr) AS BIGINT) AS n_ref, CAST(max(nl) AS BIGINT) AS n_live,
-       {_r6('sum((p - q) * ln(p / q))', 'psi_value')}
-FROM terms
-"""
-
-
-_ORACLE_SOURCE_TOKEN_JS = f"""
-WITH toks AS (SELECT source, unnest({_SQ_TOKS}) AS tok
-              FROM documents WHERE source IN ('src2', 'src3')),
-cnt AS (SELECT tok,
-               sum(CASE WHEN source = 'src2' THEN 1 ELSE 0 END) AS ca,
-               sum(CASE WHEN source = 'src3' THEN 1 ELSE 0 END) AS cb
-        FROM toks WHERE tok IS NOT NULL GROUP BY 1),
-tot AS (SELECT sum(ca) AS na, sum(cb) AS nb FROM cnt),
-terms AS (SELECT ca * 1.0 / (CASE WHEN tot.na > 0 THEN tot.na END) AS p,
-                 cb * 1.0 / (CASE WHEN tot.nb > 0 THEN tot.nb END) AS q,
-                 tot.na, tot.nb
-          FROM cnt CROSS JOIN tot),
-agg AS (SELECT CAST(max(na) AS BIGINT) AS n_a, CAST(max(nb) AS BIGINT) AS n_b,
-               CAST(count(*) AS BIGINT) AS n_items,
-               sum(CASE WHEN p > 0 THEN p * ln(p / ((p + q) / 2)) / 2 ELSE 0.0 END
-                   + CASE WHEN q > 0 THEN q * ln(q / ((p + q) / 2)) / 2 ELSE 0.0 END) AS js
-        FROM terms)
-SELECT n_a, n_b, n_items, {_r6('js', 'js')}, {_r6('js / ln(2)', 'js_norm')}
-FROM agg
-"""

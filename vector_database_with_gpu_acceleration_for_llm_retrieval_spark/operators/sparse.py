@@ -175,7 +175,7 @@ def sparse_postings(sv: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
 
 def sparse_query_py(text: str) -> tuple[list[int], list[float]]:
-    """Driver-side sparse encoding of one query string — the same
+    r"""Driver-side sparse encoding of one query string — the same
     tokenizer/hash/weighting as :func:`sparse_from_text`, computed in
     Python so single-query search can inline the (tiny) query vector
     as literals (the `_query_vec` pattern). Returns ``(indices,

@@ -37,6 +37,13 @@ def get_spark(app_name: str = "vdb_spark", shuffle_partitions: int | None = None
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        # Python workers import this package (UDFs, mapInPandas) whatever
+        # the working directory; Spark merges this with the inherited
+        # PYTHONPATH.
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        )
         # long-session hygiene (r8): even with the UI off, the
         # AppStatusListener retains 1000 jobs/stages and 100k tasks, and
         # whole-stage codegen fills the JVM code cache with one class
