@@ -218,12 +218,10 @@ SCALE_QUERIES = [
     # the two new operators with corpus-sized exchanges
     "dup_span_stats",
     "dsir_weights",
-    # round-6 families at scale: PageRank over the 10x co-purchase
-    # graph (iterative join+agg with checkpoint pinning), the heaviest
-    # TPC-H wave shape (Q9-style multi-join profit rollup) on the 10x
-    # lineitem, a corpus-wide textstats aggregate (per-doc type/token
-    # arrays), and the daily z-score anomaly scan over 10x events
-    "part_pagerank",
+    # round-6 families at scale: the heaviest TPC-H wave shape (Q9-style
+    # multi-join profit rollup) on the 10x lineitem, a corpus-wide
+    # textstats aggregate (per-doc type/token arrays), and the daily
+    # z-score anomaly scan over 10x events
     "product_profit",
     "lexical_diversity",
     "daily_anomaly",
@@ -232,12 +230,9 @@ SCALE_QUERIES = [
     # indexed variant rebuilds its trigram index per call, which is a
     # build-cost measurement, not a query ratio: 50 s build at 50k
     # docs, recorded once in SURVEY, kept out of the per-round ratio),
-    # market-basket rules on 10x lineitem, the delta-fold materialized
-    # rollup on 10x events, aligned-day Pearson series correlation,
-    # and the projected-shortlist kNN join
+    # aligned-day Pearson series correlation, and the projected-shortlist
+    # kNN join
     "grep_corpus",
-    "assoc_rules",
-    "incremental_rollup",
     "similar_series",
     "rp_knn_join",
     # round-8 additions: span-removal dedup (argmin + coverage-union
@@ -251,11 +246,7 @@ SCALE_QUERIES = [
     # make every doc an excerpt-family member, so candidates/results
     # are quadratic-by-construction (>30 CPU-min, killed; the entry's
     # semantics are fine, this synthetic replication is pathological
-    # FOR IT specifically). part_kcore — replication multiplies edge
-    # WEIGHTS, not the distinct-pair graph, so the probe would measure
-    # 6 rounds of scheduling floor (Spark 5.6 s vs DuckDB 1.1 s on a
-    # graph that doesn't grow), not data-scaling; recorded in
-    # SURVEY/BASELINE instead of skewing the ratio table.
+    # FOR IT specifically).
 ]
 SCALE_REPS = 3
 #: heavy build-dominated families measured once, un-warmed (the
@@ -545,7 +536,8 @@ def _scale_probe(spark, qs, oracles) -> dict | None:
             "total": round(sum(spark_times.values()), 4),
             "shape_probes": shape,
             "duckdb_yardstick": duck,
-            "duckdb_total": round(sum(duck.values()), 4) if duck else None,
+            # a partial sum is no total: null when any mirror was shed
+            "duckdb_total": round(sum(duck.values()), 4) if duck and not duck_skipped else None,
             "skipped_for_budget": {
                 "spark": spark_skipped,
                 "duckdb": duck_skipped,
@@ -621,6 +613,8 @@ def main() -> None:
     t_yardstick_done = round(_elapsed(), 1)
     scale = _scale_probe(spark, qs, contract.oracle_sql()) if _extras_allowed(0.75) else None
     qps = round(len(all_lat) / sum(all_lat), 2) if all_lat else 0.0
+    # a partial sum is no total: null when any mirror was shed
+    duck_total = round(sum(duck.values()), 4) if duck and not duck_skipped else None
 
     # bulky evidence → file (per-rep arrays, mirrors, probe, load):
     # the judge reads BENCH_DETAIL.json; the driver's tail window only
@@ -637,7 +631,7 @@ def main() -> None:
         "loadavg_after": [round(x, 2) for x in os.getloadavg()],
         "duckdb_yardstick": duck,
         "duckdb_skipped_for_budget": duck_skipped,
-        "duckdb_total": round(sum(duck.values()), 4) if duck else None,
+        "duckdb_total": duck_total,
         "scale_probe": scale,
         "budget_s": BUDGET_S,
         "sections_done_at_s": {
@@ -664,7 +658,7 @@ def main() -> None:
         "p95_ms": pct(95),
         "p99_ms": pct(99),
         "qps": qps,
-        "duckdb_total": round(sum(duck.values()), 4) if duck else None,
+        "duckdb_total": duck_total,
         "spread_flagged_3x": spread_flagged,
         "queries": per_query,
     }

@@ -1,5 +1,5 @@
 """Small-file compaction: fewer files, identical data, partition
-layout preserved."""
+layout preserved; the constraint audit behind write-audit-publish."""
 
 from __future__ import annotations
 
@@ -105,3 +105,46 @@ def test_publish_table_wap_gate(spark):
         assert {r.id for r in spark.read.parquet(path).collect()} == {9}
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_audit_constraints_hand_computed(spark):
+    child = spark.createDataFrame(
+        [
+            (1, 10, 5.0),
+            (2, 10, -1.0),   # range violation
+            (3, None, 2.0),  # null fk (not an orphan: nulls skip FK check)
+            (3, 99, 3.0),    # duplicate id + orphan fk (99 not in parent)
+            (None, 20, 1.0), # null id
+        ],
+        "id long, pid long, v double",
+    )
+    parent = spark.createDataFrame([(10,), (20,)], "pk long")
+    out = {
+        r.constraint: r.n_violations
+        for r in MN.audit_constraints(
+            child,
+            not_null=["id"],
+            unique=[["id"]],
+            fks={"pid": (parent, "pk")},
+            checks={"v_nonneg": F.col("v") >= 0},
+        ).collect()
+    }
+    assert out["not_null(id)"] == 1
+    assert out["unique(id)"] == 1      # one extra copy of id=3
+    assert out["fk(pid)"] == 1         # pid=99 orphan; NULL pid skipped
+    assert out["check(v_nonneg)"] == 1
+
+
+def test_audit_constraints_clean_and_empty(spark):
+    df = spark.createDataFrame([(1,), (2,)], "id long")
+    out = MN.audit_constraints(df, not_null=["id"], unique=[["id"]]).collect()
+    assert all(r.n_violations == 0 for r in out)
+    assert MN.audit_constraints(df).count() == 0
+
+
+def test_audit_constraints_null_check_is_violation(spark):
+    df = spark.createDataFrame([(1.0,), (None,), (-2.0,)], "v double")
+    out = {r.constraint: r.n_violations for r in
+           MN.audit_constraints(df, checks={"v_pos": F.col("v") > 0}).collect()}
+    # NULL predicate result must count as a violation, not a pass
+    assert out["check(v_pos)"] == 2

@@ -1,5 +1,5 @@
-"""Package hygiene: every module compiles cleanly, and the engine runs
-from any working directory."""
+"""Package hygiene: every module compiles cleanly, the engine runs from
+any working directory, and the default driver heap fits the host."""
 
 from __future__ import annotations
 
@@ -7,6 +7,7 @@ import os
 import pathlib
 import subprocess
 import sys
+import types
 import warnings
 
 import pytest
@@ -54,3 +55,27 @@ assert rows, "rag_context returned no rows"
         timeout=600,
     )
     assert proc.returncode == 0, proc.stderr[-4000:]
+
+
+def test_default_driver_heap_fits_host_memory(monkeypatch):
+    """Without SPARK_DRIVER_MEMORY the driver heap cap is at most half
+    the host's physical memory and at most 32g."""
+    from pyspark.sql import SparkSession
+
+    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.session import get_spark
+
+    options = {}
+
+    def capture(self):
+        options.update(self._options)
+        return types.SimpleNamespace(
+            sparkContext=types.SimpleNamespace(setLogLevel=lambda level: None)
+        )
+
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", capture)
+    get_spark("heap_default")
+    heap = options["spark.driver.memory"]
+    heap_mb = int(heap[:-1]) * {"g": 1024, "m": 1}[heap[-1]]
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (1024 * 1024)
+    assert heap_mb <= min(32 * 1024, phys_mb // 2), (heap, phys_mb)

@@ -1,17 +1,13 @@
-"""Property tests for the pure-Python quantization/rerank kernels:
-SQ round-trip error bound and MMR selection invariants hold for
-arbitrary inputs (no Spark session needed — these are the driver-side
-kernels the distributed operators delegate to)."""
+"""Property tests for the pure-Python quantization kernels: the SQ
+round-trip error bound holds for arbitrary inputs (no Spark session
+needed — these are the driver-side kernels the distributed operators
+delegate to)."""
 
 from __future__ import annotations
 
 import numpy as np
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-
-from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators.rerank import (
-    mmr_select,
-)
 
 PROP_SETTINGS = dict(
     max_examples=40,
@@ -23,42 +19,6 @@ PROP_SETTINGS = dict(
 DIM = 6
 finite = st.floats(min_value=-1e3, max_value=1e3, allow_nan=False, allow_infinity=False)
 vec = st.lists(finite, min_size=DIM, max_size=DIM)
-
-
-@given(
-    vecs=st.lists(vec, min_size=1, max_size=25),
-    k=st.integers(min_value=1, max_value=30),
-    lam=st.floats(min_value=0.0, max_value=1.0),
-)
-@settings(**PROP_SETTINGS)
-def test_mmr_select_invariants(vecs, k, lam):
-    n = len(vecs)
-    V = np.asarray(vecs)
-    ids = list(range(n))
-    scores = sorted(np.linspace(0.0, 1.0, n).tolist(), reverse=True)
-    out = mmr_select(ids, scores, V, k=k, lam=lam)
-    # size clamps to n; ranks are 1..|out|; ids unique
-    assert len(out) == min(k, n)
-    assert [r[2] for r in out] == list(range(1, len(out) + 1))
-    assert len({r[0] for r in out}) == len(out)
-    # rank 1 is the relevance argmax (first max on ties)
-    assert out[0][0] == ids[int(np.argmax(scores))]
-    # determinism
-    assert out == mmr_select(ids, scores, V, k=k, lam=lam)
-
-
-@given(
-    vecs=st.lists(vec, min_size=2, max_size=25),
-    k=st.integers(min_value=1, max_value=10),
-)
-@settings(**PROP_SETTINGS)
-def test_mmr_lambda_one_is_relevance_order(vecs, k):
-    n = len(vecs)
-    V = np.asarray(vecs)
-    ids = list(range(n))
-    scores = sorted(np.random.RandomState(7).rand(n).tolist(), reverse=True)
-    out = mmr_select(ids, scores, V, k=k, lam=1.0)
-    assert [r[0] for r in out] == ids[: min(k, n)]
 
 
 @given(vecs=st.lists(vec, min_size=1, max_size=30))

@@ -1,13 +1,10 @@
-"""Round-8 relational additions: skyline (pareto_front), CDC apply,
-and the stack-based unpivot."""
+"""Round-8 relational additions: skyline (pareto_front) and the
+stack-based unpivot."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-    incremental as INC,
-)
 from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
     relational as R,
 )
@@ -49,25 +46,6 @@ def test_pareto_front_matches_bruteforce_parts(tables):
     assert got == _brute_skyline(pairs)
     # a front is mutually non-dominating and never empty on non-empty input
     assert got
-
-
-def test_cdc_apply_latest_wins_and_tombstones(spark):
-    rows = [
-        # (key, seq, op, payload)
-        (1, 1, "upsert", "a"),
-        (1, 3, "upsert", "c"),
-        (1, 2, "upsert", "b"),
-        (2, 1, "upsert", "x"),
-        (2, 2, "delete", None),
-        (3, 5, "delete", None),
-        (3, 7, "upsert", "alive"),
-    ]
-    ch = spark.createDataFrame(rows, ["k", "seq", "op", "payload"])
-    got = {
-        (r.k, r.seq, r.payload)
-        for r in INC.cdc_apply(ch, ["k"], ["seq"]).collect()
-    }
-    assert got == {(1, 3, "c"), (3, 7, "alive")}  # key 2 tombstoned
 
 
 def test_unpivot_melts_wide_to_long(spark):

@@ -507,17 +507,38 @@ def test_mmr_demotes_redundant_near_duplicates(spark):
     assert got[0] == 1 and 4 in got  # MMR: diversity pick surfaces
     assert got != plain
 
-
-def test_mmr_lambda_one_equals_plain_topk(spark):
-    rows = [(i, [float(i % 7), float((i * 3) % 5), 1.0]) for i in range(1, 40)]
-    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    q = [1.0, 2.0, 0.5]
+    # exact duplicates: three copies of A (ids 0-2) and one B (id 3),
+    # query ≈ A; the 2nd A-copy's max-sim penalty (~1) outweighs its
+    # relevance edge, so B is picked by rank 3
+    rows = [
+        (0, [1.0, 0.0, 0.0]),
+        (1, [1.0, 0.0, 0.001]),
+        (2, [0.999, 0.001, 0.0]),
+        (3, [0.0, 1.0, 0.0]),
+    ]
+    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    q = [1.0, 0.05, 0.0]
+    plain = [r.vec_id for r in S.topk(corpus, q, k=3, metric="cosine").collect()]
     got = [
         r.id
-        for r in S.mmr_topk(corpus, q, k=4, pool=10, lam=1.0).orderBy("rank").collect()
+        for r in S.mmr_topk(corpus, q, k=3, pool=4, lam=0.5).orderBy("rank").collect()
     ]
-    plain = [r.vec_id for r in S.topk(corpus, q, k=4, metric="cosine").collect()]
-    assert got == plain
+    assert 3 not in plain
+    assert got[0] == plain[0] and 3 in got
+
+
+def test_mmr_lambda_one_equals_plain_topk(spark, tables):
+    rows = [(i, [float(i % 7), float((i * 3) % 5), 1.0]) for i in range(1, 40)]
+    synthetic = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    emb = tables["embeddings"].select("vec_id", "embedding")
+    q_emb = list(emb.filter(F.col("vec_id") == 0).first().embedding)
+    for corpus, q, k, pool in [(synthetic, [1.0, 2.0, 0.5], 4, 10), (emb, q_emb, 5, 20)]:
+        got = [
+            r.id
+            for r in S.mmr_topk(corpus, q, k=k, pool=pool, lam=1.0).orderBy("rank").collect()
+        ]
+        plain = [r.vec_id for r in S.topk(corpus, q, k=k, metric="cosine").collect()]
+        assert got == plain
 
 
 def test_mmr_knn_join_matches_per_query_mmr(tables):

@@ -219,57 +219,6 @@ def test_cusum_flat_series_never_alarms(spark):
     assert rows and not any(r.is_change for r in rows)
 
 
-def test_cusum_over_streaming_rollup_matches_batch(spark, tmp_path):
-    # live change-point monitor by composition: the streaming rollup
-    # maintains (key, day) counts; CUSUM reads the calendar-sized
-    # rollup — no operator-specific streaming code, stream == batch
-    import datetime
-
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        incremental as INC,
-    )
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators.temporal import (
-        cusum_changepoints,
-    )
-    from pyspark.sql import functions as FF
-
-    counts = [10, 10, 10, 10, 14, 14, 14, 14, 14]
-    rows = []
-    for i, c in enumerate(counts):
-        day = datetime.datetime(2024, 2, 1 + i, 9, 0)
-        rows += [("t", day)] * c
-    ev = spark.createDataFrame(rows, "event_type string, ts timestamp")
-    src, roll, ckpt = (str(tmp_path / p) for p in ("cs", "cr", "cc"))
-    upd = ev.select("event_type", FF.to_date("ts").alias("day"))
-    # two "arrival" batches of events feed the maintained daily rollup
-    upd.filter("day <= '2024-02-05'").write.mode("append").parquet(src)
-    q = INC.stream_rollup_maintenance(
-        spark, src, roll, ckpt, ["event_type", "day"],
-        {"n_events": ("count", "day")}, "event_type string, day date",
-    )
-    q.processAllAvailable()
-    upd.filter("day > '2024-02-05'").write.mode("append").parquet(src)
-    q.processAllAvailable()
-    q.stop()
-
-    live_daily = spark.read.parquet(roll).select(
-        "event_type", FF.col("day").cast("timestamp").alias("ts"), "n_events"
-    )
-    # re-expand is unnecessary: cusum's first step is the same daily agg,
-    # so feed it one synthetic row per (key, day) weighted via explode
-    expanded = live_daily.select(
-        "event_type",
-        FF.explode(FF.expr("sequence(1, n_events)")).alias("_i"),
-        "ts",
-    ).select("event_type", "ts")
-    got = {str(r.day): (round(r.s_up, 9), r.is_change)
-           for r in cusum_changepoints(expanded, threshold=2.0).collect()}
-    want = {str(r.day): (round(r.s_up, 9), r.is_change)
-            for r in cusum_changepoints(ev, threshold=2.0).collect()}
-    assert got == want
-    assert any(flag for _s, flag in got.values())  # the shift is caught live
-
-
 def test_gap_fill_known(spark):
     import datetime as dt
 
@@ -453,79 +402,6 @@ def test_holt_fitted_path_consistent(spark):
         assert abs(r.fitted - f) < 1e-12
     fc = TP.holt_forecast(df2, "k", alpha=a, beta=b_, horizon=1).collect()[0]
     assert abs(fc.level - l) < 1e-12 and abs(fc.trend - b) < 1e-12
-
-
-def test_burn_rate_live_by_composition(spark, tmp_path):
-    """The generic streaming rollup keyed on the hour with (errs,total)
-    sum measures keeps a LIVE hourly frame; burn rates computed from
-    the maintained table equal the batch operator — zero burn-specific
-    streaming code (the CUSUM-live pattern)."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        incremental as INC,
-    )
-
-    base = dt.datetime(2024, 3, 1)
-    rows = []
-    for h in range(8):
-        bad = 40 if h == 5 else 2
-        for i in range(80):
-            rows.append((base + dt.timedelta(hours=h, seconds=i), i < bad))
-    full = spark.createDataFrame(rows, "ts timestamp, is_err boolean")
-    b1 = full.filter(F.hour("ts") < 4)
-    b2 = full.filter(F.hour("ts") >= 4)
-
-    def hourly_updates(df):
-        return df.select(
-            F.floor(F.unix_timestamp("ts") / 3600).cast("long").alias("hour"),
-            F.col("is_err").cast("long").alias("errs"),
-            F.lit(1).cast("long").alias("total"),
-        )
-
-    src, roll, ckpt = (str(tmp_path / p) for p in ("bs", "br", "bc"))
-    measures = {"errs": ("sum", "errs"), "total": ("sum", "total")}
-    hourly_updates(b1).write.mode("append").parquet(src)
-    q = INC.stream_rollup_maintenance(
-        spark, src, roll, ckpt, ["hour"], measures,
-        "hour long, errs long, total long",
-    )
-    q.processAllAvailable()
-    hourly_updates(b2).write.mode("append").parquet(src)
-    q.processAllAvailable()
-    q.stop()
-
-    # burn math over the MAINTAINED hourly frame (the batch operator's
-    # window+arithmetic half, applied to state instead of raw events)
-    from pyspark.sql import Window
-
-    live_hourly = spark.read.parquet(roll)
-    def burns(hourly):
-        def wnd(hours):
-            return Window.orderBy("hour").rangeBetween(-(hours - 1), 0)
-        es, ts_ = F.sum("errs").over(wnd(1)), F.sum("total").over(wnd(1))
-        el, tl = F.sum("errs").over(wnd(4)), F.sum("total").over(wnd(4))
-        b = 0.10
-        return {
-            r.hour: (r.bs, r.bl)
-            for r in hourly.select(
-                "hour",
-                ((es.cast("double") / F.when(ts_ > 0, ts_)) / b).alias("bs"),
-                ((el.cast("double") / F.when(tl > 0, tl)) / b).alias("bl"),
-            ).collect()
-        }
-
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import temporal as T2
-
-    live = burns(live_hourly)
-    batch = {
-        r.hour: (r.burn_short, r.burn_long)
-        for r in T2.burn_rate_alerts(
-            full, "is_err", budget=0.10, short_h=1, long_h=4
-        ).collect()
-    }
-    assert live == batch and len(live) == 8
 
 
 def _ar_numpy(days, ys, p, horizon):

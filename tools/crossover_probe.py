@@ -1,15 +1,12 @@
 """Genuinely-scaled crossover probe for the self-audit families
 (r9 verdict #2): the round-9 second-wave idle timings showed
-`dedup_recall` / `containment_pairs` / `part_kcore` >2x their DuckDB
-mirrors at sf0.1 (5k docs), with the credible-but-unmeasured
-explanation that the mirrors are QUADRATIC (brute-force all-pairs /
-unrolled peel rounds) and therefore artificially cheap at toy size.
-Replica synthesis was measured and rejected in round 9 (BASELINE.md:
-replication grows result sets quadratically BY CONSTRUCTION, or grows
-edge weights instead of the graph) — this probe scales the data the
-way real data scales:
-
-* documents: the real sf corpus plus RECOMBINED distinct docs — new
+`dedup_recall` / `containment_pairs` >2x their DuckDB mirrors at
+sf0.1 (5k docs), with the credible-but-unmeasured explanation that
+the mirrors are QUADRATIC (brute-force all-pairs) and therefore
+artificially cheap at toy size. Replica synthesis was measured and
+rejected in round 9 (BASELINE.md: replication grows result sets
+quadratically BY CONSTRUCTION) — this probe scales the data the way
+real data scales: the real sf corpus plus RECOMBINED distinct docs — new
   doc = first half of hash-chosen parent A + second half of
   hash-chosen parent B, so token/shingle frequency statistics (which
   drive the brute-force mirror's join fan-out) stay corpus-realistic
@@ -20,15 +17,11 @@ way real data scales:
   LINEAR). Near-dup positives come from the real corpus slice;
   containment excerpts are planted by the entry itself (every 7th
   doc).
-* lineitem (part_kcore): R reps of the sf0.1 order log with fresh
-  order keys and per-rep odd-multiplier-permuted part keys, so the
-  distinct co-purchase PAIR set grows ~R-fold (replication without
-  permutation only grows edge weights — the vetted r9 failure).
 
 Usage:  python tools/crossover_probe.py <family> <scale> [<scale> ...]
         family = any documents-table entry (dedup_recall,
-        containment_pairs, exact_dedup_docs, ...) or part_kcore
-        scale = doc count (documents families) or rep count (kcore)
+        containment_pairs, exact_dedup_docs, ...)
+        scale = doc count
 
 Prints one JSON line per scale: spark median (3 reps, warm excluded)
 vs DuckDB mirror median on the SAME parquet.
@@ -44,7 +37,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 FAMILY = sys.argv[1]
-SCALES = [int(x) for x in sys.argv[2:]] or ([5000, 25000] if FAMILY != "part_kcore" else [1, 10])
+SCALES = [int(x) for x in sys.argv[2:]] or [5000, 25000]
 
 from pyspark.sql import functions as F
 
@@ -146,37 +139,10 @@ EMBEDDING_FAMILIES = {
 }
 
 
-def synth_lineitem(reps: int, out: str) -> None:
-    """reps x sf0.1 lineitem with fresh orders + permuted parts."""
-    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    pmax = li.agg(F.max("l_partkey")).collect()[0][0]
-    rep = F.explode(F.array(*[F.lit(i) for i in range(reps)])).alias("rep")
-    (
-        li.select("*", rep)
-        .withColumn("l_orderkey", F.col("l_orderkey") + F.col("rep") * 100_000_000)
-        .withColumn(
-            "l_partkey",
-            F.when(F.col("rep") == 0, F.col("l_partkey")).otherwise(
-                F.pmod(
-                    F.col("l_partkey") * (F.col("rep") * 2 + 3) + F.col("rep"),
-                    F.lit(int(pmax)),
-                )
-                + 1
-            ),
-        )
-        .drop("rep")
-        .write.mode("overwrite")
-        .parquet(out)
-    )
-
-
 for scale in SCALES:
     tmp = tempfile.mkdtemp(prefix="crossover_")
     try:
-        if FAMILY == "part_kcore":
-            synth_lineitem(scale, f"{tmp}/lineitem.parquet")
-            tables = ["lineitem"]
-        elif FAMILY in EMBEDDING_FAMILIES:
+        if FAMILY in EMBEDDING_FAMILIES:
             synth_embeddings(scale, f"{tmp}/embeddings.parquet")
             tables = ["embeddings"]
         else:

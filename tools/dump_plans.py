@@ -99,18 +99,6 @@ AUDITED = {
         "the slice size, never the stratum size, and a mostly-one-language "
         "corpus still parallelizes (plan-asserted: no stratum-only windowspec)."
     ),
-    "quantile_sketch": (
-        "Portable quantile sketch: ONE map-side-combined hash aggregate onto "
-        "<= 63*2^m integer bucket keys — the shuffle carries the sketch, never "
-        "the rows; the bucket mapping is a pure integer CASE/shift projection "
-        "inside codegen (no UDF, no float log)."
-    ),
-    "part_communities": (
-        "Label propagation: per round one equi-join of the label frame against "
-        "the persisted symmetrized edges + a (node,label) count + struct-max "
-        "argmax — all partial-agged hash exchanges, labels checkpoint-pinned; "
-        "no window over the graph, no driver collect."
-    ),
     "knn_classify": (
         "kNN classification: knn_join's single pruned corpus scan produces the "
         "|Q|·k neighbor frame, which BROADCASTS back onto the corpus for the label "
@@ -160,11 +148,6 @@ AUDITED = {
         "across queries, per-query fan-out via broadcast term join, "
         "candidates-only window; the only corpus-sized exchange is the "
         "(doc, term) aggregation."
-    ),
-    "table_profile": (
-        "Profiling: 4 partial aggregates per column + a row count in ONE "
-        "aggregation job (single FileScan, plan-asserted), exploded from "
-        "the 1-row result — the exact-answer floor is one scan."
     ),
     "hybrid_topk_linear": (
         "Linear fusion: two k-row min-max aggregates broadcast back onto "
@@ -252,11 +235,6 @@ AUDITED = {
         "frame broadcast back — the one WindowExec with no partition runs on "
         "P rows, not the corpus."
     ),
-    "orders_audit": (
-        "Constraint audit: not-null + row checks share one scan-wide "
-        "aggregate; uniqueness is one groupBy; the FK check is a broadcast "
-        "anti-join — violation counts union in tiny scalar frames."
-    ),
     "cdc_snapshot": (
         "CDC apply: latest-change dedup shuffles the CHANGELOG only "
         "(WindowGroupLimit map-side), the changed-key set anti-joins the "
@@ -271,11 +249,6 @@ AUDITED = {
     "decayed_engagement": (
         "Factored exponential decay: per-key min and the cumulative sum "
         "share ONE hashpartitioning exchange; no UDF, no recursion."
-    ),
-    "winsorized_price": (
-        "Exact robust stats: the distributed prefix-rank (range partition "
-        "+ P-row offsets) replaces the single-task global sort; cutoffs "
-        "broadcast back into the clipping aggregate."
     ),
     "value_bars": (
         "OHLC resampling: ONE map-side-combining groupBy per bar; "
@@ -296,17 +269,6 @@ AUDITED = {
         "scored and TakeOrderedAndProject'd like the flagship; no Exchange, no "
         "stored artifact (matrix is hash-derived)."
     ),
-    "hll_distinct": (
-        "Portable HLL: hash→(idx,rho) is a pure projection; ONE map-side-combined "
-        "HashAggregate onto ≤2^p register rows (the shuffle carries registers, "
-        "never keys), then a 1-row estimate + broadcast crossJoin of the exact "
-        "count (report-only)."
-    ),
-    "frequent_items": (
-        "Misra-Gries collide-then-verify: one MapInPandas pass builds bounded "
-        "partition summaries; candidates broadcast back into an exact semi-join "
-        "count — the full key set never shuffles."
-    ),
     "salted_join": (
         "Salted skew join: fact salt is a pure projection, dim explodes ×salts; "
         "the join keys are (key, salt) so a hot key spreads over salts tasks; "
@@ -321,11 +283,6 @@ AUDITED = {
     "zorder_stats": (
         "Z-order probe: Morton interleave is one integer Project (codegen), then "
         "a single partial-agged HashAggregate onto ≤2^bucket_bits rows."
-    ),
-    "ivm_join_view": (
-        "Incremental join view: three delta joins (deltas broadcast), partial-agg, "
-        "fold into the rollup by key — the history-sized base⋈base join appears "
-        "NOWHERE in the refresh plan."
     ),
     "mmr_topk": (
         "MMR diversified top-k: the relevance pool is a bounded "
@@ -342,11 +299,6 @@ AUDITED = {
         "prune), survivors into one tiny global sweep — the global sort sees "
         "survivor counts, not the table."
     ),
-    "hot_keys": (
-        "Hot-key report: key-count partial agg, 1-row (total,n_keys) broadcast "
-        "crossJoin, TakeOrderedAndProject for the top-N; the cumulative window "
-        "runs on the N-row frame only — nothing global sorts."
-    ),
     "containment_pairs": (
         "Directed containment join: A-prefix explode joined against the full-B "
         "posting equi-key (SortMergeJoin on shingle), length filter, then two "
@@ -359,31 +311,10 @@ AUDITED = {
         "shape) gives the global sort rank with NO single-partition window; "
         "neighborhood pairing is an equi-join on rank."
     ),
-    "part_kcore": (
-        "k-core peel: per round one partial-agged degree count and two "
-        "LeftSemi joins of the shrinking (checkpoint-pinned) edge frame — "
-        "equi-key only, no windows over the graph."
-    ),
-    "sliding_distinct_users": (
-        "Sliding HLL: after the first groupBy every frame is sketch-sized "
-        "(buckets × 256 registers); the range-window max-merge partitions by "
-        "register index — nothing data-sized shuffles twice."
-    ),
-    "rollup_answer": (
-        "View routing: the report re-aggregates the |rollup|-row state frame "
-        "(two groupBys total, both map-side combined); the event log is "
-        "scanned exactly once to build state."
-    ),
     "compaction_plan": (
         "Compaction planning: per-partition windows over the file inventory "
         "only — the plan frame is inventory-sized; no global ordering, no "
         "driver greedy loop."
-    ),
-    "value_p95_sliding": (
-        "Sliding sketch quantiles (r10): trailing sums over a (hour × "
-        "sketch-bucket) grid — per-bucket RANGE-frame windows on grid-sized "
-        "frames; rank scan partitions by the hour. Sketch-sized everywhere "
-        "after the first map-side-combined groupBy."
     ),
     "ar_forecast7": (
         "AR(2)+bands (r10): one calendar aggregate + one lag equi-join onto "

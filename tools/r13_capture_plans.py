@@ -36,13 +36,10 @@ BENCH_EXTRAS = [
     "budget_select",
     "dup_span_stats",
     "dsir_weights",
-    "part_pagerank",
     "product_profit",
     "lexical_diversity",
     "daily_anomaly",
     "grep_corpus",
-    "assoc_rules",
-    "incremental_rollup",
     "similar_series",
     "rp_knn_join",
     "remove_dup_spans",

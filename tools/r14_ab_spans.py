@@ -126,9 +126,9 @@ def new_budget_select(docs):
         "doc_id", "text", TX.tokens(F.col("text")).alias("__toks")
     ).select(
         "doc_id",
-        T.quality_columns("text", toks_col="__toks")[-1],
+        *T.quality_columns("text", toks_col="__toks"),
         TX.n_tokens(F.col("text")).alias("__wc"),
-    )
+    ).select("doc_id", "quality", "__wc")
     res = sampling.budget_select(
         narrow, contract.BUDGET_TOKENS, order_col="quality", token_count="__wc"
     )

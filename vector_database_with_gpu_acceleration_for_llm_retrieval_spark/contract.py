@@ -63,7 +63,7 @@ KNN_QUERIES = 8
 KNN_K = 5
 N_SHARDS = 8
 #: graph-ANN serving oracle pair (r13): the beam search's fixed rounds
-#: unroll into MATERIALIZED CTEs (the part_pagerank precedent), over a
+#: unroll into MATERIALIZED CTEs, over a
 #: graph BOTH engines derive identically — the exact deg-GRAPH_DEG
 #: cosine kNN graph (self excluded) — with explicit lowest-id entry
 #: nodes (the DiskANN medoid form) instead of the engine-private
@@ -120,38 +120,9 @@ _PERMS = D.minhash_perms(MINHASH_N)
 # ---------------------------------------------------------------------------
 
 
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
 def _round6(c, name: str):
     """Normalized 6-decimal rounding: matches SQL ``round(x, 6) + 0.0``."""
     return (F.round(c, 6) + F.lit(0.0)).alias(name)
-
-
-
-
 
 
 #: (sf_dir, vec_id) → embedding; the query vector is a fixed input of
@@ -1591,9 +1562,6 @@ def q_hybrid_tri_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 HYBRID_W_DENSE = 0.6
 BM25Q_MOD = 97
 BM25Q_TOKENS = 6
-PROFILE_COLS = ["o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority"]
-
-
 def q_shipping_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 shape: bilateral nation-pair trade volume per ship
     year — two aliased broadcast nation joins, one fact shuffle."""
@@ -1611,24 +1579,6 @@ def q_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation, both sums from one group-by."""
     t = load_tables(spark, sf_dir)
     return R.promo_share(t)
-
-
-def q_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-pass table profile (ANALYZE-style): null counts, distinct
-    cardinalities, min/max per column in a single aggregation job."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        profiling,
-    )
-
-    t = load_tables(spark, sf_dir)
-    res = profiling.profile_table(t["orders"], PROFILE_COLS)
-    return res.select(
-        "col_name",
-        F.col("n_nulls").cast("long").alias("n_nulls"),
-        F.col("n_distinct").cast("long").alias("n_distinct"),
-        "min_str",
-        "max_str",
-    )
 
 
 def q_bm25_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2928,27 +2878,6 @@ def q_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_orders_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-publish constraint audit over orders: shared-scan not-null +
-    row checks, one uniqueness shuffle, one broadcast FK anti-join —
-    one row of violation counts per declared constraint."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        profiling,
-    )
-
-    t = load_tables(spark, sf_dir)
-    res = profiling.audit_constraints(
-        t["orders"],
-        not_null=["o_orderkey"],
-        unique=[["o_orderkey"]],
-        fks={"o_custkey": (t["customer"], "c_custkey")},
-        checks={"totalprice_pos": F.col("o_totalprice") > 0},
-    )
-    return res.select(
-        "constraint", "kind", F.col("n_violations").cast("long").alias("n_violations")
-    )
-
-
 def q_rate_limited(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user admission control: first 3 events per user per day
     admitted, the rest rejected — the batch twin of the stateful
@@ -2984,23 +2913,6 @@ def q_cdc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-width 20-bin distribution of lineitem extended price —
-    bounds from one scalar aggregate broadcast back, single lazy plan."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        profiling,
-    )
-
-    t = load_tables(spark, sf_dir)
-    res = profiling.numeric_histogram(t["lineitem"], "l_extendedprice", n_bins=20)
-    return res.select(
-        "bin",
-        _round6(F.col("bin_lo"), "bin_lo"),
-        _round6(F.col("bin_hi"), "bin_hi"),
-        F.col("n_rows").cast("long").alias("n_rows"),
-    )
-
-
 def q_decayed_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exponentially-decayed per-user engagement score at every event
     (7-day half-life) — the sequential-looking recurrence factored into
@@ -3013,41 +2925,6 @@ def q_decayed_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = temporal.decayed_sum(t["events"], half_life_sec=7 * 86400.0)
     return res.select(
         "event_id", "user_id", _round6(F.col("decayed_sum"), "decayed_sum")
-    )
-
-
-def q_winsorized_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Outlier-robust price summary: exact p01/p99 cutoffs from the
-    distributed prefix-rank (no single-task global sort) and the
-    winsorized mean."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        profiling,
-    )
-
-    t = load_tables(spark, sf_dir)
-    res = profiling.winsorized_stats(t["lineitem"], "l_extendedprice", 0.01, 0.99)
-    return res.select(
-        F.col("n_rows").cast("long").alias("n_rows"),
-        _round6(F.col("lo_cut"), "lo_cut"),
-        _round6(F.col("hi_cut"), "hi_cut"),
-        _round6(F.col("winsorized_avg"), "winsorized_avg"),
-    )
-
-
-def q_spend_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equal-population order-value deciles — equi-depth binning on the
-    distributed percentile, readable under any skew."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        profiling,
-    )
-
-    t = load_tables(spark, sf_dir)
-    res = profiling.equi_depth_bins(t["orders"], "o_totalprice", n_bins=10)
-    return res.select(
-        "bin",
-        F.col("n_rows").cast("long").alias("n_rows"),
-        _round6(F.col("lo"), "lo"),
-        _round6(F.col("hi"), "hi"),
     )
 
 
@@ -3070,25 +2947,6 @@ def q_cohort_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_lineitem_correlations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise Pearson correlations over lineitem's numeric measures,
-    all six pairs from ONE aggregation pass."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        profiling,
-    )
-
-    t = load_tables(spark, sf_dir)
-    res = profiling.column_correlations(
-        t["lineitem"], ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
-    )
-    return res.select(
-        "col_a",
-        "col_b",
-        F.col("n").cast("long").alias("n"),
-        _round6(F.col("corr"), "corr"),
-    )
-
-
 def q_value_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly OHLC downsampling of the event value stream — open/close
     deterministic under same-microsecond ties via struct min/max."""
@@ -3106,42 +2964,6 @@ def q_value_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
         _round6(F.col("close"), "close"),
         F.col("n_events").cast("long").alias("n_events"),
         _round6(F.col("volume"), "volume"),
-    )
-
-
-def q_customer_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Snapshot diff: the customer table against a deterministically
-    perturbed rewrite (every 97th key dropped, every 13th balance
-    bumped, every 101st key re-added shifted) — added/removed/changed
-    classification with the changed-column list."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        profiling,
-    )
-
-    t = load_tables(spark, sf_dir)
-    old = t["customer"].select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
-    new = (
-        old.filter(F.col("c_custkey") % 97 != 0)
-        .withColumn(
-            "c_acctbal",
-            F.when(F.col("c_custkey") % 13 == 0, F.col("c_acctbal") + 100.0).otherwise(
-                F.col("c_acctbal")
-            ),
-        )
-        .unionByName(
-            old.filter(F.col("c_custkey") % 101 == 0).select(
-                (F.col("c_custkey") + 100000).alias("c_custkey"),
-                "c_name",
-                "c_acctbal",
-                "c_mktsegment",
-            )
-        )
-    )
-    res = profiling.table_diff(old, new, "c_custkey")
-    return res.select(
-        "c_custkey",
-        "status",
-        F.array_join(F.col("changed_cols"), ",").alias("changed_cols"),
     )
 
 
@@ -3193,47 +3015,6 @@ def q_script_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Concentration of order value across orders: Gini via the
-    distributed prefix rank — no single-task global sort."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        profiling,
-    )
-
-    t = load_tables(spark, sf_dir)
-    res = profiling.gini_coefficient(t["orders"], "o_totalprice")
-    return res.select(
-        F.col("n_rows").cast("long").alias("n_rows"),
-        _round6(F.col("total"), "total"),
-        _round6(F.col("gini"), "gini"),
-    )
-
-
-def q_nation_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Supplier concentration per nation (HHI of lineitem revenue
-    share) — how dependent each nation's supply is on few suppliers."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        profiling,
-    )
-
-    t = load_tables(spark, sf_dir)
-    li, sup, nat = t["lineitem"], t["supplier"], t["nation"]
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("rev")
-    joined = (
-        li.select("l_suppkey", rev)
-        .join(F.broadcast(sup.select("s_suppkey", "s_nationkey")),
-              F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(nat.select("n_nationkey", "n_name")),
-              F.col("s_nationkey") == F.col("n_nationkey"))
-    )
-    res = profiling.market_concentration(joined, "n_name", "s_suppkey", "rev")
-    return res.select(
-        "n_name",
-        F.col("n_entities").cast("long").alias("n_entities"),
-        _round6(F.col("hhi"), "hhi"),
-    )
-
-
 def q_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seconds from each purchase back to the user's most recent prior
     view — carry-forward window, no self-join; NULL when no prior
@@ -3246,42 +3027,6 @@ def q_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = temporal.conversion_latency(t["events"])
     return res.select(
         "event_id", "user_id", _round6(F.col("latency_sec"), "latency_sec")
-    )
-
-
-def q_segment_target_enc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Leakage-safe (leave-one-out) target encoding of the market
-    segment against account balance — each row's own label excluded
-    from its category mean."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        features,
-    )
-
-    t = load_tables(spark, sf_dir)
-    res = features.target_encode(
-        t["customer"], "c_mktsegment", "c_acctbal", alpha=10.0, loo=True
-    )
-    return res.select("c_custkey", _round6(F.col("c_mktsegment_te"), "te"))
-
-
-def q_price_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train/serve drift monitor: PSI of extended price between the
-    pre-1998 and 1998+ shipping eras, binned on the REFERENCE era's
-    grid."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        profiling,
-    )
-
-    t = load_tables(spark, sf_dir)
-    li = t["lineitem"]
-    ref = li.filter(F.col("l_shipdate") < "1998-01-01")
-    cur = li.filter(F.col("l_shipdate") >= "1998-01-01")
-    res = profiling.population_stability(ref, cur, "l_extendedprice", n_bins=10)
-    return res.select(
-        "bin",
-        _round6(F.col("p_ref"), "p_ref"),
-        _round6(F.col("p_cur"), "p_cur"),
-        _round6(F.col("psi_term"), "psi_term"),
     )
 
 
@@ -3345,32 +3090,6 @@ def q_rfm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         "r_score",
         "f_score",
         "m_score",
-    )
-
-
-def q_value_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decile lift of event value as a purchase predictor — equal-
-    population bins on the distributed rank, cumulative capture on the
-    tiny bins frame."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        features,
-    )
-
-    t = load_tables(spark, sf_dir)
-    # event_type IS NOT NULL pinned on BOTH engines: a NULL type would make a NULL label here (avg skips
-    # it) but 0.0 in a CASE-ELSE mirror — fixture-dependent divergence
-    scored = t["events"].filter(F.col("event_type").isNotNull()).select(
-        "event_id",
-        F.col("value").alias("score"),
-        (F.col("event_type") == "purchase").cast("double").alias("label"),
-    )
-    res = features.lift_table(scored, "score", "label", n_bins=10, id_col="event_id")
-    return res.select(
-        "bin",
-        F.col("n_rows").cast("long").alias("n_rows"),
-        _round6(F.col("avg_label"), "avg_label"),
-        _round6(F.col("lift"), "lift"),
-        _round6(F.col("cum_capture"), "cum_capture"),
     )
 
 
@@ -3502,199 +3221,6 @@ def q_late_ship_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_late_urgent").cast("long").alias("n_late_urgent"),
         _round6(F.col("late_share"), "late_share"),
     )
-
-
-#: co-purchase graph knobs shared with the SQL mirrors
-COPURCHASE_MIN_WEIGHT = 2
-COPURCHASE_CAP = 20
-PAGERANK_ITERS = 3
-PAGERANK_DAMPING = 0.85
-
-
-def _copurchase_edges(t):
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import graph as G
-
-    return G.copurchase_edges(
-        t["lineitem"],
-        min_weight=COPURCHASE_MIN_WEIGHT,
-        max_items_per_order=COPURCHASE_CAP,
-    )
-
-
-def q_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Market-basket association rules (support/confidence/lift) over
-    the co-purchase pairs — lift > 1 separates genuine association
-    from mere popularity."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import graph as G
-
-    t = load_tables(spark, sf_dir)
-    res = G.association_rules(t["lineitem"], min_weight=2)
-    return res.select(
-        "src",
-        "dst",
-        F.col("n_co").cast("long").alias("n_co"),
-        _round6(F.col("support"), "support"),
-        _round6(F.col("confidence"), "confidence"),
-        _round6(F.col("lift"), "lift"),
-    )
-
-
-def q_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialized-view refresh: a priority-keyed rollup built from
-    80% of orders, then the remaining 20% folded in as a delta —
-    provably equal to the oracle's single-pass aggregate over the full
-    table, at |delta| + |groups| cost (operators/incremental.py)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        incremental as INC,
-    )
-
-    t = load_tables(spark, sf_dir)
-    o = t["orders"]
-    measures = {
-        "n_orders": ("count", "o_totalprice"),
-        "total_price": ("sum", "o_totalprice"),
-        "min_price": ("min", "o_totalprice"),
-        "max_price": ("max", "o_totalprice"),
-    }
-    hist = o.filter(F.col("o_orderkey") % 5 != 0)
-    delta = o.filter(F.col("o_orderkey") % 5 == 0)
-    rollup = INC.partial_agg(hist, ["o_orderpriority"], measures)
-    res = INC.incremental_agg(rollup, delta, ["o_orderpriority"], measures)
-    return res.select(
-        "o_orderpriority",
-        F.col("n_orders").cast("long").alias("n_orders"),
-        _round6(F.round("total_price", 2), "total_price"),
-        _round6(F.col("min_price"), "min_price"),
-        _round6(F.col("max_price"), "max_price"),
-    )
-
-
-def q_part_pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted PageRank over the co-purchase graph: rank spreads
-    proportionally to co-order counts instead of 1/degree — heavy
-    baskets matter more."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import graph as G
-
-    t = load_tables(spark, sf_dir)
-    res = G.pagerank(_copurchase_edges(t), iters=3, weight_col="weight")
-    return res.select(
-        F.col("node").cast("long").alias("node"), _round6(F.col("rank"), "rank")
-    )
-
-
-def q_part_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components of the co-purchase graph (pointer-jumping
-    label propagation to the minimum reachable id — the general graph
-    clustering primitive, mirrored by a recursive-CTE closure)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import graph as G
-
-    t = load_tables(spark, sf_dir)
-    res = G.connected_components(_copurchase_edges(t))
-    return res.select(
-        F.col("node").cast("long").alias("node"),
-        F.col("component").cast("long").alias("component"),
-    )
-
-
-def q_part_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Label-propagation communities of the co-purchase graph: 4
-    synchronous most-frequent-neighbor-label rounds, ties to the
-    smallest label — the step past connected components when one
-    bridge order must not merge two product families. Deterministic
-    by construction (fixed rounds + deterministic tie-break), so the
-    oracle unrolls the identical rounds in SQL
-    (operators/graph.label_propagation)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import graph as G
-
-    t = load_tables(spark, sf_dir)
-    res = G.label_propagation(_copurchase_edges(t), iters=4)
-    return res.select(
-        F.col("node").cast("long").alias("node"),
-        F.col("label").cast("long").alias("label"),
-    ).orderBy("node")
-
-
-def q_part_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted single-source shortest paths on the co-purchase graph
-    (cost = 1/co-order-weight — heavier ties are closer) from the
-    smallest part in the graph: 6 fixed Bellman-Ford rounds, exact for
-    ≤6-hop paths and deterministic regardless of convergence
-    (operators/graph.shortest_paths; oracle = the identical min-plus
-    rounds unrolled)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import graph as G
-
-    t = load_tables(spark, sf_dir)
-    edges = _copurchase_edges(t)
-    src = edges.agg(F.min("src")).collect()[0][0]
-    res = G.shortest_paths(edges, src, iters=6, weight_col="weight")
-    return res.select(
-        F.col("node").cast("long").alias("node"),
-        _round6(F.col("dist"), "dist"),
-    ).orderBy("node")
-
-
-def q_part_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Personalized PageRank from the two smallest parts in the
-    co-purchase graph: seed-restart walk proximity ("related to THESE
-    products"), frontier-sized frames per round, top 50 by score
-    (operators/graph.personalized_pagerank)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import graph as G
-
-    t = load_tables(spark, sf_dir)
-    edges = _copurchase_edges(t)
-    seeds = [
-        r[0]
-        for r in edges.select("src").distinct().orderBy("src").limit(2).collect()
-    ]
-    res = G.personalized_pagerank(edges, seeds, iters=3, weight_col="weight")
-    return (
-        res.select(
-            F.col("node").cast("long").alias("node"),
-            _round6(F.col("score"), "score"),
-        )
-        .orderBy(F.desc("score"), F.asc("node"))
-        .limit(50)
-    )
-
-
-def q_copurchase_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Co-purchase edge extraction: distinct→cap→pair ladder, canonical
-    src<dst, co-order weights."""
-    t = load_tables(spark, sf_dir)
-    res = _copurchase_edges(t)
-    return res.select("src", "dst", F.col("weight").cast("long").alias("weight"))
-
-
-def q_part_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Degree distribution of the co-purchase graph (power-law shape
-    report)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import graph as G
-
-    t = load_tables(spark, sf_dir)
-    res = G.degree_histogram(_copurchase_edges(t))
-    return res.select(
-        F.col("degree").cast("long").alias("degree"),
-        F.col("n_nodes").cast("long").alias("n_nodes"),
-    )
-
-
-def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global triangle count via the oriented wedge-close join."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import graph as G
-
-    t = load_tables(spark, sf_dir)
-    return G.triangle_count(_copurchase_edges(t))
-
-
-def q_part_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-iteration PageRank on the symmetrized co-purchase graph."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import graph as G
-
-    t = load_tables(spark, sf_dir)
-    res = G.pagerank(
-        _copurchase_edges(t), iters=PAGERANK_ITERS, damping=PAGERANK_DAMPING
-    )
-    return res.select("node", _round6(F.col("rank"), "rank"))
 
 
 def q_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4098,9 +3624,7 @@ FROM topn, t
 
 def q_sql_hot_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The hot-key skew report through the SQL front door: the SAME
-    portable ANSI text runs in Spark SQL and the DuckDB oracle —
-    front-door parity for a round-7 operator (the DataFrame twin is
-    `hot_keys`; both are checked against the same numbers)."""
+    portable ANSI text runs in Spark SQL and the DuckDB oracle."""
     from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.sources.catalog import (
         register_views,
     )
@@ -4693,153 +4217,6 @@ def q_collection_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
 _STREAM_QUERY_SEQ = [0]
 
 
@@ -5118,26 +4495,6 @@ def q_grep_corpus_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def q_hot_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shuffle-skew pre-flight: the 20 heaviest user_id keys in the
-    event log with share, cumulative share, and skew-vs-uniform — the
-    report that decides salting / AQE skew-join before a key lands in
-    a groupBy or join (operators/profiling.hot_keys)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        profiling,
-    )
-
-    t = load_tables(spark, sf_dir)
-    res = profiling.hot_keys(t["events"], "user_id", top=20)
-    return res.select(
-        "key",
-        F.col("n_rows").cast("long").alias("n_rows"),
-        _round6(F.col("share"), "share"),
-        _round6(F.col("cum_share"), "cum_share"),
-        _round6(F.col("skew"), "skew"),
-    )
-
-
 def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Oracle-checked entries beyond the driver's 50-slot window. Each
     is either a variant sharing a sibling's oracle (provably identical
@@ -5148,7 +4505,6 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         "normalized_vectors": q_normalized_vectors,
         "rp_topk": q_rp_topk,
-        "hot_keys": q_hot_keys,
         "grep_corpus": q_grep_corpus,
         "more_like_these": q_more_like_these,
         "weekday_anomaly": q_weekday_anomaly,
@@ -5157,15 +4513,11 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "negative_samples": q_negative_samples,
         "epoch_upsample": q_epoch_upsample,
         "domain_percentile": q_domain_percentile,
-        "part_components": q_part_components,
-        "part_pagerank_weighted": q_part_pagerank_weighted,
         "similar_series": q_similar_series,
         "sql_hot_keys": q_sql_hot_keys,
         "sql_topk_cosine": q_sql_topk_cosine,
         "sql_range_search": q_sql_range_search,
         "sql_knn_join": q_sql_knn_join,
-        "assoc_rules": q_assoc_rules,
-        "incremental_rollup": q_incremental_rollup,
         "pii_cards": q_pii_cards,
         "grep_corpus_indexed": q_grep_corpus_indexed,
         "grep_many": q_grep_many,
@@ -5264,10 +4616,6 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "product_profit": q_product_profit,
         "important_parts": q_important_parts,
         "late_ship_priority": q_late_ship_priority,
-        "copurchase_graph": q_copurchase_graph,
-        "part_degrees": q_part_degrees,
-        "triangle_count": q_triangle_count,
-        "part_pagerank": q_part_pagerank,
         "lexical_diversity": q_lexical_diversity,
         "zipf_slope": q_zipf_slope,
         "readability": q_readability,
@@ -5276,31 +4624,20 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sql_forecast_revenue": q_sql_forecast_revenue,
         "sql_priority_orders": q_sql_priority_orders,
         "kfold_assign": q_kfold_assign,
-        "value_lift": q_value_lift,
         "rfm_scores": q_rfm_scores,
         "dau_wau": q_dau_wau,
         "session_paths": q_session_paths,
         "fuzzy_titles": q_fuzzy_titles,
-        "segment_target_enc": q_segment_target_enc,
-        "price_psi": q_price_psi,
         "conversion_latency": q_conversion_latency,
-        "revenue_gini": q_revenue_gini,
-        "nation_supplier_hhi": q_nation_supplier_hhi,
         "script_mix": q_script_mix,
         "bigram_pmi": q_bigram_pmi,
         "event_transitions": q_event_transitions,
         "value_bars": q_value_bars,
-        "customer_diff": q_customer_diff,
-        "lineitem_correlations": q_lineitem_correlations,
         "monthly_growth": q_monthly_growth,
         "cohort_matrix": q_cohort_matrix,
-        "winsorized_price": q_winsorized_price,
-        "spend_deciles": q_spend_deciles,
         "decayed_engagement": q_decayed_engagement,
         "cdc_snapshot": q_cdc_snapshot,
-        "price_histogram": q_price_histogram,
         "rate_limited": q_rate_limited,
-        "orders_audit": q_orders_audit,
         "large_orders": q_large_orders,
         "idle_rich_customers": q_idle_rich_customers,
         "value_rank": q_value_rank,
@@ -5329,70 +4666,40 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "chunk_overlap": q_chunk_overlap,
         "ivf_knn_join": q_ivf_knn_join,
         "bm25_knn_join": q_bm25_knn_join,
-        "table_profile": q_table_profile,
         "shipping_volume": q_shipping_volume,
         "promo_share": q_promo_share,
-        "hll_distinct": q_hll_distinct,
-        "frequent_items": q_frequent_items,
         "salted_join": q_salted_join,
         "prefix_jaccard_pairs": q_prefix_jaccard_pairs,
-        "ivm_join_view": q_ivm_join_view,
         "zorder_stats": q_zorder_stats,
         "pareto_front": q_pareto_front,
-        "changelog_compact": q_changelog_compact,
         "metrics_long": q_metrics_long,
-        "hll_incremental": q_hll_incremental,
         "sql_grouping_sets": q_sql_grouping_sets,
         "seasonal_decompose": q_seasonal_decompose,
         "attribution_last_touch": q_attribution_last_touch,
         "mmr_topk": q_mmr_topk,
         "mmr_knn_join": q_mmr_knn_join,
         "kcenter_select": q_kcenter_select,
-        "robust_scale": q_robust_scale,
-        "quantile_sketch": q_quantile_sketch,
-        "quantile_estimate": q_quantile_estimate,
-        "quantile_incremental": q_quantile_incremental,
-        "part_communities": q_part_communities,
-        "quantile_grouped": q_quantile_grouped,
-        "part_distances": q_part_distances,
         "priority_sample": q_priority_sample,
-        "hll_grouped": q_hll_grouped,
-        "cm_frequencies": q_cm_frequencies,
-        "kmv_overlap": q_kmv_overlap,
-        "cm_join_size": q_cm_join_size,
-        "quantile_weighted": q_quantile_weighted,
-        "bloom_prune": q_bloom_prune,
-        "embedding_drift": q_embedding_drift,
         "cusum_changepoints": q_cusum_changepoints,
-        "vocab_divergence": q_vocab_divergence,
-        "part_ppr": q_part_ppr,
         "ivfpq_res_topk": q_ivfpq_res_topk,
         "recall_ivfpq_res": q_recall_ivfpq_res,
-        "hourly_value_p95": q_hourly_value_p95,
-        "value_p95_sliding": q_value_p95_sliding,
         "gap_filled_users": q_gap_filled_users,
         "ewma_daily": q_ewma_daily,
         "holt_forecast7": q_holt_forecast7,
-        "part_kcore": q_part_kcore,
         "mutual_knn": q_mutual_knn,
         "compaction_plan": q_compaction_plan,
         "containment_pairs": q_containment_pairs,
         "rolling_corr": q_rolling_corr,
         "lead_lag": q_lead_lag,
-        "rollup_answer": q_rollup_answer,
         "snm_pairs": q_snm_pairs,
         "sampled_groupby": q_sampled_groupby,
-        "sliding_distinct_users": q_sliding_distinct_users,
-        "fd_profile": q_fd_profile,
         "er_clusters": q_er_clusters,
         "burn_rate": q_burn_rate,
-        "hot_items_by_type": q_hot_items_by_type,
         "seasonality_strength": q_seasonality_strength,
         "acf_daily": q_acf_daily,
         "pacf_daily": q_pacf_daily,
         "dedup_recall": q_dedup_recall,
         "forecast_bands": q_forecast_bands,
-        "woe_iv": q_woe_iv,
         "events_session_native": q_events_session_native,
         "ar_forecast7": q_ar_forecast7,
     }
@@ -5413,61 +4720,8 @@ def oracle_sql() -> dict[str, str]:
 
 
 # ---------------------------------------------------------------------------
-# round 8: sketches, skew join, exact all-pairs, IVM join views, z-order
+# round 8: skew join, exact all-pairs, z-order
 # ---------------------------------------------------------------------------
-
-
-def q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Portable HyperLogLog distinct-count sketch over l_partkey —
-    registers built from the md5 60-bit hash are bit-identical in both
-    engines, so the whole sketch (not just its error band) hash-matches
-    the oracle (operators/sketches.hll_distinct). p=8 puts the ~2k-key
-    input in the bias-free raw regime where the estimate is pure IEEE
-    arithmetic."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        sketches as SK,
-    )
-
-    t = load_tables(spark, sf_dir)
-    res = SK.hll_distinct(t["lineitem"], "l_partkey", p=8)
-    return res.select(
-        F.col("p").cast("long").alias("p"),
-        F.col("m").cast("long").alias("m"),
-        F.col("nonzero"),
-        F.col("z_scaled"),
-        _round6(F.col("raw_estimate"), "raw_estimate"),
-        _round6(F.col("estimate"), "estimate"),
-        F.col("exact_distinct"),
-        _round6(F.col("rel_err"), "rel_err"),
-    )
-
-
-def q_frequent_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact heavy hitters (≥ N/k) by Misra-Gries collide-then-verify
-    over a deterministic Zipf-shaped key (3 hot values at ~17% each vs
-    ~5k cold tails — the synthetic skew the corpus lacks, built the
-    same way the PII entries build their inputs). The bounded partition
-    summaries propose a guaranteed superset; the exact verify makes the
-    output equal the oracle's plain GROUP BY/HAVING
-    (operators/sketches.frequent_items)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        sketches as SK,
-    )
-
-    t = load_tables(spark, sf_dir)
-    item = F.when(
-        F.pmod(F.col("event_id"), F.lit(2)) == 0,
-        F.concat(F.lit("hot_"), F.pmod(F.col("event_id"), F.lit(3)).cast("string")),
-    ).otherwise(
-        F.concat(F.lit("cold_"), F.pmod(F.col("event_id"), F.lit(5000)).cast("string"))
-    )
-    src = t["events"].select(item.alias("item"))
-    res = SK.frequent_items(src, "item", k=10)
-    return res.select(
-        "item",
-        F.col("n_rows"),
-        _round6(F.col("share"), "share"),
-    ).orderBy(F.desc("n_rows"), F.asc("item"))
 
 
 def q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5503,39 +4757,6 @@ def q_prefix_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res.select(
         "id_a", "id_b", _round6(F.col("jaccard"), "jaccard")
     ).orderBy("id_a", "id_b")
-
-
-def q_ivm_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental JOIN-view maintenance: revenue-per-segment over
-    orders⋈customer kept fresh under inserts to BOTH sides
-    (Δ(A⋈B) = ΔA⋈B₀ ∪ A₀⋈ΔB ∪ ΔA⋈ΔB, folded into the rollup) —
-    provably equal to the oracle's full re-join, at delta cost
-    (operators/incremental.incremental_join_agg). Splits are portable-
-    hash-deterministic (90/10 orders, 95/5 customers)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        incremental as INC,
-    )
-
-    t = load_tables(spark, sf_dir)
-    o, c = t["orders"], t["customer"]
-    oh = F.pmod(TX.portable_token_hash(F.col("o_orderkey").cast("string")), F.lit(10))
-    ch = F.pmod(TX.portable_token_hash(F.col("c_custkey").cast("string")), F.lit(20))
-    a_base, a_delta = o.filter(oh < 9), o.filter(oh >= 9)
-    b_base, b_delta = c.filter(ch < 19), c.filter(ch >= 19)
-    measures = {
-        "revenue": ("sum", "o_totalprice"),
-        "n_orders": ("count", "o_orderkey"),
-    }
-    cond = F.col("o_custkey") == F.col("c_custkey")
-    view0 = INC.partial_agg(a_base.join(b_base, cond), ["c_mktsegment"], measures)
-    res = INC.incremental_join_agg(
-        view0, a_base, a_delta, b_base, b_delta, cond, ["c_mktsegment"], measures
-    )
-    return res.select(
-        "c_mktsegment",
-        _round6(F.round("revenue", 2), "revenue"),
-        F.col("n_orders").cast("long").alias("n_orders"),
-    ).orderBy("c_mktsegment")
 
 
 def q_zorder_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5581,35 +4802,6 @@ def q_pareto_front(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("p_retailprice", "p_size")
 
 
-def q_changelog_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Changelog COMPACTION (no base snapshot — the log-only half of
-    CDC, complementing `cdc_snapshot`'s snapshot-merge): the event log
-    replayed per user, latest change wins by (ts_ns, event_id), 'error'
-    events are delete tombstones (operators/incremental.cdc_apply)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        incremental as INC,
-    )
-
-    t = load_tables(spark, sf_dir)
-    ch = t["events"].select(
-        "user_id",
-        "ts_ns",
-        "event_id",
-        "event_type",
-        "value",
-        F.when(F.col("event_type") == "error", F.lit("delete"))
-        .otherwise(F.lit("upsert"))
-        .alias("op"),
-    )
-    res = INC.cdc_apply(ch, ["user_id"], ["ts_ns", "event_id"])
-    return res.select(
-        F.col("user_id").cast("long").alias("user_id"),
-        F.col("event_id").cast("long").alias("event_id"),
-        "event_type",
-        _round6(F.col("value"), "value"),
-    ).orderBy("user_id")
-
-
 def q_metrics_long(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNPIVOT (wide→long melt via one stack Generate, no shuffle
     beyond the monthly rollup): per-month qty/revenue metrics as
@@ -5634,413 +4826,6 @@ def q_metrics_long(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("yr", "mon", "metric")
 
 
-def q_hll_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The HLL sketch maintained INCREMENTALLY: register updates from a
-    90/10 split folded through the generic rollup algebra (max-merge
-    per register) — provably bit-equal to the one-shot sketch, so it
-    shares hll_distinct's oracle (operators/sketches.
-    hll_register_updates + incremental.merge_rollup)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        incremental as INC,
-        sketches as SK,
-    )
-
-    t = load_tables(spark, sf_dir)
-    li = t["lineitem"]
-    split = F.pmod(TX.portable_token_hash(F.col("l_orderkey").cast("string")), F.lit(10))
-    hist, delta = li.filter(split < 9), li.filter(split >= 9)
-    measures = {"rho": ("max", "rho")}
-    r0 = INC.partial_agg(SK.hll_register_updates(hist, "l_partkey"), ["idx"], measures)
-    regs = INC.incremental_agg(
-        r0, SK.hll_register_updates(delta, "l_partkey"), ["idx"], measures
-    )
-    sk = SK.hll_estimate_from_registers(regs)
-    exact = li.agg(F.count_distinct("l_partkey").alias("exact_distinct"))
-    est = F.col("estimate")
-    return sk.crossJoin(F.broadcast(exact)).select(
-        F.col("p").cast("long").alias("p"),
-        F.col("m").cast("long").alias("m"),
-        F.col("nonzero").cast("long").alias("nonzero"),
-        F.col("z_scaled").cast("long").alias("z_scaled"),
-        _round6(F.col("raw_estimate"), "raw_estimate"),
-        _round6(est, "estimate"),
-        F.col("exact_distinct").cast("long").alias("exact_distinct"),
-        _round6(F.abs(est - F.col("exact_distinct")) / F.col("exact_distinct"), "rel_err"),
-    )
-
-
-def q_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Portable quantile-sketch STATE over l_extendedprice (m=7,
-    scale=100): a base-2 sub-bucketed histogram with integer-exact
-    bucket mapping (bit-length CASE chain — the hll_rho trick), so
-    every (bucket, count, lo, hi) row is bit-identical to the DuckDB
-    mirror running the same integer code. One map-side-combined
-    groupBy onto ≤ ~8k bucket keys — the shuffle carries the sketch,
-    never the rows (operators/sketches.qsketch)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        sketches as SK,
-    )
-
-    t = load_tables(spark, sf_dir)
-    res = SK.qsketch(t["lineitem"], "l_extendedprice", m=7, scale=100)
-    return res.select(
-        F.col("bucket").cast("long").alias("bucket"),
-        F.col("n_rows").cast("long").alias("n_rows"),
-        _round6(F.col("lo"), "lo"),
-        _round6(F.col("hi"), "hi"),
-    ).orderBy("bucket")
-
-
-def _quantile_report(li: DataFrame, buckets: DataFrame) -> DataFrame:
-    """Shared tail of the quantile entries: estimates from the sketch
-    state + the exact rank-r values for the error report. The exact
-    column is the full-sort evidence the sketch replaces (hll's
-    exact_distinct pattern) — test-scale only, not the scale path."""
-    from pyspark.sql import Window
-
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        sketches as SK,
-    )
-
-    qs = [0.25, 0.5, 0.75, 0.9, 0.99]
-    est = SK.qsketch_quantiles(buckets, qs, m=7, scale=100)
-    v = li.filter(F.col("l_extendedprice").isNotNull()).select(
-        F.floor(F.col("l_extendedprice").cast("double") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("__v")
-    )
-    sv = v.select("__v", F.row_number().over(Window.orderBy("__v")).alias("__rn"))
-    ex = (
-        est.select("q", "rank")
-        .join(sv, F.col("__rn") == F.col("rank"))
-        .select("q", (F.col("__v") / F.lit(100.0)).alias("__exact"))
-    )
-    e = F.col("estimate")
-    return (
-        est.join(ex, "q")
-        .select(
-            F.col("q").cast("double").alias("q"),
-            F.col("rank").cast("long").alias("rank"),
-            F.col("bucket").cast("long").alias("bucket"),
-            _round6(F.col("lo"), "lo"),
-            _round6(F.col("hi"), "hi"),
-            _round6(e, "estimate"),
-            _round6(F.col("__exact"), "exact"),
-            _round6(F.abs(e - F.col("__exact")) / F.abs(F.col("__exact")), "rel_err"),
-        )
-        .orderBy("q")
-    )
-
-
-def q_quantile_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quantiles read off the sketch state: the value at rank
-    max(1, ceil(q·N)) lies in the first bucket whose cumulative count
-    reaches the rank; the bucket's [lo, hi] brackets the TRUE quantile
-    and the midpoint estimates it to relative error ≤ 2^-8 — verified
-    against the exact rank value, both engines using the identical
-    integer rank rule (operators/sketches.qsketch_quantiles)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        sketches as SK,
-    )
-
-    t = load_tables(spark, sf_dir)
-    li = t["lineitem"]
-    sk = SK.qsketch(li, "l_extendedprice", m=7, scale=100)
-    return _quantile_report(li, sk.select("bucket", "n_rows"))
-
-
-def q_hll_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group portable HLL — distinct users per event type from
-    per-group register tables (groups × ≤256 rows shuffled, never key
-    sets), bit-identical in both engines
-    (operators/sketches.hll_grouped)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        sketches as SK,
-    )
-
-    t = load_tables(spark, sf_dir)
-    res = SK.hll_grouped(t["events"], ["event_type"], "user_id", p=8)
-    return res.select(
-        "event_type",
-        F.col("nonzero").cast("long").alias("nonzero"),
-        F.col("z_scaled").cast("long").alias("z_scaled"),
-        _round6(F.col("raw_estimate"), "raw_estimate"),
-        _round6(F.col("estimate"), "estimate"),
-    ).orderBy("event_type")
-
-
-def q_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding centroid drift per label between a 90/10 hash split
-    of the vectors standing in for two corpus snapshots — the
-    embedding-space sibling of the PSI drift check
-    (operators/profiling.centroid_drift)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        profiling as PRF,
-    )
-
-    t = load_tables(spark, sf_dir)
-    emb = t["embeddings"]
-    split = F.pmod(TX.portable_token_hash(F.col("vec_id").cast("string")), F.lit(10))
-    ref, cur = emb.filter(split < 9), emb.filter(split >= 9)
-    res = PRF.centroid_drift(ref, cur, "label")
-    return res.select(
-        F.col("label").cast("long").alias("label"),
-        F.col("n_ref").cast("long").alias("n_ref"),
-        F.col("n_cur").cast("long").alias("n_cur"),
-        _round6(F.col("cos_sim"), "cos_sim"),
-        _round6(F.col("drift"), "drift"),
-    ).orderBy("label")
-
-
-def q_vocab_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vocabulary drift between corpus snapshots: Jensen-Shannon
-    divergence over 1024 hashed token buckets (state bounded by the
-    bucket count, never the vocabulary) on a 90/10 doc_id hash split
-    (operators/profiling.vocab_divergence)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        profiling as PRF,
-    )
-
-    t = load_tables(spark, sf_dir)
-    docs = t["documents"]
-    split = F.pmod(TX.portable_token_hash(F.col("doc_id").cast("string")), F.lit(10))
-    res = PRF.vocab_divergence(docs.filter(split < 9), docs.filter(split >= 9))
-    return res.select(
-        F.col("n_ref_tokens").cast("long").alias("n_ref_tokens"),
-        F.col("n_cur_tokens").cast("long").alias("n_cur_tokens"),
-        _round6(F.col("js_divergence"), "js_divergence"),
-    )
-
-
-def q_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Portable Bloom semi-join pruning: a (word, bits) filter built
-    from BUILDING-segment customer keys (bit_or-folded salted md5
-    bits — Spark ships bloom_filter_agg only as an unregistered
-    internal, and its bits are engine-private) prunes orders before
-    any join; no false negatives, false positives at the designed
-    rate, both counts checked against the exact semi-join
-    (operators/sketches.bloom_build/bloom_prune)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        sketches as SK,
-    )
-
-    t = load_tables(spark, sf_dir)
-    dim = t["customer"].filter(F.col("c_mktsegment") == "BUILDING")
-    bloom = SK.bloom_build(dim, "c_custkey", n_bits=4096, n_hashes=5)
-    pruned = SK.bloom_prune(t["orders"], "o_custkey", bloom, n_bits=4096, n_hashes=5)
-    n_bloom = pruned.agg(F.count(F.lit(1)).alias("n_bloom"))
-    n_exact = (
-        t["orders"]
-        .join(dim.select(F.col("c_custkey").alias("o_custkey")), "o_custkey", "leftsemi")
-        .agg(F.count(F.lit(1)).alias("n_exact"))
-    )
-    return n_exact.crossJoin(F.broadcast(n_bloom)).select(
-        F.col("n_exact").cast("long").alias("n_exact"),
-        F.col("n_bloom").cast("long").alias("n_bloom"),
-        (F.col("n_bloom") - F.col("n_exact")).cast("long").alias("false_positives"),
-    )
-
-
-def q_quantile_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-MASS length percentiles: the document length below which
-    25/50/90% of corpus tokens live — each doc weighted by its own
-    token count, the mass-weighted question context budgeting actually
-    asks (operators/sketches.qsketch_weighted; ranks in token
-    units)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        sketches as SK,
-    )
-
-    t = load_tables(spark, sf_dir)
-    docs = t["documents"].select(TX.n_tokens(F.col("text")).alias("len_tokens"))
-    res = SK.qsketch_weighted(
-        docs, "len_tokens", "len_tokens", [0.25, 0.5, 0.9], m=7, scale=1
-    )
-    return res.select(
-        F.col("q").cast("double").alias("q"),
-        F.col("rank").cast("long").alias("rank"),
-        F.col("bucket").cast("long").alias("bucket"),
-        _round6(F.col("lo"), "lo"),
-        _round6(F.col("hi"), "hi"),
-        _round6(F.col("estimate"), "estimate"),
-    ).orderBy("q")
-
-
-def q_hourly_value_p95(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-hour p50/p95 of the event value from per-window sketch
-    states — the observability latency-percentile query at its scale
-    shape: one partial-agged groupBy onto (hour, bucket) keys, rank
-    scans windowed per hour over sketch-sized frames
-    (operators/sketches.qsketch_grouped keyed by the time window)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        sketches as SK,
-    )
-
-    t = load_tables(spark, sf_dir)
-    ev = t["events"].withColumn(
-        "hour", F.date_format(F.date_trunc("hour", F.col("ts")), "yyyy-MM-dd HH:00")
-    )
-    res = SK.qsketch_grouped(ev, ["hour"], "value", [0.5, 0.95], m=7, scale=100)
-    return res.select(
-        "hour",
-        F.col("q").cast("double").alias("q"),
-        F.col("rank").cast("long").alias("rank"),
-        F.col("bucket").cast("long").alias("bucket"),
-        _round6(F.col("lo"), "lo"),
-        _round6(F.col("hi"), "hi"),
-        _round6(F.col("estimate"), "estimate"),
-    ).orderBy("hour", "q")
-
-
-def q_value_p95_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trailing-6-hour p50/p95 of the event value, hourly — the SLIDING
-    percentile the per-hour entry can't answer (SLO dashboards want
-    "p95 over the last 6 h", not "p95 of this hour"): per-(epoch-hour ×
-    sketch-bucket) counts, a dense spine + RANGE-frame trailing sum per
-    sketch bucket, rank scans on sketch-sized frames
-    (operators/sketches.qsketch_sliding_quantiles — the
-    hll_sliding_distinct idea applied to the quantile trio; the count
-    table stream-maintains via the generic rollup, stream==batch
-    pytest)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        sketches as SK,
-    )
-
-    t = load_tables(spark, sf_dir)
-    ev = t["events"].withColumn(
-        "ehour", F.expr("unix_micros(ts) div 3600000000")
-    )
-    res = SK.qsketch_sliding_quantiles(
-        ev, "ehour", "value", [0.5, 0.95], trailing=6, m=7, scale=100
-    )
-    return res.select(
-        F.col("bucket_ts").cast("long").alias("ehour"),
-        F.col("q").cast("double").alias("q"),
-        F.col("rank").cast("long").alias("rank"),
-        F.col("bucket").cast("long").alias("bucket"),
-        _round6(F.col("lo"), "lo"),
-        _round6(F.col("hi"), "hi"),
-        _round6(F.col("estimate"), "estimate"),
-    ).orderBy("ehour", "q")
-
-
-def q_cm_join_size(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join-cardinality estimation from CM sketch inner products: the
-    events⋈events-on-user_id size (Σ n_u² — what a sessionization
-    self-join would produce) estimated from one ≤depth·width counter
-    frame, never touching the key set; exact value joined in as
-    evidence (operators/sketches.cm_join_size)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        sketches as SK,
-    )
-
-    t = load_tables(spark, sf_dir)
-    ev = t["events"]
-    sk = SK.cm_sketch(ev, "user_id", depth=4, width=8192)
-    est = SK.cm_join_size(sk, sk, depth=4)
-    exact = (
-        ev.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .agg(F.sum(F.col("__n") * F.col("__n")).alias("exact_size"))
-    )
-    return est.crossJoin(F.broadcast(exact)).select(
-        F.col("estimate").cast("long").alias("estimate"),
-        F.col("exact_size").cast("long").alias("exact_size"),
-        (F.col("estimate") - F.col("exact_size")).cast("long").alias("overshoot"),
-    )
-
-
-def q_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audience overlap from KMV sketches: distinct click-users vs
-    purchase-users intersection estimated from two k=64 bottom-hash
-    frames — never a key-set join; exact intersection joined in as the
-    error evidence (operators/sketches.kmv_overlap)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        sketches as SK,
-    )
-
-    t = load_tables(spark, sf_dir)
-    ev = t["events"]
-    clicks = ev.filter(F.col("event_type") == "click")
-    buys = ev.filter(F.col("event_type") == "purchase")
-    res = SK.kmv_overlap(clicks, buys, "user_id", k=64)
-    exact = (
-        clicks.select("user_id").intersect(buys.select("user_id"))
-        .agg(F.count(F.lit(1)).alias("exact_intersection"))
-    )
-    return res.crossJoin(F.broadcast(exact)).select(
-        F.col("n_a").cast("long").alias("n_a"),
-        F.col("n_b").cast("long").alias("n_b"),
-        _round6(F.col("est_a"), "est_a"),
-        _round6(F.col("est_b"), "est_b"),
-        F.col("n_union").cast("long").alias("n_union"),
-        _round6(F.col("est_union"), "est_union"),
-        F.col("rho").cast("long").alias("rho"),
-        _round6(F.col("est_intersection"), "est_intersection"),
-        F.col("exact_intersection").cast("long").alias("exact_intersection"),
-    )
-
-
-def q_cm_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-Min point frequencies for ten fixed part keys vs their
-    exact counts: the sketch shuffles ≤ depth·width counter rows (never
-    the key set), lookups are a broadcast join + per-key min, and the
-    CM guarantee — never an underestimate, over by ≤ e·N/width —
-    value-checks in-entry (operators/sketches.cm_sketch/cm_lookup)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        sketches as SK,
-    )
-
-    t = load_tables(spark, sf_dir)
-    li = t["lineitem"]
-    sk = SK.cm_sketch(li, "l_partkey", depth=4, width=8192)
-    keys = spark.range(1, 11).select(F.col("id").alias("l_partkey"))
-    est = SK.cm_lookup(sk, keys, "l_partkey", depth=4, width=8192)
-    exact = (
-        li.join(F.broadcast(keys), "l_partkey")
-        .groupBy("l_partkey")
-        .agg(F.count(F.lit(1)).alias("exact_n"))
-    )
-    return (
-        est.join(exact, "l_partkey", "left")
-        .select(
-            F.col("l_partkey").cast("long").alias("l_partkey"),
-            F.coalesce(F.col("exact_n"), F.lit(0)).cast("long").alias("exact_n"),
-            F.col("cm_estimate").cast("long").alias("cm_estimate"),
-            (F.col("cm_estimate") - F.coalesce(F.col("exact_n"), F.lit(0)))
-            .cast("long")
-            .alias("overshoot"),
-        )
-        .orderBy("l_partkey")
-    )
-
-
-def q_quantile_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group sketch quantiles — p50/p95/p99 of l_extendedprice per
-    return flag from per-group bucket states: every window partitions
-    by the group key, so group count scales freely and no stage ever
-    sees more than sketch-sized rows per group
-    (operators/sketches.qsketch_grouped)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        sketches as SK,
-    )
-
-    t = load_tables(spark, sf_dir)
-    res = SK.qsketch_grouped(
-        t["lineitem"], ["l_returnflag"], "l_extendedprice",
-        [0.5, 0.95, 0.99], m=7, scale=100,
-    )
-    return res.select(
-        "l_returnflag",
-        F.col("q").cast("double").alias("q"),
-        F.col("rank").cast("long").alias("rank"),
-        F.col("bucket").cast("long").alias("bucket"),
-        _round6(F.col("lo"), "lo"),
-        _round6(F.col("hi"), "hi"),
-        _round6(F.col("estimate"), "estimate"),
-    ).orderBy("l_returnflag", "q")
-
-
 def q_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted sampling without replacement by priority sampling
     (Duffield-Lund-Thorup): 50 docs weighted by token count, with the
@@ -6061,35 +4846,6 @@ def q_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         _round6(F.col("priority"), "priority"),
         _round6(F.col("est_weight"), "est_weight"),
     )
-
-
-def q_quantile_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The quantile sketch maintained INCREMENTALLY: bucket-count
-    updates from a 90/10 split folded through the generic rollup
-    algebra (sum-merge per bucket) — provably bucket-equal to the
-    one-shot sketch since per-bucket count sums are order-independent,
-    so it shares quantile_estimate's oracle (operators/sketches.
-    qsketch_updates + incremental.incremental_agg — the hll_incremental
-    pattern, completing the HLL/Misra-Gries/quantile trio)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        incremental as INC,
-        sketches as SK,
-    )
-
-    t = load_tables(spark, sf_dir)
-    li = t["lineitem"]
-    split = F.pmod(TX.portable_token_hash(F.col("l_orderkey").cast("string")), F.lit(10))
-    hist, delta = li.filter(split < 9), li.filter(split >= 9)
-    measures = {"cnt": ("sum", "cnt")}
-    r0 = INC.partial_agg(
-        SK.qsketch_updates(hist, "l_extendedprice", m=7, scale=100),
-        ["bucket"], measures,
-    )
-    buckets = INC.incremental_agg(
-        r0, SK.qsketch_updates(delta, "l_extendedprice", m=7, scale=100),
-        ["bucket"], measures,
-    )
-    return _quantile_report(li, buckets.select("bucket", F.col("cnt").alias("n_rows")))
 
 
 PORTABLE_SQL_GROUPING_SETS = """
@@ -6231,24 +4987,6 @@ def q_kcenter_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("rank")
 
 
-def q_robust_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Outlier-robust feature scaling: (x − median)/IQR per return
-    flag over lineitem prices — RobustScaler semantics on the exact
-    percentile/quantile_cont parity (operators/profiling.robust_scale)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        profiling as PF,
-    )
-
-    t = load_tables(spark, sf_dir)
-    res = PF.robust_scale(t["lineitem"], "l_extendedprice", group_col="l_returnflag")
-    return res.select(
-        F.col("l_orderkey").cast("long").alias("l_orderkey"),
-        F.col("l_linenumber").cast("long").alias("l_linenumber"),
-        "l_returnflag",
-        _round6(F.col("scaled"), "scaled"),
-    ).orderBy("l_orderkey", "l_linenumber")
-
-
 def q_gap_filled_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Calendar gap-fill + forward-fill of sparse per-user daily value
     series — the spine regularization every window/recurrence needs
@@ -6323,21 +5061,6 @@ def q_holt_forecast7(spark: SparkSession, sf_dir: str) -> DataFrame:
         _round6(F.col("level"), "level"),
         _round6(F.col("trend"), "trend"),
     ).orderBy("event_type", "h")
-
-
-def q_part_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """2-core of the co-purchase graph by 6 fixed synchronous peel
-    rounds (delete degree<2 nodes, cascade) — the dense backbone with
-    pendant chains and fringe stripped; deterministic by construction,
-    oracle = the identical peel rounds unrolled (operators/graph.kcore)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import graph as G
-
-    t = load_tables(spark, sf_dir)
-    res = G.kcore(_copurchase_edges(t), k=2, iters=6)
-    return res.select(
-        F.col("node").cast("long").alias("node"),
-        F.col("core_deg").cast("long").alias("core_deg"),
-    ).orderBy("node")
 
 
 def q_mutual_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6469,41 +5192,6 @@ def q_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("lag")
 
 
-def q_rollup_answer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialized-view routing: the per-type event report answered
-    from a (day, hour, type) maintained rollup's state — never the
-    event log — and hash-compared against the ORACLE'S DIRECT BASE-
-    TABLE GROUP BY, proving the lattice rewrite exact
-    (operators/incremental.answer_from_rollup; float sums settled to
-    cents on both sides, the incremental_rollup rule)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        incremental as INC,
-    )
-
-    t = load_tables(spark, sf_dir)
-    measures = {
-        "n_events": ("count", "event_id"),
-        "sum_value": ("sum", "value"),
-        "max_value": ("max", "value"),
-    }
-    keys = ["day", "hour", "event_type"]
-    base = t["events"].select(
-        F.to_date("ts").alias("day"),
-        F.hour("ts").alias("hour"),
-        "event_type",
-        "event_id",
-        "value",
-    )
-    rollup = INC.partial_agg(base, keys, measures)
-    res = INC.answer_from_rollup(rollup, keys, measures, ["event_type"])
-    return res.select(
-        "event_type",
-        F.col("n_events").cast("long").alias("n_events"),
-        _round6(F.round(F.col("sum_value"), 2), "sum_value"),
-        _round6(F.col("max_value"), "max_value"),
-    ).orderBy("event_type")
-
-
 def q_snm_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sorted-neighborhood record linkage over the typo'd-title corpus
     (the fuzzy_titles fixture): window-4 neighborhood on the global
@@ -6569,74 +5257,6 @@ def q_sampled_groupby(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_sliding_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hourly distinct users over a TRAILING 6-hour window from HLL
-    registers — mergeability exploited in a window (per-index register
-    max over a RANGE frame on the epoch-hour, dense spine so earlier-
-    hour registers reach later windows); exact trailing distinct
-    joined in as evidence via the contribute-forward explode
-    (operators/sketches.hll_sliding_distinct)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        sketches as SK,
-    )
-
-    t = load_tables(spark, sf_dir)
-    ev = t["events"].withColumn(
-        "bucket", F.floor(F.unix_timestamp("ts") / 3600).cast("long")
-    )
-    res = SK.hll_sliding_distinct(ev, "bucket", "user_id", trailing=6, p=8)
-    contrib = ev.select(
-        "user_id",
-        "bucket",
-        F.explode(F.sequence(F.lit(0), F.lit(5))).alias("__o"),
-    ).select("user_id", (F.col("bucket") + F.col("__o")).alias("bucket"))
-    exact = (
-        contrib.join(ev.select("bucket").distinct(), "bucket", "left_semi")
-        .groupBy("bucket")
-        .agg(F.count_distinct("user_id").alias("exact_distinct"))
-    )
-    return (
-        res.join(exact, "bucket")
-        .select(
-            F.col("bucket").cast("long").alias("bucket"),
-            F.col("nonzero").cast("long").alias("nonzero"),
-            F.col("z_scaled").cast("long").alias("z_scaled"),
-            _round6(F.col("estimate"), "estimate"),
-            F.col("exact_distinct").cast("long").alias("exact_distinct"),
-        )
-        .orderBy("bucket")
-    )
-
-
-def q_fd_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Functional-dependency profiling over orders: key FDs hold
-    (o_orderkey→o_custkey), attribute FDs fail with their g3 error
-    (min rows to remove to repair) — the schema-discovery report
-    (operators/profiling.fd_check)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        profiling as PF,
-    )
-
-    t = load_tables(spark, sf_dir)
-    res = PF.fd_check(
-        t["orders"],
-        [
-            ("o_orderkey", "o_custkey"),
-            ("o_custkey", "o_orderpriority"),
-            ("o_orderdate", "o_orderstatus"),
-        ],
-    )
-    return res.select(
-        "lhs",
-        "rhs",
-        "n_rows",
-        "n_groups",
-        "violating_groups",
-        "g3_rows",
-        "holds",
-    ).orderBy("lhs", "rhs")
-
-
 def q_er_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity resolution end-to-end BY COMPOSITION: prefix-blocked
     edit-distance match pairs (the fuzzy_titles fixture) fed into
@@ -6644,9 +5264,7 @@ def q_er_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs, with unmatched records as their own singleton cluster;
     cluster id = smallest member id. Oracle = the same pairs closed
     with a recursive CTE (operators/dedup.fuzzy_pairs +
-    operators/graph.connected_components)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import graph as G
-
+    operators/dedup.dedup_clusters)."""
     t = load_tables(spark, sf_dir)
     base = t["documents"].select(
         "doc_id", F.substring("text", 1, 12).alias("name")
@@ -6665,12 +5283,9 @@ def q_er_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     recs = base.unionByName(typo)
     pairs = D.fuzzy_pairs(recs, "name", max_dist=2, prefix_len=3)
-    edges = pairs.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    )
-    comp = G.connected_components(edges)
+    comp = D.dedup_clusters(pairs)
     out = recs.join(
-        comp.select(F.col("node").alias("doc_id"), "component"),
+        comp.select("doc_id", F.col("canonical_id").alias("component")),
         "doc_id",
         "left",
     )
@@ -6710,32 +5325,6 @@ def q_burn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         _round6(F.col("burn_long"), "burn_long"),
         "alert",
     ).orderBy("hour")
-
-
-def q_hot_items_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group exact heavy hitters: within each event type, items
-    with frequency ≥ N_group/8 (a planted hot item at ~1/3 share per
-    group over a long uniform tail) via per-group Misra-Gries
-    collide-then-verify — output equals the per-group GROUP BY/HAVING
-    oracle (operators/sketches.frequent_items_grouped)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        sketches as SK,
-    )
-
-    t = load_tables(spark, sf_dir)
-    ev = t["events"].select(
-        "event_type",
-        F.when(F.col("event_id") % 3 == 0, F.lit("hot"))
-        .otherwise(F.concat(F.lit("u"), (F.col("event_id") % 500)))
-        .alias("item"),
-    )
-    res = SK.frequent_items_grouped(ev, "event_type", "item", k=8)
-    return res.select(
-        F.col("group").alias("event_type"),
-        "item",
-        "n_rows",
-        _round6(F.col("share"), "share"),
-    ).orderBy("event_type", "item")
 
 
 def q_seasonality_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6923,36 +5512,6 @@ def q_forecast_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         _round6(F.col("forecast") + F.col("q10"), "lo"),
         _round6(F.col("forecast") + F.col("q90"), "hi"),
     ).orderBy("event_type", "h")
-
-
-def q_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weight-of-evidence + information value of the event type as a
-    purchase predictor — per-bin WOE (signed class separation) and IV
-    terms, Laplace-smoothed so empty-class bins stay finite
-    (operators/features.woe_iv)."""
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
-        features as FE,
-    )
-
-    t = load_tables(spark, sf_dir)
-    # event_type IS NOT NULL pinned on BOTH engines: the mirror's CASE-ELSE would count a NULL type as
-    # bad=1 while a NULL Spark label drops from both counts
-    ev = t["events"].filter(F.col("event_type").isNotNull()).select(
-        F.when(F.col("value") < 5, "lo")
-        .when(F.col("value") < 20, "mid")
-        .otherwise("hi")
-        .alias("band"),
-        (F.col("event_type") == "purchase").cast("int").alias("label"),
-    )
-    res = FE.woe_iv(ev, "band", "label", smooth=0.5)
-    return res.select(
-        F.col("bin").alias("band"),
-        "n",
-        "n_good",
-        "n_bad",
-        _round6(F.col("woe"), "woe"),
-        _round6(F.col("iv_term"), "iv_term"),
-    ).orderBy("band")
 
 
 def q_events_session_native(spark: SparkSession, sf_dir: str) -> DataFrame:

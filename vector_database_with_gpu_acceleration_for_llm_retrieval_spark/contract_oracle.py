@@ -91,7 +91,6 @@ from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.contract impo
     PPM_H,
     PQ_KSUB,
     PQ_M,
-    PROFILE_COLS,
     PQ_RERANK,
     PRICE_BANDS,
     RAG_DIM,
@@ -925,20 +924,6 @@ ORDER BY doc_id
 """
 
 
-def _oracle_hot_keys() -> str:
-    return f"""
-WITH c AS (SELECT CAST(user_id AS VARCHAR) AS key, count(*) AS n_rows
-           FROM events GROUP BY 1),
-t AS (SELECT sum(n_rows) AS tt, count(*) AS kk FROM c),
-topn AS (SELECT key, n_rows FROM c ORDER BY n_rows DESC, key ASC NULLS FIRST LIMIT 20)
-SELECT key, CAST(n_rows AS BIGINT) AS n_rows,
-       {_r6('n_rows / t.tt', 'share')},
-       {_r6('sum(n_rows) OVER (ORDER BY n_rows DESC, key ASC NULLS FIRST ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) / t.tt', 'cum_share')},
-       {_r6('n_rows * t.kk / t.tt', 'skew')}
-FROM topn, t
-"""
-
-
 def _oracle_rp_topk() -> str:
     return f"""
 WITH pe AS (SELECT vec_id, {_sq_rp_list()} AS rp FROM embeddings),
@@ -1041,9 +1026,9 @@ def _sq_graph_beam_ctes(
     """Graph-ANN serving mirror (operators/graph_ann.graph_beam_search
     with explicit entries): the exact deg-GRAPH_DEG cosine kNN graph
     (self excluded before ranking — same pair frame both engines),
-    then every fixed beam round unrolled as MATERIALIZED CTEs (the
-    part_pagerank/part_communities precedent — DuckDB inlines CTEs by
-    default and an un-pinned unrolled iteration goes combinatorial).
+    then every fixed beam round unrolled as MATERIALIZED CTEs (DuckDB
+    inlines CTEs by default and an un-pinned unrolled iteration goes
+    combinatorial).
     Per round, exactly the Spark dataflow: frontier = unexpanded beam
     rows, neighbor expansion via the edge equi-join (DISTINCT), the
     seen anti-join (NOT EXISTS), the sequential-double-fold cosine
@@ -2017,25 +2002,6 @@ a AS (SELECT ship_month, sum(promo) AS pr, sum(rev) AS tot FROM j GROUP BY 1)
 SELECT ship_month, round(pr, 6) + 0.0 AS promo_revenue, round(tot, 6) + 0.0 AS total_revenue,
        round(100.0 * pr / tot, 6) + 0.0 AS promo_share_pct
 FROM a
-"""
-
-def _oracle_table_profile() -> str:
-    aggs = ["count(*) AS n"]
-    sels = []
-    for i, c in enumerate(PROFILE_COLS):
-        aggs += [
-            f"count({c}) AS c{i}",
-            f"count(DISTINCT {c}) AS d{i}",
-            f"CAST(min({c}) AS VARCHAR) AS lo{i}",
-            f"CAST(max({c}) AS VARCHAR) AS hi{i}",
-        ]
-        sels.append(
-            f"SELECT '{c}' AS col_name, n - c{i} AS n_nulls, d{i} AS n_distinct,"
-            f" lo{i} AS min_str, hi{i} AS max_str FROM a"
-        )
-    return f"""
-WITH a AS (SELECT {', '.join(aggs)} FROM orders)
-{' UNION ALL '.join(sels)}
 """
 
 def _oracle_bm25_knn_join() -> str:
@@ -3454,25 +3420,6 @@ FROM i GROUP BY 1 ORDER BY 1
 """
 
 
-_ORACLE_ORDERS_AUDIT = """
-SELECT 'not_null(o_orderkey)' AS "constraint", 'not_null' AS kind,
-       CAST(count(*) FILTER (WHERE o_orderkey IS NULL) AS BIGINT) AS n_violations
-FROM orders
-UNION ALL
-SELECT 'check(totalprice_pos)', 'check',
-       CAST(count(*) FILTER (WHERE NOT coalesce(o_totalprice > 0, FALSE)) AS BIGINT)
-FROM orders
-UNION ALL
-SELECT 'unique(o_orderkey)', 'unique', CAST(coalesce(sum(n - 1), 0) AS BIGINT)
-FROM (SELECT count(*) AS n FROM orders GROUP BY o_orderkey HAVING count(*) > 1)
-UNION ALL
-SELECT 'fk(o_custkey)', 'fk', CAST(count(*) AS BIGINT)
-FROM orders o
-WHERE o_custkey IS NOT NULL
-  AND NOT EXISTS (SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey)
-"""
-
-
 _ORACLE_RATE_LIMITED = """
 WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us FROM events),
 w AS (SELECT *, ts_us - ts_us % 86400000000 AS win_start_us FROM e),
@@ -3503,19 +3450,6 @@ SELECT c_custkey, round(c_acctbal, 6) + 0.0, c_mktsegment FROM latest WHERE op <
 """
 
 
-_ORACLE_PRICE_HISTOGRAM = """
-WITH b AS (SELECT CAST(min(l_extendedprice) AS DOUBLE) AS lo,
-                  CAST(max(l_extendedprice) AS DOUBLE) AS hi FROM lineitem),
-x AS (SELECT CAST(least(floor((CAST(l_extendedprice AS DOUBLE) - lo) / ((hi - lo) / 20.0)), 19) AS INT) AS bin,
-             lo, hi
-      FROM lineitem, b WHERE l_extendedprice IS NOT NULL)
-SELECT bin, round(lo + bin * (hi - lo) / 20.0, 6) + 0.0 AS bin_lo,
-       round(lo + (bin + 1) * (hi - lo) / 20.0, 6) + 0.0 AS bin_hi,
-       CAST(count(*) AS BIGINT) AS n_rows
-FROM x GROUP BY bin, lo, hi ORDER BY bin
-"""
-
-
 _ORACLE_DECAYED_ENGAGEMENT = """
 WITH e AS (SELECT event_id, user_id, value, epoch_us(ts) AS us FROM events),
 m AS (SELECT *, min(us) OVER (PARTITION BY user_id) AS t0 FROM e),
@@ -3526,33 +3460,6 @@ SELECT event_id, user_id,
                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
              * pow(2.0, -rel), 6) + 0.0 AS decayed_sum
 FROM r
-"""
-
-
-_ORACLE_WINSORIZED_PRICE = """
-WITH b AS (SELECT CAST(l_extendedprice AS DOUBLE) AS x FROM lineitem
-           WHERE l_extendedprice IS NOT NULL),
-r AS (SELECT x, row_number() OVER (ORDER BY x ASC) AS rn, count(*) OVER () AS n FROM b),
-p AS (SELECT x, CASE WHEN n > 1 THEN (rn - 1) / CAST(n - 1 AS DOUBLE) ELSE 0.0 END AS pct FROM r),
-c AS (SELECT min(CASE WHEN pct >= 0.01 THEN x END) AS lo,
-             max(CASE WHEN pct <= 0.99 THEN x END) AS hi,
-             CAST(count(*) AS BIGINT) AS n
-      FROM p)
-SELECT c.n AS n_rows, round(c.lo, 6) + 0.0 AS lo_cut, round(c.hi, 6) + 0.0 AS hi_cut,
-       round(avg(least(greatest(p.x, c.lo), c.hi)), 6) + 0.0 AS winsorized_avg
-FROM p, c GROUP BY c.n, c.lo, c.hi
-"""
-
-
-_ORACLE_SPEND_DECILES = """
-WITH b AS (SELECT CAST(o_totalprice AS DOUBLE) AS x FROM orders
-           WHERE o_totalprice IS NOT NULL),
-r AS (SELECT x, row_number() OVER (ORDER BY x ASC) AS rn, count(*) OVER () AS n FROM b),
-p AS (SELECT x, CASE WHEN n > 1 THEN (rn - 1) / CAST(n - 1 AS DOUBLE) ELSE 0.0 END AS pct FROM r),
-x AS (SELECT CAST(least(floor(pct * 10), 9) AS INT) AS bin, x AS v FROM p)
-SELECT bin, CAST(count(*) AS BIGINT) AS n_rows,
-       round(min(v), 6) + 0.0 AS lo, round(max(v), 6) + 0.0 AS hi
-FROM x GROUP BY bin ORDER BY bin
 """
 
 
@@ -3577,36 +3484,6 @@ FROM a JOIN f USING (user_id) GROUP BY 1, 2 ORDER BY 1, 2
 """
 
 
-def _oracle_lineitem_correlations() -> str:
-    """Six pairwise Pearson correlations, generated from the pair list
-    (one template, no hand-expanded copies) with the same constant-
-    side NULL guard as operators.profiling.column_correlations."""
-    cols = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
-    pairs = [(a, b) for i, a in enumerate(cols) for b in cols[i + 1:]]
-    parts = []
-    for a, b in pairs:
-        both = f"({a} IS NOT NULL AND {b} IS NOT NULL)"
-        xa, xb = f"CAST({a} AS DOUBLE)", f"CAST({b} AS DOUBLE)"
-        parts.append(f"""SELECT col_a, col_b, n,
-       round(CASE WHEN va > 0 AND vb > 0 THEN cov / sqrt(va * vb) END, 6) + 0.0 AS corr
-FROM (SELECT '{a}' AS col_a, '{b}' AS col_b,
-             CAST(count(CASE WHEN {both} THEN 1 END) AS BIGINT) AS n,
-             sum(CASE WHEN {both} THEN {xa} * {xb} END)
-               - sum(CASE WHEN {both} THEN {xa} END)
-                 * sum(CASE WHEN {both} THEN {xb} END)
-                 / count(CASE WHEN {both} THEN 1 END) AS cov,
-             sum(CASE WHEN {both} THEN {xa} * {xa} END)
-               - sum(CASE WHEN {both} THEN {xa} END)
-                 * sum(CASE WHEN {both} THEN {xa} END)
-                 / count(CASE WHEN {both} THEN 1 END) AS va,
-             sum(CASE WHEN {both} THEN {xb} * {xb} END)
-               - sum(CASE WHEN {both} THEN {xb} END)
-                 * sum(CASE WHEN {both} THEN {xb} END)
-                 / count(CASE WHEN {both} THEN 1 END) AS vb
-      FROM lineitem)""")
-    return "\nUNION ALL\n".join(parts)
-
-
 _ORACLE_VALUE_BARS = """
 WITH e AS (SELECT event_id, value, epoch_us(ts) AS us FROM events),
 w AS (SELECT *, us - us % 3600000000 AS bar FROM e),
@@ -3621,39 +3498,6 @@ SELECT bar AS bar_start_us,
        CAST(count(*) AS BIGINT) AS n_events,
        round(sum(value), 6) + 0.0 AS volume
 FROM r GROUP BY bar
-"""
-
-
-_ORACLE_CUSTOMER_DIFF = """
-WITH old AS (SELECT c_custkey, c_name, c_acctbal, c_mktsegment FROM customer),
-new AS (
-  SELECT c_custkey,
-         c_name,
-         CASE WHEN c_custkey % 13 = 0 THEN c_acctbal + 100.0 ELSE c_acctbal END AS c_acctbal,
-         c_mktsegment
-  FROM old WHERE c_custkey % 97 <> 0
-  UNION ALL
-  SELECT c_custkey + 100000, c_name, c_acctbal, c_mktsegment
-  FROM old WHERE c_custkey % 101 = 0
-),
-j AS (SELECT o.c_custkey AS ok, n.c_custkey AS nk,
-             o.c_name AS on_, n.c_name AS nn,
-             o.c_acctbal AS oa, n.c_acctbal AS na,
-             o.c_mktsegment AS om, n.c_mktsegment AS nm
-      FROM old o FULL OUTER JOIN new n ON o.c_custkey = n.c_custkey)
-SELECT coalesce(ok, nk) AS c_custkey,
-       CASE WHEN ok IS NULL THEN 'added'
-            WHEN nk IS NULL THEN 'removed'
-            WHEN (on_ IS DISTINCT FROM nn) OR (oa IS DISTINCT FROM na)
-                 OR (om IS DISTINCT FROM nm) THEN 'changed'
-            ELSE 'unchanged' END AS status,
-       CASE WHEN ok IS NULL OR nk IS NULL THEN ''
-            ELSE concat_ws(',',
-                   CASE WHEN on_ IS DISTINCT FROM nn THEN 'c_name' END,
-                   CASE WHEN oa IS DISTINCT FROM na THEN 'c_acctbal' END,
-                   CASE WHEN om IS DISTINCT FROM nm THEN 'c_mktsegment' END)
-       END AS changed_cols
-FROM j
 """
 
 
@@ -3708,31 +3552,6 @@ FROM m
 """
 
 
-_ORACLE_REVENUE_GINI = """
-WITH b AS (SELECT CAST(o_totalprice AS DOUBLE) AS x FROM orders WHERE o_totalprice IS NOT NULL),
-r AS (SELECT x, row_number() OVER (ORDER BY x ASC) AS rank FROM b)
-SELECT CAST(count(*) AS BIGINT) AS n_rows,
-       round(sum(x), 6) + 0.0 AS total,
-       round(2.0 * sum(rank * x) / (count(*) * sum(x))
-             - (count(*) + 1.0) / count(*), 6) + 0.0 AS gini
-FROM r
-"""
-
-
-_ORACLE_NATION_SUPPLIER_HHI = """
-WITH j AS (SELECT n_name, l_suppkey,
-                  sum(l_extendedprice * (1 - l_discount)) AS v
-           FROM lineitem
-           JOIN supplier ON l_suppkey = s_suppkey
-           JOIN nation ON s_nationkey = n_nationkey
-           GROUP BY 1, 2),
-t AS (SELECT n_name, sum(v) AS tv FROM j GROUP BY 1)
-SELECT j.n_name, CAST(count(*) AS BIGINT) AS n_entities,
-       round(sum((j.v / t.tv) * (j.v / t.tv)), 6) + 0.0 AS hhi
-FROM j JOIN t USING (n_name) GROUP BY j.n_name
-"""
-
-
 _ORACLE_CONVERSION_LATENCY = """
 WITH e AS (SELECT event_id, user_id, event_type, epoch_us(ts) AS us FROM events),
 w AS (SELECT *, max(CASE WHEN event_type = 'view' THEN us END) OVER (
@@ -3742,46 +3561,6 @@ w AS (SELECT *, max(CASE WHEN event_type = 'view' THEN us END) OVER (
 SELECT event_id, user_id,
        round((us - lf) / 1000000.0, 6) + 0.0 AS latency_sec
 FROM w WHERE event_type = 'purchase'
-"""
-
-
-_ORACLE_SEGMENT_TARGET_ENC = """
-WITH g AS (SELECT sum(c_acctbal) / count(c_acctbal) AS mu FROM customer),
-pc AS (SELECT c_mktsegment, sum(c_acctbal) AS sy, count(c_acctbal) AS ny
-       FROM customer GROUP BY 1)
-SELECT c.c_custkey,
-       round((pc.sy - coalesce(c.c_acctbal, 0)
-              + 10.0 * g.mu)
-             / (pc.ny - CASE WHEN c.c_acctbal IS NOT NULL THEN 1 ELSE 0 END
-                + 10.0), 6) + 0.0 AS te
-FROM customer c JOIN pc USING (c_mktsegment) CROSS JOIN g
-"""
-
-
-_ORACLE_PRICE_PSI = """
-WITH refd AS (SELECT CAST(l_extendedprice AS DOUBLE) AS x FROM lineitem
-              WHERE l_shipdate < TIMESTAMP '1998-01-01' AND l_extendedprice IS NOT NULL),
-curd AS (SELECT CAST(l_extendedprice AS DOUBLE) AS x FROM lineitem
-         WHERE l_shipdate >= TIMESTAMP '1998-01-01' AND l_extendedprice IS NOT NULL),
-b AS (SELECT min(x) AS lo, max(x) AS hi FROM refd),
-rb AS (SELECT CASE WHEN hi > lo THEN CAST(greatest(least(floor((x - lo) / ((hi - lo) / 10.0)), 9), 0) AS INT) ELSE 0 END AS bin FROM refd, b),
-cb AS (SELECT CASE WHEN hi > lo THEN CAST(greatest(least(floor((x - lo) / ((hi - lo) / 10.0)), 9), 0) AS INT) ELSE 0 END AS bin FROM curd, b),
-rc AS (SELECT bin, count(*) AS nr FROM rb GROUP BY 1),
-cc AS (SELECT bin, count(*) AS nc FROM cb GROUP BY 1),
-rt AS (SELECT count(*) AS tr FROM refd),
-ct AS (SELECT count(*) AS tc FROM curd),
-bins AS (SELECT CAST(unnest(range(0, 10)) AS INT) AS bin),
-t AS (SELECT bins.bin,
-             coalesce(rc.nr, 0) / CAST(rt.tr AS DOUBLE) + 1e-6 AS p_ref,
-             coalesce(cc.nc, 0) / CAST(ct.tc AS DOUBLE) + 1e-6 AS p_cur
-      FROM bins LEFT JOIN rc USING (bin) LEFT JOIN cc USING (bin)
-      CROSS JOIN rt CROSS JOIN ct),
-w AS (SELECT bin, p_ref, p_cur, (p_cur - p_ref) * ln(p_cur / p_ref) AS psi_term FROM t)
-SELECT bin, round(p_ref, 6) + 0.0 AS p_ref, round(p_cur, 6) + 0.0 AS p_cur,
-       round(psi_term, 6) + 0.0 AS psi_term
-FROM w
-UNION ALL
-SELECT -1, NULL, NULL, round((SELECT sum(psi_term) FROM w), 6) + 0.0
 """
 
 
@@ -3849,25 +3628,6 @@ SELECT o_custkey, CAST(rec_days AS INT) AS rec_days, CAST(freq AS BIGINT) AS fre
        CAST(least(floor(pf * 5), 4) + 1 AS INT) AS f_score,
        CAST(least(floor(pm * 5), 4) + 1 AS INT) AS m_score
 FROM s
-"""
-
-
-_ORACLE_VALUE_LIFT = """
-WITH b AS (SELECT event_id, value AS s,
-                  CAST(event_type = 'purchase' AS DOUBLE) AS y
-           FROM events WHERE event_type IS NOT NULL),
-r AS (SELECT *, row_number() OVER (ORDER BY s DESC, event_id ASC) AS rn,
-             count(*) OVER () AS n FROM b),
-p AS (SELECT y, CASE WHEN n > 1 THEN (rn - 1) / CAST(n - 1 AS DOUBLE) ELSE 0.0 END AS pct FROM r),
-x AS (SELECT CAST(least(floor(pct * 10), 9) AS INT) AS bin, y FROM p),
-pb AS (SELECT bin, count(*) AS n_rows, sum(y) AS sy FROM x GROUP BY 1),
-t AS (SELECT sum(n_rows) AS tn, sum(sy) AS ty FROM pb)
-SELECT bin, CAST(n_rows AS BIGINT) AS n_rows,
-       round(sy / n_rows, 6) + 0.0 AS avg_label,
-       round((sy / n_rows) / (t.ty / t.tn), 6) + 0.0 AS lift,
-       round(sum(sy) OVER (ORDER BY bin ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-             / t.ty, 6) + 0.0 AS cum_capture
-FROM pb, t ORDER BY bin
 """
 
 
@@ -4039,170 +3799,6 @@ SELECT o_orderpriority,
                 THEN 1 ELSE 0 END) AS BIGINT) AS n_late_urgent,
        round(sum(CASE WHEN late THEN 1.0 ELSE 0.0 END) / count(*), 6) + 0.0 AS late_share
 FROM j GROUP BY 1 ORDER BY 1
-"""
-
-
-
-_ORACLE_COPURCHASE_GRAPH = """
-WITH oi AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS item
-            FROM lineitem WHERE l_partkey IS NOT NULL),
-capped AS (SELECT o, item FROM
-             (SELECT o, item, row_number() OVER (PARTITION BY o ORDER BY item) AS rn
-              FROM oi) WHERE rn <= 20),
-e AS (SELECT a.item AS src, b.item AS dst, count(*) AS weight
-      FROM capped a JOIN capped b ON a.o = b.o AND a.item < b.item
-      GROUP BY 1, 2 HAVING count(*) >= 2)
-SELECT src, dst, CAST(weight AS BIGINT) AS weight FROM e
-"""
-
-
-_ORACLE_INCREMENTAL_ROLLUP = """
-SELECT o_orderpriority,
-       CAST(count(*) AS BIGINT) AS n_orders,
-       round(round(sum(o_totalprice), 2), 6) + 0.0 AS total_price,
-       round(min(o_totalprice), 6) + 0.0 AS min_price,
-       round(max(o_totalprice), 6) + 0.0 AS max_price
-FROM orders GROUP BY 1
-"""
-
-
-_ORACLE_ASSOC_RULES = """
-WITH oi AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS item
-            FROM lineitem WHERE l_partkey IS NOT NULL),
-capped AS (SELECT o, item FROM
-             (SELECT o, item, row_number() OVER (PARTITION BY o ORDER BY item) AS rn
-              FROM oi) WHERE rn <= 20),
-p AS (SELECT a.item AS src, b.item AS dst, count(*) AS n_co
-      FROM capped a JOIN capped b ON a.o = b.o AND a.item < b.item
-      GROUP BY 1, 2 HAVING count(*) >= 2),
-d AS (SELECT src, dst, n_co FROM p
-      UNION ALL SELECT dst AS src, src AS dst, n_co FROM p),
-i AS (SELECT item, count(*) AS n FROM capped GROUP BY 1),
-t AS (SELECT count(DISTINCT o) AS N FROM capped)
-SELECT d.src, d.dst, CAST(d.n_co AS BIGINT) AS n_co,
-       round(d.n_co / t.N, 6) + 0.0 AS support,
-       round(d.n_co / s.n, 6) + 0.0 AS confidence,
-       round((d.n_co / s.n) * t.N / e.n, 6) + 0.0 AS lift
-FROM d JOIN i s ON d.src = s.item JOIN i e ON d.dst = e.item, t
-"""
-
-
-_ORACLE_PART_PAGERANK_WEIGHTED = """
-WITH oi AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS item
-            FROM lineitem WHERE l_partkey IS NOT NULL),
-capped AS (SELECT o, item FROM
-             (SELECT o, item, row_number() OVER (PARTITION BY o ORDER BY item) AS rn
-              FROM oi) WHERE rn <= 20),
-e AS (SELECT a.item AS src, b.item AS dst, count(*) AS weight
-      FROM capped a JOIN capped b ON a.o = b.o AND a.item < b.item
-      GROUP BY 1, 2 HAVING count(*) >= 2),
-em AS (SELECT src, dst, CAST(weight AS DOUBLE) AS w FROM e
-       UNION ALL SELECT dst AS src, src AS dst, CAST(weight AS DOUBLE) AS w FROM e),
-deg AS (SELECT src, sum(w) AS dg FROM em GROUP BY 1),
-nn AS (SELECT count(*) AS n FROM deg),
-r0 AS (SELECT src AS node, 1.0 / nn.n AS r FROM deg CROSS JOIN nn),
-c1 AS (SELECT em.dst AS node, sum(r0.r * em.w / deg.dg) AS s
-        FROM r0 JOIN em ON r0.node = em.src
-        JOIN deg ON em.src = deg.src GROUP BY 1),
-r1 AS (SELECT deg.src AS node,
-               (1 - 0.85) / nn.n + 0.85 * coalesce(c1.s, 0.0) AS r
-        FROM deg CROSS JOIN nn LEFT JOIN c1 ON deg.src = c1.node),
-c2 AS (SELECT em.dst AS node, sum(r1.r * em.w / deg.dg) AS s
-        FROM r1 JOIN em ON r1.node = em.src
-        JOIN deg ON em.src = deg.src GROUP BY 1),
-r2 AS (SELECT deg.src AS node,
-               (1 - 0.85) / nn.n + 0.85 * coalesce(c2.s, 0.0) AS r
-        FROM deg CROSS JOIN nn LEFT JOIN c2 ON deg.src = c2.node),
-c3 AS (SELECT em.dst AS node, sum(r2.r * em.w / deg.dg) AS s
-        FROM r2 JOIN em ON r2.node = em.src
-        JOIN deg ON em.src = deg.src GROUP BY 1),
-r3 AS (SELECT deg.src AS node,
-               (1 - 0.85) / nn.n + 0.85 * coalesce(c3.s, 0.0) AS r
-        FROM deg CROSS JOIN nn LEFT JOIN c3 ON deg.src = c3.node)
-SELECT node, round(r, 6) + 0.0 AS rank FROM r3
-"""
-
-
-_ORACLE_PART_COMPONENTS = """
-WITH RECURSIVE oi AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS item
-            FROM lineitem WHERE l_partkey IS NOT NULL),
-capped AS (SELECT o, item FROM
-             (SELECT o, item, row_number() OVER (PARTITION BY o ORDER BY item) AS rn
-              FROM oi) WHERE rn <= 20),
-e AS (SELECT a.item AS src, b.item AS dst, count(*) AS weight
-      FROM capped a JOIN capped b ON a.o = b.o AND a.item < b.item
-      GROUP BY 1, 2 HAVING count(*) >= 2),
-edges AS (SELECT src AS s, dst AS d FROM e UNION SELECT dst, src FROM e),
-reach (s, d) AS (SELECT s, d FROM edges
-                 UNION SELECT r.s, x.d FROM reach r JOIN edges x ON r.d = x.s)
-SELECT s AS node, least(min(d), s) AS component FROM reach GROUP BY s
-"""
-
-
-_ORACLE_PART_DEGREES = """
-WITH oi AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS item
-            FROM lineitem WHERE l_partkey IS NOT NULL),
-capped AS (SELECT o, item FROM
-             (SELECT o, item, row_number() OVER (PARTITION BY o ORDER BY item) AS rn
-              FROM oi) WHERE rn <= 20),
-e AS (SELECT a.item AS src, b.item AS dst, count(*) AS weight
-      FROM capped a JOIN capped b ON a.o = b.o AND a.item < b.item
-      GROUP BY 1, 2 HAVING count(*) >= 2),
-deg AS (SELECT node, count(*) AS degree FROM
-          (SELECT src AS node FROM e UNION ALL SELECT dst AS node FROM e)
-        GROUP BY 1)
-SELECT CAST(degree AS BIGINT) AS degree, CAST(count(*) AS BIGINT) AS n_nodes
-FROM deg GROUP BY 1 ORDER BY 1
-"""
-
-
-_ORACLE_TRIANGLE_COUNT = """
-WITH oi AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS item
-            FROM lineitem WHERE l_partkey IS NOT NULL),
-capped AS (SELECT o, item FROM
-             (SELECT o, item, row_number() OVER (PARTITION BY o ORDER BY item) AS rn
-              FROM oi) WHERE rn <= 20),
-e AS (SELECT a.item AS src, b.item AS dst, count(*) AS weight
-      FROM capped a JOIN capped b ON a.o = b.o AND a.item < b.item
-      GROUP BY 1, 2 HAVING count(*) >= 2)
-SELECT CAST(count(*) AS BIGINT) AS n_triangles
-FROM e ab JOIN e bc ON ab.dst = bc.src
-JOIN e ac ON ac.src = ab.src AND ac.dst = bc.dst
-"""
-
-
-_ORACLE_PART_PAGERANK = """
-WITH oi AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS item
-            FROM lineitem WHERE l_partkey IS NOT NULL),
-capped AS (SELECT o, item FROM
-             (SELECT o, item, row_number() OVER (PARTITION BY o ORDER BY item) AS rn
-              FROM oi) WHERE rn <= 20),
-e AS (SELECT a.item AS src, b.item AS dst, count(*) AS weight
-      FROM capped a JOIN capped b ON a.o = b.o AND a.item < b.item
-      GROUP BY 1, 2 HAVING count(*) >= 2),
-em AS (SELECT src, dst FROM e UNION ALL SELECT dst AS src, src AS dst FROM e),
-deg AS (SELECT src, count(*) AS dg FROM em GROUP BY 1),
-nn AS (SELECT count(*) AS n FROM deg),
-r0 AS (SELECT src AS node, 1.0 / nn.n AS r FROM deg CROSS JOIN nn),
-c1 AS (SELECT em.dst AS node, sum(r0.r / deg.dg) AS s
-        FROM r0 JOIN em ON r0.node = em.src
-        JOIN deg ON em.src = deg.src GROUP BY 1),
-r1 AS (SELECT deg.src AS node,
-               (1 - 0.85) / nn.n + 0.85 * coalesce(c1.s, 0.0) AS r
-        FROM deg CROSS JOIN nn LEFT JOIN c1 ON deg.src = c1.node),
-c2 AS (SELECT em.dst AS node, sum(r1.r / deg.dg) AS s
-        FROM r1 JOIN em ON r1.node = em.src
-        JOIN deg ON em.src = deg.src GROUP BY 1),
-r2 AS (SELECT deg.src AS node,
-               (1 - 0.85) / nn.n + 0.85 * coalesce(c2.s, 0.0) AS r
-        FROM deg CROSS JOIN nn LEFT JOIN c2 ON deg.src = c2.node),
-c3 AS (SELECT em.dst AS node, sum(r2.r / deg.dg) AS s
-        FROM r2 JOIN em ON r2.node = em.src
-        JOIN deg ON em.src = deg.src GROUP BY 1),
-r3 AS (SELECT deg.src AS node,
-               (1 - 0.85) / nn.n + 0.85 * coalesce(c3.s, 0.0) AS r
-        FROM deg CROSS JOIN nn LEFT JOIN c3 ON deg.src = c3.node)
-SELECT node, round(r, 6) + 0.0 AS rank FROM r3
 """
 
 
@@ -4566,59 +4162,8 @@ QUALIFY session_id <> max(session_id) OVER (PARTITION BY user_id)
 
 
 # ---------------------------------------------------------------------------
-# round 8: sketches, skew join, exact all-pairs, IVM join views, z-order
+# round 8: skew join, exact all-pairs, z-order
 # ---------------------------------------------------------------------------
-
-
-def _oracle_hll_distinct() -> str:
-    """Bit-identical classic-HLL mirror (operators/sketches.hll_distinct,
-    p=8): same md5 60-bit hash, same exact CASE-chain rho, same integer
-    register sum; the only floats are one IEEE division (deterministic)
-    and the small-range ln (equal to well past 6 dp)."""
-    pr, m, w = 8, 256, 52
-    mask = (1 << w) - 1
-    branches = f"WHEN rest = 0 THEN {w + 1} " + " ".join(
-        f"WHEN rest >= {1 << (b - 1)} THEN {w + 1 - b}" for b in range(w, 0, -1)
-    )
-    num = 0.7213 / (1.0 + 1.079 / m) * m * m
-    two_w1 = float(1 << (w + 1))
-    raw = f"CAST({num!r} AS DOUBLE) * CAST({two_w1!r} AS DOUBLE) / z_scaled"
-    return f"""
-WITH h AS (SELECT {_sq_tok_hash("CAST(l_partkey AS VARCHAR)")} AS h FROM lineitem),
-b AS (SELECT h >> {w} AS idx, h & {mask} AS rest FROM h),
-r AS (SELECT idx, max(CASE {branches} END) AS rho FROM b GROUP BY idx),
-s AS (SELECT count(*) AS nonzero, sum(CAST(power(2, {w + 1} - rho) AS BIGINT)) AS zf FROM r),
-k AS (SELECT nonzero, zf + ({m} - nonzero) * {1 << (w + 1)} AS z_scaled FROM s),
-e AS (SELECT nonzero, z_scaled, {raw} AS raw,
-             CASE WHEN ({raw}) <= CAST({2.5 * m!r} AS DOUBLE) AND ({m} - nonzero) > 0
-                  THEN CAST({float(m)!r} AS DOUBLE) * ln(CAST({float(m)!r} AS DOUBLE) / ({m} - nonzero))
-                  ELSE {raw} END AS est
-      FROM k),
-x AS (SELECT count(DISTINCT l_partkey) AS exact_distinct FROM lineitem)
-SELECT CAST({pr} AS BIGINT) AS p, CAST({m} AS BIGINT) AS m,
-       CAST(nonzero AS BIGINT) AS nonzero, CAST(z_scaled AS BIGINT) AS z_scaled,
-       {_r6('raw', 'raw_estimate')}, {_r6('est', 'estimate')},
-       CAST(exact_distinct AS BIGINT) AS exact_distinct,
-       {_r6('abs(est - exact_distinct) / exact_distinct', 'rel_err')}
-FROM e, x
-"""
-
-
-def _oracle_frequent_items() -> str:
-    """Plain GROUP BY/HAVING ≥ N/k over the deterministic Zipf key —
-    legitimate because frequent_items' exact verify makes its OUTPUT
-    exact (the Misra-Gries summaries only bound the candidate set)."""
-    return f"""
-WITH s AS (SELECT CASE WHEN event_id % 2 = 0
-                       THEN concat('hot_', CAST(event_id % 3 AS VARCHAR))
-                       ELSE concat('cold_', CAST(event_id % 5000 AS VARCHAR)) END AS item
-           FROM events),
-c AS (SELECT item, count(*) AS n_rows FROM s GROUP BY 1),
-t AS (SELECT sum(n_rows) AS n FROM c)
-SELECT item, CAST(n_rows AS BIGINT) AS n_rows, {_r6('n_rows / t.n', 'share')}
-FROM c, t WHERE n_rows * 10 >= t.n
-ORDER BY n_rows DESC, item ASC
-"""
 
 
 _ORACLE_SALTED_JOIN = f"""
@@ -4645,14 +4190,6 @@ SELECT ia AS id_a, ib AS id_b, {_r6('o / (na.n + nb.n - o)', 'jaccard')}
 FROM i JOIN sz na ON na.doc_id = i.ia JOIN sz nb ON nb.doc_id = i.ib
 WHERE o / (na.n + nb.n - o) >= 0.7
 ORDER BY id_a, id_b
-"""
-
-
-_ORACLE_IVM_JOIN_VIEW = f"""
-SELECT c_mktsegment, {_r6('round(sum(o_totalprice), 2)', 'revenue')},
-       CAST(count(o_orderkey) AS BIGINT) AS n_orders
-FROM orders JOIN customer ON o_custkey = c_custkey
-GROUP BY c_mktsegment ORDER BY c_mktsegment
 """
 
 
@@ -4687,18 +4224,6 @@ WHERE NOT EXISTS (SELECT 1 FROM d b
                   WHERE b.price <= a.price AND b.size >= a.size
                     AND (b.price < a.price OR b.size > a.size))
 ORDER BY p_retailprice, p_size
-"""
-
-
-_ORACLE_CHANGELOG_COMPACT = f"""
-WITH r AS (SELECT user_id, event_id, event_type, value,
-                  row_number() OVER (PARTITION BY user_id
-                                     ORDER BY ts DESC, event_id DESC) AS rn
-           FROM events)
-SELECT CAST(user_id AS BIGINT) AS user_id, CAST(event_id AS BIGINT) AS event_id,
-       event_type, {_r6('value', 'value')}
-FROM r WHERE rn = 1 AND event_type <> 'error'
-ORDER BY user_id
 """
 
 
@@ -4886,203 +4411,9 @@ FROM ({union}) ORDER BY rank
 
 
 
-_ORACLE_ROBUST_SCALE = f"""
-WITH st AS (SELECT l_returnflag AS g,
-                   quantile_cont(l_extendedprice, 0.25) AS q1,
-                   quantile_cont(l_extendedprice, 0.5) AS med,
-                   quantile_cont(l_extendedprice, 0.75) AS q3
-            FROM lineitem GROUP BY 1)
-SELECT CAST(l_orderkey AS BIGINT) AS l_orderkey,
-       CAST(l_linenumber AS BIGINT) AS l_linenumber, l_returnflag,
-       {_r6('(l_extendedprice - med) / nullif(q3 - q1, 0)', 'scaled')}
-FROM lineitem JOIN st ON l_returnflag = st.g
-ORDER BY l_orderkey, l_linenumber
-"""
-
-
 # ---------------------------------------------------------------------------
-# round 9: portable quantile sketch (the third of the sketch trio)
+# round 9: priority sampling, change points, AR forecast
 # ---------------------------------------------------------------------------
-
-
-def _sq_qbucket(v: str, m: int = 7) -> str:
-    """Integer-exact quantile-sketch bucket id of BIGINT expr ``v`` —
-    the SQL mirror of operators/sketches.qsketch_bucket: bit-length
-    CASE chain (no float log), shift-based sub-bucket, sign-mirrored,
-    monotone in ``v``."""
-    blen = "CASE WHEN u >= 4611686018427387904 THEN 62 " + " ".join(
-        f"WHEN u >= {1 << b} THEN {b}" for b in range(61, 0, -1)
-    ) + " ELSE 0 END"
-    tm = 1 << m
-    return f"""
-(SELECT CASE WHEN vv = 0 THEN 0
-        ELSE (CASE WHEN vv > 0 THEN 1 ELSE -1 END)
-             * ((e * {tm})
-                + (CASE WHEN e >= {m} THEN (u >> (e - {m}))
-                        ELSE (u << ({m} - e)) END - {tm}) + 1) END
- FROM (SELECT ({v}) AS vv, abs({v}) AS u) q0,
-      LATERAL (SELECT {blen} AS e) q1)"""
-
-
-def _sq_qbounds(m: int = 7, scale: int = 100) -> str:
-    """SQL fragment decoding ``bucket`` → ``lo_i``/``hi_i`` integer
-    bounds (use inside a FROM over a frame with a ``bucket`` column)."""
-    tm = 1 << m
-    return f"""
-      LATERAL (SELECT abs(bucket) - 1 AS c) d0,
-      LATERAL (SELECT c >> {m} AS e, (c & {tm - 1}) + {tm} AS base) d1,
-      LATERAL (SELECT CASE WHEN e >= {m} THEN base << (e - {m})
-                           ELSE base >> ({m} - e) END AS lo_pos,
-                      CASE WHEN e >= {m}
-                           THEN (base << (e - {m})) + (1 << (e - {m})) - 1
-                           ELSE base >> ({m} - e) END AS hi_pos) d2,
-      LATERAL (SELECT CASE WHEN bucket = 0 THEN 0
-                           WHEN bucket > 0 THEN lo_pos ELSE -hi_pos END AS lo_i,
-                      CASE WHEN bucket = 0 THEN 0
-                           WHEN bucket > 0 THEN hi_pos ELSE -lo_pos END AS hi_i) d3"""
-
-
-def _oracle_quantile_sketch() -> str:
-    """Bit-identical quantile-sketch state mirror (operators/sketches.
-    qsketch over l_extendedprice, m=7, scale=100): same
-    floor(x·100 + 0.5) fixed-point step, same bit-length CASE chain,
-    same shift sub-bucket — every (bucket, count) row must hash-match."""
-    return f"""
-WITH v AS (SELECT CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS v
-           FROM lineitem WHERE l_extendedprice IS NOT NULL),
-b AS (SELECT {_sq_qbucket('v')} AS bucket FROM v),
-c AS (SELECT bucket, count(*) AS n_rows FROM b GROUP BY bucket)
-SELECT CAST(bucket AS BIGINT) AS bucket, CAST(n_rows AS BIGINT) AS n_rows,
-       {_r6('lo_i / 100.0', 'lo')}, {_r6('hi_i / 100.0', 'hi')}
-FROM c, {_sq_qbounds()}
-ORDER BY bucket
-"""
-
-
-def _oracle_quantile_estimate() -> str:
-    """Quantile estimates read off the sketch state + the exact
-    rank-r values for the error report — the same lower-empirical-rank
-    rule (r = max(1, ceil(q·N))) on both sides, so bucket picks and
-    estimates match exactly, and rel_err ≤ 2^-(m+1) is VERIFIED, not
-    assumed."""
-    return f"""
-WITH v AS (SELECT CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS v
-           FROM lineitem WHERE l_extendedprice IS NOT NULL),
-b AS (SELECT {_sq_qbucket('v')} AS bucket FROM v),
-c AS (SELECT bucket, count(*) AS n_rows FROM b GROUP BY bucket),
-tot AS (SELECT sum(n_rows) AS n FROM c),
-cum AS (SELECT bucket, sum(n_rows) OVER (ORDER BY bucket) AS cum FROM c),
-qs AS (SELECT CAST(x AS DOUBLE) AS q
-       FROM (VALUES (0.25), (0.5), (0.75), (0.9), (0.99)) t(x)),
-rk AS (SELECT q, greatest(1, CAST(ceil(q * n) AS BIGINT)) AS rnk FROM qs, tot),
-pick AS (SELECT q, rnk, min(bucket) AS bucket
-         FROM rk JOIN cum ON cum.cum >= rk.rnk GROUP BY q, rnk),
-sv AS (SELECT v, row_number() OVER (ORDER BY v) AS rn FROM v),
-ex AS (SELECT rk.q AS q, sv.v / 100.0 AS exact FROM rk JOIN sv ON sv.rn = rk.rnk)
-SELECT pick.q AS q, CAST(rnk AS BIGINT) AS rank, CAST(bucket AS BIGINT) AS bucket,
-       {_r6('lo_i / 100.0', 'lo')}, {_r6('hi_i / 100.0', 'hi')},
-       {_r6('(lo_i / 100.0 + hi_i / 100.0) / 2.0', 'estimate')},
-       {_r6('exact', 'exact')},
-       {_r6('abs((lo_i / 100.0 + hi_i / 100.0) / 2.0 - exact) / abs(exact)', 'rel_err')}
-FROM pick JOIN ex ON pick.q = ex.q, {_sq_qbounds()}
-ORDER BY q
-"""
-
-
-def _oracle_part_communities(iters: int = 4) -> str:
-    """Label propagation unrolled round for round (operators/graph.
-    label_propagation): same sync update, same (count desc, label asc)
-    argmax. Every round's CTE is MATERIALIZED — DuckDB inlines CTEs by
-    default and an unrolled iteration re-evaluating the edge frame per
-    round goes combinatorial (the batch-MMR mirror lesson)."""
-    rounds = []
-    for i in range(1, iters + 1):
-        rounds.append(f"""l{i} AS MATERIALIZED (
-  SELECT node, label FROM (
-    SELECT g.s AS node, l.label AS label, count(*) AS cnt
-    FROM edges g JOIN l{i - 1} l ON g.d = l.node GROUP BY 1, 2)
-  QUALIFY row_number() OVER (PARTITION BY node ORDER BY cnt DESC, label ASC) = 1)""")
-    body = ",\n".join(rounds)
-    return f"""
-WITH oi AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS item
-            FROM lineitem WHERE l_partkey IS NOT NULL),
-capped AS (SELECT o, item FROM
-             (SELECT o, item, row_number() OVER (PARTITION BY o ORDER BY item) AS rn
-              FROM oi) WHERE rn <= 20),
-e AS (SELECT a.item AS src, b.item AS dst, count(*) AS weight
-      FROM capped a JOIN capped b ON a.o = b.o AND a.item < b.item
-      GROUP BY 1, 2 HAVING count(*) >= 2),
-edges AS MATERIALIZED (SELECT src AS s, dst AS d FROM e
-                       UNION ALL SELECT dst, src FROM e),
-l0 AS MATERIALIZED (SELECT DISTINCT s AS node, s AS label FROM edges),
-{body}
-SELECT CAST(node AS BIGINT) AS node, CAST(label AS BIGINT) AS label
-FROM l{iters} ORDER BY node
-"""
-
-
-def _oracle_quantile_grouped() -> str:
-    """Per-group sketch quantiles (operators/sketches.qsketch_grouped
-    over l_extendedprice by l_returnflag): the ungrouped mirror with
-    every window/aggregate partitioned by the group key."""
-    return f"""
-WITH v AS (SELECT l_returnflag AS g,
-                  CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS v
-           FROM lineitem WHERE l_extendedprice IS NOT NULL),
-b AS (SELECT g, {_sq_qbucket('v')} AS bucket FROM v),
-c AS (SELECT g, bucket, count(*) AS n_rows FROM b GROUP BY g, bucket),
-tot AS (SELECT g, sum(n_rows) AS n FROM c GROUP BY g),
-cum AS (SELECT g, bucket, sum(n_rows) OVER (PARTITION BY g ORDER BY bucket) AS cum
-        FROM c),
-qs AS (SELECT CAST(x AS DOUBLE) AS q
-       FROM (VALUES (0.5), (0.95), (0.99)) t(x)),
-rk AS (SELECT g, q, greatest(1, CAST(ceil(q * n) AS BIGINT)) AS rnk FROM qs, tot),
-pick AS (SELECT rk.g AS g, q, rnk, min(bucket) AS bucket
-         FROM rk JOIN cum ON cum.g = rk.g AND cum.cum >= rk.rnk
-         GROUP BY rk.g, q, rnk)
-SELECT g AS l_returnflag, q, CAST(rnk AS BIGINT) AS rank,
-       CAST(bucket AS BIGINT) AS bucket,
-       {_r6('lo_i / 100.0', 'lo')}, {_r6('hi_i / 100.0', 'hi')},
-       {_r6('(lo_i / 100.0 + hi_i / 100.0) / 2.0', 'estimate')}
-FROM pick, {_sq_qbounds()}
-ORDER BY l_returnflag, q
-"""
-
-
-def _oracle_part_distances(iters: int = 6) -> str:
-    """Bellman-Ford unrolled round for round (operators/graph.
-    shortest_paths, cost = 1/weight): keep ∪ relax, per-node min —
-    the identical single IEEE add per relaxation, so distances are
-    bit-equal path for path. MATERIALIZED per round (the iterative-
-    oracle rule)."""
-    rounds = []
-    for i in range(1, iters + 1):
-        rounds.append(f"""d{i} AS MATERIALIZED (
-  SELECT node, min(dist) AS dist FROM (
-    SELECT node, dist FROM d{i - 1}
-    UNION ALL
-    SELECT g.d AS node, p.dist + g.w AS dist
-    FROM d{i - 1} p JOIN edges g ON g.s = p.node) GROUP BY node)""")
-    body = ",\n".join(rounds)
-    return f"""
-WITH oi AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS item
-            FROM lineitem WHERE l_partkey IS NOT NULL),
-capped AS (SELECT o, item FROM
-             (SELECT o, item, row_number() OVER (PARTITION BY o ORDER BY item) AS rn
-              FROM oi) WHERE rn <= 20),
-e AS (SELECT a.item AS src, b.item AS dst, count(*) AS weight
-      FROM capped a JOIN capped b ON a.o = b.o AND a.item < b.item
-      GROUP BY 1, 2 HAVING count(*) >= 2),
-edges AS MATERIALIZED (
-  SELECT src AS s, dst AS d, 1.0 / CAST(weight AS DOUBLE) AS w FROM e
-  UNION ALL
-  SELECT dst, src, 1.0 / CAST(weight AS DOUBLE) AS w FROM e),
-d0 AS MATERIALIZED (SELECT (SELECT min(s) FROM edges) AS node,
-                           CAST(0 AS DOUBLE) AS dist),
-{body}
-SELECT CAST(node AS BIGINT) AS node, {_r6('dist', 'dist')}
-FROM d{iters} ORDER BY node
-"""
 
 
 _ORACLE_PRIORITY_SAMPLE = f"""
@@ -5102,235 +4433,6 @@ SELECT doc_id, {_r6('weight', 'weight')}, {_r6('priority', 'priority')},
        {_r6('greatest(weight, tau)', 'est_weight')}
 FROM r, t WHERE rn <= 50
 ORDER BY priority DESC, doc_id ASC
-"""
-
-
-def _oracle_hll_grouped() -> str:
-    """Per-group bit-identical HLL mirror (operators/sketches.
-    hll_grouped over user_id by event_type, p=8): the hll_distinct
-    mirror with every aggregate keyed by the group."""
-    pr, m, w = 8, 256, 52
-    mask = (1 << w) - 1
-    branches = f"WHEN rest = 0 THEN {w + 1} " + " ".join(
-        f"WHEN rest >= {1 << (b - 1)} THEN {w + 1 - b}" for b in range(w, 0, -1)
-    )
-    num = 0.7213 / (1.0 + 1.079 / m) * m * m
-    two_w1 = float(1 << (w + 1))
-    raw = f"CAST({num!r} AS DOUBLE) * CAST({two_w1!r} AS DOUBLE) / z_scaled"
-    return f"""
-WITH h AS (SELECT event_type AS g,
-                  {_sq_tok_hash("CAST(user_id AS VARCHAR)")} AS h FROM events),
-b AS (SELECT g, h >> {w} AS idx, h & {mask} AS rest FROM h),
-r AS (SELECT g, idx, max(CASE {branches} END) AS rho FROM b GROUP BY g, idx),
-s AS (SELECT g, count(*) AS nonzero,
-             sum(CAST(power(2, {w + 1} - rho) AS BIGINT)) AS zf
-      FROM r GROUP BY g),
-k AS (SELECT g, nonzero, zf + ({m} - nonzero) * {1 << (w + 1)} AS z_scaled FROM s)
-SELECT g AS event_type, CAST(nonzero AS BIGINT) AS nonzero,
-       CAST(z_scaled AS BIGINT) AS z_scaled,
-       {_r6(raw, 'raw_estimate')},
-       {_r6(f'''CASE WHEN ({raw}) <= CAST({2.5 * m!r} AS DOUBLE) AND ({m} - nonzero) > 0
-                 THEN CAST({float(m)!r} AS DOUBLE) * ln(CAST({float(m)!r} AS DOUBLE) / ({m} - nonzero))
-                 ELSE {raw} END''', 'estimate')}
-FROM k ORDER BY event_type
-"""
-
-
-def _oracle_cm_frequencies(depth: int = 4, width: int = 8192) -> str:
-    """Bit-identical Count-Min mirror (operators/sketches.cm_sketch
-    over l_partkey): same per-row salted md5 cells, same per-(r,cell)
-    integer sums, same min-over-rows lookup with absent cells = 0."""
-    def cell(r, val):
-        arg = f"concat('cm{r}:', {val})"
-        return f"({_sq_tok_hash(arg)} % {width})"
-
-    upd = " UNION ALL ".join(
-        f"SELECT {r} AS r, {cell(r, 'CAST(l_partkey AS VARCHAR)')} AS cell "
-        f"FROM lineitem WHERE l_partkey IS NOT NULL"
-        for r in range(depth)
-    )
-    kcell = " UNION ALL ".join(
-        f"SELECT k, {r} AS r, {cell(r, 'CAST(k AS VARCHAR)')} AS cell FROM ks"
-        for r in range(depth)
-    )
-    return f"""
-WITH sk AS MATERIALIZED (
-  SELECT r, cell, count(*) AS n FROM ({upd}) GROUP BY r, cell),
-ks AS (SELECT unnest(range(1, 11)) AS k),
-kc AS ({kcell}),
-est AS (SELECT k, min(coalesce(sk.n, 0)) AS cm_estimate
-        FROM kc LEFT JOIN sk ON kc.r = sk.r AND kc.cell = sk.cell
-        GROUP BY k),
-ex AS (SELECT l_partkey AS k, count(*) AS exact_n FROM lineitem
-       WHERE l_partkey BETWEEN 1 AND 10 GROUP BY 1)
-SELECT CAST(est.k AS BIGINT) AS l_partkey,
-       CAST(coalesce(exact_n, 0) AS BIGINT) AS exact_n,
-       CAST(cm_estimate AS BIGINT) AS cm_estimate,
-       CAST(cm_estimate - coalesce(exact_n, 0) AS BIGINT) AS overshoot
-FROM est LEFT JOIN ex ON est.k = ex.k
-ORDER BY l_partkey
-"""
-
-
-def _oracle_kmv_overlap(k: int = 64) -> str:
-    """KMV overlap mirror (operators/sketches.kmv_overlap, click vs
-    purchase users): bottom-k distinct md5 hashes per side, bottom-k of
-    the union, ρ = union-sketch hashes present in BOTH side sketches;
-    the same one-division estimates."""
-    h = _sq_tok_hash("CAST(user_id AS VARCHAR)")
-    two60 = float(1 << 60)
-    return f"""
-WITH ska AS MATERIALIZED (
-  SELECT DISTINCT {h} AS h FROM events WHERE event_type = 'click'
-  ORDER BY h LIMIT {k}),
-skb AS MATERIALIZED (
-  SELECT DISTINCT {h} AS h FROM events WHERE event_type = 'purchase'
-  ORDER BY h LIMIT {k}),
-uni AS MATERIALIZED (
-  SELECT DISTINCT h FROM (SELECT h FROM ska UNION ALL SELECT h FROM skb)
-  ORDER BY h LIMIT {k}),
-ea AS (SELECT count(*) AS n_a,
-              CASE WHEN count(*) < {k} THEN CAST(count(*) AS DOUBLE)
-                   ELSE CAST({k - 1} AS DOUBLE) * CAST({two60!r} AS DOUBLE) / max(h)
-              END AS est_a FROM ska),
-eb AS (SELECT count(*) AS n_b,
-              CASE WHEN count(*) < {k} THEN CAST(count(*) AS DOUBLE)
-                   ELSE CAST({k - 1} AS DOUBLE) * CAST({two60!r} AS DOUBLE) / max(h)
-              END AS est_b FROM skb),
-eu AS (SELECT count(*) AS n_union,
-              CASE WHEN count(*) < {k} THEN CAST(count(*) AS DOUBLE)
-                   ELSE CAST({k - 1} AS DOUBLE) * CAST({two60!r} AS DOUBLE) / max(h)
-              END AS est_union FROM uni),
-rh AS (SELECT count(*) AS rho FROM uni
-       WHERE h IN (SELECT h FROM ska) AND h IN (SELECT h FROM skb)),
-ex AS (SELECT count(*) AS exact_intersection FROM
-         (SELECT DISTINCT user_id FROM events WHERE event_type = 'click'
-          INTERSECT
-          SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase'))
-SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-       {_r6('est_a', 'est_a')}, {_r6('est_b', 'est_b')},
-       CAST(n_union AS BIGINT) AS n_union, {_r6('est_union', 'est_union')},
-       CAST(rho AS BIGINT) AS rho,
-       {_r6(f'''CASE WHEN n_union < {k} THEN CAST(rho AS DOUBLE)
-                ELSE rho / CAST({float(k)!r} AS DOUBLE) * est_union END''',
-            'est_intersection')},
-       CAST(exact_intersection AS BIGINT) AS exact_intersection
-FROM ea, eb, eu, rh, ex
-"""
-
-
-def _oracle_cm_join_size(depth: int = 4, width: int = 8192) -> str:
-    """CM inner-product join-size mirror (operators/sketches.
-    cm_join_size on the events user_id self-join): same salted cells,
-    same per-row dot products, min over rows."""
-    def cell(r):
-        arg = f"concat('cm{r}:', CAST(user_id AS VARCHAR))"
-        return f"({_sq_tok_hash(arg)} % {width})"
-
-    upd = " UNION ALL ".join(
-        f"SELECT {r} AS r, {cell(r)} AS cell FROM events WHERE user_id IS NOT NULL"
-        for r in range(depth)
-    )
-    return f"""
-WITH sk AS MATERIALIZED (
-  SELECT r, cell, count(*) AS n FROM ({upd}) GROUP BY r, cell),
-dots AS (SELECT r, sum(n * n) AS dot FROM sk GROUP BY r),
-est AS (SELECT min(dot) AS estimate FROM dots),
-ex AS (SELECT sum(c * c) AS exact_size FROM
-         (SELECT count(*) AS c FROM events GROUP BY user_id))
-SELECT CAST(estimate AS BIGINT) AS estimate,
-       CAST(exact_size AS BIGINT) AS exact_size,
-       CAST(estimate - exact_size AS BIGINT) AS overshoot
-FROM est, ex
-"""
-
-
-def _oracle_quantile_weighted() -> str:
-    """Token-mass length percentile mirror (operators/sketches.
-    qsketch_weighted over doc token counts, weight = the count): the
-    sketch estimate SQL with per-bucket weight sums and weight-unit
-    ranks."""
-    return f"""
-WITH v AS (SELECT CAST(CASE WHEN trim(text) = '' THEN 0
-                            ELSE len({_SQ_TOKS}) END AS BIGINT) AS v
-           FROM documents),
-vw AS (SELECT v, v AS w FROM v WHERE v > 0),
-b AS (SELECT {_sq_qbucket('v')} AS bucket, w FROM vw),
-c AS (SELECT bucket, sum(w) AS n_rows FROM b GROUP BY bucket),
-tot AS (SELECT sum(n_rows) AS n FROM c),
-cum AS (SELECT bucket, sum(n_rows) OVER (ORDER BY bucket) AS cum FROM c),
-qs AS (SELECT CAST(x AS DOUBLE) AS q
-       FROM (VALUES (0.25), (0.5), (0.9)) t(x)),
-rk AS (SELECT q, greatest(1, CAST(ceil(q * n) AS BIGINT)) AS rnk FROM qs, tot),
-pick AS (SELECT q, rnk, min(bucket) AS bucket
-         FROM rk JOIN cum ON cum.cum >= rk.rnk GROUP BY q, rnk)
-SELECT q, CAST(rnk AS BIGINT) AS rank, CAST(bucket AS BIGINT) AS bucket,
-       {_r6('lo_i / 1.0', 'lo')}, {_r6('hi_i / 1.0', 'hi')},
-       {_r6('(lo_i / 1.0 + hi_i / 1.0) / 2.0', 'estimate')}
-FROM pick, {_sq_qbounds(scale=1)}
-ORDER BY q
-"""
-
-
-def _oracle_bloom_prune(n_bits: int = 4096, n_hashes: int = 5) -> str:
-    """Portable-Bloom mirror (operators/sketches.bloom_build/
-    bloom_prune over BUILDING customers → orders): same salted md5 bit
-    positions, same bit_or word fold, same all-k-bits probe."""
-    def pos(i, val):
-        arg = f"concat('bf{i}:', {val})"
-        return f"({_sq_tok_hash(arg)} % {n_bits})"
-
-    build = " UNION ALL ".join(
-        f"SELECT {pos(i, 'CAST(c_custkey AS VARCHAR)')} AS p FROM dim"
-        for i in range(n_hashes)
-    )
-    probe = " UNION ALL ".join(
-        f"SELECT o_orderkey, {pos(i, 'CAST(o_custkey AS VARCHAR)')} AS p FROM orders"
-        for i in range(n_hashes)
-    )
-    return f"""
-WITH dim AS (SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'),
-bf AS MATERIALIZED (
-  SELECT p >> 5 AS word, bit_or(CAST(1 AS BIGINT) << (p & 31)) AS bits
-  FROM ({build}) GROUP BY 1),
-pr AS (SELECT o_orderkey, p >> 5 AS w, CAST(1 AS BIGINT) << (p & 31) AS m
-       FROM ({probe})),
-hits AS (SELECT o_orderkey, count(*) AS k
-         FROM pr JOIN bf ON pr.w = bf.word AND (bf.bits & pr.m) = pr.m
-         GROUP BY 1),
-nb AS (SELECT count(*) AS n_bloom FROM hits WHERE k = {n_hashes}),
-ne AS (SELECT count(*) AS n_exact FROM orders
-       WHERE o_custkey IN (SELECT c_custkey FROM dim))
-SELECT CAST(n_exact AS BIGINT) AS n_exact, CAST(n_bloom AS BIGINT) AS n_bloom,
-       CAST(n_bloom - n_exact AS BIGINT) AS false_positives
-FROM ne, nb
-"""
-
-
-def _oracle_embedding_drift() -> str:
-    """Centroid-drift mirror (operators/profiling.centroid_drift over
-    the 90/10 vec_id hash split): per-(label, dim) means via the
-    __sqdims pattern, ordered list reassembly, the same ε-guarded
-    cosine fold. Means are float sums in engine-specific order —
-    agreement to ~1e-12, well inside the repo 6-dp rounding."""
-    h = _sq_tok_hash("CAST(vec_id AS VARCHAR)")
-    return f"""
-WITH e AS (SELECT label, embedding, ({h}) % 10 AS sp FROM embeddings),
-dims AS (SELECT unnest(range(1, 65)) AS i),
-ra AS (SELECT label, i, avg(CAST(embedding[i] AS DOUBLE)) AS m,
-              count(*) AS n
-       FROM e, dims WHERE sp < 9 GROUP BY label, i),
-rb AS (SELECT label, i, avg(CAST(embedding[i] AS DOUBLE)) AS m,
-              count(*) AS n
-       FROM e, dims WHERE sp >= 9 GROUP BY label, i),
-ca AS (SELECT label, max(n) AS n_ref, list(m ORDER BY i) AS c FROM ra GROUP BY label),
-cb AS (SELECT label, max(n) AS n_cur, list(m ORDER BY i) AS c FROM rb GROUP BY label)
-SELECT CAST(ca.label AS BIGINT) AS label,
-       CAST(n_ref AS BIGINT) AS n_ref, CAST(n_cur AS BIGINT) AS n_cur,
-       {_r6(_sq_cosine('ca.c', 'cb.c'), 'cos_sim')},
-       {_r6('1.0 - ' + _sq_cosine('ca.c', 'cb.c'), 'drift')}
-FROM ca JOIN cb ON ca.label = cb.label
-ORDER BY label
 """
 
 
@@ -5359,98 +4461,6 @@ SELECT key AS event_type, strftime(day, '%Y-%m-%d') AS day,
        {_r6('s_up', 's_up')}, {_r6('s_down', 's_down')},
        coalesce(s_up > 3.0 OR s_down > 3.0, false) AS is_change
 FROM s ORDER BY event_type, day
-"""
-
-
-def _oracle_vocab_divergence(n_buckets: int = 1024) -> str:
-    """JS-divergence mirror (operators/profiling.vocab_divergence over
-    the 90/10 doc_id split): same hashed buckets, same 0·ln0 = 0
-    guard; the ln sums agree to ~1e-13, far inside 6-dp rounding."""
-    h = _sq_tok_hash("CAST(doc_id AS VARCHAR)")
-    th = _sq_tok_hash("tok")
-    return f"""
-WITH sp AS (SELECT doc_id, text, ({h}) % 10 AS s FROM documents),
-ta AS (SELECT unnest({_SQ_TOKS}) AS tok FROM sp WHERE s < 9),
-tb AS (SELECT unnest({_SQ_TOKS}) AS tok FROM sp WHERE s >= 9),
-ba AS (SELECT ({th}) % {n_buckets} AS bucket, count(*) AS na FROM ta GROUP BY 1),
-bb AS (SELECT ({th}) % {n_buckets} AS bucket, count(*) AS nb FROM tb GROUP BY 1),
-tot AS (SELECT (SELECT sum(na) FROM ba) AS tta, (SELECT sum(nb) FROM bb) AS ttb),
-j AS (SELECT coalesce(na, 0) AS na, coalesce(nb, 0) AS nb
-      FROM ba FULL JOIN bb USING (bucket)),
-terms AS (SELECT na, nb,
-                 na / CAST(tta AS DOUBLE) AS p, nb / CAST(ttb AS DOUBLE) AS q
-          FROM j, tot)
-SELECT CAST((SELECT tta FROM tot) AS BIGINT) AS n_ref_tokens,
-       CAST((SELECT ttb FROM tot) AS BIGINT) AS n_cur_tokens,
-       {_r6('''(sum(CASE WHEN p > 0 THEN p * ln(p / ((p + q) / 2.0)) ELSE 0.0 END)
-         + sum(CASE WHEN q > 0 THEN q * ln(q / ((p + q) / 2.0)) ELSE 0.0 END)) / 2.0''',
-            'js_divergence')}
-FROM terms
-"""
-
-
-def _oracle_part_ppr(iters: int = 3, damping: float = 0.85) -> str:
-    """Personalized-PageRank mirror (operators/graph.
-    personalized_pagerank, seeds = two smallest parts): the identical
-    rank·w/deg emission and (1−d)·seed + d·Σ update unrolled per
-    round, MATERIALIZED (the iterative-oracle rule)."""
-    rounds = []
-    for i in range(1, iters + 1):
-        rounds.append(f"""r{i} AS MATERIALIZED (
-  SELECT coalesce(c.node, s.node) AS node,
-         {1.0 - damping} * coalesce(s.seed, 0.0)
-           + {damping} * coalesce(c.cin, 0.0) AS rank
-  FROM (SELECT g.d AS node, sum(r.rank * g.w / dg.deg) AS cin
-        FROM r{i - 1} r JOIN edges g ON g.s = r.node
-        JOIN deg dg ON dg.s = r.node GROUP BY g.d) c
-  FULL JOIN seeds s ON c.node = s.node)""")
-    body = ",\n".join(rounds)
-    return f"""
-WITH oi AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS item
-            FROM lineitem WHERE l_partkey IS NOT NULL),
-capped AS (SELECT o, item FROM
-             (SELECT o, item, row_number() OVER (PARTITION BY o ORDER BY item) AS rn
-              FROM oi) WHERE rn <= 20),
-e AS (SELECT a.item AS src, b.item AS dst, count(*) AS weight
-      FROM capped a JOIN capped b ON a.o = b.o AND a.item < b.item
-      GROUP BY 1, 2 HAVING count(*) >= 2),
-edges AS MATERIALIZED (
-  SELECT src AS s, dst AS d, CAST(weight AS DOUBLE) AS w FROM e
-  UNION ALL SELECT dst, src, CAST(weight AS DOUBLE) FROM e),
-deg AS MATERIALIZED (SELECT s, sum(w) AS deg FROM edges GROUP BY s),
-seeds AS MATERIALIZED (
-  SELECT src AS node, 0.5 AS seed FROM
-    (SELECT DISTINCT src FROM e ORDER BY src LIMIT 2)),
-r0 AS (SELECT node, seed AS rank FROM seeds),
-{body}
-SELECT CAST(node AS BIGINT) AS node, {_r6('rank', 'score')}
-FROM r{iters} ORDER BY round(rank, 6) DESC, node ASC LIMIT 50
-"""
-
-
-def _oracle_hourly_value_p95() -> str:
-    """Per-hour sketch-percentile mirror (operators/sketches.
-    qsketch_grouped keyed by the time window over events.value)."""
-    return f"""
-WITH v AS (SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:00') AS g,
-                  CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
-           FROM events WHERE value IS NOT NULL),
-b AS (SELECT g, {_sq_qbucket('v')} AS bucket FROM v),
-c AS (SELECT g, bucket, count(*) AS n_rows FROM b GROUP BY g, bucket),
-tot AS (SELECT g, sum(n_rows) AS n FROM c GROUP BY g),
-cum AS (SELECT g, bucket, sum(n_rows) OVER (PARTITION BY g ORDER BY bucket) AS cum
-        FROM c),
-qs AS (SELECT CAST(x AS DOUBLE) AS q FROM (VALUES (0.5), (0.95)) t(x)),
-rk AS (SELECT g, q, greatest(1, CAST(ceil(q * n) AS BIGINT)) AS rnk FROM qs, tot),
-pick AS (SELECT rk.g AS g, q, rnk, min(bucket) AS bucket
-         FROM rk JOIN cum ON cum.g = rk.g AND cum.cum >= rk.rnk
-         GROUP BY rk.g, q, rnk)
-SELECT g AS hour, q, CAST(rnk AS BIGINT) AS rank,
-       CAST(bucket AS BIGINT) AS bucket,
-       {_r6('lo_i / 100.0', 'lo')}, {_r6('hi_i / 100.0', 'hi')},
-       {_r6('(lo_i / 100.0 + hi_i / 100.0) / 2.0', 'estimate')}
-FROM pick, {_sq_qbounds()}
-ORDER BY hour, q
 """
 
 
@@ -5547,42 +4557,6 @@ FROM u CROSS JOIN qs ORDER BY h
 """
 
 
-def _oracle_value_p95_sliding(trailing: int = 6) -> str:
-    """Trailing-window sketch-percentile mirror (operators/sketches.
-    qsketch_sliding_quantiles): dense hour×bucket spine, RANGE-frame
-    trailing sum per sketch bucket, same rank rule."""
-    return f"""
-WITH v AS (SELECT epoch_us(ts) // 3600000000 AS tb,
-                  CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
-           FROM events WHERE value IS NOT NULL),
-b AS (SELECT tb, {_sq_qbucket('v')} AS bucket FROM v),
-c AS (SELECT tb, bucket, count(*) AS cnt FROM b GROUP BY tb, bucket),
-spine AS (SELECT DISTINCT tb FROM c), bks AS (SELECT DISTINCT bucket FROM c),
-dense AS (SELECT sk.tb, sk.bucket, coalesce(c.cnt, 0) AS cnt
-          FROM (SELECT s.tb, k.bucket FROM spine s CROSS JOIN bks k) sk
-          LEFT JOIN c ON c.tb = sk.tb AND c.bucket = sk.bucket),
-merged AS (SELECT tb, bucket,
-                  sum(cnt) OVER (PARTITION BY bucket ORDER BY tb
-                    RANGE BETWEEN {trailing - 1} PRECEDING AND CURRENT ROW) AS n_rows
-           FROM dense),
-st AS (SELECT * FROM merged WHERE n_rows > 0),
-tot AS (SELECT tb, sum(n_rows) AS n FROM st GROUP BY tb),
-cum AS (SELECT tb, bucket, sum(n_rows) OVER (PARTITION BY tb ORDER BY bucket) AS cum
-        FROM st),
-qs AS (SELECT CAST(x AS DOUBLE) AS q FROM (VALUES (0.5), (0.95)) t(x)),
-rk AS (SELECT tb, q, greatest(1, CAST(ceil(q * n) AS BIGINT)) AS rnk FROM qs, tot),
-pick AS (SELECT rk.tb AS tb, q, rnk, min(bucket) AS bucket
-         FROM rk JOIN cum ON cum.tb = rk.tb AND cum.cum >= rk.rnk
-         GROUP BY rk.tb, q, rnk)
-SELECT CAST(tb AS BIGINT) AS ehour, q, CAST(rnk AS BIGINT) AS rank,
-       CAST(bucket AS BIGINT) AS bucket,
-       {_r6('lo_i / 100.0', 'lo')}, {_r6('hi_i / 100.0', 'hi')},
-       {_r6('(lo_i / 100.0 + hi_i / 100.0) / 2.0', 'estimate')}
-FROM pick, {_sq_qbounds()}
-ORDER BY ehour, q
-"""
-
-
 def oracle_sql() -> dict[str, str]:
     # every queries() entry has a mirror: the multimodal decode stub was
     # made digest-derived precisely so the full pipeline value-checks.
@@ -5610,7 +4584,6 @@ def oracle_sql() -> dict[str, str]:
         "recall_sq": _oracle_recall_sq(),
         "recall_lsh": _oracle_recall_lsh(),
         "rp_topk": _oracle_rp_topk(),
-        "hot_keys": _oracle_hot_keys(),
         "grep_corpus": _oracle_grep_corpus(),
         "more_like_these": _oracle_more_like_these(),
         "grep_corpus_indexed": _oracle_grep_corpus(),
@@ -5656,31 +4629,20 @@ def oracle_sql() -> dict[str, str]:
         "event_funnel": _oracle_event_funnel(),
         "incremental_near_dup": _oracle_incremental_near_dup(),
         "key_skew": _oracle_key_skew(),
-        "value_lift": _ORACLE_VALUE_LIFT,
         "rfm_scores": _ORACLE_RFM_SCORES,
         "dau_wau": _ORACLE_DAU_WAU,
         "session_paths": _ORACLE_SESSION_PATHS,
         "fuzzy_titles": _ORACLE_FUZZY_TITLES,
-        "segment_target_enc": _ORACLE_SEGMENT_TARGET_ENC,
-        "price_psi": _ORACLE_PRICE_PSI,
         "conversion_latency": _ORACLE_CONVERSION_LATENCY,
-        "revenue_gini": _ORACLE_REVENUE_GINI,
-        "nation_supplier_hhi": _ORACLE_NATION_SUPPLIER_HHI,
         "script_mix": _ORACLE_SCRIPT_MIX,
         "bigram_pmi": _ORACLE_BIGRAM_PMI,
         "event_transitions": _ORACLE_EVENT_TRANSITIONS,
         "value_bars": _ORACLE_VALUE_BARS,
-        "customer_diff": _ORACLE_CUSTOMER_DIFF,
-        "lineitem_correlations": _oracle_lineitem_correlations(),
         "monthly_growth": _ORACLE_MONTHLY_GROWTH,
         "cohort_matrix": _ORACLE_COHORT_MATRIX,
-        "winsorized_price": _ORACLE_WINSORIZED_PRICE,
-        "spend_deciles": _ORACLE_SPEND_DECILES,
         "decayed_engagement": _ORACLE_DECAYED_ENGAGEMENT,
         "cdc_snapshot": _ORACLE_CDC_SNAPSHOT,
-        "price_histogram": _ORACLE_PRICE_HISTOGRAM,
         "rate_limited": _ORACLE_RATE_LIMITED,
-        "orders_audit": _ORACLE_ORDERS_AUDIT,
         "large_orders": _ORACLE_LARGE_ORDERS,
         "min_cost_supplier": _ORACLE_MIN_COST_SUPPLIER,
         "unshipped_orders": _ORACLE_UNSHIPPED_ORDERS,
@@ -5694,18 +4656,10 @@ def oracle_sql() -> dict[str, str]:
         "product_profit": _ORACLE_PRODUCT_PROFIT,
         "important_parts": _ORACLE_IMPORTANT_PARTS,
         "late_ship_priority": _ORACLE_LATE_SHIP_PRIORITY,
-        "copurchase_graph": _ORACLE_COPURCHASE_GRAPH,
-        "part_degrees": _ORACLE_PART_DEGREES,
-        "triangle_count": _ORACLE_TRIANGLE_COUNT,
-        "part_pagerank": _ORACLE_PART_PAGERANK,
         "lexical_diversity": _ORACLE_LEXICAL_DIVERSITY,
         "zipf_slope": _ORACLE_ZIPF_SLOPE,
         "readability": _ORACLE_READABILITY,
         "daily_anomaly": _ORACLE_DAILY_ANOMALY,
-        "assoc_rules": _ORACLE_ASSOC_RULES,
-        "part_components": _ORACLE_PART_COMPONENTS,
-        "part_pagerank_weighted": _ORACLE_PART_PAGERANK_WEIGHTED,
-        "incremental_rollup": _ORACLE_INCREMENTAL_ROLLUP,
         "pii_cards": _oracle_pii_cards(),
         "weekday_anomaly": _ORACLE_WEEKDAY_ANOMALY,
         "cumulative_users": _ORACLE_CUMULATIVE_USERS,
@@ -5780,7 +4734,6 @@ def oracle_sql() -> dict[str, str]:
         "chunk_overlap": _oracle_chunk_overlap(),
         "ivf_knn_join": _oracle_ivf_knn_join(),
         "bm25_knn_join": _oracle_bm25_knn_join(),
-        "table_profile": _oracle_table_profile(),
         "shipping_volume": _ORACLE_SHIPPING_VOLUME,
         "promo_share": _ORACLE_PROMO_SHARE,
         "kmeans_assign": _oracle_kmeans_assign(),
@@ -5825,14 +4778,10 @@ def oracle_sql() -> dict[str, str]:
         "binary_meta": _oracle_binary_meta(),
         "bulk_random_load": _oracle_bulk_random_load(),
         "collection_stats": _oracle_collection_stats(),
-        "hll_distinct": _oracle_hll_distinct(),
-        "frequent_items": _oracle_frequent_items(),
         "salted_join": _ORACLE_SALTED_JOIN,
         "prefix_jaccard_pairs": _oracle_prefix_jaccard_pairs(),
-        "ivm_join_view": _ORACLE_IVM_JOIN_VIEW,
         "zorder_stats": _oracle_zorder_stats(),
         "pareto_front": _ORACLE_PARETO_FRONT,
-        "changelog_compact": _ORACLE_CHANGELOG_COMPACT,
         "metrics_long": _ORACLE_METRICS_LONG,
         "sql_grouping_sets": _oracle_sql_grouping_sets(),
         "seasonal_decompose": _ORACLE_SEASONAL_DECOMPOSE,
@@ -5840,55 +4789,28 @@ def oracle_sql() -> dict[str, str]:
         "mmr_topk": _oracle_mmr_topk(),
         "mmr_knn_join": _oracle_mmr_knn_join(),
         "kcenter_select": _oracle_kcenter_select(),
-        "robust_scale": _ORACLE_ROBUST_SCALE,
-        "hll_incremental": _oracle_hll_distinct(),
-        "quantile_sketch": _oracle_quantile_sketch(),
-        "quantile_estimate": _oracle_quantile_estimate(),
-        # the incremental fold is provably bucket-equal to the one-shot
-        # sketch, so it shares the estimate mirror (the hll pattern)
-        "quantile_incremental": _oracle_quantile_estimate(),
-        "part_communities": _oracle_part_communities(),
-        "quantile_grouped": _oracle_quantile_grouped(),
-        "part_distances": _oracle_part_distances(),
         "priority_sample": _ORACLE_PRIORITY_SAMPLE,
-        "hll_grouped": _oracle_hll_grouped(),
-        "cm_frequencies": _oracle_cm_frequencies(),
-        "kmv_overlap": _oracle_kmv_overlap(),
-        "cm_join_size": _oracle_cm_join_size(),
-        "quantile_weighted": _oracle_quantile_weighted(),
-        "bloom_prune": _oracle_bloom_prune(),
-        "embedding_drift": _oracle_embedding_drift(),
         "cusum_changepoints": _ORACLE_CUSUM,
-        "vocab_divergence": _oracle_vocab_divergence(),
-        "part_ppr": _oracle_part_ppr(),
         "ivfpq_res_topk": _oracle_ivfpq_res_topk(),
         "recall_ivfpq_res": _oracle_recall_ivfpq_res(),
-        "hourly_value_p95": _oracle_hourly_value_p95(),
-        "value_p95_sliding": _oracle_value_p95_sliding(),
         "ar_forecast7": _oracle_ar_forecast7(),
         "gap_filled_users": _ORACLE_GAP_FILLED_USERS,
         "ewma_daily": _ORACLE_EWMA_DAILY,
         "holt_forecast7": _ORACLE_HOLT_FORECAST7,
-        "part_kcore": _oracle_part_kcore(),
         "mutual_knn": _oracle_mutual_knn(),
         "compaction_plan": _ORACLE_COMPACTION_PLAN,
         "containment_pairs": _oracle_containment_pairs(),
         "rolling_corr": _ORACLE_ROLLING_CORR,
         "lead_lag": _ORACLE_LEAD_LAG,
-        "rollup_answer": _ORACLE_ROLLUP_ANSWER,
         "snm_pairs": _ORACLE_SNM_PAIRS,
         "sampled_groupby": _oracle_sampled_groupby(),
-        "sliding_distinct_users": _oracle_sliding_distinct_users(),
-        "fd_profile": _oracle_fd_profile(),
         "er_clusters": _ORACLE_ER_CLUSTERS,
         "burn_rate": _ORACLE_BURN_RATE,
-        "hot_items_by_type": _ORACLE_HOT_ITEMS_BY_TYPE,
         "seasonality_strength": _ORACLE_SEASONALITY_STRENGTH,
         "acf_daily": _ORACLE_ACF_DAILY,
         "pacf_daily": _oracle_pacf_daily(),
         "dedup_recall": _oracle_dedup_recall(),
         "forecast_bands": _ORACLE_FORECAST_BANDS,
-        "woe_iv": _ORACLE_WOE_IV,
         "events_session_native": _ORACLE_EVENTS_SESSION_NATIVE,
     }
 
@@ -5943,35 +4865,6 @@ fin AS (SELECT k, l, b FROM r QUALIFY row_number() OVER (PARTITION BY k ORDER BY
 SELECT k AS event_type, CAST(h AS INT) AS h,
        {_r6('l + h * b', 'forecast')}, {_r6('l', 'level')}, {_r6('b', 'trend')}
 FROM fin, unnest(generate_series(1, 7)) AS u(h) ORDER BY event_type, h
-"""
-
-
-def _oracle_part_kcore(k: int = 2, iters: int = 6) -> str:
-    """k-core peeling unrolled round for round (operators/graph.kcore):
-    per round the surviving-degree filter + both-endpoint semi-join,
-    every round MATERIALIZED (the unrolled-iteration rule)."""
-    rounds = []
-    for i in range(1, iters + 1):
-        rounds.append(f"""k{i} AS MATERIALIZED (
-  SELECT s AS node FROM e{i - 1} GROUP BY 1 HAVING count(*) >= {k}),
-e{i} AS MATERIALIZED (
-  SELECT s, d FROM e{i - 1}
-  WHERE s IN (SELECT node FROM k{i}) AND d IN (SELECT node FROM k{i}))""")
-    body = ",\n".join(rounds)
-    return f"""
-WITH oi AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS item
-            FROM lineitem WHERE l_partkey IS NOT NULL),
-capped AS (SELECT o, item FROM
-             (SELECT o, item, row_number() OVER (PARTITION BY o ORDER BY item) AS rn
-              FROM oi) WHERE rn <= 20),
-e AS (SELECT a.item AS src, b.item AS dst, count(*) AS weight
-      FROM capped a JOIN capped b ON a.o = b.o AND a.item < b.item
-      GROUP BY 1, 2 HAVING count(*) >= 2),
-e0 AS MATERIALIZED (SELECT src AS s, dst AS d FROM e
-                    UNION ALL SELECT dst, src FROM e),
-{body}
-SELECT CAST(s AS BIGINT) AS node, CAST(count(*) AS BIGINT) AS core_deg
-FROM e{iters} GROUP BY 1 HAVING count(*) >= {k} ORDER BY node
 """
 
 
@@ -6085,14 +4978,6 @@ FROM sc ORDER BY lag
 """
 
 
-_ORACLE_ROLLUP_ANSWER = f"""
-SELECT event_type, CAST(count(event_id) AS BIGINT) AS n_events,
-       {_r6('round(sum(value), 2)', 'sum_value')},
-       {_r6('max(value)', 'max_value')}
-FROM events GROUP BY 1 ORDER BY 1
-"""
-
-
 _ORACLE_SNM_PAIRS = """
 WITH src AS (
   SELECT doc_id, substring(text, 1, 12) AS name FROM documents
@@ -6134,81 +5019,11 @@ ORDER BY 1
 """
 
 
-def _oracle_sliding_distinct_users(trailing: int = 6) -> str:
-    """Sliding-HLL mirror: identical register math (the hll_grouped
-    fragments) with the dense bucket×idx spine and the same RANGE
-    max-merge, plus the exact contribute-forward evidence join."""
-    pr, m, w = 8, 256, 52
-    mask = (1 << w) - 1
-    branches = f"WHEN rest = 0 THEN {w + 1} " + " ".join(
-        f"WHEN rest >= {1 << (b - 1)} THEN {w + 1 - b}" for b in range(w, 0, -1)
-    )
-    num = 0.7213 / (1.0 + 1.079 / m) * m * m
-    two_w1 = float(1 << (w + 1))
-    raw = f"CAST({num!r} AS DOUBLE) * CAST({two_w1!r} AS DOUBLE) / z_scaled"
-    return f"""
-WITH ev AS (SELECT user_id, CAST(floor(epoch(ts) / 3600) AS BIGINT) AS bucket FROM events),
-h AS (SELECT bucket, {_sq_tok_hash("CAST(user_id AS VARCHAR)")} AS h FROM ev),
-b AS (SELECT bucket, h >> {w} AS idx, h & {mask} AS rest FROM h),
-r AS (SELECT bucket, idx, max(CASE {branches} END) AS rho FROM b GROUP BY 1, 2),
-spine AS (SELECT DISTINCT bucket FROM r),
-grid AS (SELECT spine.bucket, u.idx FROM spine,
-               (SELECT unnest(generate_series(0, {m - 1})) AS idx) u),
-dense AS (SELECT g.bucket, g.idx, r.rho FROM grid g
-          LEFT JOIN r ON r.bucket = g.bucket AND r.idx = g.idx),
-mg AS (SELECT bucket, idx,
-              max(rho) OVER (PARTITION BY idx ORDER BY bucket
-                             RANGE BETWEEN {trailing - 1} PRECEDING AND CURRENT ROW) AS rho
-       FROM dense),
-s AS (SELECT bucket, count(rho) AS nonzero,
-             coalesce(sum(CAST(power(2, {w + 1} - rho) AS BIGINT)), 0) AS zf
-      FROM mg GROUP BY 1),
-k AS (SELECT bucket, nonzero, zf + ({m} - nonzero) * {1 << (w + 1)} AS z_scaled FROM s),
-contrib AS (SELECT e.user_id, e.bucket + u.o AS bucket
-            FROM ev e, (SELECT unnest(generate_series(0, {trailing - 1})) AS o) u),
-ex AS (SELECT c.bucket, count(DISTINCT c.user_id) AS exact_distinct
-       FROM contrib c JOIN spine sp ON sp.bucket = c.bucket GROUP BY 1)
-SELECT k.bucket, CAST(nonzero AS BIGINT) AS nonzero,
-       CAST(z_scaled AS BIGINT) AS z_scaled,
-       {_r6(f'''CASE WHEN ({raw}) <= CAST({2.5 * m!r} AS DOUBLE) AND ({m} - nonzero) > 0
-                 THEN CAST({float(m)!r} AS DOUBLE) * ln(CAST({float(m)!r} AS DOUBLE) / ({m} - nonzero))
-                 ELSE {raw} END''', 'estimate')},
-       CAST(exact_distinct AS BIGINT) AS exact_distinct
-FROM k JOIN ex ON ex.bucket = k.bucket
-ORDER BY 1
-"""
-
-
 _SQ_DAILY_CENTS = """
 d AS (SELECT CAST(ts AS DATE) AS day,
              CAST(floor(sum(value) * 100 + 0.5) AS BIGINT) AS y
       FROM events GROUP BY 1)
 """
-
-
-def _oracle_fd_profile() -> str:
-    """Per-candidate g3 FD check: cells → per-A keep-max → rollup,
-    one block per dependency, unioned."""
-    def block(a, b):
-        return f"""
-SELECT '{a}' AS lhs, '{b}' AS rhs,
-       CAST(sum(rows_) AS BIGINT) AS n_rows,
-       CAST(count(*) AS BIGINT) AS n_groups,
-       CAST(sum(CASE WHEN nb > 1 THEN 1 ELSE 0 END) AS BIGINT) AS violating_groups,
-       CAST(sum(rows_) - sum(keep_) AS BIGINT) AS g3_rows,
-       (sum(rows_) - sum(keep_)) = 0 AS holds
-FROM (SELECT {a} AS a, sum(n) AS rows_, max(n) AS keep_, count(*) AS nb
-      FROM (SELECT {a}, {b}, count(*) AS n FROM orders GROUP BY 1, 2)
-      GROUP BY 1)"""
-    blocks = " UNION ALL ".join(
-        block(a, b)
-        for a, b in [
-            ("o_orderkey", "o_custkey"),
-            ("o_custkey", "o_orderpriority"),
-            ("o_orderdate", "o_orderstatus"),
-        ]
-    )
-    return f"SELECT * FROM ({blocks}) ORDER BY lhs, rhs"
 
 
 _ORACLE_ER_CLUSTERS = """
@@ -6253,21 +5068,6 @@ SELECT hour, CAST(errs AS BIGINT) AS errs, CAST(total AS BIGINT) AS total,
        {_r6('burn_short', 'burn_short')}, {_r6('burn_long', 'burn_long')},
        (burn_short > 1.1 AND burn_long > 1.1) AS alert
 FROM b ORDER BY hour
-"""
-
-
-_ORACLE_HOT_ITEMS_BY_TYPE = f"""
-WITH src AS (SELECT event_type,
-                    CASE WHEN event_id % 3 = 0 THEN 'hot'
-                         ELSE 'u' || CAST(event_id % 500 AS VARCHAR) END AS item
-             FROM events),
-tot AS (SELECT event_type, count(*) AS n FROM src GROUP BY 1),
-c AS (SELECT s.event_type, s.item, count(*) AS n_rows, max(t.n) AS n
-      FROM src s JOIN tot t ON t.event_type = s.event_type
-      GROUP BY 1, 2 HAVING count(*) * 8 >= max(t.n))
-SELECT event_type, item, CAST(n_rows AS BIGINT) AS n_rows,
-       {_r6('round(n_rows / CAST(n AS DOUBLE), 6)', 'share')}
-FROM c ORDER BY event_type, item
 """
 
 
@@ -6403,22 +5203,6 @@ SELECT fin.k AS event_type, CAST(h AS INT) AS h,
        {_r6('l + h * b + q90', 'hi')}
 FROM fin JOIN q ON q.k = fin.k, unnest(generate_series(1, 7)) AS u(h)
 ORDER BY event_type, h
-"""
-
-
-_ORACLE_WOE_IV = f"""
-WITH src AS (SELECT CASE WHEN value < 5 THEN 'lo' WHEN value < 20 THEN 'mid' ELSE 'hi' END AS bin,
-                    CASE WHEN event_type = 'purchase' THEN 1.0 ELSE 0.0 END AS lbl
-             FROM events WHERE event_type IS NOT NULL),
-cells AS (SELECT bin, count(*) AS n, sum(lbl) AS g0, sum(1.0 - lbl) AS b0 FROM src GROUP BY 1),
-t AS (SELECT bin, n, g0, b0, g0 + 0.5 AS g, b0 + 0.5 AS b,
-             sum(g0 + 0.5) OVER () AS tg, sum(b0 + 0.5) OVER () AS tb
-      FROM cells)
-SELECT bin AS band, CAST(n AS BIGINT) AS n, CAST(g0 AS BIGINT) AS n_good,
-       CAST(b0 AS BIGINT) AS n_bad,
-       {_r6('ln(g / tg / (b / tb))', 'woe')},
-       {_r6('(g / tg - b / tb) * ln(g / tg / (b / tb))', 'iv_term')}
-FROM t ORDER BY band
 """
 
 

@@ -61,9 +61,12 @@ def _attach_quality_lang(df: DataFrame, text_col: str) -> DataFrame:
         "*",
         F.array_distinct(F.transform(F.col("__toks"), F.lower)).alias("__ltoks"),
     )
-    quality = T.quality_columns(text_col, toks_col="__toks")[-1]
-    pred_lang = T.lang_columns(text_col, ltoks_col="__ltoks")[0]
-    return base.select("*", quality, pred_lang).drop("__toks", "__ltoks")
+    # pick each signal by name; the optimizer folds the struct away
+    quality = F.struct(*T.quality_columns(text_col, toks_col="__toks"))["quality"]
+    pred_lang = F.struct(*T.lang_columns(text_col, ltoks_col="__ltoks"))["pred_lang"]
+    return base.select(
+        "*", quality.alias("quality"), pred_lang.alias("pred_lang")
+    ).drop("__toks", "__ltoks")
 
 
 def curate_corpus(
@@ -90,6 +93,8 @@ def curate_corpus(
     boilerplate buckets otherwise blow up quadratically. NOTE: exact
     dedup runs BEFORE near-dup here, so identical boilerplate already
     collapsed — the cap matters for *near*-identical template families.
+    Raises ``ValueError`` if ``docs`` already carries a reserved
+    ``__toks`` or ``__ltoks`` column; drop them before calling.
     """
     # quality + lang are pure per-row expressions: attach them on the
     # scan — no enrichment joins, no shuffle (token arrays projected
@@ -236,7 +241,9 @@ def doc_signals(
     ungateable rows is how corpora leak garbage).
 
     Output: ``(id, quality, pred_lang, dup_ngram_ratio, n_bigrams,
-    avg_logp, ppl)``.
+    avg_logp, ppl)``. Raises ``ValueError`` if ``docs`` already carries
+    a reserved ``__toks`` or ``__ltoks`` column; drop them before
+    calling.
     """
     from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
         lm as LM,

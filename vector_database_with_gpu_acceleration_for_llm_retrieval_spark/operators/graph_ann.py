@@ -218,8 +218,7 @@ def graph_beam_search(
     # seen a small multiple) — at probe scale that is thousands of rows
     # spread over 32 shuffle partitions, and each round's TWO eager
     # checkpoints pay the empty-task floor 32x. Coalesce to a
-    # row-count-derived partition count before every pin (the
-    # part_pagerank r11 lesson, applied scale-correctly: a million-query
+    # row-count-derived partition count before every pin (a million-query
     # batch keeps full parallelism, a 200-query batch pins 1 task).
     # Measured on 20k corpus / 200 queries / rounds=4: 32.3 -> 23.2 s
     # (the residual is ~10 action barriers of local[32] job floor, which

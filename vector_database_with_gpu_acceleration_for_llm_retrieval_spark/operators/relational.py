@@ -1135,8 +1135,7 @@ def salted_join(
     explicit high-cardinality column upstream if that matters. This is
     the manual form of what AQE skew-join does adaptively; keep it for
     deterministic plans, pre-AQE engines, and skew the runtime can't
-    see (post-filter explosion). Pair with
-    ``profiling.hot_keys`` to decide when.
+    see (post-filter explosion).
     """
     if how not in ("inner", "left"):
         raise ValueError(f"salted_join supports inner/left, got {how!r}")

@@ -1320,8 +1320,7 @@ def nn_descent(
     is likely my neighbor", iterated to convergence, with NO index and
     NO all-pairs join.
 
-    Spark shape, all per-round equi-joins (the graph-module
-    discipline — pagerank/k-core's pinned-iteration rule):
+    Spark shape, all per-round equi-joins:
 
     - INIT: deterministic random blocking — THREE independent hash
       bucketings of expected size ~2k each

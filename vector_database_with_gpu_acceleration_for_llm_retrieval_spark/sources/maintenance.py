@@ -23,9 +23,16 @@ table with 10k partition directories compacts in a single job.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-__all__ = ["table_file_stats", "compact_collection", "publish_table", "PublishAuditError"]
+__all__ = [
+    "table_file_stats",
+    "compact_collection",
+    "audit_constraints",
+    "publish_table",
+    "PublishAuditError",
+]
 
 
 def _fs_and_path(spark: SparkSession, path: str):
@@ -121,6 +128,97 @@ def compact_collection(
     }
 
 
+def audit_constraints(
+    df: DataFrame,
+    not_null: list[str] | None = None,
+    unique: list[list[str]] | None = None,
+    fks: dict[str, tuple[DataFrame, str]] | None = None,
+    checks: dict[str, Column] | None = None,
+) -> DataFrame:
+    """Constraint audit — the pre-publish data-quality gate: one row
+    per declared constraint with its violation count.
+
+    * ``not_null``: columns that must never be NULL — counted in ONE
+      scan-wide aggregate shared by all such columns (and by
+      ``checks``), no per-constraint pass;
+    * ``unique``: key lists that must be unique — one groupBy per key
+      (count>1 groups summed), the same shuffle a dedup would pay;
+    * ``fks``: ``child_col → (parent_df, parent_col)`` referential
+      checks — anti-join counts; the parent key set is usually a
+      dimension, so AQE broadcasts it;
+    * ``checks``: named boolean Columns that must hold per row (range
+      checks, regex shapes) — violations counted in the shared scan.
+
+    Returns ``(constraint, kind, n_violations)`` via a union of the
+    tiny per-constraint scalar frames — a 100 TB audit costs one wide
+    scan plus one shuffle per uniqueness key plus one pruned anti-join
+    per FK, all independent jobs Catalyst can share scans across.
+    """
+    spark = df.sparkSession
+    results: list[DataFrame] = []
+    aggs, names = [], []
+    for c in not_null or []:
+        aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"__nn_{c}"))
+        names.append((f"not_null({c})", "not_null", f"__nn_{c}"))
+    for name, cond in (checks or {}).items():
+        # a NULL check result is a VIOLATION: "must hold per row" means
+        # rows where the predicate is unknown don't get to pass silently
+        aggs.append(
+            F.sum((~F.coalesce(cond, F.lit(False))).cast("long")).alias(f"__ck_{name}")
+        )
+        names.append((f"check({name})", "check", f"__ck_{name}"))
+    if aggs:
+        row = df.agg(*aggs)
+        structs = F.array(
+            *[
+                F.struct(
+                    F.lit(label).alias("constraint"),
+                    F.lit(kind).alias("kind"),
+                    F.coalesce(F.col(alias), F.lit(0)).alias("n_violations"),
+                )
+                for label, kind, alias in names
+            ]
+        )
+        results.append(row.select(F.explode(structs).alias("r")).select("r.*"))
+    for key in unique or []:
+        dup = (
+            df.groupBy(*key)
+            .agg(F.count(F.lit(1)).alias("__n"))
+            .filter(F.col("__n") > 1)
+            .agg(F.coalesce(F.sum(F.col("__n") - 1), F.lit(0)).alias("n_violations"))
+            .select(
+                F.lit(f"unique({','.join(key)})").alias("constraint"),
+                F.lit("unique").alias("kind"),
+                F.col("n_violations"),
+            )
+        )
+        results.append(dup)
+    for child_col, (parent, parent_col) in (fks or {}).items():
+        orphans = (
+            df.filter(F.col(child_col).isNotNull())
+            .join(
+                parent.select(F.col(parent_col).alias(child_col)).distinct(),
+                child_col,
+                "left_anti",
+            )
+            .agg(F.count(F.lit(1)).alias("n_violations"))
+            .select(
+                F.lit(f"fk({child_col})").alias("constraint"),
+                F.lit("fk").alias("kind"),
+                F.col("n_violations"),
+            )
+        )
+        results.append(orphans)
+    if not results:
+        return spark.createDataFrame(
+            [], "constraint string, kind string, n_violations long"
+        )
+    out = results[0]
+    for r in results[1:]:
+        out = out.unionByName(r)
+    return out
+
+
 class PublishAuditError(RuntimeError):
     """Raised when a write-audit-publish run fails its constraint
     audit; carries the violation rows and the staging path left on
@@ -157,12 +255,6 @@ def publish_table(
 
     Returns ``{rows, n_files, violations: []}`` on success.
     """
-    from pyspark.sql import functions as F  # noqa: F401
-
-    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators.profiling import (
-        audit_constraints,
-    )
-
     spark = df.sparkSession
     fs, hpath, jvm = _fs_and_path(spark, path)
     staging = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "__staging")
