@@ -218,22 +218,16 @@ SCALE_QUERIES = [
     # the two new operators with corpus-sized exchanges
     "dup_span_stats",
     "dsir_weights",
-    # round-6 families at scale: the heaviest TPC-H wave shape (Q9-style
-    # multi-join profit rollup) on the 10x lineitem, a corpus-wide
-    # textstats aggregate (per-doc type/token arrays), and the daily
-    # z-score anomaly scan over 10x events
-    "product_profit",
+    # round-6 family at scale: a corpus-wide textstats aggregate
+    # (per-doc type/token arrays)
     "lexical_diversity",
-    "daily_anomaly",
     # round-7 families at scale (r7 verdict #6): substring grep on 10x
     # docs (the SCAN path — same work as the DuckDB LIKE mirror; the
     # indexed variant rebuilds its trigram index per call, which is a
     # build-cost measurement, not a query ratio: 50 s build at 50k
-    # docs, recorded once in SURVEY, kept out of the per-round ratio),
-    # aligned-day Pearson series correlation, and the projected-shortlist
-    # kNN join
+    # docs, recorded once in SURVEY, kept out of the per-round ratio)
+    # and the projected-shortlist kNN join
     "grep_corpus",
-    "similar_series",
     "rp_knn_join",
     # round-8 additions: span-removal dedup (argmin + coverage-union
     # rebuild at 10x docs), the curation-to-packing composite, and
@@ -312,8 +306,8 @@ def _scale_probe(spark, qs, oracles) -> dict | None:
         load_table(spark, "events", SF_DIR).select("*", frepl).drop("rep").write.mode(
             "overwrite"
         ).parquet(f"{tmp}/events.parquet")
-        # dimension tables ride along verbatim (tiny) so star-join
-        # probes (product_profit & co) resolve against the scaled fact
+        # dimension tables ride along verbatim (tiny) so every catalog
+        # table, and every DuckDB view over it, resolves in the scaled dir
         for t in ("region", "nation", "customer", "supplier", "part", "orders"):
             spark.read.parquet(f"{SF_DIR}/{t}.parquet").write.mode(
                 "overwrite"

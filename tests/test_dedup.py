@@ -464,6 +464,19 @@ def test_remove_dup_spans_no_argmin_join_plan(spark):
     assert sum(s["joins"].values()) == 1, s["joins"]
 
 
+def test_fuzzy_pairs_hand_computed(spark):
+    rows = [
+        (1, "spark"), (2, "spork"),   # dist 1, same prefix 'sp' (len 2)
+        (3, "sprk"),                  # dist 1 to spark, same prefix
+        (4, "hadoop"),                # different block
+        (5, "sparkling"),             # length gap 4 > max_dist → pruned
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, name string")
+    got = {(r.id_a, r.id_b): r.dist for r in
+           D.fuzzy_pairs(df, "name", max_dist=2, prefix_len=2, id_col="doc_id").collect()}
+    assert got == {(1, 2): 1, (1, 3): 1, (2, 3): 1}  # spork→sprk: one deletion
+
+
 # r14: part of the fast driver-gate subset (default `pytest` selection
 # per pytest.ini; `-m ''` runs the full suite)
 import pytest as _pytest

@@ -1,5 +1,6 @@
 """Package hygiene: every module compiles cleanly, the engine runs from
-any working directory, and the default driver heap fits the host."""
+any working directory, the default driver heap fits the host, and a
+test run the default marker empties fails loudly."""
 
 from __future__ import annotations
 
@@ -79,3 +80,19 @@ def test_default_driver_heap_fits_host_memory(monkeypatch):
     heap_mb = int(heap[:-1]) * {"g": 1024, "m": 1}[heap[-1]]
     phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (1024 * 1024)
     assert heap_mb <= min(32 * 1024, phys_mb // 2), (heap, phys_mb)
+
+
+def test_run_with_every_test_deselected_by_the_marker_fails():
+    """test_clustering.py has no driver_gate test, so the default
+    ``-m driver_gate`` deselects all of it; that must be a usage error
+    naming ``-m ''``, not a silent run of nothing."""
+    proc = subprocess.run(
+        [sys.executable, "-m", "pytest", "tests/test_clustering.py",
+         "--collect-only", "-q", "-p", "no:cacheprovider"],
+        cwd=REPO,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == pytest.ExitCode.USAGE_ERROR, proc.stdout + proc.stderr
+    assert "pass -m '' to run them" in proc.stderr, proc.stderr

@@ -1,16 +1,9 @@
-"""Known-answer tests for the round-6 text/anomaly/interval wave:
-lexical_diversity, zipf_slope, readability_scores,
-interval_join_bucketed, zscore_anomaly."""
+"""Known-answer tests for the round-6 text-statistics wave:
+lexical_diversity, zipf_slope, readability_scores."""
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import functions as F
-
-from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators.temporal import (
-    interval_join_bucketed,
-    zscore_anomaly,
-)
 from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators.textstats import (
     lexical_diversity,
     readability_scores,
@@ -64,67 +57,6 @@ def test_readability_floors(spark):
     df = spark.createDataFrame([(1, "zzz zzz")], "doc_id long, text string")
     got = readability_scores(df).collect()[0]
     assert got.n_sentences == 1 and got.n_words == 2 and got.n_syllables == 2
-
-
-def test_interval_join_bucketed_boundaries(spark):
-    facts = spark.createDataFrame(
-        [(i,) for i in (3, 4, 17, 18, 32)], "day long"
-    )
-    ivals = spark.createDataFrame(
-        [("p1", 4, 18), ("p2", 18, 32)], "promo_id string, lo long, hi long"
-    )
-    got = {(r.day, r.promo_id) for r in
-           interval_join_bucketed(facts, ivals, "day", bucket=16).collect()}
-    # lo inclusive, hi exclusive; 32 is outside p2 even though the
-    # interval ends on a bucket boundary
-    assert got == {(4, "p1"), (17, "p1"), (18, "p2")}
-
-
-def test_interval_join_bucketed_matches_bruteforce(spark):
-    facts = spark.createDataFrame([(i,) for i in range(0, 100)], "day long")
-    ivals = spark.createDataFrame(
-        [(f"i{k}", k * 7, k * 7 + 11) for k in range(12)],
-        "promo_id string, lo long, hi long",
-    )
-    for bucket in (4, 16, 64):
-        got = {(r.day, r.promo_id) for r in
-               interval_join_bucketed(facts, ivals, "day", bucket=bucket).collect()}
-        brute = {(r.day, r.promo_id) for r in
-                 facts.join(ivals, (F.col("day") >= F.col("lo")) & (F.col("day") < F.col("hi"))).collect()}
-        assert got == brute
-
-
-def test_zscore_anomaly_hand_computed(spark):
-    import datetime as dt
-
-    rows = []
-    # type "a": counts 10, 10, 40 over three days → day3 spikes
-    for d, n in ((1, 10), (2, 10), (3, 40)):
-        rows += [(f"a", dt.datetime(2024, 1, d, 12, 0, 0))] * n
-    # type "b": one day only → no std, no alarm
-    rows += [("b", dt.datetime(2024, 1, 1, 9, 0, 0))] * 5
-    df = spark.createDataFrame(rows, "event_type string, ts timestamp")
-    got = {(r.event_type, str(r.day)): r for r in zscore_anomaly(df, threshold=2.0).collect()}
-    mu, sd = 20.0, math.sqrt(((10 - 20) ** 2 * 2 + (40 - 20) ** 2) / 2)
-    assert abs(got[("a", "2024-01-03")].z - (40 - mu) / sd) < 1e-9
-    assert not got[("a", "2024-01-01")].is_anomaly
-    b = got[("b", "2024-01-01")]
-    assert b.z is None and b.is_anomaly is False
-
-
-def test_zscore_anomaly_flat_series_null_z(spark):
-    # all-identical daily counts → sd = 0.0; must yield NULL z and
-    # is_anomaly=false (not an ANSI DIVIDE_BY_ZERO crash)
-    import datetime as dt
-
-    rows = []
-    for d in (1, 2, 3):
-        rows += [("flat", dt.datetime(2024, 1, d, 12, 0, 0))] * 7
-    df = spark.createDataFrame(rows, "event_type string, ts timestamp")
-    out = zscore_anomaly(df, threshold=2.0).collect()
-    assert len(out) == 3
-    for r in out:
-        assert r.z is None and r.is_anomaly is False
 
 
 # r14: part of the fast driver-gate subset (default `pytest` selection

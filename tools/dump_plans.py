@@ -216,19 +216,6 @@ AUDITED = {
         "jumping rounds), the doc-with-dup-sized component frame joins back "
         "(AQE broadcasts when sparse), then a pure-projection hash gate."
     ),
-    "rolling_hour": (
-        "Trailing time window: ONE Exchange on the key, RangeFrame on epoch-µs "
-        "— per-key window state bounded by the window span, not the corpus."
-    ),
-    "scd2_history": (
-        "SCD2 intervals: one shuffle on the key, one lead window in "
-        "deterministic (ts, id) order — equi-join-cost history derivation."
-    ),
-    "item_cooccurrence": (
-        "Co-visitation: distinct → per-user cap as WindowGroupLimit (map-side, "
-        "pre-shuffle — hot users bounded at cap² pairs), equi-self-join on user, "
-        "pair partial agg; no cartesian anywhere."
-    ),
     "value_rank": (
         "Exact global rank WITHOUT the single-task global window: range "
         "partition on the order key, per-partition row_number, P-row offset "
@@ -246,33 +233,11 @@ AUDITED = {
         "is a bounded per-group window — the streaming twin holds one "
         "(window, count) struct per key instead."
     ),
-    "decayed_engagement": (
-        "Factored exponential decay: per-key min and the cumulative sum "
-        "share ONE hashpartitioning exchange; no UDF, no recursion."
-    ),
-    "value_bars": (
-        "OHLC resampling: ONE map-side-combining groupBy per bar; "
-        "open/close via lexicographic struct min/max — no window, no "
-        "corpus sort."
-    ),
-    "event_transitions": (
-        "Markov transitions: per-user lead (bounded window state), pair "
-        "partial agg; probability normalizes over the tiny types² frame."
-    ),
-    "conversion_latency": (
-        "As-of lookback without a self-join: carry-forward max over "
-        "unbounded-preceding rows — one shuffle on the key."
-    ),
     "rp_topk": (
         "JL sign projection: ONE Arrow-batched fold per batch (the 1024-term "
         "unrolled expression fell off HotSpot's huge-method JIT cliff — round 8), "
         "scored and TakeOrderedAndProject'd like the flagship; no Exchange, no "
         "stored artifact (matrix is hash-derived)."
-    ),
-    "salted_join": (
-        "Salted skew join: fact salt is a pure projection, dim explodes ×salts; "
-        "the join keys are (key, salt) so a hot key spreads over salts tasks; "
-        "result provably identical to the plain join."
     ),
     "prefix_jaccard_pairs": (
         "Prefix-filtered all-pairs: document-frequency agg, rarity sort per doc "
@@ -294,11 +259,6 @@ AUDITED = {
         "set-level per-qid windowed argmax passes over |Q|*pool rows - the "
         "sequential greedy parallelized across queries."
     ),
-    "pareto_front": (
-        "Skyline: distinct pairs → per-hash-partition sort-sweep windows (local "
-        "prune), survivors into one tiny global sweep — the global sort sees "
-        "survivor counts, not the table."
-    ),
     "containment_pairs": (
         "Directed containment join: A-prefix explode joined against the full-B "
         "posting equi-key (SortMergeJoin on shingle), length filter, then two "
@@ -315,12 +275,6 @@ AUDITED = {
         "Compaction planning: per-partition windows over the file inventory "
         "only — the plan frame is inventory-sized; no global ordering, no "
         "driver greedy loop."
-    ),
-    "ar_forecast7": (
-        "AR(2)+bands (r10): one calendar aggregate + one lag equi-join onto "
-        "p·days pairs; Durbin-Levinson and the recursive forecasts are scalar "
-        "projections over 1-row broadcast frames; band quantiles over the "
-        "fitted-residual calendar frame."
     ),
     "sparse_topk": (
         "Sparse (SPLADE-shape) retrieval (r13-s2): inverted postings via one "

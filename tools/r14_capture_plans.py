@@ -36,11 +36,8 @@ BENCH_EXTRAS = [
     "budget_select",
     "dup_span_stats",
     "dsir_weights",
-    "product_profit",
     "lexical_diversity",
-    "daily_anomaly",
     "grep_corpus",
-    "similar_series",
     "rp_knn_join",
     "remove_dup_spans",
     "mixture_pipeline",

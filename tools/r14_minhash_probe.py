@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import dedup as D
 from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators.dedup import (
     MINHASH_PRIME,
-    jaccard_pairs,
     lsh_candidate_pairs,
     minhash_perms,
     minhash_signature,

@@ -223,12 +223,6 @@ sim AS (SELECT doc_id, CAST(list_sum(list_transform(range(0, {SIMHASH_BITS}),
 def _r6(expr: str, name: str) -> str:
     return f"round({expr}, 6) + 0.0 AS {name}"
 
-def _seq_dot(a, b) -> float:
-    """Sequential double fold — the exact arithmetic both engines run."""
-    s = 0.0
-    for x, y in zip(a, b):
-        s += float(x) * float(y)
-    return s
 
 def _oracle_model_lang_id() -> str:
     """Mirror of the trained head: hash-embed each doc in SQL, dot with
@@ -1978,31 +1972,6 @@ SELECT doc_id, {_r6('score', 'score')} FROM bm25
 ORDER BY score DESC, doc_id LIMIT {TOPK_K}
 """
 
-_ORACLE_SHIPPING_VOLUME = """
-SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
-       CAST(year(l_shipdate) AS INT) AS ship_year,
-       round(sum(l_extendedprice * (1 - l_discount)), 6) + 0.0 AS revenue
-FROM lineitem l
-JOIN orders o ON l.l_orderkey = o.o_orderkey
-JOIN customer c ON o.o_custkey = c.c_custkey
-JOIN supplier s ON l.l_suppkey = s.s_suppkey
-JOIN nation sn ON s.s_nationkey = sn.n_nationkey
-JOIN nation cn ON c.c_nationkey = cn.n_nationkey
-WHERE sn.n_name != cn.n_name
-GROUP BY 1, 2, 3
-"""
-
-_ORACLE_PROMO_SHARE = """
-WITH j AS (SELECT strftime(l_shipdate, '%Y-%m') AS ship_month,
-                  l_extendedprice * (1 - l_discount) AS rev,
-                  CASE WHEN p_type LIKE 'PROMO%' THEN l_extendedprice * (1 - l_discount)
-                       ELSE 0.0 END AS promo
-           FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey),
-a AS (SELECT ship_month, sum(promo) AS pr, sum(rev) AS tot FROM j GROUP BY 1)
-SELECT ship_month, round(pr, 6) + 0.0 AS promo_revenue, round(tot, 6) + 0.0 AS total_revenue,
-       round(100.0 * pr / tot, 6) + 0.0 AS promo_share_pct
-FROM a
-"""
 
 def _oracle_bm25_knn_join() -> str:
     k1, b = BM25_K1, BM25_B
@@ -3253,13 +3222,6 @@ SELECT p_brand, p_type, count(*) AS n_parts, round(avg(p_retailprice), 6) AS avg
 FROM part GROUP BY ROLLUP (p_brand, p_type)
 """
 
-_ORACLE_SUPPLIER_SHARE = """
-WITH rev AS (SELECT l_suppkey, sum(l_extendedprice * (1 - l_discount)) AS rev
-             FROM lineitem GROUP BY l_suppkey)
-SELECT s_suppkey, n_name, round(rev, 2) AS revenue,
-       round(rev / sum(rev) OVER (PARTITION BY n_name), 6) AS nation_share
-FROM rev JOIN supplier ON l_suppkey = s_suppkey JOIN nation ON s_nationkey = n_nationkey
-"""
 
 _ORACLE_CUST_NO_ORDERS = """
 SELECT c_custkey, c_mktsegment FROM customer
@@ -3267,11 +3229,6 @@ WHERE NOT EXISTS (SELECT 1 FROM orders
                   WHERE o_custkey = c_custkey AND o_orderdate >= '2001-01-01')
 """
 
-_ORACLE_SEGMENT_CHURN = """
-SELECT o_custkey FROM orders WHERE o_orderdate >= '1995-01-01' AND o_orderdate < '1996-01-01'
-EXCEPT
-SELECT o_custkey FROM orders WHERE o_orderdate >= '1996-01-01' AND o_orderdate < '1997-01-01'
-"""
 
 _ORACLE_ORDER_PRIORITY_CUBE = """
 SELECT o_orderpriority, o_orderstatus, count(*) AS n_orders,
@@ -3279,13 +3236,6 @@ SELECT o_orderpriority, o_orderstatus, count(*) AS n_orders,
 FROM orders GROUP BY CUBE (o_orderpriority, o_orderstatus)
 """
 
-_ORACLE_PRICE_PERCENTILES = """
-SELECT l_returnflag,
-       round(quantile_cont(l_extendedprice, 0.5), 4) AS p50,
-       round(quantile_cont(l_extendedprice, 0.95), 4) AS p95,
-       round(quantile_cont(l_extendedprice, 0.99), 4) AS p99
-FROM lineitem GROUP BY l_returnflag
-"""
 
 _ORACLE_EVENTS_HOURLY = """
 SELECT epoch_ns(ts) // 3600000000000 AS hour_bucket, event_type,
@@ -3353,38 +3303,6 @@ FROM documents d LEFT JOIN comp c ON c.doc_id = d.doc_id
 """
 
 
-_ORACLE_ROLLING_HOUR = """
-SELECT event_id, user_id,
-       CAST(count(*) OVER w AS BIGINT) AS n_window,
-       round(sum(value) OVER w, 6) + 0.0 AS sum_window
-FROM events
-WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
-             RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
-"""
-
-
-_ORACLE_SCD2_HISTORY = """
-WITH e AS (SELECT event_id, user_id, event_type, epoch_us(ts) AS ts_us FROM events)
-SELECT user_id, event_type, ts_us AS valid_from_us,
-       lead(ts_us) OVER w AS valid_to_us,
-       lead(ts_us) OVER w IS NULL AS is_current
-FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us ASC, event_id ASC)
-"""
-
-
-_ORACLE_ITEM_COOCCURRENCE = """
-WITH ui AS (SELECT DISTINCT user_id AS u,
-                   CAST(json_extract_string(props, '$.k') AS BIGINT) AS item
-            FROM events
-            WHERE json_extract_string(props, '$.k') IS NOT NULL),
-c AS (SELECT u, item, row_number() OVER (PARTITION BY u ORDER BY item ASC) AS rn FROM ui),
-k AS (SELECT u, item FROM c WHERE rn <= 50)
-SELECT a.item AS item_a, b.item AS item_b, CAST(count(*) AS BIGINT) AS n_users
-FROM k a JOIN k b ON a.u = b.u AND a.item < b.item
-GROUP BY 1, 2 HAVING count(*) >= 2
-"""
-
-
 _ORACLE_VALUE_RANK = """
 WITH r AS (SELECT event_id,
                   row_number() OVER (ORDER BY value ASC, event_id ASC) AS rank,
@@ -3393,30 +3311,6 @@ WITH r AS (SELECT event_id,
 SELECT event_id, CAST(rank AS BIGINT) AS rank,
        round(CASE WHEN n > 1 THEN (rank - 1) / CAST(n - 1 AS DOUBLE) ELSE 0.0 END, 6) + 0.0 AS pct
 FROM r
-"""
-
-
-_ORACLE_LARGE_ORDERS = """
-WITH q AS (SELECT l_orderkey, sum(l_quantity) AS total_qty
-           FROM lineitem GROUP BY 1 HAVING sum(l_quantity) > 150.0)
-SELECT c_name, o_custkey, o_orderkey,
-       strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate,
-       o_totalprice, round(total_qty, 6) + 0.0 AS total_qty
-FROM orders JOIN q ON o_orderkey = q.l_orderkey
-JOIN customer ON c_custkey = o_custkey
-ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 100
-"""
-
-
-_ORACLE_IDLE_RICH = """
-WITH a AS (SELECT avg(c_acctbal) AS av FROM customer WHERE c_acctbal > 0.0),
-g AS (SELECT c.* FROM customer c, a WHERE c.c_acctbal > a.av),
-i AS (SELECT * FROM g WHERE NOT EXISTS
-        (SELECT 1 FROM orders o WHERE o.o_custkey = g.c_custkey
-         AND o.o_orderdate >= DATE '2000-01-01'))
-SELECT c_mktsegment, CAST(count(*) AS BIGINT) AS n_custs,
-       round(sum(c_acctbal), 6) + 0.0 AS total_bal
-FROM i GROUP BY 1 ORDER BY 1
 """
 
 
@@ -3447,69 +3341,6 @@ untouched AS (SELECT s.* FROM snap s WHERE NOT EXISTS
 SELECT c_custkey, round(c_acctbal, 6) + 0.0 AS c_acctbal, c_mktsegment FROM untouched
 UNION ALL
 SELECT c_custkey, round(c_acctbal, 6) + 0.0, c_mktsegment FROM latest WHERE op <> 'D'
-"""
-
-
-_ORACLE_DECAYED_ENGAGEMENT = """
-WITH e AS (SELECT event_id, user_id, value, epoch_us(ts) AS us FROM events),
-m AS (SELECT *, min(us) OVER (PARTITION BY user_id) AS t0 FROM e),
-r AS (SELECT *, (us - t0) / 604800000000.0 AS rel FROM m)
-SELECT event_id, user_id,
-       round(sum(value * pow(2.0, rel)) OVER (
-               PARTITION BY user_id ORDER BY us ASC, event_id ASC
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-             * pow(2.0, -rel), 6) + 0.0 AS decayed_sum
-FROM r
-"""
-
-
-_ORACLE_MONTHLY_GROWTH = """
-WITH rev AS (SELECT strftime(l_shipdate, '%Y-%m') AS ship_month,
-                    sum(l_extendedprice * (1 - l_discount)) AS r
-             FROM lineitem GROUP BY 1)
-SELECT ship_month, round(r, 6) + 0.0 AS revenue,
-       round((r - lag(r) OVER (ORDER BY ship_month))
-             / lag(r) OVER (ORDER BY ship_month) * 100.0, 6) + 0.0 AS mom_growth_pct
-FROM rev ORDER BY ship_month
-"""
-
-
-_ORACLE_COHORT_MATRIX = """
-WITH f AS (SELECT user_id, strftime(min(ts), '%Y-%m-%d') AS cm FROM events GROUP BY 1),
-a AS (SELECT DISTINCT user_id, strftime(ts, '%Y-%m-%d') AS am FROM events)
-SELECT cm AS cohort_period,
-       CAST(date_diff('day', CAST(cm AS DATE), CAST(am AS DATE)) AS INT) AS period_offset,
-       CAST(count(DISTINCT a.user_id) AS BIGINT) AS n_users
-FROM a JOIN f USING (user_id) GROUP BY 1, 2 ORDER BY 1, 2
-"""
-
-
-_ORACLE_VALUE_BARS = """
-WITH e AS (SELECT event_id, value, epoch_us(ts) AS us FROM events),
-w AS (SELECT *, us - us % 3600000000 AS bar FROM e),
-r AS (SELECT *, row_number() OVER (PARTITION BY bar ORDER BY us, event_id) AS rf,
-             row_number() OVER (PARTITION BY bar ORDER BY us DESC, event_id DESC) AS rl
-      FROM w)
-SELECT bar AS bar_start_us,
-       round(max(CASE WHEN rf = 1 THEN value END), 6) + 0.0 AS open,
-       round(max(value), 6) + 0.0 AS high,
-       round(min(value), 6) + 0.0 AS low,
-       round(max(CASE WHEN rl = 1 THEN value END), 6) + 0.0 AS close,
-       CAST(count(*) AS BIGINT) AS n_events,
-       round(sum(value), 6) + 0.0 AS volume
-FROM r GROUP BY bar
-"""
-
-
-_ORACLE_EVENT_TRANSITIONS = """
-WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS us, event_id FROM events),
-p AS (SELECT event_type AS from_type,
-             lead(event_type) OVER (PARTITION BY user_id ORDER BY us ASC, event_id ASC) AS to_type
-      FROM e),
-c AS (SELECT from_type, to_type, count(*) AS n FROM p WHERE to_type IS NOT NULL GROUP BY 1, 2)
-SELECT from_type, to_type, CAST(n AS BIGINT) AS n,
-       round(n / CAST(sum(n) OVER (PARTITION BY from_type) AS DOUBLE), 6) + 0.0 AS prob
-FROM c
 """
 
 
@@ -3552,31 +3383,6 @@ FROM m
 """
 
 
-_ORACLE_CONVERSION_LATENCY = """
-WITH e AS (SELECT event_id, user_id, event_type, epoch_us(ts) AS us FROM events),
-w AS (SELECT *, max(CASE WHEN event_type = 'view' THEN us END) OVER (
-         PARTITION BY user_id ORDER BY us ASC, event_id ASC
-         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS lf
-      FROM e)
-SELECT event_id, user_id,
-       round((us - lf) / 1000000.0, 6) + 0.0 AS latency_sec
-FROM w WHERE event_type = 'purchase'
-"""
-
-
-_ORACLE_SESSION_PATHS = """
-WITH e AS (SELECT event_id, user_id, event_type, epoch_us(ts) AS us FROM events),
-l AS (SELECT *, lag(us) OVER (PARTITION BY user_id ORDER BY us, event_id) AS prev FROM e),
-f AS (SELECT *, CASE WHEN prev IS NULL OR (us - prev) / 1000000 > 30 * 60 THEN 1 ELSE 0 END AS brk FROM l),
-s AS (SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY us, event_id
-                               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid FROM f),
-p AS (SELECT array_to_string(list_slice(list(event_type ORDER BY us, event_id), 1, 5), '>') AS path
-      FROM s GROUP BY user_id, sid)
-SELECT path, CAST(count(*) AS BIGINT) AS n_sessions
-FROM p GROUP BY path ORDER BY n_sessions DESC, path ASC LIMIT 20
-"""
-
-
 _ORACLE_FUZZY_TITLES = """
 WITH base AS (SELECT doc_id, substr(text, 1, 12) AS name FROM documents
               UNION ALL
@@ -3589,218 +3395,6 @@ SELECT a.doc_id AS id_a, b.doc_id AS id_b,
 FROM k a JOIN k b ON a.pfx = b.pfx AND a.doc_id < b.doc_id
 WHERE levenshtein(a.name, b.name) <= 2
 """
-
-
-_ORACLE_DAU_WAU = """
-WITH ud AS (SELECT DISTINCT CAST(ts AS DATE) AS day, user_id FROM events),
-days AS (SELECT DISTINCT day FROM ud),
-wau AS (SELECT d.day, count(DISTINCT u.user_id) AS wau
-        FROM days d JOIN ud u
-          ON u.day <= d.day AND u.day >= d.day - INTERVAL 6 DAY
-        GROUP BY d.day),
-dau AS (SELECT day, count(DISTINCT user_id) AS dau FROM ud GROUP BY day)
-SELECT strftime(dau.day, '%Y-%m-%d') AS day,
-       CAST(dau.dau AS BIGINT) AS dau, CAST(wau.wau AS BIGINT) AS wau,
-       round(dau.dau / CAST(wau.wau AS DOUBLE), 6) + 0.0 AS stickiness
-FROM dau JOIN wau USING (day) ORDER BY day
-"""
-
-
-_ORACLE_RFM_SCORES = """
-WITH pc AS (SELECT o_custkey,
-                   date_diff('day', CAST(max(o_orderdate) AS DATE), DATE '2001-09-01') AS rec_days,
-                   count(*) AS freq, sum(o_totalprice) AS monetary
-            FROM orders GROUP BY 1),
-n AS (SELECT count(*) AS n FROM pc),
-r AS (SELECT pc.*,
-             row_number() OVER (ORDER BY rec_days ASC, o_custkey ASC) AS rr,
-             row_number() OVER (ORDER BY freq ASC, o_custkey ASC) AS rf,
-             row_number() OVER (ORDER BY monetary ASC, o_custkey ASC) AS rm,
-             n.n FROM pc CROSS JOIN n),
-s AS (SELECT *,
-        CASE WHEN n > 1 THEN (rr - 1) / CAST(n - 1 AS DOUBLE) ELSE 0.0 END AS pr,
-        CASE WHEN n > 1 THEN (rf - 1) / CAST(n - 1 AS DOUBLE) ELSE 0.0 END AS pf,
-        CASE WHEN n > 1 THEN (rm - 1) / CAST(n - 1 AS DOUBLE) ELSE 0.0 END AS pm
-      FROM r)
-SELECT o_custkey, CAST(rec_days AS INT) AS rec_days, CAST(freq AS BIGINT) AS freq,
-       round(monetary, 6) + 0.0 AS monetary,
-       CAST(6 - (least(floor(pr * 5), 4) + 1) AS INT) AS r_score,
-       CAST(least(floor(pf * 5), 4) + 1 AS INT) AS f_score,
-       CAST(least(floor(pm * 5), 4) + 1 AS INT) AS m_score
-FROM s
-"""
-
-
-_ORACLE_MIN_COST_SUPPLIER = """
-WITH ps AS (SELECT l_partkey, l_suppkey,
-                   round(min(l_extendedprice / l_quantity), 6) AS supply_cost
-            FROM lineitem WHERE l_quantity > 0 GROUP BY 1, 2),
-dim AS (SELECT s_suppkey, s_name, s_acctbal, n_name FROM supplier
-        JOIN nation ON s_nationkey = n_nationkey
-        JOIN region ON n_regionkey = r_regionkey AND r_name = 'ASIA'),
-scoped AS (SELECT ps.*, dim.s_name, dim.s_acctbal, dim.n_name, p.p_brand, p.p_partkey
-           FROM ps JOIN dim ON ps.l_suppkey = dim.s_suppkey
-           JOIN (SELECT p_partkey, p_brand FROM part WHERE p_size <= 15) p
-             ON ps.l_partkey = p.p_partkey),
-m AS (SELECT *, min(supply_cost) OVER (PARTITION BY p_partkey) AS mc FROM scoped)
-SELECT s_acctbal, s_name, n_name, p_partkey, p_brand,
-       round(supply_cost, 6) + 0.0 AS supply_cost
-FROM m WHERE supply_cost = mc
-ORDER BY s_acctbal DESC, n_name, s_name, p_partkey LIMIT 100
-"""
-
-
-_ORACLE_UNSHIPPED_ORDERS = """
-WITH g AS (SELECT l_orderkey, o_orderdate, o_orderpriority,
-                  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-           FROM lineitem
-           JOIN orders ON l_orderkey = o_orderkey
-           JOIN customer ON o_custkey = c_custkey AND c_mktsegment = 'BUILDING'
-           WHERE l_shipdate > TIMESTAMP '1998-06-01'
-             AND o_orderdate < TIMESTAMP '1998-06-01'
-           GROUP BY 1, 2, 3)
-SELECT l_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate,
-       o_orderpriority, round(revenue, 6) + 0.0 AS revenue
-FROM g ORDER BY g.revenue DESC, l_orderkey ASC LIMIT 10
-"""
-
-
-_ORACLE_RETURNED_REVENUE = """
-WITH g AS (SELECT c_custkey, c_name, c_acctbal, n_name,
-                  round(sum(l_extendedprice * (1 - l_discount)), 2) AS lost_revenue
-           FROM lineitem
-           JOIN orders ON l_orderkey = o_orderkey
-            AND o_orderdate >= TIMESTAMP '1999-01-01'
-            AND o_orderdate < TIMESTAMP '1999-01-01' + INTERVAL 90 DAY
-           JOIN customer ON o_custkey = c_custkey
-           JOIN nation ON c_nationkey = n_nationkey
-           WHERE l_returnflag = 'R'
-           GROUP BY 1, 2, 3, 4)
-SELECT c_custkey, c_name, c_acctbal, n_name,
-       round(lost_revenue, 6) + 0.0 AS lost_revenue
-FROM g ORDER BY g.lost_revenue DESC, c_custkey ASC LIMIT 20
-"""
-
-
-_ORACLE_TOP_SUPPLIER = """
-WITH rev AS (SELECT l_suppkey,
-                    round(sum(l_extendedprice * (1 - l_discount)), 2) AS total_revenue
-             FROM lineitem
-             WHERE l_shipdate >= TIMESTAMP '1999-01-01'
-               AND l_shipdate < TIMESTAMP '1999-01-01' + INTERVAL 90 DAY
-             GROUP BY 1)
-SELECT s_suppkey, s_name, round(total_revenue, 6) + 0.0 AS total_revenue
-FROM rev JOIN supplier ON l_suppkey = s_suppkey
-WHERE total_revenue = (SELECT max(total_revenue) FROM rev)
-ORDER BY s_suppkey
-"""
-
-
-_ORACLE_PART_SUPPLIER_COUNTS = """
-WITH links AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem)
-SELECT p_brand, p_type, CAST(p_size AS BIGINT) AS p_size,
-       CAST(count(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
-FROM links JOIN part ON l_partkey = p_partkey
-WHERE p_brand <> 'Brand#45'
-GROUP BY 1, 2, 3
-ORDER BY supplier_cnt DESC, p_brand, p_type, p_size LIMIT 50
-"""
-
-
-_ORACLE_SMALL_QTY_REVENUE = """
-WITH scoped AS (SELECT l_partkey, l_quantity, l_extendedprice
-                FROM lineitem JOIN part
-                  ON l_partkey = p_partkey AND p_brand = 'Brand#23'),
-a AS (SELECT l_partkey AS pk, avg(l_quantity) AS aq FROM scoped GROUP BY 1)
-SELECT round(round(sum(l_extendedprice) / 7.0, 2), 6) + 0.0 AS avg_yearly
-FROM scoped JOIN a ON l_partkey = pk
-WHERE l_quantity < 0.5 * aq
-"""
-
-
-_ORACLE_DISJUNCTIVE_REVENUE = """
-SELECT round(round(sum(l_extendedprice * (1 - l_discount)), 2), 6) + 0.0 AS revenue
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5
-       AND l_quantity BETWEEN 1 AND 11)
-   OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 10
-       AND l_quantity BETWEEN 10 AND 20)
-   OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 15
-       AND l_quantity BETWEEN 20 AND 30)
-"""
-
-
-_ORACLE_ORDER_LAGGARDS = """
-WITH per_os AS (SELECT l_orderkey, l_suppkey, max(l_shipdate) AS s_last
-                FROM lineitem GROUP BY 1, 2),
-w1 AS (SELECT *, count(*) OVER (PARTITION BY l_orderkey) AS n_supp,
-              max(s_last) OVER (PARTITION BY l_orderkey) AS o_last
-       FROM per_os),
-w2 AS (SELECT *, sum(CASE WHEN s_last = o_last THEN 1 ELSE 0 END)
-                 OVER (PARTITION BY l_orderkey) AS n_last
-       FROM w1)
-SELECT s_name, CAST(count(*) AS BIGINT) AS numwait
-FROM w2 JOIN supplier ON l_suppkey = s_suppkey
-WHERE n_supp >= 2 AND s_last = o_last AND n_last = 1
-GROUP BY 1 ORDER BY numwait DESC, s_name LIMIT 20
-"""
-
-
-_ORACLE_MARKET_SHARE = """
-SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
-       round(sum(CASE WHEN sn.n_name = 'NATION_3'
-                      THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END)
-             / sum(l_extendedprice * (1 - l_discount)), 6) + 0.0 AS mkt_share
-FROM lineitem
-JOIN part ON l_partkey = p_partkey AND p_type = 'ECONOMY'
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation cn ON c_nationkey = cn.n_nationkey
-JOIN region ON cn.n_regionkey = r_regionkey AND r_name = 'EUROPE'
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation sn ON s_nationkey = sn.n_nationkey
-GROUP BY 1 ORDER BY 1
-"""
-
-
-_ORACLE_PRODUCT_PROFIT = """
-SELECT n_name, CAST(year(l_shipdate) AS BIGINT) AS o_year,
-       round(round(sum(l_extendedprice * (1 - l_discount)
-                       - 0.5 * p_retailprice * l_quantity), 2), 6) + 0.0 AS sum_profit
-FROM lineitem
-JOIN part ON l_partkey = p_partkey AND p_name LIKE '%widget%'
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation ON s_nationkey = n_nationkey
-GROUP BY 1, 2 ORDER BY n_name, o_year DESC
-"""
-
-
-_ORACLE_IMPORTANT_PARTS = """
-WITH pp AS (SELECT l_partkey, sum(l_extendedprice * (1 - l_discount)) AS v
-            FROM lineitem
-            JOIN supplier ON l_suppkey = s_suppkey
-            JOIN nation ON s_nationkey = n_nationkey AND n_name = 'NATION_1'
-            GROUP BY 1)
-SELECT l_partkey, round(round(v, 2), 6) + 0.0 AS part_value
-FROM pp WHERE round(v, 2) > round(0.001 * (SELECT sum(v) FROM pp), 2)
-ORDER BY round(v, 2) DESC, l_partkey
-"""
-
-
-_ORACLE_LATE_SHIP_PRIORITY = """
-WITH j AS (SELECT o_orderpriority,
-                  date_diff('day', CAST(o_orderdate AS DATE),
-                            CAST(l_shipdate AS DATE)) > 60 AS late
-           FROM lineitem JOIN orders ON l_orderkey = o_orderkey)
-SELECT o_orderpriority,
-       CAST(count(*) AS BIGINT) AS n_lines,
-       CAST(sum(CASE WHEN late THEN 1 ELSE 0 END) AS BIGINT) AS n_late,
-       CAST(sum(CASE WHEN late AND o_orderpriority IN ('1-URGENT', '2-HIGH')
-                THEN 1 ELSE 0 END) AS BIGINT) AS n_late_urgent,
-       round(sum(CASE WHEN late THEN 1.0 ELSE 0.0 END) / count(*), 6) + 0.0 AS late_share
-FROM j GROUP BY 1 ORDER BY 1
-"""
-
 
 
 _ORACLE_LEXICAL_DIVERSITY = r"""
@@ -3850,53 +3444,6 @@ SELECT doc_id,
        round(206.835 - 1.015 * (n_words / CAST(n_sents AS DOUBLE))
              - 84.6 * (greatest(vg, n_words) / CAST(n_words AS DOUBLE)), 6) + 0.0 AS flesch
 FROM m
-"""
-
-
-_ORACLE_DAILY_ANOMALY = """
-WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS n_events
-               FROM events GROUP BY 1, 2),
-st AS (SELECT event_type, avg(n_events) AS mu, stddev_samp(n_events) AS sd
-       FROM daily GROUP BY 1)
-SELECT daily.event_type, strftime(day, '%Y-%m-%d') AS day,
-       CAST(n_events AS BIGINT) AS n_events,
-       round((n_events - mu) / nullif(sd, 0), 6) + 0.0 AS z,
-       coalesce(abs((n_events - mu) / nullif(sd, 0)) >= 2.0, FALSE) AS is_anomaly
-FROM daily JOIN st USING (event_type)
-"""
-
-
-_ORACLE_SIMILAR_SERIES = """
-WITH daily AS (SELECT event_type AS key, CAST(ts AS DATE) AS day, count(*) AS n
-               FROM events GROUP BY 1, 2),
-q AS (SELECT day, n AS qn FROM daily WHERE key = 'click'),
-j AS (SELECT daily.key, CAST(daily.n AS DOUBLE) AS x, CAST(q.qn AS DOUBLE) AS y
-      FROM daily JOIN q USING (day) WHERE daily.key <> 'click'),
-a AS (SELECT key, count(*) AS n_days, sum(x) AS sx, sum(y) AS sy,
-             sum(x*x) AS sxx, sum(y*y) AS syy, sum(x*y) AS sxy
-      FROM j GROUP BY 1),
-c AS (SELECT key, n_days,
-             (n_days*sxy - sx*sy)
-             / nullif(sqrt(n_days*sxx - sx*sx) * sqrt(n_days*syy - sy*sy), 0) AS corr
-      FROM a)
-SELECT key, CAST(n_days AS BIGINT) AS n_days, round(corr, 6) + 0.0 AS corr
-FROM c WHERE n_days >= 3 AND corr IS NOT NULL
-ORDER BY corr DESC, key LIMIT 4
-"""
-
-
-_ORACLE_MAD_ANOMALY = """
-WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS n_events
-               FROM events GROUP BY 1, 2),
-med AS (SELECT event_type, quantile_cont(n_events, 0.5) AS med FROM daily GROUP BY 1),
-mad AS (SELECT daily.event_type, any_value(med) AS med,
-               quantile_cont(abs(n_events - med), 0.5) AS mad
-        FROM daily JOIN med USING (event_type) GROUP BY 1)
-SELECT daily.event_type, strftime(day, '%Y-%m-%d') AS day,
-       CAST(n_events AS BIGINT) AS n_events,
-       round(0.6745 * (n_events - med) / nullif(mad, 0), 6) + 0.0 AS mz,
-       coalesce(abs(0.6745 * (n_events - med) / nullif(mad, 0)) >= 3.5, FALSE) AS is_anomaly
-FROM daily JOIN mad USING (event_type)
 """
 
 
@@ -3950,47 +3497,6 @@ SELECT doc_id, lang,
                                   ORDER BY CAST(n_chars AS DOUBLE), doc_id), 6) + 0.0 AS pctl
 FROM documents
 """
-
-
-_ORACLE_CUMULATIVE_USERS = """
-WITH f AS (SELECT user_id, min(CAST(ts AS DATE)) AS day FROM events GROUP BY 1),
-d AS (SELECT day, count(*) AS n_new FROM f GROUP BY 1)
-SELECT strftime(day, '%Y-%m-%d') AS day,
-       CAST(n_new AS BIGINT) AS n_new,
-       CAST(sum(n_new) OVER (ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS n_total
-FROM d
-"""
-
-
-_ORACLE_WEEKDAY_ANOMALY = """
-WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS n_events
-               FROM events GROUP BY 1, 2),
-d2 AS (SELECT *, dayofweek(day) AS dow FROM daily),
-st AS (SELECT event_type, dow, avg(n_events) AS mu, stddev_samp(n_events) AS sd
-       FROM d2 GROUP BY 1, 2)
-SELECT d2.event_type, strftime(day, '%Y-%m-%d') AS day,
-       CAST(n_events AS BIGINT) AS n_events,
-       round((n_events - mu) / nullif(sd, 0), 6) + 0.0 AS z,
-       coalesce(abs((n_events - mu) / nullif(sd, 0)) >= 2.0, FALSE) AS is_anomaly
-FROM d2 JOIN st USING (event_type, dow)
-"""
-
-
-_ORACLE_PROMO_ORDERS = """
-WITH m AS (SELECT DISTINCT date_trunc('month', o_orderdate) AS m FROM orders),
-promos AS (SELECT strftime(m, '%Y-%m') AS promo_id,
-                  date_diff('day', DATE '1970-01-01', CAST(m AS DATE)) + 4 AS lo,
-                  date_diff('day', DATE '1970-01-01', CAST(m AS DATE)) + 18 AS hi
-           FROM m),
-f AS (SELECT date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS day,
-             o_totalprice
-      FROM orders)
-SELECT promo_id, CAST(count(*) AS BIGINT) AS n_orders,
-       round(round(sum(o_totalprice), 2), 6) + 0.0 AS revenue
-FROM f JOIN promos ON day >= lo AND day < hi
-GROUP BY 1 ORDER BY 1
-"""
-
 
 
 _ORACLE_KFOLD_ASSIGN = f"""
@@ -4047,11 +3553,6 @@ INTERSECT
 SELECT o_custkey FROM orders WHERE o_orderdate >= '1996-01-01' AND o_orderdate < '1997-01-01'
 """
 
-_ORACLE_MONTHLY_REVENUE = """
-SELECT CAST(year(o_orderdate) AS INT) AS yr, CAST(month(o_orderdate) AS INT) AS mon,
-       count(*) AS n_orders, round(sum(o_totalprice), 2) AS revenue
-FROM orders GROUP BY 1, 2
-"""
 
 _ORACLE_EVENTS_MOVING_AVG = """
 SELECT event_id, user_id, epoch_us(ts) AS ts_us,
@@ -4060,18 +3561,6 @@ SELECT event_id, user_id, epoch_us(ts) AS ts_us,
 FROM events
 """
 
-_ORACLE_STATUS_PIVOT = """
-SELECT o_orderpriority,
-       count(*) FILTER (o_orderstatus = 'F') AS "F",
-       count(*) FILTER (o_orderstatus = 'O') AS "O",
-       count(*) FILTER (o_orderstatus = 'P') AS "P"
-FROM orders GROUP BY o_orderpriority
-"""
-
-_ORACLE_DISTINCT_USERS = """
-SELECT event_type, count(DISTINCT user_id) AS n_users
-FROM events GROUP BY event_type
-"""
 
 _ORACLE_USER_GAPS = """
 WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us FROM events),
@@ -4160,18 +3649,9 @@ QUALIFY session_id <> max(session_id) OVER (PARTITION BY user_id)
 )
 
 
-
 # ---------------------------------------------------------------------------
-# round 8: skew join, exact all-pairs, z-order
+# round 8: exact all-pairs, z-order
 # ---------------------------------------------------------------------------
-
-
-_ORACLE_SALTED_JOIN = f"""
-SELECT p_brand, CAST(count(*) AS BIGINT) AS n_lines,
-       {_r6('round(sum(l_extendedprice * (1 - l_discount)), 2)', 'revenue')}
-FROM lineitem JOIN part ON l_partkey = p_partkey
-GROUP BY p_brand ORDER BY p_brand
-"""
 
 
 def _oracle_prefix_jaccard_pairs() -> str:
@@ -4214,34 +3694,6 @@ FROM b GROUP BY bucket ORDER BY bucket
 """
 
 
-
-
-_ORACLE_PARETO_FRONT = f"""
-WITH d AS (SELECT DISTINCT p_retailprice AS price, p_size AS size FROM part)
-SELECT {_r6('a.price', 'p_retailprice')}, CAST(a.size AS BIGINT) AS p_size
-FROM d a
-WHERE NOT EXISTS (SELECT 1 FROM d b
-                  WHERE b.price <= a.price AND b.size >= a.size
-                    AND (b.price < a.price OR b.size > a.size))
-ORDER BY p_retailprice, p_size
-"""
-
-
-_ORACLE_METRICS_LONG = f"""
-WITH m AS (SELECT CAST(year(l_shipdate) AS INT) AS yr,
-                  CAST(month(l_shipdate) AS INT) AS mon,
-                  sum(l_quantity) AS sum_qty,
-                  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-           FROM lineitem GROUP BY 1, 2)
-SELECT yr, mon, 'sum_qty' AS metric, {_r6('round(sum_qty, 2)', 'value')} FROM m
-UNION ALL
-SELECT yr, mon, 'revenue' AS metric, {_r6('round(revenue, 2)', 'value')} FROM m
-ORDER BY yr, mon, metric
-"""
-
-
-
-
 def _oracle_sql_grouping_sets() -> str:
     """Verbatim portable text (contract.PORTABLE_SQL_GROUPING_SETS)."""
     from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.contract import (
@@ -4249,43 +3701,6 @@ def _oracle_sql_grouping_sets() -> str:
     )
 
     return PORTABLE_SQL_GROUPING_SETS
-
-
-_ORACLE_SEASONAL_DECOMPOSE = f"""
-WITH d AS (SELECT CAST(ts AS DATE) AS day, sum(value) AS y FROM events GROUP BY 1),
-t AS (SELECT day, y,
-             avg(y) OVER (ORDER BY day ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS trend
-      FROM d),
-dt AS (SELECT day, y, trend, y - trend AS det FROM t),
-s AS (SELECT day, y, trend, det,
-             avg(det) OVER (PARTITION BY dayofweek(day)) - avg(det) OVER () AS seasonal
-      FROM dt)
-SELECT strftime(day, '%Y-%m-%d') AS day, {_r6('y', 'y')}, {_r6('trend', 'trend')},
-       {_r6('seasonal', 'seasonal')}, {_r6('det - seasonal', 'resid')}
-FROM s ORDER BY day
-"""
-
-
-_ORACLE_ATTRIBUTION_LAST_TOUCH = """
-WITH e AS (SELECT user_id, epoch_ns(ts) AS tsn, event_id, event_type FROM events),
-r AS (SELECT user_id, tsn, event_id, event_type,
-             last_value(CASE WHEN event_type <> 'purchase' THEN tsn END IGNORE NULLS)
-               OVER w AS touch_ts,
-             last_value(CASE WHEN event_type <> 'purchase' THEN event_id END IGNORE NULLS)
-               OVER w AS touch_id,
-             last_value(CASE WHEN event_type <> 'purchase' THEN event_type END IGNORE NULLS)
-               OVER w AS touch_type
-      FROM e
-      WINDOW w AS (PARTITION BY user_id ORDER BY tsn, event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING))
-SELECT CAST(event_id AS BIGINT) AS conv_id, CAST(user_id AS BIGINT) AS user,
-       CAST(tsn AS BIGINT) AS conv_ts, CAST(touch_id AS BIGINT) AS touch_id,
-       touch_type, CAST(tsn - touch_ts AS BIGINT) AS gap_ns
-FROM r WHERE event_type = 'purchase'
-ORDER BY conv_id
-"""
-
-
 
 
 def _oracle_mmr_topk() -> str:
@@ -4325,8 +3740,6 @@ SELECT CAST(id AS BIGINT) AS id, CAST(rank AS INT) AS rank,
        {_r6('rel', 'rel')}, {_r6('mmr', 'mmr')}
 FROM ({union}) ORDER BY rank
 """
-
-
 
 
 def _oracle_mmr_knn_join() -> str:
@@ -4376,8 +3789,6 @@ FROM ({union}) ORDER BY qid, rank
 """
 
 
-
-
 def _oracle_kcenter_select() -> str:
     """Gonzalez greedy unrolled into k SQL steps — same seed, same
     min-L2² fold, same argmax tie-breaks."""
@@ -4409,10 +3820,8 @@ FROM ({union}) ORDER BY rank
 """
 
 
-
-
 # ---------------------------------------------------------------------------
-# round 9: priority sampling, change points, AR forecast
+# round 9: priority sampling
 # ---------------------------------------------------------------------------
 
 
@@ -4433,127 +3842,6 @@ SELECT doc_id, {_r6('weight', 'weight')}, {_r6('priority', 'priority')},
        {_r6('greatest(weight, tau)', 'est_weight')}
 FROM r, t WHERE rn <= 50
 ORDER BY priority DESC, doc_id ASC
-"""
-
-
-_ORACLE_CUSUM = f"""
-WITH daily AS (SELECT event_type AS key, CAST(ts AS DATE) AS day,
-                      count(*) AS n_events
-               FROM events GROUP BY 1, 2),
-st AS (SELECT key, avg(n_events) AS mu,
-              CASE WHEN stddev_samp(n_events) = 0 THEN NULL
-                   ELSE stddev_samp(n_events) END AS sd
-       FROM daily GROUP BY key),
-d AS (SELECT daily.key, day, n_events,
-             (n_events - mu) / sd AS dev FROM daily JOIN st USING (key)),
-p AS (SELECT key, day, n_events,
-             sum(dev - 0.25) OVER w AS pu,
-             sum(-dev - 0.25) OVER w AS pd
-      FROM d WINDOW w AS (PARTITION BY key ORDER BY day
-                          ROWS UNBOUNDED PRECEDING)),
-s AS (SELECT key, day, n_events,
-             pu - least(0.0, min(pu) OVER w) AS s_up,
-             pd - least(0.0, min(pd) OVER w) AS s_down
-      FROM p WINDOW w AS (PARTITION BY key ORDER BY day
-                          ROWS UNBOUNDED PRECEDING))
-SELECT key AS event_type, strftime(day, '%Y-%m-%d') AS day,
-       CAST(n_events AS BIGINT) AS n_events,
-       {_r6('s_up', 's_up')}, {_r6('s_down', 's_down')},
-       coalesce(s_up > 3.0 OR s_down > 3.0, false) AS is_change
-FROM s ORDER BY event_type, day
-"""
-
-
-def _oracle_ar_forecast7(p: int = 2, horizon: int = 7) -> str:
-    """The identical AR(p) unroll in SQL, generated by the same loops
-    as operators/temporal.ar_forecast / ar_fitted (the pacf_daily
-    precedent): integer calendar-lag pair sums, the same
-    left-associated c_j / Durbin-Levinson / forecast expression
-    orders, residual quantile bands."""
-    rho = ", ".join(
-        f"(CAST(sab{j} AS DOUBLE) - mu * CAST(sa{j} AS DOUBLE)"
-        f" - mu * CAST(sb{j} AS DOUBLE) + CAST(nj{j} AS DOUBLE) * mu * mu)"
-        f" / (CASE WHEN c0 <> 0 THEN c0 END) AS r{j}"
-        for j in range(1, p + 1)
-    )
-    levels = ["l1 AS (SELECT rr.*, r1 AS p1_1 FROM rr)"]
-    for k in range(2, p + 1):
-        num_terms = " + ".join(f"p{k - 1}_{j} * r{k - j}" for j in range(1, k))
-        den_terms = " + ".join(f"p{k - 1}_{j} * r{j}" for j in range(1, k))
-        levels.append(
-            f"l{k}a AS (SELECT *, (r{k} - ({num_terms}))"
-            f" / (CASE WHEN 1.0 - ({den_terms}) <> 0 THEN 1.0 - ({den_terms}) END)"
-            f" AS p{k}_{k} FROM l{k - 1})"
-        )
-        coeffs = ", ".join(
-            f"p{k - 1}_{j} - p{k}_{k} * p{k - 1}_{k - j} AS p{k}_{j}"
-            for j in range(1, k)
-        )
-        levels.append(f"l{k} AS (SELECT *, {coeffs} FROM l{k}a)")
-    wide = ", ".join(
-        f"max(CASE WHEN lag = {j} THEN {c} END) AS {c}{j}"
-        for j in range(1, p + 1)
-        for c in ("nj", "sa", "sb", "sab")
-    )
-    lastv = ", ".join(
-        f"max(CASE WHEN rn = {j} THEN y END) AS v{j}" for j in range(1, p + 1)
-    )
-    # recursive forecasts as chained CTEs (f_h references f_{h-1});
-    # deviation of x_{n+i}: known v_{1-i} for i <= 0, forecast for i >= 1
-    def dev(i: int) -> str:
-        return f"(f{i} - mu)" if i >= 1 else f"(CAST(v{1 - i} AS DOUBLE) - mu)"
-
-    fcs = []
-    prev = "m"
-    for h in range(1, horizon + 1):
-        terms = " + ".join(
-            f"p{p}_{j} * {dev(h - j)}" for j in range(1, p + 1)
-        )
-        fcs.append(f"fc{h} AS (SELECT *, mu + ({terms}) AS f{h} FROM {prev})")
-        prev = f"fc{h}"
-    fit_joins = " ".join(
-        f"JOIN d lag{j} ON lag{j}.day = d.day - to_days({j})"
-        for j in range(1, p + 1)
-    )
-    fit_terms = " + ".join(
-        f"m.p{p}_{j} * (CAST(lag{j}.y AS DOUBLE) - m.mu)"
-        for j in range(1, p + 1)
-    )
-    union = " UNION ALL ".join(
-        f"SELECT {h} AS h, f{h} AS f FROM {prev}" for h in range(1, horizon + 1)
-    )
-    levels_sql = ",\n".join(levels)
-    fcs_sql = ",\n".join(fcs)
-    return f"""
-WITH {_SQ_DAILY_CENTS},
-base AS (SELECT count(*) AS n, sum(y) AS sy, sum(y * y) AS syy FROM d),
-lags AS (SELECT unnest(generate_series(1, {p})) AS lag),
-pr AS (SELECT l.lag, a.y AS ya, b.y AS yb
-       FROM d a CROSS JOIN lags l
-       JOIN d b ON b.day = a.day - to_days(CAST(l.lag AS INT))),
-sums AS (SELECT lag, count(*) AS nj, sum(ya) AS sa, sum(yb) AS sb,
-                sum(ya * yb) AS sab
-         FROM pr GROUP BY 1),
-wide AS (SELECT {wide} FROM sums),
-one AS (SELECT *, CAST(sy AS DOUBLE) / n AS mu,
-               CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) / n AS c0
-        FROM base CROSS JOIN wide),
-rr AS (SELECT *, {rho} FROM one),
-{levels_sql},
-lv AS (SELECT {lastv} FROM
-         (SELECT y, row_number() OVER (ORDER BY day DESC) AS rn FROM d)
-       WHERE rn <= {p}),
-m AS (SELECT * FROM l{p} CROSS JOIN lv),
-{fcs_sql},
-fit AS (SELECT d.y, m.mu + ({fit_terms}) AS fitted
-        FROM d {fit_joins} CROSS JOIN m),
-qs AS (SELECT quantile_cont(CAST(y AS DOUBLE) - fitted, 0.1) AS q10,
-              quantile_cont(CAST(y AS DOUBLE) - fitted, 0.9) AS q90
-       FROM fit),
-u AS ({union})
-SELECT CAST(h AS INT) AS h, {_r6('f', 'forecast')},
-       {_r6('f + q10', 'lo')}, {_r6('f + q90', 'hi')}
-FROM u CROSS JOIN qs ORDER BY h
 """
 
 
@@ -4629,58 +3917,26 @@ def oracle_sql() -> dict[str, str]:
         "event_funnel": _oracle_event_funnel(),
         "incremental_near_dup": _oracle_incremental_near_dup(),
         "key_skew": _oracle_key_skew(),
-        "rfm_scores": _ORACLE_RFM_SCORES,
-        "dau_wau": _ORACLE_DAU_WAU,
-        "session_paths": _ORACLE_SESSION_PATHS,
         "fuzzy_titles": _ORACLE_FUZZY_TITLES,
-        "conversion_latency": _ORACLE_CONVERSION_LATENCY,
         "script_mix": _ORACLE_SCRIPT_MIX,
         "bigram_pmi": _ORACLE_BIGRAM_PMI,
-        "event_transitions": _ORACLE_EVENT_TRANSITIONS,
-        "value_bars": _ORACLE_VALUE_BARS,
-        "monthly_growth": _ORACLE_MONTHLY_GROWTH,
-        "cohort_matrix": _ORACLE_COHORT_MATRIX,
-        "decayed_engagement": _ORACLE_DECAYED_ENGAGEMENT,
         "cdc_snapshot": _ORACLE_CDC_SNAPSHOT,
         "rate_limited": _ORACLE_RATE_LIMITED,
-        "large_orders": _ORACLE_LARGE_ORDERS,
-        "min_cost_supplier": _ORACLE_MIN_COST_SUPPLIER,
-        "unshipped_orders": _ORACLE_UNSHIPPED_ORDERS,
-        "returned_revenue": _ORACLE_RETURNED_REVENUE,
-        "top_supplier": _ORACLE_TOP_SUPPLIER,
-        "part_supplier_counts": _ORACLE_PART_SUPPLIER_COUNTS,
-        "small_qty_revenue": _ORACLE_SMALL_QTY_REVENUE,
-        "disjunctive_revenue": _ORACLE_DISJUNCTIVE_REVENUE,
-        "order_laggards": _ORACLE_ORDER_LAGGARDS,
-        "market_share": _ORACLE_MARKET_SHARE,
-        "product_profit": _ORACLE_PRODUCT_PROFIT,
-        "important_parts": _ORACLE_IMPORTANT_PARTS,
-        "late_ship_priority": _ORACLE_LATE_SHIP_PRIORITY,
         "lexical_diversity": _ORACLE_LEXICAL_DIVERSITY,
         "zipf_slope": _ORACLE_ZIPF_SLOPE,
         "readability": _ORACLE_READABILITY,
-        "daily_anomaly": _ORACLE_DAILY_ANOMALY,
         "pii_cards": _oracle_pii_cards(),
-        "weekday_anomaly": _ORACLE_WEEKDAY_ANOMALY,
-        "cumulative_users": _ORACLE_CUMULATIVE_USERS,
-        "mad_anomaly": _ORACLE_MAD_ANOMALY,
         "negative_samples": _oracle_negative_samples(),
         "epoch_upsample": _oracle_epoch_upsample(),
         "domain_percentile": _ORACLE_DOMAIN_PERCENTILE,
-        "similar_series": _ORACLE_SIMILAR_SERIES,
         "sql_hot_keys": PORTABLE_SQL_HOT_KEYS,
         "sql_topk_cosine": PORTABLE_SQL_TOPK_COSINE,
         "sql_range_search": PORTABLE_SQL_RANGE_SEARCH,
         "sql_knn_join": PORTABLE_SQL_KNN_JOIN,
-        "promo_orders": _ORACLE_PROMO_ORDERS,
         "sql_forecast_revenue": PORTABLE_SQL_FORECAST_REVENUE,
         "sql_priority_orders": PORTABLE_SQL_PRIORITY_ORDERS,
         "kfold_assign": _ORACLE_KFOLD_ASSIGN,
-        "idle_rich_customers": _ORACLE_IDLE_RICH,
         "value_rank": _ORACLE_VALUE_RANK,
-        "rolling_hour": _ORACLE_ROLLING_HOUR,
-        "scd2_history": _ORACLE_SCD2_HISTORY,
-        "item_cooccurrence": _ORACLE_ITEM_COOCCURRENCE,
         "tfidf_top_terms": _oracle_tfidf_top_terms(),
         "leakage_split": _oracle_leakage_split(),
         "topk_filtered": _oracle_topk_filtered(),
@@ -4734,8 +3990,6 @@ def oracle_sql() -> dict[str, str]:
         "chunk_overlap": _oracle_chunk_overlap(),
         "ivf_knn_join": _oracle_ivf_knn_join(),
         "bm25_knn_join": _oracle_bm25_knn_join(),
-        "shipping_volume": _ORACLE_SHIPPING_VOLUME,
-        "promo_share": _ORACLE_PROMO_SHARE,
         "kmeans_assign": _oracle_kmeans_assign(),
         "kmeans_one_iter": _oracle_kmeans_one_iter(),
         "semantic_dedup": _oracle_semantic_dedup(),
@@ -4754,21 +4008,15 @@ def oracle_sql() -> dict[str, str]:
         "top_orders_per_segment": _ORACLE_TOP_ORDERS,
         "customer_order_stats": _ORACLE_CUST_ORDER_STATS,
         "parts_rollup": _ORACLE_PARTS_ROLLUP,
-        "supplier_share": _ORACLE_SUPPLIER_SHARE,
         "customers_without_orders": _ORACLE_CUST_NO_ORDERS,
-        "segment_churn": _ORACLE_SEGMENT_CHURN,
         "order_priority_cube": _ORACLE_ORDER_PRIORITY_CUBE,
-        "price_percentiles": _ORACLE_PRICE_PERCENTILES,
         "events_hourly": _ORACLE_EVENTS_HOURLY,
         "events_sliding": _ORACLE_EVENTS_SLIDING,
         "events_props": _ORACLE_EVENTS_PROPS,
         "events_asof": _ORACLE_EVENTS_ASOF,
         "view_click_attrib": _oracle_view_click_attrib(),
         "orders_price_bands": _oracle_orders_price_bands(),
-        "status_priority_pivot": _ORACLE_STATUS_PIVOT,
-        "distinct_user_counts": _ORACLE_DISTINCT_USERS,
         "segment_retention": _ORACLE_SEGMENT_RETENTION,
-        "monthly_revenue": _ORACLE_MONTHLY_REVENUE,
         "events_moving_avg": _ORACLE_EVENTS_MOVING_AVG,
         "user_gap_stats": _ORACLE_USER_GAPS,
         "events_sessionized": _ORACLE_EVENTS_SESSIONIZED,
@@ -4778,94 +4026,24 @@ def oracle_sql() -> dict[str, str]:
         "binary_meta": _oracle_binary_meta(),
         "bulk_random_load": _oracle_bulk_random_load(),
         "collection_stats": _oracle_collection_stats(),
-        "salted_join": _ORACLE_SALTED_JOIN,
         "prefix_jaccard_pairs": _oracle_prefix_jaccard_pairs(),
         "zorder_stats": _oracle_zorder_stats(),
-        "pareto_front": _ORACLE_PARETO_FRONT,
-        "metrics_long": _ORACLE_METRICS_LONG,
         "sql_grouping_sets": _oracle_sql_grouping_sets(),
-        "seasonal_decompose": _ORACLE_SEASONAL_DECOMPOSE,
-        "attribution_last_touch": _ORACLE_ATTRIBUTION_LAST_TOUCH,
         "mmr_topk": _oracle_mmr_topk(),
         "mmr_knn_join": _oracle_mmr_knn_join(),
         "kcenter_select": _oracle_kcenter_select(),
         "priority_sample": _ORACLE_PRIORITY_SAMPLE,
-        "cusum_changepoints": _ORACLE_CUSUM,
         "ivfpq_res_topk": _oracle_ivfpq_res_topk(),
         "recall_ivfpq_res": _oracle_recall_ivfpq_res(),
-        "ar_forecast7": _oracle_ar_forecast7(),
-        "gap_filled_users": _ORACLE_GAP_FILLED_USERS,
-        "ewma_daily": _ORACLE_EWMA_DAILY,
-        "holt_forecast7": _ORACLE_HOLT_FORECAST7,
         "mutual_knn": _oracle_mutual_knn(),
         "compaction_plan": _ORACLE_COMPACTION_PLAN,
         "containment_pairs": _oracle_containment_pairs(),
-        "rolling_corr": _ORACLE_ROLLING_CORR,
-        "lead_lag": _ORACLE_LEAD_LAG,
         "snm_pairs": _ORACLE_SNM_PAIRS,
         "sampled_groupby": _oracle_sampled_groupby(),
         "er_clusters": _ORACLE_ER_CLUSTERS,
-        "burn_rate": _ORACLE_BURN_RATE,
-        "seasonality_strength": _ORACLE_SEASONALITY_STRENGTH,
-        "acf_daily": _ORACLE_ACF_DAILY,
-        "pacf_daily": _oracle_pacf_daily(),
         "dedup_recall": _oracle_dedup_recall(),
-        "forecast_bands": _ORACLE_FORECAST_BANDS,
         "events_session_native": _ORACLE_EVENTS_SESSION_NATIVE,
     }
-
-
-_ORACLE_GAP_FILLED_USERS = f"""
-WITH d AS (SELECT user_id, CAST(ts AS DATE) AS day, sum(value) AS y
-           FROM events WHERE user_id < 20 GROUP BY 1, 2),
-sp AS (SELECT user_id AS k, unnest(generate_series(min(day), max(day), INTERVAL 1 DAY)) AS day
-       FROM d GROUP BY 1),
-j AS (SELECT sp.k, CAST(sp.day AS DATE) AS day, d.y
-      FROM sp LEFT JOIN d ON d.user_id = sp.k AND d.day = CAST(sp.day AS DATE))
-SELECT CAST(k AS BIGINT) AS user_id, strftime(day, '%Y-%m-%d') AS day,
-       {_r6('y', 'y')},
-       {_r6("last_value(y IGNORE NULLS) OVER (PARTITION BY k ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)", 'y_filled')},
-       y IS NULL AS is_gap
-FROM j ORDER BY user_id, day
-"""
-
-
-_ORACLE_EWMA_DAILY = f"""
-WITH RECURSIVE d0 AS MATERIALIZED (
-  SELECT event_type AS k, CAST(ts AS DATE) AS day, sum(value) AS y FROM events GROUP BY 1, 2),
-d AS MATERIALIZED (
-  SELECT k, day, y, row_number() OVER (PARTITION BY k ORDER BY day) AS t FROM d0),
-r AS (
-  SELECT k, t, day, y, y AS s FROM d WHERE t = 1
-  UNION ALL
-  SELECT d.k, d.t, d.day, d.y, d.y * 0.25 + r.s * 0.75
-  FROM r JOIN d ON d.k = r.k AND d.t = r.t + 1
-)
-SELECT k AS event_type, strftime(day, '%Y-%m-%d') AS day,
-       {_r6('y', 'y')}, {_r6('s', 'ewma')}
-FROM r ORDER BY event_type, day
-"""
-
-
-_ORACLE_HOLT_FORECAST7 = f"""
-WITH RECURSIVE d0 AS MATERIALIZED (
-  SELECT event_type AS k, CAST(ts AS DATE) AS day, sum(value) AS y FROM events GROUP BY 1, 2),
-d AS MATERIALIZED (
-  SELECT k, y, row_number() OVER (PARTITION BY k ORDER BY day) AS t,
-         count(*) OVER (PARTITION BY k) AS n FROM d0),
-r AS (
-  SELECT k, 1 AS t, y AS l, (SELECT y FROM d d2 WHERE d2.k = d.k AND d2.t = 2) - y AS b
-  FROM d WHERE t = 1 AND n >= 2
-  UNION ALL
-  SELECT d.k, d.t, d.y * 0.5 + (r.l + r.b) * 0.5 AS l,
-         (d.y * 0.5 + (r.l + r.b) * 0.5 - r.l) * 0.25 + r.b * 0.75 AS b
-  FROM r JOIN d ON d.k = r.k AND d.t = r.t + 1
-),
-fin AS (SELECT k, l, b FROM r QUALIFY row_number() OVER (PARTITION BY k ORDER BY t DESC) = 1)
-SELECT k AS event_type, CAST(h AS INT) AS h,
-       {_r6('l + h * b', 'forecast')}, {_r6('l', 'level')}, {_r6('b', 'trend')}
-FROM fin, unnest(generate_series(1, 7)) AS u(h) ORDER BY event_type, h
-"""
 
 
 def _oracle_mutual_knn(k: int = 5) -> str:
@@ -4931,53 +4109,6 @@ ORDER BY id_a, id_b
 """
 
 
-_SQ_PC_DAILY = """
-d AS (SELECT CAST(ts AS DATE) AS day,
-             CAST(floor(coalesce(sum(CASE WHEN event_type = 'purchase' THEN value END), 0.0) * 100 + 0.5) AS BIGINT) AS x,
-             CAST(floor(coalesce(sum(CASE WHEN event_type = 'click' THEN value END), 0.0) * 100 + 0.5) AS BIGINT) AS y
-      FROM events GROUP BY 1)
-"""
-
-_SQ_PEARSON = (
-    "(CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))"
-    " / CASE WHEN sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))"
-    "          * sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)) = 0"
-    "        THEN NULL"
-    "        ELSE sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))"
-    "           * sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)) END"
-)
-
-_ORACLE_ROLLING_CORR = f"""
-WITH {_SQ_PC_DAILY},
-s AS (SELECT day, x, y,
-             count(*) OVER w AS n,
-             sum(x) OVER w AS sx, sum(y) OVER w AS sy,
-             sum(x * x) OVER w AS sxx, sum(y * y) OVER w AS syy,
-             sum(x * y) OVER w AS sxy
-      FROM d
-      WINDOW w AS (ORDER BY day ROWS BETWEEN 13 PRECEDING AND CURRENT ROW))
-SELECT strftime(day, '%Y-%m-%d') AS day, x, y, CAST(n AS BIGINT) AS n_window,
-       {_r6(_SQ_PEARSON, 'corr')}
-FROM s ORDER BY day
-"""
-
-_ORACLE_LEAD_LAG = f"""
-WITH {_SQ_PC_DAILY},
-lags AS (SELECT unnest(generate_series(-7, 7)) AS lag),
-p AS (SELECT l.lag, a.x, b.y
-      FROM d a CROSS JOIN lags l
-      JOIN d b ON b.day = a.day + to_days(CAST(l.lag AS INT))),
-agg AS (SELECT lag, count(*) AS n, sum(x) AS sx, sum(y) AS sy,
-               sum(x * x) AS sxx, sum(y * y) AS syy, sum(x * y) AS sxy
-        FROM p GROUP BY 1),
-sc AS (SELECT lag, n, {_SQ_PEARSON} AS corr FROM agg)
-SELECT CAST(lag AS INT) AS lag, CAST(n AS BIGINT) AS n_days, {_r6('corr', 'corr')},
-       (row_number() OVER (ORDER BY abs(corr) DESC NULLS LAST, lag ASC) = 1
-        AND corr IS NOT NULL) AS is_best
-FROM sc ORDER BY lag
-"""
-
-
 _ORACLE_SNM_PAIRS = """
 WITH src AS (
   SELECT doc_id, substring(text, 1, 12) AS name FROM documents
@@ -5019,13 +4150,6 @@ ORDER BY 1
 """
 
 
-_SQ_DAILY_CENTS = """
-d AS (SELECT CAST(ts AS DATE) AS day,
-             CAST(floor(sum(value) * 100 + 0.5) AS BIGINT) AS y
-      FROM events GROUP BY 1)
-"""
-
-
 _ORACLE_ER_CLUSTERS = """
 WITH RECURSIVE base AS (
   SELECT doc_id, substr(text, 1, 12) AS name FROM documents
@@ -5046,108 +4170,6 @@ SELECT CAST(b.doc_id AS BIGINT) AS doc_id,
        c.component IS NOT NULL AS is_matched
 FROM base b LEFT JOIN comp c ON c.node = b.doc_id
 ORDER BY doc_id
-"""
-
-
-_ORACLE_BURN_RATE = f"""
-WITH hourly AS (SELECT CAST(floor(epoch(ts) / 3600) AS BIGINT) AS hour,
-                       sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS errs,
-                       count(*) AS total
-                FROM events GROUP BY 1),
-w AS (SELECT hour, errs, total,
-             sum(errs) OVER ws AS es, sum(total) OVER ws AS ts_,
-             sum(errs) OVER wl AS el, sum(total) OVER wl AS tl
-      FROM hourly
-      WINDOW ws AS (ORDER BY hour RANGE BETWEEN 0 PRECEDING AND CURRENT ROW),
-             wl AS (ORDER BY hour RANGE BETWEEN 5 PRECEDING AND CURRENT ROW)),
-b AS (SELECT hour, errs, total,
-             (CAST(es AS DOUBLE) / (CASE WHEN ts_ > 0 THEN ts_ END)) / 0.25 AS burn_short,
-             (CAST(el AS DOUBLE) / (CASE WHEN tl > 0 THEN tl END)) / 0.25 AS burn_long
-      FROM w)
-SELECT hour, CAST(errs AS BIGINT) AS errs, CAST(total AS BIGINT) AS total,
-       {_r6('burn_short', 'burn_short')}, {_r6('burn_long', 'burn_long')},
-       (burn_short > 1.1 AND burn_long > 1.1) AS alert
-FROM b ORDER BY hour
-"""
-
-
-_ORACLE_SEASONALITY_STRENGTH = f"""
-WITH d AS (SELECT CAST(ts AS DATE) AS day, sum(value) AS y FROM events GROUP BY 1),
-t AS (SELECT day, y,
-             avg(y) OVER (ORDER BY day ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS trend
-      FROM d),
-dt AS (SELECT day, y, trend, y - trend AS det FROM t),
-s AS (SELECT day, y, trend, det,
-             avg(det) OVER (PARTITION BY dayofweek(day)) - avg(det) OVER () AS seasonal
-      FROM dt),
-c AS (SELECT y, seasonal, det - seasonal AS resid FROM s),
-agg AS (SELECT CAST(count(*) AS BIGINT) AS n_days,
-               var_samp(y) AS vy, var_samp(seasonal) AS vs,
-               var_samp(resid) AS vr, var_samp(seasonal + resid) AS vsr
-        FROM c)
-SELECT n_days, {_r6('vy', 'var_y')}, {_r6('vs', 'var_seasonal')}, {_r6('vr', 'var_resid')},
-       {_r6('greatest(CAST(0.0 AS DOUBLE), 1.0 - vr / (CASE WHEN vsr > 0 THEN vsr END))', 'strength_seasonal')}
-FROM agg
-"""
-
-
-_ORACLE_ACF_DAILY = f"""
-WITH {_SQ_DAILY_CENTS},
-lags AS (SELECT unnest(generate_series(-10, 10)) AS lag),
-p AS (SELECT l.lag, a.y AS x, b.y AS y
-      FROM d a CROSS JOIN lags l
-      JOIN d b ON b.day = a.day + to_days(CAST(l.lag AS INT))),
-agg AS (SELECT lag, count(*) AS n, sum(x) AS sx, sum(y) AS sy,
-               sum(x * x) AS sxx, sum(y * y) AS syy, sum(x * y) AS sxy
-        FROM p GROUP BY 1),
-sc AS (SELECT lag, n, {_SQ_PEARSON} AS corr FROM agg)
-SELECT CAST(lag AS INT) AS lag, CAST(n AS BIGINT) AS n_days, {_r6('corr', 'acf')}
-FROM sc WHERE lag >= 0 ORDER BY lag
-"""
-
-
-def _oracle_pacf_daily(max_lag: int = 4) -> str:
-    """The identical Durbin-Levinson unroll in SQL: same pivoted rho
-    frame, same left-associated sum order per level (generated by the
-    same loop structure as operators/temporal.pacf_from_acf)."""
-    levels = ["l1 AS (SELECT w.*, r1 AS p1_1 FROM w)"]
-    for k in range(2, max_lag + 1):
-        num_terms = " + ".join(
-            f"p{k - 1}_{j} * r{k - j}" for j in range(1, k)
-        )
-        den_terms = " + ".join(f"p{k - 1}_{j} * r{j}" for j in range(1, k))
-        levels.append(
-            f"l{k}a AS (SELECT *, (r{k} - ({num_terms}))"
-            f" / (CASE WHEN 1.0 - ({den_terms}) <> 0 THEN 1.0 - ({den_terms}) END)"
-            f" AS p{k}_{k} FROM l{k - 1})"
-        )
-        coeffs = ", ".join(
-            f"p{k - 1}_{j} - p{k}_{k} * p{k - 1}_{k - j} AS p{k}_{j}"
-            for j in range(1, k)
-        )
-        levels.append(f"l{k} AS (SELECT *, {coeffs} FROM l{k}a)")
-    sel = " UNION ALL ".join(
-        f"SELECT {k} AS lag, p{k}_{k} AS pacf FROM l{max_lag}"
-        for k in range(1, max_lag + 1)
-    )
-    pivots = ", ".join(
-        f"max(CASE WHEN lag = {k} THEN corr END) AS r{k}"
-        for k in range(1, max_lag + 1)
-    )
-    levels_sql = ",\n".join(levels)
-    return f"""
-WITH {_SQ_DAILY_CENTS},
-lags AS (SELECT unnest(generate_series(-{max_lag}, {max_lag})) AS lag),
-p AS (SELECT l.lag, a.y AS x, b.y AS y
-      FROM d a CROSS JOIN lags l
-      JOIN d b ON b.day = a.day + to_days(CAST(l.lag AS INT))),
-agg AS (SELECT lag, count(*) AS n, sum(x) AS sx, sum(y) AS sy,
-               sum(x * x) AS sxx, sum(y * y) AS syy, sum(x * y) AS sxy
-        FROM p GROUP BY 1),
-sc AS (SELECT lag, {_SQ_PEARSON} AS corr FROM agg),
-w AS (SELECT {pivots} FROM sc WHERE lag BETWEEN 1 AND {max_lag}),
-{levels_sql}
-SELECT CAST(lag AS INT) AS lag, {_r6('pacf', 'pacf')} FROM ({sel}) ORDER BY lag
 """
 
 
@@ -5178,34 +4200,6 @@ FROM c
 """
 
 
-_ORACLE_FORECAST_BANDS = f"""
-WITH RECURSIVE d0 AS MATERIALIZED (
-  SELECT event_type AS k, CAST(ts AS DATE) AS day, sum(value) AS y FROM events GROUP BY 1, 2),
-d AS MATERIALIZED (
-  SELECT k, y, row_number() OVER (PARTITION BY k ORDER BY day) AS t,
-         count(*) OVER (PARTITION BY k) AS n FROM d0),
-r AS (
-  SELECT k, 1 AS t, y AS l, (SELECT y FROM d d2 WHERE d2.k = d.k AND d2.t = 2) - y AS b
-  FROM d WHERE t = 1 AND n >= 2
-  UNION ALL
-  SELECT d.k, d.t, d.y * 0.5 + (r.l + r.b) * 0.5 AS l,
-         (d.y * 0.5 + (r.l + r.b) * 0.5 - r.l) * 0.25 + r.b * 0.75 AS b
-  FROM r JOIN d ON d.k = r.k AND d.t = r.t + 1
-),
-fitted AS (SELECT d.k, d.t, d.y, p.l + p.b AS f
-           FROM d JOIN r p ON p.k = d.k AND p.t = d.t - 1),
-q AS (SELECT k, quantile_cont(y - f, 0.1) AS q10, quantile_cont(y - f, 0.9) AS q90
-      FROM fitted GROUP BY 1),
-fin AS (SELECT k, l, b FROM r QUALIFY row_number() OVER (PARTITION BY k ORDER BY t DESC) = 1)
-SELECT fin.k AS event_type, CAST(h AS INT) AS h,
-       {_r6('l + h * b', 'forecast')},
-       {_r6('l + h * b + q10', 'lo')},
-       {_r6('l + h * b + q90', 'hi')}
-FROM fin JOIN q ON q.k = fin.k, unnest(generate_series(1, 7)) AS u(h)
-ORDER BY event_type, h
-"""
-
-
 _ORACLE_EVENTS_SESSION_NATIVE = f"""
 WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us, value FROM events),
 g AS (SELECT *, CASE WHEN lag(ts_us) OVER w IS NULL
@@ -5221,4 +4215,3 @@ SELECT CAST(user_id AS BIGINT) AS user_id, CAST(count(*) AS BIGINT) AS n_events,
 FROM s GROUP BY user_id, session_id
 ORDER BY user_id, session_start_us
 """
-

@@ -15,20 +15,18 @@ plan.
   range cross join. At 100 TB: pre-partition both inputs by the key so
   the union inherits co-partitioning and the window is shuffle-free.
 
-* **range join** — rows matched to intervals (band dimension). With a
-  small band table this is a broadcast non-equi join: each row streams
-  against the broadcast intervals, no shuffle of the fact side. For
-  non-broadcastable interval sets, map both sides to interval-aligned
-  buckets and equi-join on bucket first (the standard pre-filter), then
-  verify the range — never an unbucketed theta join.
+* **range join** — rows matched to intervals (band dimension). The
+  band table must be small: this is a broadcast non-equi join, so each
+  row streams against the broadcast intervals with no shuffle of the
+  fact side.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-__all__ = ["asof_join", "range_join_bands", "interval_join_bucketed", "rolling_time_agg", "scd2_intervals", "decayed_sum", "ohlc_bars", "conversion_latency", "zscore_anomaly", "mad_anomaly", "similar_series", "seasonal_decompose", "attribution_last_touch", "cusum_changepoints", "gap_fill", "ewma_smooth", "holt_forecast", "rolling_corr", "lead_lag_scan", "burn_rate_alerts", "pacf_from_acf", "holt_fitted", "ar_forecast", "ar_fitted"]
+__all__ = ["asof_join", "range_join_bands"]
 
 
 def asof_join(
@@ -98,1300 +96,3 @@ def range_join_bands(
     non-equi join (fact side streams, no shuffle)."""
     cond = (F.col(value_col) >= F.col(lo_col)) & (F.col(value_col) < F.col(hi_col))
     return facts.join(F.broadcast(bands), cond, "left")
-
-
-def rolling_time_agg(
-    events: DataFrame,
-    window_sec: int = 3600,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    id_col: str = "event_id",
-) -> DataFrame:
-    """Per-row trailing time-window aggregate: for every event, the
-    count and value-sum of the same key's events in the preceding
-    ``window_sec`` seconds (inclusive of the current row) — the
-    "requests in the last hour" / velocity feature that row-frame
-    moving averages (fixed N rows) cannot express when event spacing
-    is irregular.
-
-    A true RANGE frame on epoch **microseconds** (not a rows frame):
-    ``rangeBetween(-window_µs, 0)`` over ``orderBy(unix_micros(ts))``
-    per key. Peers at the same microsecond are frame-mates in every
-    engine (RANGE includes order-key peers), so results are partition-
-    and sort-stable with no row_number tiebreak needed.
-
-    Scale: one shuffle on the key; window state is bounded by one key's
-    rows inside ``window_sec`` — independent of corpus size. Skewed
-    keys bound the task, same story as any per-key window; salt the
-    key upstream if one entity dominates.
-    """
-    mic = F.unix_micros(F.col(ts_col))
-    w = (
-        Window.partitionBy(key_col)
-        .orderBy(mic)
-        .rangeBetween(-window_sec * 1_000_000, 0)
-    )
-    return events.select(
-        F.col(id_col),
-        F.col(key_col),
-        F.count(F.lit(1)).over(w).alias("n_window"),
-        F.sum(value_col).over(w).alias("sum_window"),
-    )
-
-
-def scd2_intervals(
-    updates: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    attr_cols: list[str] | None = None,
-    id_col: str = "event_id",
-) -> DataFrame:
-    """Slowly-changing-dimension type-2 history from an update log:
-    each update row becomes a validity interval ``[valid_from,
-    valid_to)`` per key — ``valid_to`` is the next update's timestamp,
-    NULL for the current version (``is_current`` flags it).
-
-    The standard warehouse shape: one window ``lead`` per key, ordered
-    by (ts, id) so same-timestamp updates order deterministically.
-    One shuffle on the key; per-key window state only.
-    """
-    attr_cols = attr_cols or []
-    w = Window.partitionBy(key_col).orderBy(F.col(ts_col).asc(), F.col(id_col).asc())
-    nxt = F.lead(F.col(ts_col)).over(w)
-    return updates.select(
-        F.col(key_col),
-        *[F.col(c) for c in attr_cols],
-        F.col(ts_col).alias("valid_from"),
-        nxt.alias("valid_to"),
-        nxt.isNull().alias("is_current"),
-    )
-
-
-def decayed_sum(
-    events: DataFrame,
-    half_life_sec: float = 7 * 86400.0,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    id_col: str = "event_id",
-) -> DataFrame:
-    """Exponentially-decayed running sum per key — the recency-weighted
-    engagement score: at each event,
-
-        s_i = Σ_{j ≤ i} v_j · 2^(−(t_i − t_j)/half_life)
-
-    so old activity fades with the configured half-life instead of
-    counting forever (the usual alternative to hard trailing windows).
-
-    The recurrence looks sequential, but factoring the decay —
-    ``s_i = 2^(−t_i/h) · Σ_{j≤i} v_j·2^(t_j/h)`` — turns it into a
-    plain per-key prefix sum, so the whole thing is ONE cumulative
-    window over (key, ts): no recursion, no UDF, one shuffle.
-
-    Numerics: ``2^(t/h)`` overflows double for t far from the epoch, so
-    t is re-based to the key's own minimum timestamp (a second window
-    over the same partitioning — no extra shuffle). Safe while any one
-    key's time span stays under ~1000 half-lives; beyond that, chunk by
-    coarse time range first.
-
-    Returns ``(id, key, decayed_sum)``; ties at the same microsecond
-    accumulate in (ts, id) order deterministically.
-    """
-    h = float(half_life_sec) * 1_000_000.0  # half-life in µs
-    mic = F.unix_micros(F.col(ts_col))
-    w_all = Window.partitionBy(key_col)
-    w_cum = (
-        Window.partitionBy(key_col)
-        .orderBy(mic.asc(), F.col(id_col).asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    t0 = F.min(mic).over(w_all)
-    rel = (mic - t0).cast("double") / F.lit(h)  # time in half-lives
-    weighted = F.col(value_col) * F.pow(F.lit(2.0), rel)
-    cum = F.sum(weighted).over(w_cum)
-    return events.select(
-        F.col(id_col),
-        F.col(key_col),
-        (cum * F.pow(F.lit(2.0), -rel)).alias("decayed_sum"),
-    )
-
-
-def ohlc_bars(
-    events: DataFrame,
-    bar_sec: int = 300,
-    key_col: str | None = None,
-    ts_col: str = "ts",
-    value_col: str = "value",
-    id_col: str = "event_id",
-) -> DataFrame:
-    """Downsample a value stream into fixed time bars with
-    open/high/low/close/volume — the classic time-series resampling
-    shape, one groupBy per bar.
-
-    Open/close are the values of the chronologically first/last event
-    in the bar, made deterministic under same-timestamp ties by taking
-    ``min(struct(ts, id, value))`` / ``max(struct(ts, id, value))`` —
-    struct ordering is lexicographic, so the (ts, id) prefix decides
-    and the value rides along. One map-side-combining aggregation;
-    no window, no sort of the corpus.
-    """
-    mic = F.unix_micros(F.col(ts_col))
-    bar = (mic - F.pmod(mic, F.lit(bar_sec * 1_000_000))).alias("bar_start_us")
-    keys = ([F.col(key_col)] if key_col else []) + [bar]
-    pick = F.struct(mic.alias("t"), F.col(id_col).alias("i"), F.col(value_col).alias("v"))
-    return (
-        events.groupBy(*keys)
-        .agg(
-            F.min(pick)["v"].alias("open"),
-            F.max(value_col).alias("high"),
-            F.min(value_col).alias("low"),
-            F.max(pick)["v"].alias("close"),
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(value_col).alias("volume"),
-        )
-    )
-
-
-def conversion_latency(
-    events: DataFrame,
-    from_type: str = "view",
-    to_type: str = "purchase",
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-) -> DataFrame:
-    """Per-conversion latency: for every ``to_type`` event, the seconds
-    since the same key's most recent PRIOR ``from_type`` event — the
-    "how long from view to purchase" distribution.
-
-    The as-of lookup is a carry-forward window (``max`` of the
-    from-event's timestamp over unbounded-preceding rows in (ts, id)
-    order — one shuffle on the key, same shape as ``asof_join``), so no
-    self-join and no range join. Conversions with no prior from-event
-    emit NULL latency (counted separately downstream, never dropped
-    silently).
-
-    Returns ``(id, key, latency_sec)`` — one row per ``to_type`` event.
-    """
-    mic = F.unix_micros(F.col(ts_col))
-    w = (
-        Window.partitionBy(key_col)
-        .orderBy(mic.asc(), F.col(id_col).asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    last_from = F.max(
-        F.when(F.col(type_col) == from_type, mic)
-    ).over(w)
-    return (
-        events.withColumn("__lf", last_from)
-        .filter(F.col(type_col) == to_type)
-        .select(
-            F.col(id_col),
-            F.col(key_col),
-            ((mic - F.col("__lf")) / 1_000_000.0).alias("latency_sec"),
-        )
-    )
-
-
-def interval_join_bucketed(
-    facts: DataFrame,
-    intervals: DataFrame,
-    value_col: str,
-    lo_col: str = "lo",
-    hi_col: str = "hi",
-    bucket: int = 16,
-) -> DataFrame:
-    """Containment join of facts into ``[lo, hi)`` intervals when the
-    interval side is TOO BIG to broadcast — the scale path next to
-    :func:`range_join_bands` (broadcast non-equi, small-bands only).
-
-    Classic bucketed range join: both sides are keyed by a coarse
-    bucket ``floor(x / bucket)`` — each fact lands in exactly one
-    bucket, each interval explodes to the buckets its span covers —
-    then a shuffle EQUI-join on the bucket key runs the exact
-    containment predicate as a post-filter. No cartesian, no
-    broadcast; the join parallelizes across buckets. Because a fact's
-    bucket is unique, each qualifying (fact, interval) pair matches
-    exactly once — no dedup pass needed.
-
-    ``bucket`` should sit near the typical interval length: the
-    interval side then explodes to ~2 rows each, while much smaller
-    buckets inflate the interval fan-out and much bigger ones degrade
-    bucket selectivity (more post-filtered pairs). Values must be
-    integral (days, epoch seconds, cents…). Returns the inner join of
-    facts × matching intervals.
-    """
-    b = int(bucket)
-    fb = facts.withColumn("__bk", F.floor(F.col(value_col) / b).cast("long"))
-    ib = intervals.withColumn(
-        "__bk",
-        F.explode(
-            F.sequence(
-                F.floor(F.col(lo_col) / b).cast("long"),
-                # hi is exclusive: an interval ending exactly on a
-                # bucket boundary does not reach into that bucket
-                F.floor((F.col(hi_col) - 1) / b).cast("long"),
-            )
-        ),
-    )
-    return (
-        fb.join(ib, "__bk")
-        .filter((F.col(value_col) >= F.col(lo_col)) & (F.col(value_col) < F.col(hi_col)))
-        .drop("__bk")
-    )
-
-
-def zscore_anomaly(
-    events: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    threshold: float = 2.0,
-    seasonal: bool = False,
-) -> DataFrame:
-    """Daily-volume anomaly detection per key: z-score of each day's
-    event count against that key's own mean/std across days, flagging
-    |z| ≥ ``threshold`` — the ops-monitoring staple (traffic spike /
-    outage dips) and the drift tripwire next to PSI.
-
-    Two aggregations, both partial-agged: (key, day) counts, then
-    per-key mean/std over the day rows (a tiny frame — days, not
-    events) broadcast back onto it. A key observed on a single day has
-    no sample std → z is NULL and the flag false (never a false
-    alarm from one observation). A key whose daily counts are all
-    identical has sd = 0.0 — the same NULL-z / false-flag treatment
-    applies (guarded with a zero check so ANSI mode never raises
-    DIVIDE_BY_ZERO on a flat series, a routine monitoring input).
-    Returns ``(key, day, n_events, z, is_anomaly)``.
-
-    ``seasonal=True`` baselines each day against its own (key,
-    day-of-week) history instead of the key's global history — the
-    weekly-cycle-aware variant (a quiet Sunday is not an outage when
-    every Sunday is quiet). Costs nothing extra: the stats frame is
-    still a tiny (key[, dow]) aggregate broadcast back.
-    """
-    daily = (
-        events.select(F.col(key_col).alias("key"), F.to_date(ts_col).alias("day"))
-        .groupBy("key", "day")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-    grp = ["key"] + (["__dow"] if seasonal else [])
-    if seasonal:
-        daily = daily.withColumn("__dow", F.dayofweek("day"))
-    stats = daily.groupBy(*grp).agg(
-        F.avg("n_events").alias("__mu"), F.stddev_samp("n_events").alias("__sd")
-    )
-    sd = F.when(F.col("__sd") == 0, F.lit(None)).otherwise(F.col("__sd"))
-    z = (F.col("n_events") - F.col("__mu")) / sd
-    return (
-        daily.join(F.broadcast(stats), grp)
-        .select(
-            F.col("key").alias(key_col),
-            "day",
-            "n_events",
-            z.alias("z"),
-            F.coalesce(F.abs(z) >= threshold, F.lit(False)).alias("is_anomaly"),
-        )
-    )
-
-
-def similar_series(
-    events: DataFrame,
-    query_key: str,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    k: int = 5,
-    min_overlap: int = 3,
-) -> DataFrame:
-    """Top-k time-series similarity search: which keys' daily-volume
-    series move WITH the query key's series (Pearson correlation over
-    aligned days) — the "what else spikes when checkouts spike"
-    diagnostic, the 1-D cousin of the distributed top-k
-    similarity-search literature (e.g. REPOSE, ICDE'21 — PAPERS.md).
-
-    Shape at scale: daily rollup is one partial-agged (key, day)
-    aggregate of the fact; the query key's series is a tiny
-    (days-sized) frame BROADCAST onto the others' day rows — the
-    corpus of series never self-joins; ``corr`` is a single
-    partial-agged per-key aggregate. Keys overlapping the query on
-    fewer than ``min_overlap`` days are dropped (a 2-point series
-    correlates ±1 vacuously); the cut is TakeOrderedAndProject.
-    Returns ``(key, n_days, corr)``, corr-desc, key-asc ties.
-    """
-    daily = (
-        events.select(F.col(key_col).alias("key"), F.to_date(ts_col).alias("day"))
-        .groupBy("key", "day")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    q = daily.filter(F.col("key") == query_key).select(
-        "day", F.col("n").alias("qn")
-    )
-    rest = daily.filter(F.col("key") != query_key)
-    # Pearson from sum components with a NULL-guarded denominator:
-    # under ANSI mode F.corr raises DIVIDE_BY_ZERO on a zero-variance
-    # series (a flat series is routine monitoring input) — a NULL corr
-    # (dropped below) is the correct answer there
-    agg = (
-        rest.join(F.broadcast(q), "day")
-        .groupBy("key")
-        .agg(
-            F.count(F.lit(1)).alias("n_days"),
-            F.sum(F.col("n").cast("double")).alias("__sx"),
-            F.sum(F.col("qn").cast("double")).alias("__sy"),
-            F.sum((F.col("n") * F.col("n")).cast("double")).alias("__sxx"),
-            F.sum((F.col("qn") * F.col("qn")).cast("double")).alias("__syy"),
-            F.sum((F.col("n") * F.col("qn")).cast("double")).alias("__sxy"),
-        )
-    )
-    nd = F.col("n_days").cast("double")
-    cov = nd * F.col("__sxy") - F.col("__sx") * F.col("__sy")
-    vx = nd * F.col("__sxx") - F.col("__sx") * F.col("__sx")
-    vy = nd * F.col("__syy") - F.col("__sy") * F.col("__sy")
-    denom = F.sqrt(vx) * F.sqrt(vy)
-    corr = cov / F.when(denom == 0, F.lit(None)).otherwise(denom)
-    return (
-        agg.select("key", "n_days", corr.alias("corr"))
-        .filter((F.col("n_days") >= min_overlap) & F.col("corr").isNotNull())
-        .orderBy(F.desc("corr"), F.asc("key"))
-        .limit(k)
-    )
-
-
-def mad_anomaly(
-    events: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    threshold: float = 3.5,
-) -> DataFrame:
-    """Robust daily-volume anomaly detection per key: the modified
-    z-score ``0.6745·(x − median) / MAD`` (Iglewicz–Hoaglin), flagging
-    ``|mz| ≥ threshold`` (3.5 is the published default). The robust
-    twin of :func:`zscore_anomaly`: a mean/std baseline is dragged by
-    the very outliers it should flag — one huge spike inflates σ and
-    masks smaller ones — while median/MAD ignore them.
-
-    Same two-aggregation shape: (key, day) counts, then per-key
-    median + MAD over the day rows via exact interpolated
-    ``percentile`` (the stats frame is days-sized — exact medians are
-    cheap there; the corpus-sized work is still one partial-agged
-    count). MAD = 0 (over half the days identical) → NULL mz, never a
-    false alarm, mirroring the zero-variance guard. Returns
-    ``(key, day, n_events, mz, is_anomaly)``.
-    """
-    daily = (
-        events.select(F.col(key_col).alias("key"), F.to_date(ts_col).alias("day"))
-        .groupBy("key", "day")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-    med = daily.groupBy("key").agg(
-        F.expr("percentile(n_events, 0.5)").alias("__med")
-    )
-    mad = (
-        daily.join(F.broadcast(med), "key")
-        .groupBy("key")
-        .agg(
-            F.first("__med").alias("__med"),
-            F.expr("percentile(abs(n_events - __med), 0.5)").alias("__mad"),
-        )
-    )
-    mz = (
-        F.lit(0.6745)
-        * (F.col("n_events") - F.col("__med"))
-        / F.when(F.col("__mad") == 0, F.lit(None)).otherwise(F.col("__mad"))
-    )
-    return (
-        daily.join(F.broadcast(mad), "key")
-        .select(
-            F.col("key").alias(key_col),
-            "day",
-            "n_events",
-            mz.alias("mz"),
-            F.coalesce(F.abs(mz) >= threshold, F.lit(False)).alias("is_anomaly"),
-        )
-    )
-
-
-def seasonal_decompose(
-    daily: DataFrame,
-    day_col: str = "day",
-    y_col: str = "y",
-    half_window: int = 3,
-) -> DataFrame:
-    """Classical additive decomposition of a daily series —
-    ``y = trend + seasonal + resid`` (the moving-average form of STL,
-    Cleveland et al.'s starting point): trend is a centered
-    ``2·half_window+1``-row moving average (partial at the edges, by
-    the standard rows-frame semantics), the weekly seasonal is the
-    per-day-of-week mean of the detrended series centered to sum ~0
-    (minus the global detrended mean), and the residual is what's
-    left — the anomaly-hunting input ``zscore_anomaly`` wants after
-    trend/seasonality stop masking outliers. ``daily`` is expected to
-    carry ONE row per day (the upstream daily aggregate's contract);
-    duplicate days would silently widen the trend window.
-
-    All three components are windows over the DAILY frame (≤ a few
-    thousand rows regardless of event volume — the upstream daily
-    aggregate did the data-sized work), so the unpartitioned ordered
-    windows here are bounded by the calendar, not the corpus; the
-    same "days-sized frame by design" note as similar_series. Returns
-    ``(day, y, trend, seasonal, resid)``.
-    """
-    w_trend = Window.orderBy(day_col).rowsBetween(-half_window, half_window)
-    dt = daily.select(
-        F.col(day_col).alias("day"),
-        F.col(y_col).alias("y"),
-        F.avg(y_col).over(w_trend).alias("trend"),
-    ).withColumn("__det", F.col("y") - F.col("trend"))
-    w_dow = Window.partitionBy(F.dayofweek("day"))
-    w_all = Window.partitionBy()
-    seasonal = F.avg("__det").over(w_dow) - F.avg("__det").over(w_all)
-    return dt.select(
-        "day",
-        "y",
-        "trend",
-        seasonal.alias("seasonal"),
-        (F.col("__det") - seasonal).alias("resid"),
-    )
-
-
-def attribution_last_touch(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts_ns",
-    id_col: str = "event_id",
-    type_col: str = "event_type",
-    conversion: str = "purchase",
-) -> DataFrame:
-    """Last-touch attribution: for every conversion event, the most
-    recent PRIOR non-conversion event of the same user — which
-    touchpoint gets credit for the purchase. One shuffle on the user
-    key; the carry-forward is ``last(..., ignorenulls)`` over an
-    unbounded-preceding rows frame (the asof_join trick applied
-    within one stream), so no self-join and no per-user explosion.
-    Conversions with no prior touch attribute to NULL (direct).
-    Returns ``(conv_id, user, conv_ts, touch_id, touch_type,
-    gap_ns)``.
-    """
-    w = (
-        Window.partitionBy(user_col)
-        .orderBy(F.col(ts_col).asc(), F.col(id_col).asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    touch = F.when(
-        F.col(type_col) != conversion,
-        F.struct(F.col(ts_col).alias("ts"), F.col(id_col).alias("id"),
-                 F.col(type_col).alias("typ")),
-    )
-    out = events.select(
-        F.col(user_col).alias("user"),
-        F.col(ts_col).alias("conv_ts"),
-        F.col(id_col).alias("conv_id"),
-        F.col(type_col).alias("__typ"),
-        F.last(touch, ignorenulls=True).over(w).alias("__touch"),
-    ).filter(F.col("__typ") == conversion)
-    return out.select(
-        "conv_id",
-        "user",
-        "conv_ts",
-        F.col("__touch.id").alias("touch_id"),
-        F.col("__touch.typ").alias("touch_type"),
-        (F.col("conv_ts") - F.col("__touch.ts")).alias("gap_ns"),
-    )
-
-
-def cusum_changepoints(
-    events: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    slack: float = 0.25,
-    threshold: float = 3.0,
-) -> DataFrame:
-    """Tabular CUSUM change-point detection (Page 1954) over daily
-    per-key volumes: standardized deviations ``d = (x − μ)/σ``
-    accumulate into one-sided sums ``s⁺ = max(0, s⁺ + d − slack)`` /
-    ``s⁻ = max(0, s⁻ − d − slack)``; a sum crossing ``threshold``
-    flags a sustained LEVEL SHIFT — the persistent-drift complement to
-    :func:`zscore_anomaly`'s single-day spikes (five straight
-    half-sigma-high days alarm here and never there, one 3σ day alarms
-    there and barely moves this).
-
-    The max(0, ·) recurrence looks inherently sequential but folds
-    into plain windows via the classic identity ``s_i = p_i −
-    min(0, min_{j≤i} p_j)`` with ``p`` the running sum of
-    ``d − slack`` — so the whole operator is two cumulative windows
-    per side on the (key, day) CALENDAR-sized frame, never the event
-    log, partitioned by key. Flat or single-day series have σ ∈
-    {0, NULL} → d NULL → flags false (the zscore_anomaly guard).
-    Returns ``(key, day, n_events, s_up, s_down, is_change)``."""
-    daily = (
-        events.select(F.col(key_col).alias("key"), F.to_date(ts_col).alias("day"))
-        .groupBy("key", "day")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-    stats = daily.groupBy("key").agg(
-        F.avg("n_events").alias("__mu"), F.stddev_samp("n_events").alias("__sd")
-    )
-    sd = F.when(F.col("__sd") == 0, F.lit(None)).otherwise(F.col("__sd"))
-    d = (F.col("n_events") - F.col("__mu")) / sd
-    w = (
-        Window.partitionBy("key")
-        .orderBy("day")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    joined = (
-        daily.join(F.broadcast(stats), "key")
-        .withColumn("__pu", F.sum(d - F.lit(slack)).over(w))
-        .withColumn("__pd", F.sum(-d - F.lit(slack)).over(w))
-    )
-    s_up = F.col("__pu") - F.least(F.lit(0.0), F.min("__pu").over(w))
-    s_dn = F.col("__pd") - F.least(F.lit(0.0), F.min("__pd").over(w))
-    return (
-        joined.select(
-            F.col("key").alias(key_col),
-            "day",
-            "n_events",
-            s_up.alias("s_up"),
-            s_dn.alias("s_down"),
-            F.coalesce(
-                (s_up > threshold) | (s_dn > threshold), F.lit(False)
-            ).alias("is_change"),
-        )
-        .orderBy(key_col, "day")
-    )
-
-
-def gap_fill(
-    daily: DataFrame,
-    key_col: str,
-    day_col: str = "day",
-    y_col: str = "y",
-) -> DataFrame:
-    """Calendar gap filling + forward fill: regularize a sparse per-key
-    daily series onto its full day spine.
-
-    Aggregated series are sparse wherever a key was quiet, and every
-    downstream window/recurrence (moving averages, EWMA, CUSUM)
-    silently treats a missing day as "adjacent" unless the spine is
-    made explicit first.  The spine is generated DISTRIBUTED: one tiny
-    per-key (min_day, max_day) aggregate, then ``sequence()`` +
-    ``explode`` — each key's spine materializes on the executor that
-    owns the key, nothing calendar-sized ever sits on the driver.  The
-    observed rows left-join onto the spine (equi-join on (key, day)),
-    and the fill is the asof_join trick within one frame:
-    ``last(y, ignorenulls)`` over an unbounded-preceding rows window
-    per key.  Cost: two shuffles on the key (agg + window; the join
-    inherits the window's partitioning), frames all keys x days.
-
-    Returns ``(key, day, y, y_filled, is_gap)`` — ``y`` NULL on gap
-    days, ``y_filled`` the carry-forward (NULL before a key's first
-    observation only), ``is_gap`` the imputation marker.
-    """
-    spine = (
-        daily.groupBy(F.col(key_col).alias("k"))
-        .agg(
-            F.min(day_col).alias("d0"),
-            F.max(day_col).alias("d1"),
-        )
-        .select(
-            "k",
-            F.explode(
-                F.sequence("d0", "d1", F.expr("interval 1 day"))
-            ).alias("day"),
-        )
-    )
-    obs = daily.select(
-        F.col(key_col).alias("k"),
-        F.col(day_col).alias("day"),
-        F.col(y_col).alias("y"),
-    )
-    joined = spine.join(obs, ["k", "day"], "left")
-    w = Window.partitionBy("k").orderBy("day").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    return joined.select(
-        F.col("k").alias(key_col),
-        "day",
-        "y",
-        F.last("y", ignorenulls=True).over(w).alias("y_filled"),
-        F.col("y").isNull().alias("is_gap"),
-    )
-
-
-def ewma_smooth(
-    daily: DataFrame,
-    key_col: str,
-    day_col: str = "day",
-    y_col: str = "y",
-    alpha: float = 0.25,
-) -> DataFrame:
-    """Exponentially weighted moving average per key:
-    ``s_0 = y_0; s_t = alpha*y_t + (1-alpha)*s_{t-1}``.
-
-    The recurrence is inherently sequential, but only WITHIN a key's
-    calendar-sized series — so each series is folded as an array
-    expression (``array_sort`` the (day, y) structs, ``aggregate``
-    with an array accumulator), one fold per key, keys in parallel.
-    The quadratic array-append cost is bounded by days-per-key, never
-    data volume — the same "calendar-sized by design" argument as
-    seasonal_decompose; no Python, no window tricks with
-    ``pow(1-alpha, -t)`` (those overflow past ~700 steps).
-
-    ``alpha`` should be a binary-exact double (0.25, 0.5, 0.375...) if
-    the output must reproduce bit-identically across engines — then
-    ``1-alpha`` is exact too and every step is the same two mults+add.
-    Returns ``(key, day, y, ewma)`` exploded back to rows.
-    """
-    one_m = 1.0 - alpha
-    pairs = daily.groupBy(F.col(key_col).alias("k")).agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col(day_col).alias("d"), F.col(y_col).alias("y")))
-        ).alias("ps")
-    )
-    vals = F.col("ps.y")
-    folded = pairs.select(
-        "k",
-        F.col("ps.d").alias("days"),
-        vals.alias("ys"),
-        F.aggregate(
-            F.slice(vals, 2, F.greatest(F.lit(0), F.size(vals) - 1)),
-            F.array(F.element_at(vals, 1)),
-            lambda acc, x: F.array_append(
-                acc, x * F.lit(alpha) + F.element_at(acc, -1) * F.lit(one_m)
-            ),
-        ).alias("es"),
-    )
-    z = folded.select(
-        "k", F.posexplode(F.arrays_zip("days", "ys", "es")).alias("i", "r")
-    )
-    return z.select(
-        F.col("k").alias(key_col),
-        F.col("r.days").alias(day_col),
-        F.col("r.ys").alias(y_col),
-        F.col("r.es").alias("ewma"),
-    )
-
-
-def holt_forecast(
-    daily: DataFrame,
-    key_col: str,
-    day_col: str = "day",
-    y_col: str = "y",
-    alpha: float = 0.5,
-    beta: float = 0.25,
-    horizon: int = 7,
-) -> DataFrame:
-    """Holt's linear-trend double exponential smoothing + h-step
-    forecast per key: ``l_t = alpha*y_t + (1-alpha)*(l+b)``,
-    ``b_t = beta*(l_t - l_prev) + (1-beta)*b_prev``, initialized the
-    standard way (``l_0 = y_0``, ``b_0 = y_1 - y_0``), forecast
-    ``yhat(h) = l_T + h*b_T``.
-
-    Same execution shape as :func:`ewma_smooth` — a per-key sequential
-    fold over the calendar-sized sorted series, keys in parallel —
-    except the accumulator is the scalar ``(l, b)`` state struct (the
-    fitted path is not emitted), so the fold is linear, not quadratic.
-    Keys with fewer than 2 observations can't initialize a trend and
-    are dropped.  Returns ``(key, h, forecast, level, trend)`` with
-    ``h`` in 1..horizon.
-    """
-    one_ma, one_mb = 1.0 - alpha, 1.0 - beta
-    pairs = daily.groupBy(F.col(key_col).alias("k")).agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col(day_col).alias("d"), F.col(y_col).alias("y")))
-        ).alias("ps")
-    )
-    vals = F.col("ps.y")
-    lvl = lambda acc: acc.getField("l")  # noqa: E731
-    trd = lambda acc: acc.getField("b")  # noqa: E731
-    state = F.aggregate(
-        F.slice(vals, 2, F.greatest(F.lit(0), F.size(vals) - 1)),
-        F.struct(
-            F.element_at(vals, 1).alias("l"),
-            (F.element_at(vals, 2) - F.element_at(vals, 1)).alias("b"),
-        ),
-        lambda acc, x: F.struct(
-            (
-                x * F.lit(alpha) + (lvl(acc) + trd(acc)) * F.lit(one_ma)
-            ).alias("l"),
-            (
-                (
-                    x * F.lit(alpha)
-                    + (lvl(acc) + trd(acc)) * F.lit(one_ma)
-                    - lvl(acc)
-                )
-                * F.lit(beta)
-                + trd(acc) * F.lit(one_mb)
-            ).alias("b"),
-        ),
-    )
-    fitted = pairs.filter(F.size(vals) >= 2).select("k", state.alias("st"))
-    return fitted.select(
-        F.col("k").alias(key_col),
-        F.explode(F.sequence(F.lit(1), F.lit(horizon))).alias("h"),
-        F.col("st.l").alias("level"),
-        F.col("st.b").alias("trend"),
-    ).select(
-        key_col,
-        "h",
-        (F.col("level") + F.col("h") * F.col("trend")).alias("forecast"),
-        "level",
-        "trend",
-    )
-
-
-def _pearson_from_sums(n, sx, sy, sxx, syy, sxy):
-    """Pearson r from raw sum components with the NULL-guarded
-    denominator (the similar_series rule: ANSI F.corr raises on a
-    zero-variance series; NULL is the correct answer there)."""
-    nd = n.cast("double")
-    cov = nd * sxy - sx * sy
-    vx = nd * sxx - sx * sx
-    vy = nd * syy - sy * sy
-    denom = F.sqrt(vx) * F.sqrt(vy)
-    return cov / F.when(denom == 0, F.lit(None)).otherwise(denom)
-
-
-def rolling_corr(
-    daily: DataFrame,
-    x_col: str,
-    y_col: str,
-    day_col: str = "day",
-    window_days: int = 14,
-) -> DataFrame:
-    """Trailing ``window_days`` Pearson correlation between two daily
-    series sharing one frame (one row per day): the "are these two
-    metrics still moving together" monitor, localized in time where a
-    whole-history corr hides regime changes.
-
-    Five windowed sums (x, y, x², y², xy) over a trailing rows frame +
-    the closed-form Pearson — never a per-row re-join of the series.
-    The window is ordered but CALENDAR-sized by design (the upstream
-    daily aggregate did the data-sized work — the seasonal_decompose
-    argument).  Cross-engine bit-reproducibility note: feed INTEGER
-    (e.g. cents) inputs — integer window sums are exact under any
-    accumulation order, while float sliding sums differ between
-    Spark's recompute-per-frame and e.g. DuckDB's segment-tree order.
-    Rows before a full window report the partial-frame corr (standard
-    rows-frame semantics); zero-variance frames give NULL.  Returns
-    ``(day, x, y, n_window, corr)``.
-    """
-    w = Window.orderBy(day_col).rowsBetween(-(window_days - 1), 0)
-    x, y = F.col(x_col), F.col(y_col)
-    sums = daily.select(
-        F.col(day_col).alias("day"),
-        x.alias("x"),
-        y.alias("y"),
-        F.count(F.lit(1)).over(w).alias("__n"),
-        F.sum(x).over(w).alias("__sx"),
-        F.sum(y).over(w).alias("__sy"),
-        F.sum(x * x).over(w).alias("__sxx"),
-        F.sum(y * y).over(w).alias("__syy"),
-        F.sum(x * y).over(w).alias("__sxy"),
-    )
-    corr = _pearson_from_sums(
-        F.col("__n"),
-        F.col("__sx").cast("double"),
-        F.col("__sy").cast("double"),
-        F.col("__sxx").cast("double"),
-        F.col("__syy").cast("double"),
-        F.col("__sxy").cast("double"),
-    )
-    return sums.select(
-        "day", "x", "y", F.col("__n").alias("n_window"), corr.alias("corr")
-    )
-
-
-def lead_lag_scan(
-    daily: DataFrame,
-    x_col: str,
-    y_col: str,
-    day_col: str = "day",
-    max_lag: int = 7,
-) -> DataFrame:
-    """Lead-lag detection: Pearson correlation of ``x_t`` against
-    ``y_{t+lag}`` for every lag in ``[-max_lag, +max_lag]`` — which
-    metric LEADS (a positive best lag means x today predicts y in
-    ``lag`` days; negative means y moves first).
-
-    One row per day in, 2·max_lag+1 aligned self-joins out — but the
-    join is lag-shifted EQUI-join on the day key (x day-frame ×
-    broadcast lag spine, matched to y at ``day + lag``), grouped into
-    five sums per lag; everything after the upstream daily aggregate
-    is calendar × lags sized.  Integer inputs give exact sums (the
-    rolling_corr note).  Returns ``(lag, n_days, corr, is_best)``
-    with ``is_best`` marking the largest |corr| (ties → smaller lag;
-    all-NULL corrs → no best row).
-    """
-    lags = (
-        daily.limit(1)
-        .select(
-            F.explode(
-                F.sequence(F.lit(-max_lag), F.lit(max_lag))
-            ).alias("lag")
-        )
-    )
-    x = daily.select(F.col(day_col).alias("dx"), F.col(x_col).alias("x"))
-    y = daily.select(F.col(day_col).alias("dy"), F.col(y_col).alias("y"))
-    pairs = (
-        x.crossJoin(F.broadcast(lags))
-        .join(y, F.col("dy") == F.date_add(F.col("dx"), F.col("lag")))
-    )
-    xx, yy = F.col("x"), F.col("y")
-    agg = pairs.groupBy("lag").agg(
-        F.count(F.lit(1)).alias("n_days"),
-        F.sum(xx).alias("__sx"),
-        F.sum(yy).alias("__sy"),
-        F.sum(xx * xx).alias("__sxx"),
-        F.sum(yy * yy).alias("__syy"),
-        F.sum(xx * yy).alias("__sxy"),
-    )
-    corr = _pearson_from_sums(
-        F.col("n_days"),
-        F.col("__sx").cast("double"),
-        F.col("__sy").cast("double"),
-        F.col("__sxx").cast("double"),
-        F.col("__syy").cast("double"),
-        F.col("__sxy").cast("double"),
-    )
-    scored = agg.select("lag", "n_days", corr.alias("corr"))
-    wb = Window.orderBy(F.abs(F.col("corr")).desc_nulls_last(), F.col("lag").asc())
-    return scored.select(
-        "lag",
-        "n_days",
-        "corr",
-        ((F.row_number().over(wb) == 1) & F.col("corr").isNotNull()).alias(
-            "is_best"
-        ),
-    )
-
-
-def burn_rate_alerts(
-    events: DataFrame,
-    error_col,
-    ts_col: str = "ts",
-    budget: float = 0.25,
-    short_h: int = 1,
-    long_h: int = 6,
-    factor: float = 1.2,
-) -> DataFrame:
-    """Multi-window error-budget burn-rate alerting (the SRE workbook
-    pattern): per hour, the error rate over a SHORT and a LONG trailing
-    window, each normalized by the SLO ``budget``; alert only when
-    BOTH exceed ``factor`` — the long window keeps one bad minute from
-    paging, the short window ends the page quickly once the incident
-    stops (a single-window alert must pick one of those failures).
-
-    Hourly integer (error, total) counts first (one map-side-combined
-    groupBy — the only data-sized work), then two RANGE-framed window
-    sums over the integer epoch-hour per side (range, not rows, so
-    quiet hours don't stretch the window), then pure arithmetic.
-    Integer window sums are exact under any accumulation order (the
-    rolling_corr portability rule).  Hours with zero traffic in a
-    window give NULL burn there (no traffic ≠ healthy ≠ burning) and
-    never alert.  Returns ``(hour, errs, total, burn_short, burn_long,
-    alert)``.
-    """
-    if budget <= 0:
-        raise ValueError(f"budget must be a positive rate, got {budget}")
-    if short_h < 1 or long_h < short_h:
-        raise ValueError(f"need 1 <= short_h <= long_h, got {short_h}/{long_h}")
-    err = F.col(error_col) if isinstance(error_col, str) else error_col
-    hourly = (
-        events.groupBy(
-            F.floor(F.unix_timestamp(ts_col) / 3600).cast("long").alias("hour")
-        )
-        .agg(
-            F.sum(err.cast("long")).alias("errs"),
-            F.count(F.lit(1)).alias("total"),
-        )
-    )
-    def wnd(hours):
-        return (
-            Window.orderBy("hour").rangeBetween(-(hours - 1), 0)
-        )
-    es, ts_ = F.sum("errs").over(wnd(short_h)), F.sum("total").over(wnd(short_h))
-    el, tl = F.sum("errs").over(wnd(long_h)), F.sum("total").over(wnd(long_h))
-    burn_s = (es.cast("double") / F.when(ts_ > 0, ts_)) / F.lit(budget)
-    burn_l = (el.cast("double") / F.when(tl > 0, tl)) / F.lit(budget)
-    out = hourly.select(
-        "hour",
-        "errs",
-        "total",
-        burn_s.alias("burn_short"),
-        burn_l.alias("burn_long"),
-    )
-    return out.select(
-        "hour",
-        "errs",
-        "total",
-        "burn_short",
-        "burn_long",
-        (
-            (F.col("burn_short") > factor) & (F.col("burn_long") > factor)
-        ).alias("alert"),
-    )
-
-
-def _durbin_levinson(r: dict, max_lag: int) -> dict:
-    """The Durbin-Levinson recursion unrolled over Column algebra —
-    shared by :func:`pacf_from_acf` (diagnostic: the φ_kk diagonal)
-    and :func:`ar_forecast` (model: the full φ_{p,1..p} row).  ``r``
-    maps lag → ρ Column; returns the level dict ``phi[k][j]``.  A zero
-    denominator at any level yields NULL for that and deeper levels
-    (left-associated sums, the oracle generator mirrors the order)."""
-    phi: dict[int, dict[int, object]] = {1: {1: r[1]}}
-    for k in range(2, max_lag + 1):
-        prev = phi[k - 1]
-        num = r[k] - sum(
-            (prev[j] * r[k - j] for j in range(2, k)), prev[1] * r[k - 1]
-        )
-        den = F.lit(1.0) - sum(
-            (prev[j] * r[j] for j in range(2, k)), prev[1] * r[1]
-        )
-        kk = num / F.when(den != 0, den)
-        phi[k] = {j: prev[j] - kk * prev[k - j] for j in range(1, k)}
-        phi[k][k] = kk
-    return phi
-
-
-def pacf_from_acf(acf: DataFrame, max_lag: int = 4) -> DataFrame:
-    """Partial autocorrelations from an ACF frame via the
-    Durbin-Levinson recursion UNROLLED into scalar column algebra —
-    the AR-order diagnostic (PACF cuts off at the true AR order where
-    ACF only decays).
-
-    ``acf`` is ``(lag, corr)`` for lags ≥ 0 (e.g. ``lead_lag_scan`` of
-    a series against itself).  The recursion
-    ``φ_kk = (ρ_k − Σ_j φ_{k−1,j} ρ_{k−j}) / (1 − Σ_j φ_{k−1,j} ρ_j)``
-    runs over at most ``max_lag`` scalars, so instead of a driver-side
-    loop it is unrolled into ONE projection over the 1-row pivoted ρ
-    frame — pure deterministic float algebra both engines can run
-    identically (the oracle mirrors the same unroll).  A zero
-    denominator at any level (perfectly predictable series) yields
-    NULL for that and deeper lags.  Returns ``(lag, pacf)``,
-    lag 1..max_lag.
-    """
-    if not 1 <= max_lag <= 6:
-        raise ValueError(f"max_lag must be in 1..6 (unrolled), got {max_lag}")
-    wide = acf.filter(
-        (F.col("lag") >= 1) & (F.col("lag") <= max_lag)
-    ).agg(
-        *[
-            F.max(F.when(F.col("lag") == k, F.col("corr"))).alias(f"r{k}")
-            for k in range(1, max_lag + 1)
-        ]
-    )
-    r = {k: F.col(f"r{k}") for k in range(1, max_lag + 1)}
-    phi = _durbin_levinson(r, max_lag)
-    out = wide.select(
-        *[phi[k][k].alias(f"p{k}") for k in range(1, max_lag + 1)]
-    )
-    stacked = out.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(k).alias("lag"), F.col(f"p{k}").alias("pacf")
-                    )
-                    for k in range(1, max_lag + 1)
-                ]
-            )
-        ).alias("s")
-    )
-    return stacked.select(F.col("s.lag").alias("lag"), F.col("s.pacf").alias("pacf"))
-
-
-def holt_fitted(
-    daily: DataFrame,
-    key_col: str,
-    day_col: str = "day",
-    y_col: str = "y",
-    alpha: float = 0.5,
-    beta: float = 0.25,
-) -> DataFrame:
-    """The in-sample one-step-ahead path of :func:`holt_forecast`'s
-    recurrence: for every day t ≥ 2 (1-based, per key), the prediction
-    the model would have made from state t−1 (``fitted = l_{t−1} +
-    b_{t−1}``) and its residual — the inputs any empirical
-    uncertainty band (residual quantiles, conformal-style) needs,
-    which the final-state-only fold cannot provide.
-
-    Same per-key array fold as the other recurrences, but the
-    accumulator KEEPS the state path (array of (l, b) structs —
-    quadratic array copies bounded by days-per-key, the ewma_smooth
-    budget); identical update expressions to holt_forecast, so the
-    last path state equals its (level, trend) exactly.  Returns
-    ``(key, day, y, fitted, resid)`` for t ≥ 2.
-    """
-    one_ma, one_mb = 1.0 - alpha, 1.0 - beta
-    pairs = daily.groupBy(F.col(key_col).alias("k")).agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col(day_col).alias("d"), F.col(y_col).alias("y")))
-        ).alias("ps")
-    )
-    vals = F.col("ps.y")
-    lv = lambda s: s.getField("l")  # noqa: E731
-    tv = lambda s: s.getField("b")  # noqa: E731
-    init = F.array(
-        F.struct(
-            F.element_at(vals, 1).alias("l"),
-            (F.element_at(vals, 2) - F.element_at(vals, 1)).alias("b"),
-        )
-    )
-    def step(acc, x):
-        prev = F.element_at(acc, -1)
-        newl = x * F.lit(alpha) + (lv(prev) + tv(prev)) * F.lit(one_ma)
-        newb = (
-            x * F.lit(alpha) + (lv(prev) + tv(prev)) * F.lit(one_ma) - lv(prev)
-        ) * F.lit(beta) + tv(prev) * F.lit(one_mb)
-        return F.array_append(acc, F.struct(newl.alias("l"), newb.alias("b")))
-
-    states = F.aggregate(
-        F.slice(vals, 2, F.greatest(F.lit(0), F.size(vals) - 1)), init, step
-    )
-    framed = pairs.filter(F.size(vals) >= 2).select(
-        "k", "ps", states.alias("st")
-    )
-    idx = F.sequence(F.lit(2), F.size("ps"))
-    rows = framed.select(
-        "k",
-        F.explode(
-            F.transform(
-                idx,
-                lambda t: F.struct(
-                    F.element_at(F.col("ps.d"), t).alias("d"),
-                    F.element_at(F.col("ps.y"), t).alias("y"),
-                    (
-                        F.element_at(F.col("st"), t - 1).getField("l")
-                        + F.element_at(F.col("st"), t - 1).getField("b")
-                    ).alias("fitted"),
-                ),
-            )
-        ).alias("r"),
-    )
-    return rows.select(
-        F.col("k").alias(key_col),
-        F.col("r.d").alias(day_col),
-        F.col("r.y").alias(y_col),
-        F.col("r.fitted").alias("fitted"),
-        (F.col("r.y") - F.col("r.fitted")).alias("resid"),
-    )
-
-
-def _ar_phi_frame(
-    daily: DataFrame, day_col: str, y_col: str, p: int
-):
-    """One-row frame carrying the Yule-Walker AR(p) model over an
-    integer-valued daily series: ``mu``, ``c0`` and ``phi_1..phi_p``
-    (plus the raw pair sums) — the fit half shared by
-    :func:`ar_forecast` and :func:`ar_fitted`.
-
-    Autocovariances come from RAW INTEGER pair sums (Σab, Σa, Σb, n_j
-    per calendar lag j, all exact longs — the similar_series
-    portability rule: float sliding/deviation sums re-associate
-    differently across engines, integer sums cannot), combined into
-    ``c_j = Σab − μΣa − μΣb + n_j μ²`` as one float expression.  Lags
-    are CALENDAR lags (join on day − j, the lead_lag_scan/ACF
-    convention), so gap days simply contribute no pairs.
-    """
-    if not 1 <= p <= 6:
-        raise ValueError(f"p must be in 1..6 (unrolled), got {p}")
-    d = daily.select(
-        F.col(day_col).alias("__d"), F.col(y_col).cast("long").alias("__y")
-    )
-    base = d.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("__y").alias("sy"),
-        F.sum(F.col("__y") * F.col("__y")).alias("syy"),
-    )
-    spark = daily.sparkSession
-    lagf = spark.createDataFrame([(j,) for j in range(1, p + 1)], "lag int")
-    pairs = (
-        d.crossJoin(F.broadcast(lagf))
-        .join(
-            d.select(F.col("__d").alias("__bd"), F.col("__y").alias("__by")),
-            F.col("__bd") == F.date_sub(F.col("__d"), F.col("lag")),
-        )
-    )
-    sums = pairs.groupBy("lag").agg(
-        F.count(F.lit(1)).alias("nj"),
-        F.sum("__y").alias("sa"),
-        F.sum("__by").alias("sb"),
-        F.sum(F.col("__y") * F.col("__by")).alias("sab"),
-    )
-    wide = sums.agg(
-        *[
-            F.max(F.when(F.col("lag") == j, F.col(c))).alias(f"{c}{j}")
-            for j in range(1, p + 1)
-            for c in ("nj", "sa", "sb", "sab")
-        ]
-    )
-    one = base.crossJoin(F.broadcast(wide))
-    mu = F.col("sy").cast("double") / F.col("n")
-    c0 = F.col("syy").cast("double") - F.col("sy").cast("double") * F.col(
-        "sy"
-    ).cast("double") / F.col("n")
-    one = one.withColumn("mu", mu).withColumn("c0", c0)
-    r = {
-        j: (
-            F.col(f"sab{j}").cast("double")
-            - F.col("mu") * F.col(f"sa{j}").cast("double")
-            - F.col("mu") * F.col(f"sb{j}").cast("double")
-            + F.col(f"nj{j}").cast("double") * F.col("mu") * F.col("mu")
-        )
-        / F.when(F.col("c0") != 0, F.col("c0"))
-        for j in range(1, p + 1)
-    }
-    phi = _durbin_levinson(r, p)
-    for j in range(1, p + 1):
-        one = one.withColumn(f"phi{j}", phi[p][j])
-    return one
-
-
-def ar_forecast(
-    daily: DataFrame,
-    day_col: str = "day",
-    y_col: str = "y",
-    p: int = 2,
-    horizon: int = 7,
-) -> DataFrame:
-    """AR(p) fit + h-step forecast of an integer-valued daily series —
-    the autoregressive completion of the Durbin-Levinson path
-    (:func:`pacf_from_acf` diagnoses the order; this fits that order
-    and forecasts): Yule-Walker coefficients from the same unrolled
-    recursion, ``x̂_{n+h} = μ + Σ_j φ_j (x_{n+h−j} − μ)`` with
-    forecasts substituted recursively for not-yet-observed terms —
-    unrolled to ``horizon`` scalar expressions (≤ 7, the
-    holt_forecast budget).
-
-    TRAILING-CONTINUITY ASSUMPTION: the recursion is seeded with the
-    last ``p`` rows in day-descending order, taken as the lag-1..p
-    values — i.e. the series is assumed to END with ``p`` consecutive
-    calendar days.  The FIT correctly skips interior gap pairs (the
-    lag equi-join only matches day−j), but a trailing gap would make
-    the seed silently use a non-adjacent day as lag-1, so that shape
-    is rejected with a ValueError (one extra 1-row aggregate over the
-    calendar-sized frame — check the last p days are contiguous before
-    forecasting from them; backfill or truncate the series if not).
-
-    Scale shape: one calendar-bounded aggregate + one lag equi-join
-    onto p·days pairs + two 1-row broadcast frames; everything after
-    the daily groupBy is calendar-sized (the temporal-module
-    contract).  Returns ``(h, forecast)``, h = 1..horizon.
-    """
-    if not 1 <= horizon <= 7:
-        raise ValueError(f"horizon must be in 1..7 (unrolled), got {horizon}")
-    one = _ar_phi_frame(daily, day_col, y_col, p)
-    w = Window.orderBy(F.col(day_col).desc())
-    lastv = (
-        daily.select(F.col(day_col), F.col(y_col).cast("long").alias("__y"))
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= p)
-        .agg(
-            *[
-                F.max(F.when(F.col("__rn") == j, F.col("__y"))).alias(f"v{j}")
-                for j in range(1, p + 1)
-            ],
-            F.count(F.lit(1)).alias("__k"),
-            F.datediff(
-                F.max(F.when(F.col("__rn") == 1, F.col(day_col))),
-                F.max(F.when(F.col("__rn") == p, F.col(day_col))),
-            ).alias("__span"),
-        )
-    )
-    # trailing-continuity check (docstring): the seed takes the last p
-    # rows as lag-1..p, which is only right when the series ends with
-    # p consecutive days — one 1-row collect of the seed frame itself
-    seed = lastv.collect()[0]
-    if int(seed["__k"] or 0) < p:
-        raise ValueError(
-            f"ar_forecast: series has fewer than p={p} observations"
-        )
-    if int(seed["__span"] or 0) != p - 1:
-        raise ValueError(
-            f"ar_forecast: the last {p} observed days span"
-            f" {int(seed['__span'])} days — the recursion seeds lag-1..p"
-            " from them and needs them consecutive; backfill or truncate"
-            " the trailing gap"
-        )
-    lastv = daily.sparkSession.createDataFrame(
-        [tuple(float(seed[f"v{j}"]) for j in range(1, p + 1))],
-        ", ".join(f"v{j} double" for j in range(1, p + 1)),
-    )
-    one = one.crossJoin(F.broadcast(lastv))
-    mu = F.col("mu")
-
-    def dev(i):
-        # deviation of x_{n+i}: known series value for i <= 0 (v1 is
-        # the latest observation), forecast for i >= 1
-        if i <= 0:
-            return F.col(f"v{1 - i}").cast("double") - mu
-        return fc[i] - mu
-
-    fc: dict[int, object] = {}
-    for h in range(1, horizon + 1):
-        fc[h] = mu + sum(
-            (F.col(f"phi{j}") * dev(h - j) for j in range(2, p + 1)),
-            F.col("phi1") * dev(h - 1),
-        )
-    stacked = one.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(h).alias("h"), fc[h].alias("forecast"))
-                    for h in range(1, horizon + 1)
-                ]
-            )
-        ).alias("s")
-    )
-    return stacked.select(
-        F.col("s.h").alias("h"), F.col("s.forecast").alias("forecast")
-    )
-
-
-def ar_fitted(
-    daily: DataFrame,
-    day_col: str = "day",
-    y_col: str = "y",
-    p: int = 2,
-) -> DataFrame:
-    """In-sample one-step AR(p) predictions and residuals — the
-    conformal-band inputs for :func:`ar_forecast`, exactly as
-    :func:`holt_fitted` feeds ``forecast_bands``: ``fitted_t = μ +
-    Σ_j φ_j (x_{t−j} − μ)`` wherever all p calendar lags exist
-    (p equi-joins against the same daily frame, calendar-sized).
-    Returns ``(day, y, fitted, resid)``.
-    """
-    one = _ar_phi_frame(daily, day_col, y_col, p)
-    model = F.broadcast(
-        one.select(
-            "mu", *[f"phi{j}" for j in range(1, p + 1)]
-        )
-    )
-    d = daily.select(
-        F.col(day_col).alias("__d"), F.col(y_col).cast("long").alias("__y")
-    )
-    cur = d
-    for j in range(1, p + 1):
-        cur = cur.join(
-            d.select(
-                F.col("__d").alias(f"__d{j}"), F.col("__y").alias(f"__l{j}")
-            ),
-            F.col(f"__d{j}") == F.date_sub(F.col("__d"), j),
-        )
-    cur = cur.crossJoin(model)
-    mu = F.col("mu")
-    fitted = mu + sum(
-        (
-            F.col(f"phi{j}") * (F.col(f"__l{j}").cast("double") - mu)
-            for j in range(2, p + 1)
-        ),
-        F.col("phi1") * (F.col("__l1").cast("double") - mu),
-    )
-    return cur.select(
-        F.col("__d").alias(day_col),
-        F.col("__y").alias(y_col),
-        fitted.alias("fitted"),
-        (F.col("__y").cast("double") - fitted).alias("resid"),
-    )
