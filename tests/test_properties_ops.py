@@ -119,3 +119,53 @@ def test_global_rank_matches_sorted_reference(spark, vals):
         assert got[i][0] == rank0 + 1
         expect_pct = rank0 / (n - 1) if n > 1 else 0.0
         assert abs(got[i][1] - expect_pct) < 1e-12
+
+
+# ---------------------------------------------------------------------------
+# salted join ≡ plain join on arbitrary inputs (round 8)
+# ---------------------------------------------------------------------------
+
+fact_rows = st.lists(
+    st.tuples(
+        st.one_of(st.none(), st.integers(0, 5)),  # key incl. NULLs
+        st.integers(0, 99),                       # payload
+    ),
+    min_size=0,
+    max_size=25,
+)
+dim_rows = st.lists(
+    st.tuples(st.integers(0, 5), st.text(alphabet="abc", max_size=2)),
+    min_size=0,
+    max_size=8,
+)
+
+
+@given(fact=fact_rows, dim=dim_rows, salts=st.integers(1, 5))
+@settings(**PROP_SETTINGS)
+def test_salted_join_equals_plain_join(spark, fact, dim, salts):
+    from pyspark.sql import functions as F
+
+    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators.relational import (
+        salted_join,
+    )
+
+    f = spark.createDataFrame(fact, "k int, payload int") if fact else (
+        spark.createDataFrame([], "k int, payload int")
+    )
+    d = spark.createDataFrame(dim, "dk int, label string") if dim else (
+        spark.createDataFrame([], "dk int, label string")
+    )
+    def norm(rows):
+        # None is unorderable vs int/str — sort with a null-first key
+        return sorted(rows, key=lambda t: tuple((v is None, v) for v in t))
+
+    for how in ("inner", "left"):
+        got = norm(
+            (r.k, r.payload, r.label)
+            for r in salted_join(f, d, "k", "dk", salts=salts, how=how).collect()
+        )
+        want = norm(
+            (r.k, r.payload, r.label)
+            for r in f.join(d, f["k"] == d["dk"], how).drop("dk").collect()
+        )
+        assert got == want, (how, salts)

@@ -3,11 +3,15 @@ stack-based unpivot."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import pytest
 
 from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
     relational as R,
 )
+
+# part of the fast driver-gate subset (the default `pytest` selection
+# per pytest.ini; `-m ''` runs the full suite)
+pytestmark = pytest.mark.driver_gate
 
 
 def _brute_skyline(pairs):
@@ -67,9 +71,3 @@ def test_pareto_front_ignores_null_coordinates(spark):
     got = {(r.price, r.size) for r in R.pareto_front(df, "price", "size").collect()}
     assert got == {(1.0, 10), (3.0, 12)}
 
-
-# r14: part of the fast driver-gate subset (default `pytest` selection
-# per pytest.ini; `-m ''` runs the full suite)
-import pytest as _pytest
-
-pytestmark = _pytest.mark.driver_gate

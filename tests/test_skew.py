@@ -11,6 +11,10 @@ from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators.rel
     salted_join,
 )
 
+# part of the fast driver-gate subset (the default `pytest` selection
+# per pytest.ini; `-m ''` runs the full suite)
+pytestmark = pytest.mark.driver_gate
+
 
 def _norm(df, cols):
     return sorted(tuple(r[c] for c in cols) for r in df.select(*cols).collect())
@@ -57,9 +61,3 @@ def test_salted_join_rejects_outer_kinds(spark):
     with pytest.raises(ValueError):
         salted_join(df, df, "k", "k", salts=0)
 
-
-# r14: part of the fast driver-gate subset (default `pytest` selection
-# per pytest.ini; `-m ''` runs the full suite)
-import pytest as _pytest
-
-pytestmark = _pytest.mark.driver_gate

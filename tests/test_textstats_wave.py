@@ -1,9 +1,15 @@
 """Known-answer tests for the round-6 text-statistics wave:
-lexical_diversity, zipf_slope, readability_scores."""
+lexical_diversity, zipf_slope, readability_scores, and the bucketed
+interval join interval_join_bucketed."""
 from __future__ import annotations
 
 import math
 
+from pyspark.sql import functions as F
+
+from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators.temporal import (
+    interval_join_bucketed,
+)
 from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators.textstats import (
     lexical_diversity,
     readability_scores,
@@ -57,6 +63,33 @@ def test_readability_floors(spark):
     df = spark.createDataFrame([(1, "zzz zzz")], "doc_id long, text string")
     got = readability_scores(df).collect()[0]
     assert got.n_sentences == 1 and got.n_words == 2 and got.n_syllables == 2
+
+def test_interval_join_bucketed_boundaries(spark):
+    facts = spark.createDataFrame(
+        [(i,) for i in (3, 4, 17, 18, 32)], "day long"
+    )
+    ivals = spark.createDataFrame(
+        [("p1", 4, 18), ("p2", 18, 32)], "promo_id string, lo long, hi long"
+    )
+    got = {(r.day, r.promo_id) for r in
+           interval_join_bucketed(facts, ivals, "day", bucket=16).collect()}
+    # lo inclusive, hi exclusive; 32 is outside p2 even though the
+    # interval ends on a bucket boundary
+    assert got == {(4, "p1"), (17, "p1"), (18, "p2")}
+
+
+def test_interval_join_bucketed_matches_bruteforce(spark):
+    facts = spark.createDataFrame([(i,) for i in range(0, 100)], "day long")
+    ivals = spark.createDataFrame(
+        [(f"i{k}", k * 7, k * 7 + 11) for k in range(12)],
+        "promo_id string, lo long, hi long",
+    )
+    for bucket in (4, 16, 64):
+        got = {(r.day, r.promo_id) for r in
+               interval_join_bucketed(facts, ivals, "day", bucket=bucket).collect()}
+        brute = {(r.day, r.promo_id) for r in
+                 facts.join(ivals, (F.col("day") >= F.col("lo")) & (F.col("day") < F.col("hi"))).collect()}
+        assert got == brute
 
 
 # r14: part of the fast driver-gate subset (default `pytest` selection

@@ -1,11 +1,14 @@
 """Relational operators (SURVEY.md X6): the eight TPC-H-style
 join/aggregate/window/set-operation queries the driver contract
 declares over the star schema (Q1, Q5, Q13 and Q22 shapes, a per-group
-top-k, a rollup, a cube and an INTERSECT).
+top-k, a rollup, a cube and an INTERSECT), plus three general
+DataFrame operators: a salted skew join, a skyline (Pareto front) and
+an unpivot.
 
-Each function takes a table dict (from ``sources.catalog.load_tables``)
-and returns a DataFrame; every computed column is aliased so the DuckDB
-oracle hash-matches. Scale notes are on each operator.
+Each query function takes a table dict (from
+``sources.catalog.load_tables``) and returns a DataFrame; every computed
+column is aliased so the DuckDB oracle hash-matches. Scale notes are on
+each operator.
 """
 
 from __future__ import annotations
@@ -22,6 +25,9 @@ __all__ = [
     "customers_without_orders",
     "order_priority_cube",
     "segment_retention",
+    "salted_join",
+    "pareto_front",
+    "unpivot",
 ]
 
 
@@ -166,3 +172,128 @@ def segment_retention(t: dict[str, DataFrame]) -> DataFrame:
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1997-01-01")
     ).select("o_custkey")
     return y95.intersect(y96).orderBy("o_custkey")
+
+
+def salted_join(
+    fact: DataFrame,
+    dim: DataFrame,
+    fact_key: str,
+    dim_key: str,
+    salts: int = 8,
+    how: str = "inner",
+) -> DataFrame:
+    """Skew-safe shuffle join: the classic salting rewrite for a hot
+    join key, producing a result IDENTICAL to the plain join.
+
+    A shuffle join hash-partitions both sides on the key, so a key
+    owning 10% of a 100 TB fact lands 10 TB in one task — the straggler
+    that kills the stage. Salting splits every fact key across
+    ``salts`` sub-buckets (a deterministic ``xxhash64`` of the whole
+    row, so re-runs and retries route identically) and replicates each
+    dim row once per salt; joining on ``(key, salt)`` then spreads the
+    hot key over ``salts`` tasks while matching exactly the same pairs:
+    the dim replicas are disjoint by salt, so each fact row still meets
+    each matching dim row exactly once. Cost: dim grows ×salts (dims
+    are the small side by definition — this is the regime where the dim
+    is too big to broadcast but ×salts still fits a shuffle), the fact
+    is untouched.
+
+    ``how`` ∈ {inner, left} (fact-preserving; salt replication would
+    multiply unmatched DIM rows under right/outer, so those are
+    refused). NULL fact keys spread like any other row (the salt hashes
+    the whole row) and stay harmless: they match nothing (inner) or
+    pass through once (left). Rows that are
+    complete duplicates share a salt and stay in one bucket; salt on an
+    explicit high-cardinality column upstream if that matters. This is
+    the manual form of what AQE skew-join does adaptively; keep it for
+    deterministic plans, pre-AQE engines, and skew the runtime can't
+    see (post-filter explosion).
+    """
+    if how not in ("inner", "left"):
+        raise ValueError(f"salted_join supports inner/left, got {how!r}")
+    if salts < 1:
+        raise ValueError(f"salts must be >= 1, got {salts}")
+    f = fact.withColumn(
+        "__salt", F.pmod(F.xxhash64(*[F.col(c) for c in fact.columns]), F.lit(salts))
+    )
+    d = dim.withColumn(
+        "__salt", F.explode(F.array(*[F.lit(i) for i in range(salts)]))
+    )
+    cond = (f[fact_key] == d[dim_key]) & (f["__salt"] == d["__salt"])
+    joined = f.join(d, cond, how)
+    # drop both salts and the dim-side key copy (redundant with the
+    # fact key on inner; null-padded on left — the fact key is the one
+    # a caller means either way)
+    return joined.drop(f["__salt"]).drop(d["__salt"]).drop(d[dim_key])
+
+
+
+def pareto_front(
+    df: DataFrame,
+    min_col: str,
+    max_col: str,
+    prune_partitions: int = 64,
+) -> DataFrame:
+    """Skyline query (Börzsönyi et al. 2001): the Pareto-optimal set of
+    ``(minimize min_col, maximize max_col)`` — every row not strictly
+    dominated by another (lower-or-equal price AND higher-or-equal
+    size, strict in at least one).
+
+    Shape for scale — prune locally, sweep the survivors: dominance is
+    closed under subsets, so a global skyline point is necessarily in
+    the skyline of ANY subset containing it; we therefore run the
+    one-pass sort sweep (order by price asc, size desc over DISTINCT
+    value pairs; a row survives iff the running max of size over
+    preceding rows is below its own) inside each of
+    ``prune_partitions`` hash partitions first, and only the local
+    survivors — typically O(log n) per partition on non-adversarial
+    data, worst-case the partition itself — enter the single global
+    sweep. The global window therefore sorts survivor-counts, not the
+    table. Distinct-pair reduction makes the sweep's tie logic exact:
+    among distinct pairs, running-max ≥ own-size ⟺ strictly dominated
+    (equal pairs collapse, so an equal running max always comes from a
+    strictly better row). Returns the distinct ``(min_col, max_col)``
+    skyline pairs.
+    """
+    # dominance over NULL is undefined — a null coordinate can neither
+    # dominate nor be dominated coherently, so such rows are excluded
+    # (the same convention as SQL comparison predicates)
+    pairs = (
+        df.select(F.col(min_col).alias("__lo"), F.col(max_col).alias("__hi"))
+        .filter(F.col("__lo").isNotNull() & F.col("__hi").isNotNull())
+        .distinct()
+    )
+    part = F.pmod(F.xxhash64("__lo", "__hi"), F.lit(prune_partitions))
+
+    def sweep(frame: DataFrame, keys: list) -> DataFrame:
+        w = (
+            Window.partitionBy(*keys)
+            .orderBy(F.asc("__lo"), F.desc("__hi"))
+            .rowsBetween(Window.unboundedPreceding, -1)
+        )
+        prev = F.max("__hi").over(w)
+        return frame.withColumn("__pm", prev).filter(
+            F.col("__pm").isNull() | (F.col("__pm") < F.col("__hi"))
+        ).drop("__pm")
+
+    local = sweep(pairs.withColumn("__p", part), ["__p"]).drop("__p")
+    return sweep(local, []).select(
+        F.col("__lo").alias(min_col), F.col("__hi").alias(max_col)
+    )
+
+
+
+def unpivot(
+    df: DataFrame, id_cols: list[str], value_cols: list[str],
+    var_name: str = "metric", value_name: str = "value",
+) -> DataFrame:
+    """Wide→long melt via ``stack`` (one Generate projection — no
+    shuffle, no UDF): each of ``value_cols`` becomes a
+    ``(metric, value)`` row per input row. Values are cast to double
+    (stack requires a common type). The inverse of ``pivot``."""
+    n = len(value_cols)
+    args = ", ".join(f"'{c}', CAST(`{c}` AS DOUBLE)" for c in value_cols)
+    return df.select(
+        *id_cols,
+        F.expr(f"stack({n}, {args}) AS ({var_name}, {value_name})"),
+    )
