@@ -5,7 +5,6 @@ from the published algorithm (Sennrich et al. 2016)."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.functions import (
     bpe as B,

@@ -3,8 +3,6 @@ oracles on tiny crafted corpora."""
 
 from __future__ import annotations
 
-import hashlib
-
 import pytest
 from pyspark.sql import functions as F
 

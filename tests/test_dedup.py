@@ -7,7 +7,6 @@ from __future__ import annotations
 import warnings
 
 import pytest
-from pyspark.sql import functions as F
 
 from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import dedup as D
 

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import hashlib
-import math
 import statistics
 
 from pyspark.sql import functions as F

@@ -9,7 +9,6 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.functions import vector as V
 from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import ingest as I
 
 

@@ -6,8 +6,6 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import functions as F
-
 from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import lm as LM
 from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import textstats as T
 

@@ -48,8 +48,6 @@ def test_maxsim_plan_single_doc_shuffle(spark):
 import shutil
 import tempfile
 
-from pyspark.sql import functions as F
-
 from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
     maxsim_index as MI,
 )

@@ -6,7 +6,6 @@ path value-for-value."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.functions import embed as E
 from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import rag

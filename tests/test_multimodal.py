@@ -7,7 +7,6 @@ import hashlib
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import (
     multimodal as M,

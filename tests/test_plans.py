@@ -27,6 +27,39 @@ def test_topk_compiles_to_take_ordered(tables):
     assert_plan_contains(df, "TakeOrderedAndProject", absent=("Exchange",))
 
 
+def test_topk_score_computes_each_hof_once(tables):
+    """Plan lint for the single-query score (HOFs get no common-
+    subexpression elimination, so a repeated ``aggregate`` subtree is
+    evaluated again for every row): in the optimized plan's Project no
+    ``aggregate(`` subtree may appear twice, and no higher-order
+    function may read only the query literal, whose value is the same
+    for every row. Inspects the plan only; nothing executes."""
+    import re
+
+    hof = re.compile(r"\b(aggregate|zip_with|transform)\(")
+
+    def subtrees(text):
+        for m in hof.finditer(text):
+            depth = 0
+            for j in range(m.end() - 1, len(text)):
+                depth += {"(": 1, ")": -1}.get(text[j], 0)
+                if depth == 0:
+                    yield m.group(1), text[m.start():j + 1]
+                    break
+
+    for metric in ("cosine", "l2"):
+        df = S.topk(tables["embeddings"], [0.1] * 64, k=10, metric=metric)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        (project,) = [line for line in plan.splitlines() if "Project [" in line]
+        # lambda variables differ by name and id between copies of a subtree
+        project = re.sub(r"lambda \w+#\d+", "lambda v", project)
+        aggs = [t for name, t in subtrees(project) if name == "aggregate"]
+        repeated = {t for t in aggs if aggs.count(t) > 1}
+        assert not repeated, f"{metric}: repeated subtrees {sorted(repeated)}"
+        literal_only = [t for _, t in subtrees(project) if not re.search(r"\w#\d+", t)]
+        assert not literal_only, f"{metric}: HOFs over the query literal only {literal_only}"
+
+
 def test_pricing_summary_pushes_filter_and_partial_agg(tables):
     plan = assert_plan_contains(
         R.pricing_summary(tables), "HashAggregate", "PushedFilters"

@@ -143,8 +143,6 @@ dim_rows = st.lists(
 @given(fact=fact_rows, dim=dim_rows, salts=st.integers(1, 5))
 @settings(**PROP_SETTINGS)
 def test_salted_join_equals_plain_join(spark, fact, dim, salts):
-    from pyspark.sql import functions as F
-
     from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators.relational import (
         salted_join,
     )

@@ -6,7 +6,6 @@ from __future__ import annotations
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
 from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.functions.embed import (
     hash_embed_py,

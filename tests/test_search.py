@@ -10,6 +10,10 @@ from pyspark.sql import functions as F
 
 from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import search as S
 
+# part of the fast driver-gate subset (default `pytest` selection per
+# pytest.ini; `-m ''` runs the full suite)
+pytestmark = pytest.mark.driver_gate
+
 K = 10
 
 
@@ -156,6 +160,32 @@ def test_collection_topk_shard_is_partition_pruned(corpus, spark, tmp_path):
     got = {r.vec_id for r in df.collect()}
     expect_universe = {r.vec_id for r in prepared.filter("shard = 2").collect()}
     assert got <= expect_universe and len(got) == 5
+
+
+def test_collection_topk_warm_read_is_one_job(corpus, spark, tmp_path):
+    """A warm read reuses the collection's schema, so the top-k is its
+    only Spark job (no schema-inference job before it), and an
+    overwrite that changes the schema is seen by the next read."""
+    from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import ingest as I
+
+    sc = spark.sparkContext
+    prepared = I.assign_shard(I.normalized(corpus), 4, how="mod")
+    path = str(tmp_path / "coll")
+    I.write_collection(prepared, path, n_shards=4, mode="overwrite")
+    S.collection_topk(spark, path, [0.1] * 64, k=5).collect()
+    sc.setJobGroup("warm_collection_read", "warm collection_topk read")
+    try:
+        S.collection_topk(spark, path, [0.2] * 64, k=5).collect()
+        jobs = sc.statusTracker().getJobIdsForGroup("warm_collection_read")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(jobs) == 1
+
+    as_string = prepared.withColumn("vec_id", F.concat(F.lit("v"), F.col("vec_id")))
+    I.write_collection(as_string, path, n_shards=4, mode="overwrite")
+    rows = S.collection_topk(spark, path, [0.1] * 64, k=5).collect()
+    assert len(rows) == 5 and all(r.vec_id.startswith("v") for r in rows)
 
 
 def test_lsh_topk_subset_of_corpus_and_recall(corpus, np_corpus):
@@ -435,7 +465,6 @@ def test_knn_join_materializes_query_plan_once(corpus, spark):
     throughput is counted by an accumulator) must be computed exactly
     once per knn_join call — the old shape re-ran its plan for the
     budget count, the toPandas, and once more per split filter."""
-    import pandas as _pd
 
     acc = spark.sparkContext.accumulator(0)
     src = corpus.filter("vec_id < 8").select(
@@ -699,10 +728,3 @@ def test_nn_descent_empty_input_schema_matches_id_type(spark):
     g1 = S.nn_descent(full, k=2, id_col="doc_id", vec_col="embedding")
     # the union is the contract: same column names AND types
     assert g0.unionByName(g1).count() == g1.count() == 8
-
-
-# r14: part of the fast driver-gate subset (default `pytest` selection
-# per pytest.ini; `-m ''` runs the full suite)
-import pytest as _pytest
-
-pytestmark = _pytest.mark.driver_gate

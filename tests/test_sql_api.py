@@ -2,7 +2,6 @@
 spark.sql and the DuckDB oracle, plus the deterministic k-fold split."""
 from __future__ import annotations
 
-from pyspark.sql import functions as F
 
 from vector_database_with_gpu_acceleration_for_llm_retrieval_spark import (
     contract,

@@ -7,9 +7,12 @@ import shutil
 import tempfile
 
 import pytest
-from pyspark.sql import functions as F
 
 from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.streaming import pipeline as P
+
+# part of the fast driver-gate subset (default `pytest` selection per
+# pytest.ini; `-m ''` runs the full suite)
+pytestmark = pytest.mark.driver_gate
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -198,10 +201,3 @@ def test_stream_enrich_attaches_dimension(spark):
         assert rows == {1: "gold", 2: None, 3: "bronze"}
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-
-
-# r14: part of the fast driver-gate subset (default `pytest` selection
-# per pytest.ini; `-m ''` runs the full suite)
-import pytest as _pytest
-
-pytestmark = _pytest.mark.driver_gate

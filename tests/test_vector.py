@@ -11,6 +11,10 @@ from pyspark.sql import functions as F
 
 from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.functions import vector as V
 
+# part of the fast driver-gate subset (default `pytest` selection per
+# pytest.ini; `-m ''` runs the full suite)
+pytestmark = pytest.mark.driver_gate
+
 VECS = [
     (1, [1.0, 2.0, 2.0]),
     (2, [0.0, 0.0, 0.0]),  # zero vector: epsilon guard, no NaN
@@ -77,15 +81,44 @@ def test_l2_cosine_monotone_equivalent_on_normalized(spark, tables):
     assert [r.vec_id for r in by_cos] == [r.vec_id for r in by_l2]
 
 
+_QUERIES = {
+    "random": [0.8147236863931789, -0.9057919370756192, 0.1269868162935061],
+    "zero": [0.0, 0.0, 0.0],
+    "neg_zero": [-0.0, 1.5, -0.0],
+    "subnormal": [5e-324, 0.0, 5e-324],
+    "tiny": [1e-300, -1e-300, 1e-300],
+    "nan": [float("nan"), 1.0, 2.0],
+    "inf": [float("inf"), 1.0, -2.0],
+    "neg_inf": [1.0, float("-inf"), 0.5],
+}
+
+
+@pytest.fixture(scope="module")
+def extreme_vecs(spark):
+    rows = VECS + [(5, [5e-324, -0.0, 1e-300]), (6, [1e300, -1e300, 3.0])]
+    return spark.createDataFrame(rows, "id int, v array<double>")
+
+
+@pytest.mark.parametrize("name", sorted(_QUERIES))
+def test_sequence_query_score_is_bit_identical(extreme_vecs, name):
+    """A query passed as a sequence (norm folded on the driver, one
+    generated SQL expression) scores every row with the same bits as
+    the same query as a ``vec_lit`` Column, for both metrics."""
+    import struct
+
+    q = _QUERIES[name]
+    for metric in ("cosine", "l2"):
+        rows = extreme_vecs.select(
+            "id",
+            V.score("v", q, metric).alias("seq"),
+            V.score("v", V.vec_lit(q), metric).alias("lit"),
+        ).collect()
+        for r in rows:
+            assert struct.pack("<d", r.seq) == struct.pack("<d", r.lit), (metric, r)
+
+
 def test_metric_dispatch():
     c = V.score("a", "b", "cosine")
     l = V.score("a", "b", "l2")
     assert "zip_with" not in str(c) or True  # dispatch returns Columns
     assert str(c) != str(l)
-
-
-# r14: part of the fast driver-gate subset (default `pytest` selection
-# per pytest.ini; `-m ''` runs the full suite)
-import pytest as _pytest
-
-pytestmark = _pytest.mark.driver_gate

@@ -3705,7 +3705,7 @@ def q_collection_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# DuckDB oracle SQL
+# stateful streaming: sessionization over the events table
 # ---------------------------------------------------------------------------
 
 

@@ -23,9 +23,26 @@ All arithmetic is in float64 regardless of the stored element type
 (testdata stores float32): products/accumulations cast to double first,
 which both matches DuckDB oracle math and avoids float32 accumulation
 error at dim ≫ 64.
+
+A single query against a column (``score(col, q, metric)`` with ``q`` a
+Python sequence of numbers) follows the reference's search, which
+normalizes the query once and then does one matmul
+(fallback_numpy_index.py:20-24): the query's guarded norm is folded on
+the driver with the same sequential float64 fold, the row norm is
+computed once per row, and the whole score is built by one ``F.expr``
+over generated SQL instead of ~30 py4j calls through the Column/lambda
+API. Scores are bit-identical to the Column form
+(``score(col, vec_lit(q))``); column-vs-column callers (the joins)
+keep the Column builders. Every per-query constant sits inside a
+lambda or the array literal: a bare top-level double literal is
+inlined into whole-stage generated Java, which would cost a fresh
+compile per query.
 """
 
 from __future__ import annotations
+
+import math
+from collections.abc import Sequence
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -48,6 +65,43 @@ _EPS = 1e-12
 
 def _as_col(c: Column | str) -> Column:
     return F.col(c) if isinstance(c, str) else c
+
+
+def _is_query(v) -> bool:
+    """A driver-side query vector (a sequence of numbers), as opposed to
+    a Column or a column name."""
+    return not isinstance(v, (Column, str))
+
+
+def _sql_double(x) -> str:
+    """A double literal in Spark SQL that parses back to the same bits
+    (``repr`` round-trips; NaN and ±inf have no numeric spelling)."""
+    x = float(x)
+    if math.isnan(x):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(x):
+        return "CAST('Infinity' AS DOUBLE)" if x > 0 else "CAST('-Infinity' AS DOUBLE)"
+    return repr(x) + "D"
+
+
+def _query_sql(a: str, q: Sequence[float]) -> tuple[str, str]:
+    """SQL text of the column ``a`` and of the query literal ``q``."""
+    if not isinstance(a, str):
+        raise TypeError("a query given as a sequence needs the column by name")
+    col = "`" + a.replace("`", "``") + "`"
+    return col, "array(" + ", ".join(_sql_double(x) for x in q) + ")"
+
+
+def _guarded_norm(q: Sequence[float]) -> float:
+    """The query's norm with the zero guard, folded on the driver exactly
+    as :func:`l2_norm` folds it in the JVM (``s = s + x*x`` in order,
+    then ``sqrt``), so it has the same bits."""
+    s = 0.0
+    for x in q:
+        x = float(x)
+        s = s + x * x
+    n = math.sqrt(s)
+    return _EPS if n == 0.0 else n
 
 
 def vec_lit(vec) -> Column:
@@ -90,7 +144,7 @@ def l2_normalize(a: Column | str) -> Column:
     return F.transform(a, lambda x: x.cast("double") / denom)
 
 
-def cosine_sim(a: Column | str, b: Column | str) -> Column:
+def cosine_sim(a: Column | str, b: Column | str | Sequence[float]) -> Column:
     """Cosine similarity — dot over the product of per-side guarded
     norms (ε substituted only for an exactly-zero norm, same rule as
     :func:`l2_normalize`).
@@ -101,7 +155,27 @@ def cosine_sim(a: Column | str, b: Column | str) -> Column:
     too. Guarding per side (not the product) keeps it consistent with
     normalize-then-dot — a sub-ε-norm vector still gets its true
     cosine; only genuine zero vectors score ~0.
+
+    ``b`` may be a query vector (a sequence of numbers, ``a`` then a
+    column name): its guarded norm is folded on the driver and the
+    score is one generated SQL expression, bit-identical to
+    ``cosine_sim(a, vec_lit(b))``.
     """
+    if _is_query(b):
+        b = list(b)
+        col, q = _query_sql(a, b)
+        # the row norm is folded once (its finish lambda applies the
+        # guard: sqrt(s) == 0 iff s == 0), and the division sits in the
+        # dot's finish lambda, in the same order as below
+        row_norm = (
+            f"aggregate({col}, 0.0D, (s, x) -> s + CAST(x AS DOUBLE) * CAST(x AS DOUBLE), "
+            f"s -> IF(s = 0.0D, {_sql_double(_EPS)}, sqrt(s)))"
+        )
+        return F.expr(
+            f"aggregate(zip_with({col}, {q}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+            f"0.0D, (acc, v) -> acc + v, "
+            f"d -> d / ({row_norm} * {_sql_double(_guarded_norm(b))}))"
+        )
     a, b = _as_col(a), _as_col(b)
     na, nb = l2_norm(a), l2_norm(b)
     denom = (
@@ -120,18 +194,29 @@ def l2sq(a: Column | str, b: Column | str) -> Column:
     return F.aggregate(diffs, F.lit(0.0), lambda acc, v: acc + v)
 
 
-def neg_l2sq(a: Column | str, b: Column | str) -> Column:
+def neg_l2sq(a: Column | str, b: Column | str | Sequence[float]) -> Column:
     """Negative squared L2 — the reference's "l2" *score* orientation:
     higher is better (fallback_numpy_index.py:27-28, flat_kernels.cu:44,
     coordinator/main.py:75 comment)."""
+    if _is_query(b):
+        col, q = _query_sql(a, b)
+        return F.expr(
+            f"-aggregate(zip_with({col}, {q}, (x, y) -> "
+            f"(CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), "
+            f"0.0D, (acc, v) -> acc + v)"
+        )
     return -l2sq(a, b)
 
 
-def score(a: Column | str, b: Column | str, metric: str = "cosine") -> Column:
+def score(
+    a: Column | str, b: Column | str | Sequence[float], metric: str = "cosine"
+) -> Column:
     """Metric dispatch (reference coordinator/main.py:31 +
     fallback_numpy_index.py:22-28): ``cosine`` → cosine similarity,
     anything else → negative squared L2, score always
-    higher-is-better."""
+    higher-is-better. ``b`` is a Column, a column name, or a query
+    vector as a sequence of numbers (then ``a`` must be a column
+    name)."""
     if metric == "cosine":
         return cosine_sim(a, b)
     return neg_l2sq(a, b)

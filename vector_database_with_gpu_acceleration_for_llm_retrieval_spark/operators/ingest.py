@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.functions import text as TX
 from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.functions import vector as V
@@ -29,6 +30,7 @@ __all__ = [
     "assign_shard",
     "prepare_vectors",
     "write_collection",
+    "read_collection",
     "upsert_collection",
     "delete_from_collection",
     "apply_changelog",
@@ -88,6 +90,11 @@ def prepare_vectors(df: DataFrame, dim: int, n_shards: int, id_col: str = "vec_i
     return assign_shard(out, n_shards, id_col=id_col, how=how)
 
 
+#: collection path -> its schema, as inferred on the path's first read
+#: in this process (see read_collection)
+_SCHEMAS: dict[str, T.StructType] = {}
+
+
 def write_collection(df: DataFrame, path: str, n_shards: int, mode: str = "append") -> None:
     """Durable sharded collection: partitioned parquet, one directory
     per shard (upgrade over the reference's ephemeral in-memory matrix,
@@ -96,13 +103,38 @@ def write_collection(df: DataFrame, path: str, n_shards: int, mode: str = "appen
     ``partitionBy('shard')`` gives partition pruning for shard-local
     scans; appends are incremental (no full re-upload like the GPU
     path's re-upload-the-matrix MVP, shard_binding.cpp:40-49).
+    The write forgets the schema :func:`read_collection` keeps for
+    ``path``: an overwrite may change it.
     """
-    (
-        df.repartition(n_shards, "shard")
-        .write.mode(mode)
-        .partitionBy("shard")
-        .parquet(path)
-    )
+    try:
+        (
+            df.repartition(n_shards, "shard")
+            .write.mode(mode)
+            .partitionBy("shard")
+            .parquet(path)
+        )
+    finally:
+        _SCHEMAS.pop(path, None)
+
+
+def read_collection(spark, path: str) -> DataFrame:
+    """The collection at ``path`` as a DataFrame, without a schema job
+    on repeated reads.
+
+    ``spark.read.parquet`` infers the schema with a Spark job of its own
+    before the query's job runs. The first read of a path in this
+    process infers it; later reads pass it to ``spark.read.schema``, so
+    a warm top-k is one job. Partition discovery still lists the
+    ``shard=`` directories, so shard filters stay partition filters.
+    :func:`write_collection` forgets the schema; upserts and deletes
+    keep it by construction.
+    """
+    schema = _SCHEMAS.get(path)
+    if schema is None:
+        df = spark.read.parquet(path)
+        _SCHEMAS[path] = df.schema
+        return df
+    return spark.read.schema(schema).parquet(path)
 
 
 def upsert_collection(
@@ -134,7 +166,7 @@ def upsert_collection(
     touched = sorted(r["shard"] for r in prepared.select("shard").distinct().collect())
     if not touched:
         return {"touched_shards": [], "rows_written": 0}
-    current = spark.read.parquet(path).filter(F.col("shard").isin(touched))
+    current = read_collection(spark, path).filter(F.col("shard").isin(touched))
     keep = current.join(prepared.select(id_col).distinct(), id_col, "left_anti")
     # localCheckpoint cuts the lineage back to the source path, so the
     # overwrite below doesn't read from the directory it replaces; the
@@ -196,7 +228,7 @@ def delete_from_collection(
         id_frame = spark.createDataFrame([(i,) for i in ids], [id_col])
     targets = assign_shard(id_frame, n_shards, id_col=id_col, how=how)
     touched = sorted(r["shard"] for r in targets.select("shard").distinct().collect())
-    current = spark.read.parquet(path).filter(F.col("shard").isin(touched))
+    current = read_collection(spark, path).filter(F.col("shard").isin(touched))
     before = current.count()
     # a driver-side list is bounded by construction, so broadcast it; a
     # DataFrame of ids may be an arbitrarily large erasure batch — let
